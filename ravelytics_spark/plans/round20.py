@@ -64,7 +64,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import q
-from ravelytics_spark.sources.tables import load_table
+from ravelytics_spark.plans.round4 import embedding_probe
+from ravelytics_spark.sources.tables import load_table, memo
 
 # ---------------------------------------------------------------------------
 # x97 — K-Minimum-Values distinct sketch, portable hash family
@@ -675,10 +676,6 @@ ORDER BY cosine DESC, dn.vec_id
 LIMIT {_SRP_K}
 """
 
-_SRP_DIMS_CACHE: dict = {}
-_SRP_PLAN_CACHE: dict = {}
-
-
 @q(
     "x102_srp_portable",
     "OP-X3",
@@ -699,36 +696,19 @@ _SRP_PLAN_CACHE: dict = {}
     _SRP_ORACLE,
 )
 def x102_srp_portable(spark, sf_dir):
-    from ravelytics_spark.sources.tables import dataset_fingerprint
+    return memo(
+        spark, sf_dir, "embeddings", "x102", lambda: _x102_plan(spark, sf_dir)
+    )
 
-    fp = dataset_fingerprint(sf_dir, "embeddings")
-    cached = _SRP_PLAN_CACHE.get(sf_dir)
-    if (
-        cached is not None
-        and cached[0] == fp
-        and cached[1].sparkSession is spark
-    ):
-        return cached[1]
+
+def _x102_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
-    probe_ent = _SRP_DIMS_CACHE.get(sf_dir)
-    if probe_ent is not None and probe_ent[0] == fp:
-        dims, mx = probe_ent[1]
-    else:
-        row = e.agg(
-            F.max(F.size("embedding")).alias("d"),
-            F.max(F.array_max(F.transform(vec, lambda x: F.abs(x)))).alias(
-                "mx"
-            ),
-        ).first()
-        dims, mx = row["d"], row["mx"]
-        _SRP_DIMS_CACHE[sf_dir] = (fp, (dims, mx))
+    dims, mx = embedding_probe(spark, sf_dir)
     if dims is None:
-        out = e.select(
+        return e.select(
             "vec_id", F.lit(0.0).alias("cosine")
         ).filter(F.lit(False))
-        _SRP_PLAN_CACHE[sf_dir] = (fp, out)
-        return out
     # fixed-point domain guard (x30): elements must fit decimal(18,12)
     # and the worst sum (|q_i| <= 3 dot terms) must stay under 2^63.
     limit = min(1_000_000.0, 9.2e18 / (max(dims, 1) * 3 * 1e12))
@@ -796,15 +776,13 @@ def x102_srp_portable(spark, sf_dir):
         / F.sqrt(nrm2.cast("double") / F.lit(float(scale))),
         6,
     )
-    out = (
+    return (
         stage1.withColumn("_code", code)
         .filter(F.col("_code").isin(_SRP_PROBES))
         .select("vec_id", cosine.alias("cosine"))
         .orderBy(F.col("cosine").desc(), "vec_id")
         .limit(_SRP_K)
     )
-    _SRP_PLAN_CACHE[sf_dir] = (fp, out)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1118,36 +1096,18 @@ ORDER BY dist, vec_id LIMIT {_PQ_TOPK}
     _PQ_ORACLE,
 )
 def x105_pq_portable(spark, sf_dir):
-    from ravelytics_spark.sources.tables import dataset_fingerprint
+    return memo(
+        spark, sf_dir, "embeddings", "x105", lambda: _x105_plan(spark, sf_dir)
+    )
 
-    fp = dataset_fingerprint(sf_dir, "embeddings")
-    cached = _PQ_PLAN_CACHE.get(sf_dir)
-    if (
-        cached is not None
-        and cached[0] == fp
-        and cached[1].sparkSession is spark
-    ):
-        return cached[1]
+
+def _x105_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
-    probe_ent = _SRP_DIMS_CACHE.get(sf_dir)
-    if probe_ent is not None and probe_ent[0] == fp:
-        dims, mx = probe_ent[1]
-    else:
-        vecp = F.col("embedding").cast("array<double>")
-        row = e.agg(
-            F.max(F.size("embedding")).alias("d"),
-            F.max(F.array_max(F.transform(vecp, lambda x: F.abs(x)))).alias(
-                "mx"
-            ),
-        ).first()
-        dims, mx = row["d"], row["mx"]
-        _SRP_DIMS_CACHE[sf_dir] = (fp, (dims, mx))
+    dims, _mx = embedding_probe(spark, sf_dir)
     if dims is None:
-        out = e.select(
+        return e.select(
             "vec_id", F.lit(0.0).alias("adc"), F.lit(0.0).alias("dist")
         ).filter(F.lit(False))
-        _PQ_PLAN_CACHE[sf_dir] = (fp, out)
-        return out
     if dims < _PQ_NSUB * _PQ_SUBDIM:
         raise ValueError(
             f"x105_pq_portable needs width >= {_PQ_NSUB * _PQ_SUBDIM} "
@@ -1183,16 +1143,11 @@ def x105_pq_portable(spark, sf_dir):
     dist = F.round(
         F.sqrt(diff.cast("double") / F.lit(1_000_000_000_000.0)), 6
     )
-    out = (
+    return (
         short.select("vec_id", "adc", dist.alias("dist"))
         .orderBy("dist", "vec_id")
         .limit(_PQ_TOPK)
     )
-    _PQ_PLAN_CACHE[sf_dir] = (fp, out)
-    return out
-
-
-_PQ_PLAN_CACHE: dict = {}
 
 
 # ---------------------------------------------------------------------------
@@ -1353,38 +1308,20 @@ ORDER BY id_a, id_b
     _ND_ORACLE,
 )
 def x107_embed_neardup_portable(spark, sf_dir):
-    from ravelytics_spark.sources.tables import dataset_fingerprint
+    return memo(
+        spark, sf_dir, "embeddings", "x107", lambda: _x107_plan(spark, sf_dir)
+    )
 
-    fp = dataset_fingerprint(sf_dir, "embeddings")
-    cached = _ND_PLAN_CACHE.get(sf_dir)
-    if (
-        cached is not None
-        and cached[0] == fp
-        and cached[1].sparkSession is spark
-    ):
-        return cached[1]
+
+def _x107_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
-    probe_ent = _SRP_DIMS_CACHE.get(sf_dir)
-    if probe_ent is not None and probe_ent[0] == fp:
-        dims, mx = probe_ent[1]
-    else:
-        vecp = F.col("embedding").cast("array<double>")
-        row = e.agg(
-            F.max(F.size("embedding")).alias("d"),
-            F.max(F.array_max(F.transform(vecp, lambda x: F.abs(x)))).alias(
-                "mx"
-            ),
-        ).first()
-        dims, mx = row["d"], row["mx"]
-        _SRP_DIMS_CACHE[sf_dir] = (fp, (dims, mx))
+    dims, mx = embedding_probe(spark, sf_dir)
     if dims is None:
-        out = e.select(
+        return e.select(
             F.col("vec_id").alias("id_a"),
             F.col("vec_id").alias("id_b"),
             F.lit(0.0).alias("cosine"),
         ).filter(F.lit(False))
-        _ND_PLAN_CACHE[sf_dir] = (fp, out)
-        return out
     limit = min(1_000_000.0, 9.2e18 / (max(dims, 1) * 3 * 1e12))
     if mx is not None and mx >= limit:
         raise ValueError(
@@ -1480,15 +1417,10 @@ def x107_embed_neardup_portable(spark, sf_dir):
         / F.sqrt(nb2.cast("double") / F.lit(float(scale))),
         6,
     )
-    out = (
+    return (
         cand.join(fa, "id_a")
         .join(fb, "id_b")
         .select("id_a", "id_b", cosine.alias("cosine"))
         .filter(F.col("cosine") >= _ND_TAU)
         .orderBy("id_a", "id_b")
     )
-    _ND_PLAN_CACHE[sf_dir] = (fp, out)
-    return out
-
-
-_ND_PLAN_CACHE: dict = {}

@@ -29,7 +29,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import _dsum, _dsum_sql, q
-from ravelytics_spark.sources.tables import dataset_fingerprint, load_table
+from ravelytics_spark.sources.tables import load_table, memo
 
 # ---------------------------------------------------------------------------
 # TPC-H Q6 — forecast revenue change (pure scan-filter-agg)
@@ -575,9 +575,6 @@ FROM best GROUP BY 1, 2 ORDER BY 1, 2
 )
 
 
-_ASSIGN_PLAN_CACHE: dict = {}
-
-
 @q(
     "x22_centroid_assign",
     "OP-X3",
@@ -596,24 +593,16 @@ _ASSIGN_PLAN_CACHE: dict = {}
     _ASSIGN_ORACLE,
 )
 def x22_centroid_assign(spark, sf_dir):
-    # Plan cache (the x30 idiom): the centroid collect is a real Spark
-    # job and the unrolled argmin costs Catalyst analysis — pay both
-    # once per (session, dataset state). The collected centroid VALUES
-    # are data baked into the plan (no row data is cached — every
-    # action re-executes the assignment scan — but the literals are
-    # data-derived), so the slot is keyed on the parquet fingerprint
-    # too: rewriting the dataset at the same path in-process rebuilds
-    # the centroids instead of scoring against stale ones.
-    # Slot keyed on sf_dir (bounded: one live entry per dataset); a hit
-    # is valid only for THIS session and an unchanged fingerprint.
-    fp = dataset_fingerprint(sf_dir, "embeddings")
-    cached = _ASSIGN_PLAN_CACHE.get(sf_dir)
-    if (
-        cached is not None
-        and cached[0] == fp
-        and cached[1].sparkSession is spark
-    ):
-        return cached[1]
+    # The centroid collect is a real Spark job and the unrolled argmin
+    # costs Catalyst analysis; the collected centroid values are data
+    # baked into the plan, so the plan is memoized per dataset state
+    # and session.
+    return memo(
+        spark, sf_dir, "embeddings", "x22", lambda: _x22_plan(spark, sf_dir)
+    )
+
+
+def _x22_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     # bounded driver state: labels × dims rows (10 × 64 here); same
     # eager-collect contract as operators/similarity.ivf_assign
@@ -625,13 +614,11 @@ def x22_centroid_assign(spark, sf_dir):
     if not cent_rows:
         # empty corpus: schema-correct empty confusion matrix (the old
         # join form returned empty; F.least() with no args would raise)
-        out = e.select(
+        return e.select(
             "label",
             F.col("label").alias("assigned"),
             F.lit(0).cast("long").alias("n"),
         ).filter(F.lit(False))
-        _ASSIGN_PLAN_CACHE[sf_dir] = (fp, out)
-        return out
     by_label: dict = {}
     for r in cent_rows:
         by_label.setdefault(r["label"], {})[int(r["dim"])] = float(r["c"])
@@ -676,14 +663,12 @@ def x22_centroid_assign(spark, sf_dir):
             F.struct(d2.cast("double").alias("d2"), F.lit(cand).alias("cand"))
         )
     best = structs[0] if len(structs) == 1 else F.least(*structs)
-    out = (
+    return (
         e.select("label", best["cand"].alias("assigned"))
         .groupBy("label", "assigned")
         .agg(F.count("*").cast("long").alias("n"))
         .orderBy("label", "assigned")
     )
-    _ASSIGN_PLAN_CACHE[sf_dir] = (fp, out)
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -116,7 +116,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import Query
-from ravelytics_spark.sources.tables import load_table
+from ravelytics_spark.plans.round4 import embedding_probe
+from ravelytics_spark.sources.tables import load_table, memo
 
 STAGED: dict[str, Query] = {}
 
@@ -1508,7 +1509,6 @@ def x332_embedding_energy(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _DR_TOP = 8
-_DR_MOM_CACHE: dict = {}
 
 
 def _dr_corr_expr(n, si, sj, vki, vkj) -> str:
@@ -1589,21 +1589,15 @@ ORDER BY abs(corr_milli) DESC, dim_a, dim_b
     _DR_ORACLE,
 )
 def x339_dim_redundancy(spark, sf_dir):
-    from ravelytics_spark.sources.tables import dataset_fingerprint
-
     e = load_table(spark, sf_dir, "embeddings")
-    fp = dataset_fingerprint(sf_dir, "embeddings")
-    cached = _DR_MOM_CACHE.get(sf_dir)
-    if cached is not None and cached[0] == fp:
-        rows, d = cached[1], cached[2]
-    else:
+
+    def moments():
         vec0 = F.col("embedding").cast("array<double>")
         f30 = F.transform(
             vec0,
             lambda x: (x.cast("decimal(9,3)") * F.lit(1000)).cast("long"),
         )
-        wd = e.agg(F.max(F.size("embedding")).alias("d"))
-        d = wd.collect()[0][0]  # bounded: one row (table max width)
+        d = embedding_probe(spark, sf_dir)[0]  # table max width
         mo = (
             e.filter(F.size("embedding") == F.lit(d))
             .select(F.posexplode(f30).alias("i", "f"))
@@ -1626,7 +1620,9 @@ def x339_dim_redundancy(spark, sf_dir):
             ),
             key=lambda t: (-t[3], t[0]),
         )[:_DR_TOP]
-        _DR_MOM_CACHE[sf_dir] = (fp, rows, d)
+        return rows, d
+
+    rows, d = memo(spark, sf_dir, "embeddings", "x339_moments", moments)
     if len(rows) < 2:
         return e.limit(0).select(
             F.lit(0).cast("long").alias("dim_a"),

@@ -62,7 +62,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import q
-from ravelytics_spark.sources.tables import dataset_fingerprint, load_table
+from ravelytics_spark.plans.round4 import embedding_probe
+from ravelytics_spark.sources.tables import load_table, memo
 
 # ---------------------------------------------------------------------------
 # shared fixed-point helpers (the x339 3-dp idiom)
@@ -98,7 +99,7 @@ def _fixed_vectors(spark, sf_dir):
     vec_ids' fixed-point vectors, collected (bounded: 16 rows). Returns
     (None, []) on an empty table."""
     e = load_table(spark, sf_dir, "embeddings")
-    d = e.agg(F.max(F.size("embedding"))).collect()[0][0]
+    d = embedding_probe(spark, sf_dir)[0]
     if d is None:
         return None, []
     rows = (
@@ -116,22 +117,6 @@ def _empty_ann(e):
         F.lit(0).cast("long").alias("vec_id"),
         F.lit(0).cast("long").alias("d2"),
     )
-
-
-_ANN_PLAN_CACHE: dict = {}
-
-
-def _ann_cached(name, spark, sf_dir, build):
-    """Plan cache keyed on (name, sf_dir) + dataset fingerprint (the
-    x22 idiom): centroid/codebook literals are data baked into the
-    plan, so a rewrite of the parquet invalidates the slot."""
-    fp = dataset_fingerprint(sf_dir, "embeddings")
-    slot = _ANN_PLAN_CACHE.get((name, sf_dir))
-    if slot is not None and slot[0] == fp and slot[1].sparkSession is spark:
-        return slot[1]
-    out = build()
-    _ANN_PLAN_CACHE[(name, sf_dir)] = (fp, out)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -278,7 +263,8 @@ def x342_ivf_portable(spark, sf_dir):
             .limit(10)
         )
 
-    return _ann_cached("x342", spark, sf_dir, build)
+    # centroid literals are data baked into the plan
+    return memo(spark, sf_dir, "embeddings", "x342", build)
 
 
 # ---------------------------------------------------------------------------
@@ -432,7 +418,8 @@ def x343_pq_portable(spark, sf_dir):
             .limit(10)
         )
 
-    return _ann_cached("x343", spark, sf_dir, build)
+    # codebook literals are data baked into the plan
+    return memo(spark, sf_dir, "embeddings", "x343", build)
 
 
 # ---------------------------------------------------------------------------

@@ -51,8 +51,8 @@ from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round20 import _KNUTH, _SRP_BITS, _srp_sign
-from ravelytics_spark.plans.round33 import _FX_CTE, _ann_cached, _f3
-from ravelytics_spark.sources.tables import load_table
+from ravelytics_spark.plans.round33 import _FX_CTE, _f3
+from ravelytics_spark.sources.tables import load_table, memo
 
 # ---------------------------------------------------------------------------
 # x361 — LZ78-phrase novelty quality (portable twin of x192)
@@ -344,4 +344,4 @@ def x362_planted_near_pairs(spark, sf_dir):
             .orderBy("id_a", "id_b")
         )
 
-    return _ann_cached("x362", spark, sf_dir, build)
+    return memo(spark, sf_dir, "embeddings", "x362", build)

@@ -7,7 +7,10 @@ to Catalyst/Tungsten. The session is configured for:
   OP-D4; ClickHouse servers in the reference compose run UTC by default);
 - AQE on (runtime re-plan: skew-join splitting, dynamic coalesce of shuffle
   partitions — critical at 100 TB where static partition counts are wrong);
-- Arrow enabled for the few Pandas-UDF extension operators.
+- Arrow enabled for the few Pandas-UDF extension operators;
+- parquet TIMESTAMP(NANOS) columns read as LongType nanos
+  (``spark.sql.legacy.parquet.nanosAsLong``; Spark's reader rejects them
+  otherwise), which ``sources.tables.load_table`` converts to timestamps.
 
 At cluster scale, ``shuffle_partitions`` should be ~2-3× total executor
 cores (or left to AQE's coalescing with a high initial value); the local
@@ -21,6 +24,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def get_spark(
@@ -49,6 +53,7 @@ def get_spark(
         # stay inside whole-stage codegen; the default 100-field cap
         # silently drops them to interpreted mode (~30x slower).
         .config("spark.sql.codegen.maxFields", "256")
+        .config(_NANOS_AS_LONG, "true")
         # Small local driver heap is fine at test SFs; a real deployment
         # sizes executors so a shuffle partition fits in memory.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
@@ -62,9 +67,11 @@ def get_spark(
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable session settings to a session we did not
     build (the driver harness passes its own). Static configs (master,
-    memory) cannot change here; the semantic ones (timezone) can.
+    memory) cannot change here; the semantic ones (timezone, nanos
+    reading) can.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set(_NANOS_AS_LONG, "true")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     except Exception:

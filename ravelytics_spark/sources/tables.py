@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 TABLE_NAMES = (
     "region",
@@ -29,40 +30,42 @@ TABLE_NAMES = (
 
 
 # Columns written with parquet TIMESTAMP(NANOS) logical type, which Spark's
-# reader rejects. With spark.sql.legacy.parquet.nanosAsLong they surface as
-# LongType nanos-since-epoch; we convert to TimestampType (micros) with an
-# integer DIV (lossy below-microsecond only; oracle SQL truncates the same
-# way via CAST(ts_ns AS TIMESTAMP)).
+# reader rejects by default. The session reads them as LongType
+# nanos-since-epoch (the nanos-as-long setting in session.py); we convert
+# to TimestampType (micros) with an integer DIV (lossy below-microsecond
+# only; oracle SQL truncates the same way via CAST(ts_ns AS TIMESTAMP)).
 _NANO_TS_COLS = {"events": ("ts",)}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one warehouse table. Plain ``spark.read.parquet`` — pruning,
+    """Scan one warehouse table with a declared schema. Inferring the
+    schema is a Spark job; the inferred ``StructType`` is memoized per
+    dataset state and session, so a repeat read launches none. Pruning,
     pushdown and vectorization are Catalyst built-ins."""
-    nano_cols = _NANO_TS_COLS.get(name, ())
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for c in nano_cols:
-        if dict(df.dtypes).get(c) == "bigint":
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = memo(
+        spark, sf_dir, name, "schema", lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
+    for c in _NANO_TS_COLS.get(name, ()):
+        if c in schema.fieldNames() and isinstance(schema[c].dataType, LongType):
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
     return df
 
 
 def dataset_fingerprint(sf_dir: str, name: str) -> tuple:
     """Cheap driver-side fingerprint of one table's on-disk state:
-    sorted (relative-path, size, mtime_ns) of every data file. Used to
-    key derived-from-data caches (probed dims, collected centroids,
-    unrolled plans) so an in-process rewrite of the SAME path — a
-    regenerated corpus, an appended partition — invalidates them
-    instead of silently serving plans built against stale data
-    properties. Pure ``os.stat``; no Spark job."""
+    ``(root, entries)`` with the sorted (relative-path, size, mtime_ns)
+    of every data file. An in-process rewrite of the SAME path — a
+    regenerated corpus, an appended partition — changes it. ``entries``
+    is None when ``os.path`` cannot stat the root (a missing table, a
+    ``file://`` URI). Pure ``os.stat``; no Spark job."""
     root = os.path.join(sf_dir, f"{name}.parquet")
     if not os.path.exists(root):
         return (root, None)
     if os.path.isfile(root):
         st = os.stat(root)
-        return (root, st.st_size, st.st_mtime_ns)
+        return (root, ((".", st.st_size, st.st_mtime_ns),))
     entries = []
     for dirpath, _dirnames, filenames in os.walk(root):
         for fn in filenames:
@@ -74,6 +77,33 @@ def dataset_fingerprint(sf_dir: str, name: str) -> tuple:
     return (root, tuple(sorted(entries)))
 
 
+# (key, sf_dir, table) -> (fingerprint, session, value); see memo().
+_MEMO: dict = {}
+
+
+def memo(spark: SparkSession, sf_dir: str, table: str, key: str, build):
+    """Return ``build()``, reusing the value stored under ``(key, sf_dir,
+    table)`` while the table's fingerprint is unchanged and the value was
+    built for this same ``spark`` session.
+
+    For anything derived from a table's data that costs a Spark job or a
+    long Catalyst analysis: its schema, probed widths, collected
+    centroids, unrolled plans (a stored DataFrame holds no rows; every
+    action re-executes its scan). When the fingerprint sees no files
+    there is nothing to check a stored value against, so ``build()``
+    runs on every call and nothing is stored."""
+    fp = dataset_fingerprint(sf_dir, table)
+    if not fp[1]:
+        return build()
+    slot = (key, sf_dir, table)
+    hit = _MEMO.get(slot)
+    if hit is not None and hit[0] == fp and hit[1] is spark:
+        return hit[2]
+    value = build()
+    _MEMO[slot] = (fp, spark, value)
+    return value
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every testdata table; also registers each as a temp view so
     ``spark.sql`` works against the same names DuckDB's oracle uses."""
@@ -81,7 +111,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            df = load_table(spark, sf_dir, name)  # incl. nano-ts handling
+            df = load_table(spark, sf_dir, name)
             df.createOrReplaceTempView(name)
             out[name] = df
     return out

@@ -19,6 +19,7 @@ DuckDB gates at it.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import pyarrow as pa
@@ -59,7 +60,7 @@ def main() -> None:
 
     for name in DIMS:
         pq.read_table(f"{src}/{name}.parquet")  # validate
-        os.system(f"cp {src}/{name}.parquet {dst}/{name}.parquet")
+        shutil.copyfile(f"{src}/{name}.parquet", f"{dst}/{name}.parquet")
 
     for name, spec in FACT_KEYS.items():
         t = pq.read_table(f"{src}/{name}.parquet")

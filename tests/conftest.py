@@ -13,7 +13,7 @@ sys.path.insert(0, _REPO)
 # Must be set before the JVM launches.
 os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-from ravelytics_spark.session import get_spark  # noqa: E402
+from ravelytics_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("RAVELYTICS_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -40,12 +40,21 @@ def tier(names, keep_every: int = 4, salt: str = "tier"):
     return [n for n in names if zlib.crc32(f"{salt}:{n}".encode()) % keep_every == 0]
 
 
+def pytest_report_header(config):
+    if os.environ.get("RAVELYTICS_FULL"):
+        return "catalog sweeps: full (RAVELYTICS_FULL=1)"
+    return (
+        "catalog sweeps: deterministic 1-in-4 sample (tier()); "
+        "RAVELYTICS_FULL=1 runs the full sweep"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     # RAVELYTICS_TEST_CPUS lets scripts/run_suite.py split the box
-    # across parallel pytest workers (each worker gets 32/N threads);
-    # a plain `pytest tests/` keeps the historical local[8].
-    cpus = int(os.environ.get("RAVELYTICS_TEST_CPUS", "8"))
+    # across parallel pytest workers; a plain `pytest tests/` uses
+    # SPARK_GRAFT_CPUS (session.DEFAULT_CPUS).
+    cpus = int(os.environ.get("RAVELYTICS_TEST_CPUS", DEFAULT_CPUS))
     s = get_spark(
         app_name="ravelytics_tests",
         master=f"local[{cpus}]",

@@ -121,7 +121,11 @@ def test_aqe_splits_planted_skew_join(spark, sf_dir):
     OptimizeSkewedJoin must split the skewed partition (skew=true in
     the final plan) instead of letting one task run 100x long — the
     property that keeps shuffled joins alive at 100 TB."""
+    # The hot key is skewed only against the median partition, so the
+    # partition count is part of the planted input (at 4 the hot
+    # partition is only about 5x the median, AQE's default skew factor).
     skew_conf = {
+        "spark.sql.shuffle.partitions": "8",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",

@@ -10,16 +10,23 @@ Covers:
   same-path rewrite, and drops malformed (null / wrong-width)
   embeddings instead of assigning them to the lowest-sorting label;
 - x86_shard_manifest's shard key never goes negative for doc_ids
-  beyond 2^31 (the BIGINT-overflow engine divergence).
+  beyond 2^31 (the BIGINT-overflow engine divergence);
+- the data-keyed memo (sources.tables.memo) never serves a stale value:
+  not for a path os.path cannot stat (a file:// URI), not after a
+  same-path rewrite that changes a column's type, and never to another
+  SparkSession;
+- load_table reads a parquet TIMESTAMP(NANOS) column as microsecond
+  timestamps without touching the session's settings.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from ravelytics_spark.sources.tables import dataset_fingerprint
+from ravelytics_spark.sources.tables import dataset_fingerprint, load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -132,3 +139,75 @@ def test_x86_shard_nonnegative_beyond_2pow31(spark, tmp_path):
     for r in out:
         assert 0 <= r.shard < 16, f"shard out of range: {r.shard}"
     assert sum(r.n_docs for r in out) == len(big_ids)
+
+
+def test_x30_file_uri_rebuilds_after_rewrite(spark, tmp_path):
+    """A file:// URI is readable by Spark but has no os.path fingerprint;
+    the memo must rebuild on every call instead of keying on a constant."""
+    from ravelytics_spark.plans.round4 import x30_rp_projection
+
+    d = str(tmp_path)
+    _stage_embeddings(spark, d, dims=4, n=8)
+    out1 = x30_rp_projection(spark, "file://" + d)
+    assert len({r.vec_id for r in out1.collect()}) == 8
+
+    _stage_embeddings(spark, d, dims=6, n=5)
+    out2 = x30_rp_projection(spark, "file://" + d)
+    assert out2 is not out1
+    rows2 = out2.collect()
+    assert len({r.vec_id for r in rows2}) == 5
+    assert all(r.proj is not None for r in rows2)
+
+
+def test_load_table_schema_follows_type_rewrite(spark, tmp_path):
+    d = str(tmp_path)
+    path = os.path.join(d, "documents.parquet")
+    spark.createDataFrame([(1, "a")], "doc_id long, text string") \
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    assert dict(load_table(spark, d, "documents").dtypes)["doc_id"] == "bigint"
+    # memo hit: same schema, same values
+    assert load_table(spark, d, "documents").first().doc_id == 1
+
+    spark.createDataFrame([("x1", "a")], "doc_id string, text string") \
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    df = load_table(spark, d, "documents")
+    assert dict(df.dtypes)["doc_id"] == "string"
+    assert df.first().doc_id == "x1"
+
+
+@pytest.mark.parametrize("name", ["x22_centroid_assign", "x30_rp_projection"])
+def test_memo_never_crosses_sessions(spark, tmp_path, name):
+    from ravelytics_spark.plans.queries import REGISTRY
+
+    d = str(tmp_path)
+    _stage_embeddings(spark, d, dims=4, n=12)
+    fn = REGISTRY[name].spark
+    out1 = fn(spark, d)
+    assert fn(spark, d) is out1
+    other = spark.newSession()
+    out2 = fn(other, d)
+    assert out2 is not out1
+    assert out2.sparkSession is other
+    assert sorted(out2.collect()) == sorted(out1.collect())
+    # and the first session's value is not replaced by the second's
+    assert fn(other, d) is out2
+
+
+def test_load_table_reads_nanos_timestamps(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999, None]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+        }),
+        os.path.join(str(tmp_path), "events.parquet"),
+    )
+    before = spark.conf.getAll
+    df = load_table(spark, str(tmp_path), "events")
+    assert spark.conf.getAll == before
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = [r.us for r in df.orderBy("event_id").select(F.unix_micros("ts").alias("us")).collect()]
+    assert got == [v // 1000 if v is not None else None for v in ns]

@@ -9,6 +9,7 @@ from ravelytics_spark.plans.queries import REGISTRY
 def test_sample_stable_across_partitioning(spark, sf_dir):
     q = REGISTRY["x9_stratified_sample"]
     a = {r.doc_id for r in q.spark(spark, sf_dir).collect()}
+    found = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "3")
     try:
         # also force a different scan parallelism via repartition upstream:
@@ -17,7 +18,7 @@ def test_sample_stable_across_partitioning(spark, sf_dir):
 
         b = {r.doc_id for r in q.spark(spark, sf_dir).collect()}
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        spark.conf.set("spark.sql.shuffle.partitions", found)
     assert a == b
 
 

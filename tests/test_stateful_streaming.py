@@ -28,13 +28,15 @@ def _write(src: Path, name: str, rows):
 def _run_batch(spark, src, ckpt, qname):
     from ravelytics_spark.streaming.stateful import user_session_stats
 
-    n_before = _count_commits(ckpt)
     stream = spark.readStream.schema("user_id long, ts_epoch double").json(str(src))
     out = user_session_stats(stream, gap_s=1800.0)
-    collected = []
+    collected, data_batches = [], []
 
     def sink(batch_df, batch_id):
-        collected.extend(batch_df.collect())
+        rows = batch_df.collect()
+        if rows:
+            data_batches.append(batch_id)
+        collected.extend(rows)
 
     # foreachBatch (unlike the memory sink) supports checkpoint recovery,
     # which the cross-restart state assertion needs.
@@ -54,24 +56,22 @@ def _run_batch(spark, src, ckpt, qname):
     # log instead — rows are collected by foreachBatch before the commit
     # is written, and a committed batch is all the cross-restart
     # assertion needs — then stop the cleanup loop.
-    _await_new_commit(ckpt, n_before)
+    _await_data_commit(ckpt, data_batches)
     q.stop()
     q.awaitTermination(60)
     return {r.user_id: (r.session_count, r.current_len) for r in collected}
 
 
-def _count_commits(ckpt: Path) -> int:
-    commits = ckpt / "commits"
-    return len(list(commits.glob("*"))) if commits.exists() else 0
-
-
-def _await_new_commit(ckpt: Path, n_before: int, deadline_s: float = 120.0):
+def _await_data_commit(ckpt: Path, data_batches: list, deadline_s: float = 120.0):
+    """Wait until the batch that delivered rows is in the commit log. Any
+    new commit is not enough: q.stop() can interrupt a no-data cleanup
+    batch, and the restarted query replays and commits that one first."""
     t0 = time.time()
     while time.time() - t0 < deadline_s:
-        if _count_commits(ckpt) > n_before:
+        if data_batches and (ckpt / "commits" / str(data_batches[0])).exists():
             return
         time.sleep(0.2)
-    raise AssertionError("streaming batch never committed")
+    raise AssertionError("streaming data batch never committed")
 
 
 def test_state_carries_across_microbatches(spark, dirs):
@@ -126,8 +126,6 @@ def test_timeout_evicts_idle_user_state():
 def _run_batch_tws(spark, src, ckpt):
     from ravelytics_spark.streaming.stateful import user_session_stats_tws
 
-    n_before = _count_commits(ckpt)
-
     # transformWithState requires the RocksDB state store provider
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -135,10 +133,13 @@ def _run_batch_tws(spark, src, ckpt):
     )
     stream = spark.readStream.schema("user_id long, ts_epoch double").json(str(src))
     out = user_session_stats_tws(stream, gap_s=1800.0)
-    collected = []
+    collected, data_batches = [], []
 
     def sink(batch_df, batch_id):
-        collected.extend(batch_df.collect())
+        rows = batch_df.collect()
+        if rows:
+            data_batches.append(batch_id)
+        collected.extend(rows)
 
     q = (
         out.writeStream.foreachBatch(sink)
@@ -148,7 +149,7 @@ def _run_batch_tws(spark, src, ckpt):
         .start()
     )
     # same non-termination as the applyInPandasWithState twin above
-    _await_new_commit(ckpt, n_before)
+    _await_data_commit(ckpt, data_batches)
     q.stop()
     q.awaitTermination(60)
     return {r.user_id: (r.session_count, r.current_len) for r in collected}
