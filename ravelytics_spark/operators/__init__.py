@@ -16,7 +16,7 @@ from ravelytics_spark.operators.feature_norm import (
     normalize_by_group,
     normalize_by_group_pandas,
 )
-from ravelytics_spark.operators.latest_state import latest_state, latest_state_window
+from ravelytics_spark.operators.latest_state import latest_state
 from ravelytics_spark.operators.maintenance import (
     cleanse_tracks_with_audit,
     compact_partitions,
@@ -65,7 +65,6 @@ __all__ = [
     "normalize_by_group",
     "normalize_by_group_pandas",
     "latest_state",
-    "latest_state_window",
     "cleanse_tracks_with_audit",
     "compact_partitions",
     "merge_latest_state",

@@ -3,23 +3,16 @@
 Ref: 002_views_techno.sql:9-15 — per ``artist_id``, the value of each
 tracked column at max ``ingest_ts`` (SCD-latest).
 
-Two physical strategies, both single-shuffle:
-
-- ``latest_state`` (default): ``groupBy(key).agg(max_by(col, ts))`` —
-  Spark's hash aggregate does partial (map-side) + final combine, so at
-  100 TB only one pre-combined row per key per map task crosses the
-  shuffle. Preferred.
-- ``latest_state_window``: ``row_number() == 1`` over a window — needed
-  when ties on ``ts`` must break deterministically by extra columns, or
-  when the whole latest ROW (many columns) is wanted without N max_by's.
-  Same single shuffle, but carries full rows through the sort.
+``groupBy(key).agg(max_by(col, ts))``: Spark's hash aggregate does
+partial (map-side) + final combine, so at 100 TB only one pre-combined
+row per key per map task crosses the single shuffle.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,20 +29,3 @@ def latest_state(
     aggs = [F.max_by(c, ts).alias(c) for c in value_cols]
     return df.groupBy(*keys).agg(*aggs)
 
-
-def latest_state_window(
-    df: DataFrame,
-    key: str | Sequence[str],
-    ts: str,
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """Full-row latest-state via row_number; deterministic under ts ties
-    if ``tiebreak`` makes the order total."""
-    keys = [key] if isinstance(key, str) else list(key)
-    order = [F.col(ts).desc()] + [F.col(c).desc() for c in tiebreak]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )

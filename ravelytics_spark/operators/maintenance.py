@@ -6,7 +6,11 @@ needs explicit jobs).
 
 from __future__ import annotations
 
+import math
 import os
+import shutil
+import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +41,40 @@ def merge_latest_state(
     )
 
 
+def _replace_partitions(path: str, stage: Callable[[str], None]) -> None:
+    """Replace partitions of the table at ``path`` — the one swap of
+    this module. Recovery first: a partition that a crash left only in
+    ``_retired`` is renamed back, then ``_staging`` and ``_retired``
+    are deleted. Rolling back is correct because callers re-run: the
+    upsert's fold is idempotent and its caller re-applies the batch (a
+    ``Pipeline`` retry, a foreachBatch replay); compaction rewrites the
+    same rows. Then ``stage`` writes ``<col>=<v>`` directories under
+    ``_staging``; each live one moves to ``_retired`` and its staged
+    copy takes its place; ``_retired`` goes once all are promoted.
+    Partition discovery skips a leading ``_``: readers never see staged
+    or retired rows, but miss a partition between its two renames (and
+    after a crash there, until the next call restores it).
+    """
+    staging, retired = os.path.join(path, "_staging"), os.path.join(path, "_retired")
+    for name in os.listdir(retired) if os.path.isdir(retired) else ():
+        if not os.path.isdir(os.path.join(path, name)):
+            os.rename(os.path.join(retired, name), os.path.join(path, name))
+    for leftover in (staging, retired):
+        if os.path.isdir(leftover):
+            shutil.rmtree(leftover)
+    stage(staging)
+    if not os.path.isdir(staging):
+        return
+    os.makedirs(retired)
+    for name in sorted(n for n in os.listdir(staging) if "=" in n):
+        live = os.path.join(path, name)
+        if os.path.isdir(live):
+            os.rename(live, os.path.join(retired, name))
+        os.rename(os.path.join(staging, name), live)
+    shutil.rmtree(retired)
+    shutil.rmtree(staging)
+
+
 def compact_partitions(
     spark: SparkSession,
     path: str,
@@ -51,11 +89,13 @@ def compact_partitions(
     ClickHouse's answer).
 
     Rewrites each listed partition (default: all) into
-    ``ceil(rows / target_file_rows)`` files via staging dir +
-    rename-swap: the live dir is moved aside only AFTER the compacted
-    copy is fully written, then staging is promoted, then the old copy
-    is deleted LAST — a crash at any step leaves a complete copy of the
-    data on disk (the old dir, recoverable by renaming back).
+    ``ceil(rows / target_file_rows)`` files under the hidden
+    ``<path>/_staging`` and swaps them in (``_replace_partitions``).
+    Each call first recovers from a crashed earlier swap. Readers of
+    ``path`` see each partition's old or new files, never both, but may
+    miss one partition between its two renames (after a crash there,
+    until the next call), or fail on an old file the swap deleted after
+    they listed it (retry).
 
     Concurrency contract: a partition must be quiescent while it is
     compacted — rows appended between the read and the swap would be
@@ -64,11 +104,11 @@ def compact_partitions(
     are skipped (run with e.g. 2× the micro-batch interval; ingest-day
     partitions simply wait for the next scheduled pass).
 
-    Filesystem contract: the staging/retire swap depends on atomic
-    directory ``os.rename`` and driver-visible listings, i.e. a POSIX
-    filesystem (local disk, NFS). On object stores (S3) rename is
-    copy+delete and non-atomic — there, compact through a table format
-    (Delta/Iceberg ``rewrite_data_files``) instead of this operator.
+    Filesystem contract: the swap depends on atomic directory
+    ``os.rename`` and driver-visible listings, i.e. a POSIX filesystem
+    (local disk, NFS). On object stores (S3) rename is copy+delete and
+    non-atomic — there, compact through a table format (Delta/Iceberg
+    ``rewrite_data_files``) instead of this operator.
 
     NOT for paths under a Structured Streaming file-sink root: the
     sink's ``_spark_metadata`` transaction log names the original part
@@ -77,10 +117,6 @@ def compact_partitions(
     through the sink's own commit protocol or a table format
     (Delta/Iceberg ``rewrite_data_files``). Detected and refused.
     """
-    import math
-    import shutil
-    import time
-
     if os.path.isdir(os.path.join(path, "_spark_metadata")):
         raise ValueError(
             f"{path} is a Structured Streaming file-sink root "
@@ -88,34 +124,27 @@ def compact_partitions(
             "invalidate the sink's transaction log. Use the sink's commit "
             "protocol or a table format instead."
         )
-    if partitions is None:
-        partitions = [
-            d.split("=", 1)[1]
-            for d in os.listdir(path)
-            if d.startswith(f"{partition_col}=")
-        ]
-    now = time.time()
-    for value in partitions:
-        part_dir = os.path.join(path, f"{partition_col}={value}")
-        if min_quiesce_s > 0:
-            newest = max(
-                (
-                    os.path.getmtime(os.path.join(part_dir, f))
-                    for f in os.listdir(part_dir)
-                ),
-                default=0.0,
-            )
-            if now - newest < min_quiesce_s:
-                continue  # still inside the ingest window — next pass
-        df = spark.read.parquet(part_dir)
-        n = df.count()
-        files = max(1, math.ceil(n / target_file_rows))
-        staging = part_dir + ".compacting"
-        retired = part_dir + ".retired"
-        df.repartition(files).write.mode("overwrite").parquet(staging)
-        os.rename(part_dir, retired)  # old data intact until promote succeeds
-        os.rename(staging, part_dir)
-        shutil.rmtree(retired)  # delete last; crash before this leaves both copies
+
+    def stage(staging: str) -> None:
+        if partitions is None:
+            names = [d for d in os.listdir(path) if d.startswith(f"{partition_col}=")]
+        else:
+            names = [f"{partition_col}={v}" for v in partitions]
+        now = time.time()
+        for name in names:
+            part_dir = os.path.join(path, name)
+            if min_quiesce_s > 0:
+                newest = max(
+                    (os.path.getmtime(os.path.join(part_dir, f)) for f in os.listdir(part_dir)),
+                    default=0.0,
+                )
+                if now - newest < min_quiesce_s:
+                    continue  # still inside the ingest window — next pass
+            df = spark.read.parquet(part_dir)
+            files = max(1, math.ceil(df.count() / target_file_rows))
+            df.repartition(files).write.parquet(os.path.join(staging, name))
+
+    _replace_partitions(path, stage)
 
 
 def upsert_partitioned(
@@ -133,62 +162,46 @@ def upsert_partitioned(
     ReplacingMergeTree background merges; the reference's tracks table
     relies on exactly that, 001_init_spotify_tracks.sql:6-22.)
 
-    Per touched partition: read current rows, fold in the delta slice
-    (union → max_by, keeping the winning timestamp — one shuffle over
-    O(partition + slice), not O(table)), then promote via the same
-    rename-swap as ``compact_partitions`` (staging written fully →
-    live dir retired → staging promoted → retired deleted LAST; a
-    crash at any step leaves a complete copy on disk). Untouched
-    partitions are never read, written, or listed.
+    One pass: the live touched partitions are read together with the
+    delta's schema (no inference job) and folded with the delta by
+    ``latest_state`` per (partition, key), keeping the winning
+    timestamp the next upsert orders by — one shuffle over O(touched
+    partitions + delta), not O(table) — then staged by one
+    ``partitionBy`` write and swapped in (``_replace_partitions``).
+    Untouched partitions are never read, written, or listed. Each call
+    first recovers from a crashed earlier swap; a crash may leave some
+    touched partitions new and the rest old, and re-applying the delta
+    (a ``Pipeline`` retry, a foreachBatch replay) converges because the
+    fold is idempotent. The reader contract is ``compact_partitions``'s.
 
     Contract: ``partition_col`` must be immutable per key (true for
     any ingest-date/month derivation of a key-stable timestamp) — a
     key that changes partition value would duplicate across partitions
     because old partitions are not scanned. The delta must carry the
-    table's exact schema. Returns the list of partition values
-    rewritten.
+    table's exact schema. One writer per table. Returns the list of
+    partition values rewritten.
 
     At 100 TB the touched-partition list is the day's ingest window
     (a handful of values), so the rewrite cost is bounded by ingest
     volume, never table size.
     """
-    import shutil
+    touched = sorted(str(r[0]) for r in delta.select(partition_col).distinct().collect())
 
-    def _merge(df: DataFrame) -> DataFrame:
-        # Unlike merge_latest_state (which emits only key + values), the
-        # stored row RETAINS the winning timestamp — the next upsert
-        # needs it to order current vs delta (ReplacingMergeTree keeps
-        # the full row for the same reason).
-        value_cols = [c for c in df.columns if c not in (key, ts)]
-        return df.groupBy(key).agg(
-            *[F.max_by(c, ts).alias(c) for c in value_cols],
-            F.max(ts).alias(ts),
-        )
+    def stage(staging: str) -> None:
+        dirs = [os.path.join(path, f"{partition_col}={v}") for v in touched]
+        live = [d for d in dirs if os.path.isdir(d)]
+        rows = delta
+        if live:
+            rows = rows.unionByName(
+                spark.read.schema(delta.schema).option("basePath", path).parquet(*live)
+            )
+        others = [c for c in delta.columns if c not in (partition_col, key, ts)]
+        if touched:  # ts rides as the last value: max_by(ts, ts) is max(ts)
+            latest = latest_state(rows, [partition_col, key], ts, [*others, ts])
+            latest.write.partitionBy(partition_col).parquet(staging)
 
-    touched = [
-        r[0]
-        for r in delta.select(partition_col).distinct().collect()
-    ]
-    for value in sorted(str(v) for v in touched):
-        part_dir = os.path.join(path, f"{partition_col}={value}")
-        slice_df = delta.filter(F.col(partition_col) == value).drop(
-            partition_col
-        )
-        if os.path.isdir(part_dir):
-            current = spark.read.parquet(part_dir)
-            merged = _merge(current.unionByName(slice_df.select(*current.columns)))
-        else:
-            merged = _merge(slice_df)
-        staging = part_dir + ".upserting"
-        retired = part_dir + ".retired"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(part_dir):
-            os.rename(part_dir, retired)
-            os.rename(staging, part_dir)
-            shutil.rmtree(retired)
-        else:
-            os.rename(staging, part_dir)
-    return sorted(str(v) for v in touched)
+    _replace_partitions(path, stage)
+    return touched
 
 
 def cleanse_tracks_with_audit(wire: DataFrame) -> DataFrame:

@@ -131,6 +131,11 @@ def global_row_number(
     form); ``method="bucketed"`` is the distributed exact form — same
     output, no Exchange SinglePartition. The leading sort column must
     be numeric for the bucketed form (its quantiles drive bucketing).
+    The bucketed form also needs a DETERMINISTIC ``df``: it evaluates
+    ``df`` several times (quantile probe, bucket offsets, final rows),
+    so an input that can differ between evaluations (an unordered
+    ``limit``, a random sample) gets ranks above the frame's total.
+    Make such an input deterministic first (``orderBy`` before ``limit``).
     """
     if method == "window":
         w = Window.partitionBy(*partition_by).orderBy(*_sort_cols(order_by))
@@ -260,7 +265,9 @@ def global_ntile(
 ) -> DataFrame:
     """``df`` + ``col_name`` = ntile(k) over the total order — exact
     Spark/ANSI tile placement (first n%k tiles get the extra row),
-    via the same window/bucketed switch as :func:`global_row_number`."""
+    via the same window/bucketed switch as :func:`global_row_number`.
+    ``method="bucketed"`` inherits its precondition: ``df`` must be
+    deterministic, or a rank above the total can divide by zero."""
     if method == "window":
         w = Window.partitionBy(*partition_by).orderBy(*_sort_cols(order_by))
         return df.withColumn(col_name, F.ntile(k).over(w).cast("long"))

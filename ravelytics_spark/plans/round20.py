@@ -1027,9 +1027,6 @@ _PQ_LUT = [
     ]
     for sub in range(_PQ_NSUB)
 ]
-_PQ_LUT_SQL = ", ".join(
-    "[" + ", ".join(repr(v) for v in sub) + "]" for sub in _PQ_LUT
-)
 _PQ_Q_SCALED = [round(v * 1_000_000) for v in _PQ_Q]  # exact 6dp ints
 
 # per-subspace: literal-LUT index from sign bits of the 4 leading

@@ -346,8 +346,10 @@ ORDER BY cum.cohort, age
     "(x37 counts retained users; this follows the money). Scale: "
     "first-order and cell aggs are custkey/cohort-keyed with map-side "
     "combine; the cumulative window runs over the cohort x age "
-    "aggregate (months^2 cells, independent of order volume); cohort "
-    "sizes join broadcast.",
+    "aggregate (months^2 cells, independent of order volume), and the "
+    "same cohort-ordered window reads each cohort's size as its age-0 "
+    "active count (a first order falls in its cohort month), so no "
+    "cohort-size aggregate or join runs.",
     _LTV_ORACLE,
 )
 def x129_cohort_ltv(spark, sf_dir):

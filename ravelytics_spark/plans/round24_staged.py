@@ -412,9 +412,8 @@ def x152_eb_smoothed_rate(spark, sf_dir):
 # x147 — rank-biased overlap between consecutive-year top-20 rankings
 # ---------------------------------------------------------------------------
 
-_RBO_P_NUM = 9  # p = 0.9
 _RBO_DEPTH = 20
-# literal scaled weights: w_d = round(p^(d-1) * (1-p) * 1e9), d = 1..20
+# literal scaled weights, p = 0.9: w_d = round(p^(d-1) * (1-p) * 1e9), d = 1..20
 _RBO_WEIGHTS = [
     round((0.9 ** (d - 1)) * 0.1 * 1_000_000_000) for d in range(1, _RBO_DEPTH + 1)
 ]

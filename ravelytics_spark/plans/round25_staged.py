@@ -137,6 +137,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table
 from ravelytics_spark.operators.ranks import (
     global_ntile,
@@ -1343,8 +1344,7 @@ def x177_ann_recall_eval(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
-    row = e.agg(F.max(F.size("embedding")).alias("d")).first()
-    dims = row["d"] or 0
+    dims = embedding_probe(spark, sf_dir)[0] or 0
     scale = 1_000_000_000_000
     norm_scale = 1_000_000
     # Unrolled fixed-point expressions are built as SQL STRINGS parsed

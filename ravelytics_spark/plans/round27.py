@@ -86,6 +86,7 @@ from ravelytics_spark.plans.round24_staged import (
     _WIN_MIN_SHARED,
     _WIN_W,
 )
+from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -482,8 +483,7 @@ GROUP BY 1 ORDER BY 1
 )
 def x230_hubness_audit(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
-    row = e.agg(F.max(F.size("embedding")).alias("d")).first()
-    dims = row["d"]
+    dims = embedding_probe(spark, sf_dir)[0]
     if dims is None:
         return (
             e.select(

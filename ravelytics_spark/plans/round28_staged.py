@@ -184,6 +184,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table
 
 STAGED: dict[str, Query] = {}
@@ -1489,8 +1490,7 @@ FROM mu
 )
 def x245_twonn_intrinsic_dim(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
-    row = e.agg(F.max(F.size("embedding")).alias("d")).first()
-    dims = row["d"]
+    dims = embedding_probe(spark, sf_dir)[0]
     if dims is None:
         # degenerate empty table: mirror the oracle's UNGROUPED
         # aggregate over an empty mu — ONE (0, NULL, NULL) row, not

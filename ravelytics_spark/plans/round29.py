@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round20 import _KNUTH, _SRP_BITS, _srp_sign
+from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table
 
 _BK_K = 5  # 5-NN for the hubness histogram (x230's k)
@@ -207,8 +208,7 @@ def _bucketed_candidates(spark, sf_dir):
     x91/x230 lesson).
     """
     e = load_table(spark, sf_dir, "embeddings")
-    row = e.agg(F.max(F.size("embedding")).alias("d")).first()
-    dims = row["d"]
+    dims = embedding_probe(spark, sf_dir)[0]
     if dims is None:
         return None
     # Unrolled fixed-point expressions as SQL STRINGS parsed by one

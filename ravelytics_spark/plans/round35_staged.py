@@ -75,7 +75,6 @@ def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
 # ---------------------------------------------------------------------------
 
 _BF_M = 1 << 16  # bits
-_BF_WORDS = _BF_M // 32  # 32-bit words: DuckDB << overflow-checks bit 63
 
 # three 16-bit hash positions from disjoint md5 slices (4 hex chars
 # each = exact 16-bit integers; m = 2^16 so no modulo bias)

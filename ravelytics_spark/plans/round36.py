@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round20 import _KNUTH, _SRP_BITS, _srp_sign
 from ravelytics_spark.plans.round33 import _FX_CTE, _f3
+from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table, memo
 
 # ---------------------------------------------------------------------------
@@ -228,18 +229,7 @@ ORDER BY id_a, id_b
 def x362_planted_near_pairs(spark, sf_dir):
     def build():
         e = load_table(spark, sf_dir, "embeddings")
-        row = e.agg(
-            F.max(F.size("embedding")).alias("d"),
-            F.max(
-                F.array_max(
-                    F.transform(
-                        F.col("embedding").cast("array<double>"),
-                        lambda x: F.abs(x),
-                    )
-                )
-            ).alias("mx"),
-        ).first()
-        d, mx = row["d"], row["mx"]
+        d, mx = embedding_probe(spark, sf_dir)
         empty = e.limit(0).select(
             F.lit(0).cast("long").alias("id_a"),
             F.lit(0).cast("long").alias("id_b"),

@@ -138,10 +138,15 @@ def start_latest_state_upsert(
     Exactly-once story: foreachBatch is at-least-once under failures,
     but the latest-state merge is IDEMPOTENT (union → max_by of
     already-applied rows is a no-op), so batch replays converge to the
-    same table state — no transactional sink needed. The contract
-    inherited from upsert_partitioned: ``partition_col`` immutable per
-    key; one upserting stream per table (partition swaps are not
-    multi-writer safe).
+    same table state — no transactional sink needed. A batch that
+    crashed mid-swap is repaired the same way: the replayed upsert
+    first restores any partition the crash left in the hidden
+    ``_retired`` directory and drops the hidden ``_staging`` copy, then
+    re-applies the batch. Readers of ``warehouse_path`` never see those
+    hidden copies, but may briefly miss one partition during a swap.
+    The contract inherited from upsert_partitioned: ``partition_col``
+    immutable per key; one upserting stream per table (partition swaps
+    are not multi-writer safe).
     """
     from ravelytics_spark.operators.maintenance import upsert_partitioned
 

@@ -3,8 +3,9 @@
 pytest-xdist is not installed in this container (and pip installs are
 off-limits), so parallelism is per-PROCESS: test modules are bin-packed
 across N concurrent pytest workers, each with its own interpreter, its
-own Spark session (local[32/N] threads, so the workers together match
-the box), and its own scratch cwd (isolating spark-warehouse/ and any
+own Spark session (local[C/N] threads, C = ``session.DEFAULT_CPUS``
+from ``SPARK_GRAFT_CPUS``, so the workers together match the host), and
+its own scratch cwd (isolating spark-warehouse/ and any
 cwd-relative state like test_bucketing's saveAsTable catalog).
 
 Balancing: modules are assigned longest-processing-time-first using
@@ -32,6 +33,10 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from ravelytics_spark.session import DEFAULT_CPUS  # noqa: E402
+
 DUR_PATH = os.path.join(REPO, "tests", ".module_durations.json")
 
 
@@ -72,7 +77,7 @@ def main() -> int:
     n = int(os.environ.get("SUITE_WORKERS", "4"))
     durations = _load_durations()
     groups = _binpack(files, n, durations)
-    threads = max(2, 32 // max(1, len(groups)))
+    threads = max(1, DEFAULT_CPUS // max(1, len(groups)))
 
     procs = []
     t0 = time.time()

@@ -1,11 +1,15 @@
 """Incremental latest-state refresh ≡ full recompute; compaction reduces
-files and preserves data; audit flags localize defaulted records."""
+files and preserves data; a crash at any step of a partition swap loses
+and doubles nothing; audit flags localize defaulted records."""
 
 from __future__ import annotations
 
 import datetime
+import itertools
 import os
+import shutil
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -199,3 +203,100 @@ def test_upsert_equals_full_recompute(spark, tmp_path):
         for r in spark.read.parquet(path).collect()
     }
     assert got == expected
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash_at(m, root, at, steps):
+    """Make the ``at``-th filesystem step under ``root`` crash the
+    process: a parquet write (after it landed), an ``os.rename`` or a
+    ``shutil.rmtree`` (before it runs). Every step seen is appended to
+    ``steps``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    def step(kind, target):
+        if str(target).startswith(root + os.sep) or str(target) == root:
+            steps.append(kind)
+            if len(steps) - 1 == at:
+                raise _Crash(f"injected crash at step {at} ({kind} {target})")
+
+    write, rename, rmtree = DataFrameWriter.parquet, os.rename, shutil.rmtree
+
+    def crashing_write(self, path, *a, **kw):
+        write(self, path, *a, **kw)
+        step("write", path)
+
+    def crashing_rename(src, dst, *a, **kw):
+        step("rename", src)
+        return rename(src, dst, *a, **kw)
+
+    def crashing_rmtree(path, *a, **kw):
+        step("rmtree", path)
+        return rmtree(path, *a, **kw)
+
+    m.setattr(DataFrameWriter, "parquet", crashing_write)
+    m.setattr(os, "rename", crashing_rename)
+    m.setattr(shutil, "rmtree", crashing_rmtree)
+
+
+@pytest.mark.parametrize("op", ["upsert", "compact"])
+def test_swap_crash_at_every_step_loses_and_doubles_nothing(spark, tmp_path, monkeypatch, op):
+    """Crash the operator at each filesystem step of its partition swap
+    in turn (the staging write, every rename and every rmtree). Right
+    after the crash a reader of the root sees only real partition
+    values and at most one row per (partition, key); the next call
+    (re-applying the same delta, for the upsert) leaves exactly the
+    state a crash-free run leaves."""
+    from ravelytics_spark.operators.maintenance import upsert_partitioned
+
+    rows = [("k1", "202401", 1, _t(1)), ("k2", "202401", 2, _t(1)), ("k3", "202402", 3, _t(1))]
+    table = spark.createDataFrame(rows, "k string, m string, v long, ts timestamp")
+    delta = spark.createDataFrame(
+        [("k1", "202401", 10, _t(5)), ("k4", "202402", 4, _t(5)), ("k5", "202403", 5, _t(5))],
+        table.schema,
+    )
+    real_values = {"202401", "202402", "202403"}
+    template = str(tmp_path / "template")
+    table.repartition(3).write.partitionBy("m").parquet(template)
+
+    def run(root):
+        if op == "upsert":
+            upsert_partitioned(spark, root, delta, key="k", ts="ts", partition_col="m")
+        else:
+            compact_partitions(spark, root, "m")
+
+    def state(root):
+        files = {
+            d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(root, d)))
+            for d in os.listdir(root)
+            if op == "compact" and "=" in d
+        }
+        back = spark.read.parquet(root).select("m", "k", "v", "ts").collect()
+        return sorted(back), sorted(os.listdir(root)), files
+
+    ref = shutil.copytree(template, str(tmp_path / "ref"))
+    run(ref)
+    want = state(ref)
+
+    crashed = []
+    for at in itertools.count():
+        root = shutil.copytree(template, str(tmp_path / f"crash{at}"))
+        steps = []
+        with monkeypatch.context() as m:
+            _crash_at(m, root, at, steps)
+            try:
+                run(root)
+            except _Crash:
+                crashed.append(steps[-1])
+            else:
+                assert len(steps) == at, "every step was crashed once"
+                break
+        seen = [(r.m, r.k) for r in spark.read.parquet(root).select("m", "k").collect()]
+        where = f"crash at step {at} ({steps[-1]})"
+        assert {v for v, _ in seen} <= real_values, f"{where}: reader sees {seen}"
+        assert len(seen) == len(set(seen)), f"{where}: doubled rows {sorted(seen)}"
+        run(root)
+        assert state(root) == want, f"{where} not repaired"
+    assert {"write", "rename", "rmtree"} <= set(crashed), crashed

@@ -467,9 +467,10 @@ def test_upsert_sink_replay_after_crash_before_commit(spark, tmp_path, monkeypat
 
 def test_upsert_sink_replay_after_mid_merge_crash(spark, tmp_path, monkeypatch):
     """Harsher: the crash lands MID-merge — one touched partition
-    rewritten, the other not. The restart's replay must repair the
-    un-applied partition and leave the applied one unchanged (the
-    rename-swap per partition plus idempotent fold make partial
+    rewritten, the other not, as a crash between two partitions'
+    promotions in one swap leaves it. The restart's replay must repair
+    the un-applied partition and leave the applied one unchanged (the
+    partition-by-partition swap plus the idempotent fold make partial
     application safe)."""
     from pyspark.sql import functions as F
 
@@ -493,7 +494,7 @@ def test_upsert_sink_replay_after_mid_merge_crash(spark, tmp_path, monkeypatch):
 
     def crash_mid_merge(spark_, path, delta, **kw):
         # apply only the 202501 slice, then die — a crash between
-        # per-partition rename-swaps
+        # two partitions' promotions
         real(spark_, path, delta.filter(F.col("ingest_month") == "202501"), **kw)
         raise RuntimeError("injected: crashed mid-merge")
 
