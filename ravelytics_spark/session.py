@@ -10,11 +10,14 @@ to Catalyst/Tungsten. The session is configured for:
 - Arrow enabled for the few Pandas-UDF extension operators;
 - parquet TIMESTAMP(NANOS) columns read as LongType nanos
   (``spark.sql.legacy.parquet.nanosAsLong``; Spark's reader rejects them
-  otherwise), which ``sources.tables.load_table`` converts to timestamps.
+  otherwise), which ``sources.tables.load_table`` converts to timestamps;
+- a generated-code cache large enough for a repeated query to reuse its
+  compiled classes (``spark.sql.codegen.cache.maxEntries``).
 
 At cluster scale, ``shuffle_partitions`` should be ~2-3× total executor
 cores (or left to AQE's coalescing with a high initial value); the local
-default tracks the test harness (local[32]).
+default is one task slot per core this process may run on, or
+``SPARK_GRAFT_CPUS`` when set.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
@@ -53,6 +56,11 @@ def get_spark(
         # stay inside whole-stage codegen; the default 100-field cap
         # silently drops them to interpreted mode (~30x slower).
         .config("spark.sql.codegen.maxFields", "256")
+        # The 12 benchmark interactive queries generate about 200 distinct
+        # whole-stage and expression classes; Spark's default cache of 100
+        # evicts them every pass and Janino recompiles them, partly inside
+        # tasks. The cache evicts per segment, so size it 5x the working set.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config(_NANOS_AS_LONG, "true")
         # Small local driver heap is fine at test SFs; a real deployment
         # sizes executors so a shuffle partition fits in memory.
@@ -67,8 +75,10 @@ def get_spark(
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable session settings to a session we did not
     build (the driver harness passes its own). Static configs (master,
-    memory) cannot change here; the semantic ones (timezone, nanos
-    reading) can.
+    memory, the generated-code cache size) cannot change here; the
+    semantic ones (timezone, nanos reading) can. Such a session keeps
+    Spark's 100-entry code cache, so a loop over the catalog recompiles
+    its classes on every pass.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set(_NANOS_AS_LONG, "true")

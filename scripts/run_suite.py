@@ -3,8 +3,9 @@
 pytest-xdist is not installed in this container (and pip installs are
 off-limits), so parallelism is per-PROCESS: test modules are bin-packed
 across N concurrent pytest workers, each with its own interpreter, its
-own Spark session (local[C/N] threads, C = ``session.DEFAULT_CPUS``
-from ``SPARK_GRAFT_CPUS``, so the workers together match the host), and
+own Spark session (local[C/N] threads, C = ``session.DEFAULT_CPUS``:
+``SPARK_GRAFT_CPUS`` or the usable cores, so the workers together match
+the host), and
 its own scratch cwd (isolating spark-warehouse/ and any
 cwd-relative state like test_bucketing's saveAsTable catalog).
 

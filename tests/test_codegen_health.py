@@ -16,6 +16,13 @@ default 100-field cap would skip codegen on wide stages and mask the
 failure) and fails on any compile-failure marker on the JVM's stderr.
 capfd captures at the file-descriptor level, so log4j output from the
 py4j-launched JVM is visible to the assertion.
+
+A second guard pins the generated-code cache. The benchmark's twelve
+interactive queries generate about 200 classes; with Spark's default
+100-entry cache (spark.sql.codegen.cache.maxEntries) every pass evicts
+them and Janino compiles them all again. get_spark sizes the cache to
+1000, so a second pass over the same queries compiles nothing, counted
+by the JVM's CodegenMetrics compilation histogram.
 """
 
 from __future__ import annotations
@@ -34,6 +41,23 @@ _MARKERS = (
     "Failed to compile",
     "InternalCompilerException",
     "grows beyond 64 KB",
+)
+
+
+# perfbench/workloads.INTERACTIVE_QUERIES (tests do not import perfbench).
+_INTERACTIVE = (
+    "flagship_techno_stack",
+    "tpch_q1_pricing_summary",
+    "tpch_q3_shipping_priority",
+    "tpch_q5_local_supplier",
+    "tpch_q10_returned_items",
+    "tpch_q18_large_volume",
+    "g1_argmax_latest",
+    "t_window_daily",
+    "x12_cube",
+    "w2_rank",
+    "a1_explode",
+    "x111_rfm_segmentation",
 )
 
 
@@ -67,4 +91,21 @@ def test_headline_plans_compile_clean(spark, capfd):
     assert not failures, (
         "whole-stage codegen compile failures (silent interpreted "
         f"fallback): {failures}"
+    )
+
+
+def test_repeated_interactive_queries_compile_nothing(spark):
+    assert (
+        spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    ), "guard needs the production code cache size (get_spark)"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    per_pass = []
+    for _ in range(2):
+        before = compiles.getCount()
+        for name in _INTERACTIVE:
+            REGISTRY[name].spark(spark, _SF).write.format("noop").mode("overwrite").save()
+        per_pass.append(compiles.getCount() - before)
+    assert per_pass[1] == 0, (
+        f"classes compiled per pass {per_pass}: the generated-code cache "
+        "evicts the interactive working set"
     )
