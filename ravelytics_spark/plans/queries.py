@@ -23,21 +23,12 @@ Performance notes are attached per query where the plan shape matters at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window  # noqa: F401 (re-export surface)
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-# Query/REGISTRY/q/_dsum live in the LEAF registry module so plan
-# modules can import them without touching this module's import footer
-# (which loads every plan module — the round-10 circular-import fix).
-# Re-exported here: importing REGISTRY from queries additionally
-# guarantees the catalog is fully populated.
-from ravelytics_spark.plans.registry import (  # noqa: F401
-    REGISTRY,
-    Query,
-    _dsum,
-    _dsum_sql,
-    q,
-)
+# Importing REGISTRY from here, not from registry, guarantees that the
+# import footer below has populated the whole catalog.
+from ravelytics_spark.plans.registry import REGISTRY, _dsum, _dsum_sql, q  # noqa: F401
 from ravelytics_spark.sources.tables import load_table
 
 
@@ -765,24 +756,18 @@ def t_window_daily(spark, sf_dir):
 # Flagship: the reference's techno view stack end-to-end (§3.3 / Phase 1)
 # ---------------------------------------------------------------------------
 
+from ravelytics_spark.plans.flagship import FLAGSHIP_ORACLE, flagship  # noqa: E402
 
-def _register_flagship():
-    from ravelytics_spark.plans.flagship import FLAGSHIP_ORACLE, flagship
+q(
+    "flagship_techno_stack",
+    "OP-G1/A1/J1/G2/G3/A2-A5/F1/F2",
+    "The 4-deep techno view stack (002_views_techno.sql:9-58) over "
+    "synthetic domain tables derived from orders+events.",
+    FLAGSHIP_ORACLE,
+)(flagship)
 
-    REGISTRY["flagship_techno_stack"] = Query(
-        name="flagship_techno_stack",
-        op_id="OP-G1/A1/J1/G2/G3/A2-A5/F1/F2",
-        doc="The 4-deep techno view stack (002_views_techno.sql:9-58) over "
-        "synthetic domain tables derived from orders+events.",
-        spark=flagship,
-        oracle=FLAGSHIP_ORACLE,
-    )
-
-
-_register_flagship()
-
-# Extension operators (OP-X*) and harness-only operators register
-# themselves on import.
+# Every plan module registers its entries through ``q`` on import; this
+# order is the REGISTRY order.
 from ravelytics_spark.plans import extensions as _extensions  # noqa: E402,F401
 from ravelytics_spark.plans import harness_ops as _harness_ops  # noqa: E402,F401
 from ravelytics_spark.plans import round2 as _round2  # noqa: E402,F401
@@ -802,71 +787,22 @@ from ravelytics_spark.plans import round14 as _round14  # noqa: E402,F401
 from ravelytics_spark.plans import round15 as _round15  # noqa: E402,F401
 from ravelytics_spark.plans import round16 as _round16  # noqa: E402,F401
 from ravelytics_spark.plans import round17 as _round17  # noqa: E402,F401
-
-# Round-18 entries were STAGED in round 4 (catalog frozen until the
-# round-3 certification backlog cleared in the r04 driver window —
-# CORRECTNESS_r04.json is green for all 22); round 5 registers them.
-# The module self-registers its STAGED dict into REGISTRY at import
-# (bottom of round18.py), which stays correct whichever module is
-# imported first.
 from ravelytics_spark.plans import round18 as _round18  # noqa: E402,F401
 from ravelytics_spark.plans import round19 as _round19  # noqa: E402,F401
 from ravelytics_spark.plans import round20 as _round20  # noqa: E402,F401
 from ravelytics_spark.plans import round21 as _round21  # noqa: E402,F401
 from ravelytics_spark.plans import round22 as _round22  # noqa: E402,F401
 from ravelytics_spark.plans import round23_staged as _round23  # noqa: E402,F401
-
-# Round-24/25 entries were STAGED in round 6 (the round-6 driver window
-# was fully booked certifying the round-4/5 backlog — same freeze
-# discipline as round18/round23); round 7 registers them. Each module
-# self-registers its STAGED dict into REGISTRY at import.
 from ravelytics_spark.plans import round24_staged as _round24  # noqa: E402,F401
 from ravelytics_spark.plans import round25_staged as _round25  # noqa: E402,F401
-
-# Round-26 entries were STAGED in round 7 (the round-7 window certified
-# the x130-x183 backlog — same freeze discipline); round 8 registers
-# them. The module self-registers its STAGED dict at import.
 from ravelytics_spark.plans import round26_staged as _round26  # noqa: E402,F401
 from ravelytics_spark.plans import round27 as _round27  # noqa: E402,F401
-
-# Round-28 entries were STAGED in round 8 (the round-8 window was
-# exactly full at 50); the round-9 footer in the module registers the
-# whole x235-x274 batch at import. round29 carries the round-9 live
-# registrations (scale-safe SRP-bucketed twins of the all-pairs
-# x230/x245 audit forms).
 from ravelytics_spark.plans import round28_staged as _round28  # noqa: E402,F401
 from ravelytics_spark.plans import round29 as _round29  # noqa: E402,F401
-
-# Round-30 entries (x275-x311) were STAGED in round 9 (the round-9
-# window was exactly full: the 40 round-28 registrations + the 2
-# round-29 bucketed twins + 8 harness rows); the round-10 footer in
-# the module registers the whole batch at import.
 from ravelytics_spark.plans import round30_staged as _round30  # noqa: E402,F401
-
-# Round-31/32 entries (x312-x325, x326-x340) were STAGED in round 10
-# (the round-10 window was exactly full: 37 round-30 registrations +
-# 13 harness re-runs); their round-11 footers register both batches
-# at import — catalog 421 -> 450.
 from ravelytics_spark.plans import round31_staged as _round31  # noqa: E402,F401
 from ravelytics_spark.plans import round32_staged as _round32  # noqa: E402,F401
-
-# Round-33 entries (x342-x344) registered LIVE in round 11: portable
-# oracle twins for the harness-only entries the x96-x99/x105 twin set
-# leaves uncovered (data-derived IVF centroids / PQ codebooks, the HLL
-# day->month merge route), registered un-staged so they certify in the
-# round-11 window (r10 verdict item #2) — catalog 450 -> 453.
 from ravelytics_spark.plans import round33 as _round33  # noqa: E402,F401
-
-# Round-34/35 entries (x345-x349, x350-x354 + x355) were STAGED in
-# round 11 (the round-11 window was exactly full: 32 uncertified
-# oracle entries + 18 harness re-runs); their round-12 footers
-# register both batches at import — catalog 453 -> 463.
 from ravelytics_spark.plans import round34_staged as _round34  # noqa: E402,F401
 from ravelytics_spark.plans import round35_staged as _round35  # noqa: E402,F401
-
-# Round-36 entries (x361, x362) registered LIVE in round 12: portable
-# twins that keep shrinking the harness-only class (round-11 verdict
-# item 7): the x192 compression-quality metric with a DuckDB-able
-# codec proxy, and the x3_near_pairs pipeline over a deterministic
-# planted corpus — catalog 463 -> 465.
 from ravelytics_spark.plans import round36 as _round36  # noqa: E402,F401

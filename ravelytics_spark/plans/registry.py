@@ -1,17 +1,13 @@
-"""Leaf registry module: the Query record, the live REGISTRY dict and
-the ``q``/``_dsum`` helpers, with NO imports of any plan module.
+"""Leaf registry module: the Query record, the REGISTRY dict and the
+``q``/``_dsum`` helpers, with no imports of any plan module.
 
-Why a leaf: every plan module needs ``Query``/``q`` at its top, and
-``queries.py`` (which also defines these historically) ends in an
-import footer that loads every plan module — so a plan module imported
-FIRST (e.g. ``pytest tests/test_round24_staged.py`` standalone) used
-to re-enter ``queries`` mid-initialization and explode on any
-cross-module constant import (round27 <- round24_staged._WIN_K, the
-round-10 find). Plan modules now import these names from HERE (cycle
-impossible); ``queries.py`` re-exports them, so the populated-catalog
-import surface (``from ...queries import REGISTRY``) is unchanged —
-REGISTRY is one shared dict object either way, but only importing
-``queries`` guarantees it is fully populated.
+Why a leaf: every plan module imports ``q`` at its top, and
+``queries.py`` ends in an import footer that loads every plan module.
+If these names lived in ``queries``, a plan module imported first would
+re-enter ``queries`` mid-initialization and fail on any cross-module
+import. ``q`` is the only code that writes REGISTRY. REGISTRY is one
+shared dict either way, but only importing ``queries`` guarantees it is
+fully populated.
 """
 
 from __future__ import annotations

@@ -1,10 +1,7 @@
-"""Round-18 STAGED operators — written in round 4 but NOT registered
-in the live catalog (round-3 verdict froze oracle registrations until
-the 22-entry certification backlog clears in the round-4 driver
-window). Each entry here is complete — Spark plan + DuckDB oracle +
-pytest oracle comparison (tests/test_round18_staged.py) — and flips
-into the catalog by moving the ``STAGED`` entries through ``q()`` in
-plans/queries.py's import list next round.
+"""Catalog entries tpch_q1 and x81-x90: the last TPC-H query plus
+corpus-statistics and audit operators. Each entry is a Spark plan, a
+DuckDB oracle and a pytest oracle comparison
+(tests/test_round18_staged.py).
 
 Entries:
 
@@ -43,24 +40,11 @@ summation order could differ, BIGINT casts, total ORDER BY.
 
 from __future__ import annotations
 
-
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query, _dsum, _dsum_sql
+from ravelytics_spark.plans.registry import _dsum, _dsum_sql, q
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # TPC-H Q1 — pricing summary report
@@ -83,7 +67,7 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-@_staged(
+@q(
     "tpch_q1_pricing_summary",
     "OP-G3/G5/G6",
     "TPC-H Q1 pricing summary: the canonical grouped full-scan "
@@ -167,7 +151,7 @@ ORDER BY tot.label
 """
 
 
-@_staged(
+@q(
     "x81_semdedup",
     "OP-X2/OP-X3-ext",
     "SemDeDup (Abbas et al. 2023): semantic dedup scoped to clusters — "
@@ -262,7 +246,7 @@ ORDER BY prev_type, next_type
 """
 
 
-@_staged(
+@q(
     "x82_event_transitions",
     "OP-W3/G3-ext",
     "First-order Markov transition matrix of per-user event sequences: "
@@ -336,7 +320,7 @@ FROM scored ORDER BY bm25 DESC, doc_id LIMIT 20
 """
 
 
-@_staged(
+@q(
     "x83_bm25_score",
     "OP-X4-ext",
     "Okapi BM25 (k1=1.2, b=0.75) over the corpus for a fixed query: "
@@ -426,7 +410,7 @@ FROM sums ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x84_zipf_slope",
     "OP-G6/X4-ext",
     "Per-source Zipf exponent: OLS slope of ln(freq) on ln(rank) over "
@@ -517,7 +501,7 @@ FROM contrib GROUP BY source ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x85_jsd_source_drift",
     "OP-X4/G3-ext",
     "Jensen-Shannon divergence between each source's unigram "
@@ -595,7 +579,7 @@ FROM assign GROUP BY shard ORDER BY shard
 """
 
 
-@_staged(
+@q(
     "x86_shard_manifest",
     "OP-X9/O5-ext",
     "Deterministic training-shard planner + manifest: every document "
@@ -695,7 +679,7 @@ GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@_staged(
+@q(
     "x87_bigram_logprob",
     "OP-X4-ext",
     "Bigram-LM mean log-probability per document — the conditional "
@@ -767,7 +751,7 @@ FROM agg ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x88_lexical_diversity",
     "OP-X4/G5-ext",
     "Lexical-diversity profile per source: type-token ratio and hapax-"
@@ -829,7 +813,7 @@ FROM w GROUP BY user_id ORDER BY user_id
 """
 
 
-@_staged(
+@q(
     "x89_decayed_engagement",
     "OP-G6/D-ext",
     "Exponentially time-decayed engagement per user (one-week "
@@ -907,7 +891,7 @@ FROM counts CROSS JOIN tot ORDER BY d
 """
 
 
-@_staged(
+@q(
     "x90_benford_deviation",
     "OP-G5/X4-ext",
     "Benford's-law leading-digit audit of order totals — the classic "
@@ -953,14 +937,3 @@ def x90_benford_deviation(spark, sf_dir):
         )
         .orderBy("d")
     )
-
-
-# Round-5 registration: the round-3 freeze is lifted (all 22 backlog
-# entries certified in CORRECTNESS_r04.json), so the staged entries
-# join the live catalog. Self-registering here (instead of
-# queries.py touching STAGED) keeps the import acyclic whichever
-# module loads first: by the time this line runs, queries.REGISTRY
-# exists even when queries.py itself is mid-import.
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY  # noqa: E402
-
-_REGISTRY.update(STAGED)

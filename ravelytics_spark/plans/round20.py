@@ -64,7 +64,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import q
-from ravelytics_spark.plans.round4 import embedding_probe
+from ravelytics_spark.plans.round4 import embedding_probe, tree_sum
 from ravelytics_spark.sources.tables import load_table, memo
 
 # ---------------------------------------------------------------------------
@@ -1341,14 +1341,6 @@ def _x107_plan(spark, sf_dir):
     stage1 = e.filter(F.size("embedding") == dims).select(
         "vec_id", F.array(*felems).alias("f"), *elems
     )
-
-    def tree_sum(cols):
-        while len(cols) > 1:
-            nxt = [cols[k] + cols[k + 1] for k in range(0, len(cols) - 1, 2)]
-            if len(cols) % 2:
-                nxt.append(cols[-1])
-            cols = nxt
-        return cols[0]
 
     code = None
     for j in range(_SRP_BITS):

@@ -1,11 +1,5 @@
-"""Round-23 operators — STAGED (round 5), registration deferred.
-
-The round-5 driver certification window is exactly filled by the 47
-already-registered uncertified oracle entries (tpch_q1, x81–x126), so
-these five are built, oracle-twinned and tested NOW but kept OUT of
-``REGISTRY`` until round 6 (the round-18 staging precedent: entries
-ship the round after the window they'd overflow). To register, round 6
-adds the two-line self-registration footer round18.py carries.
+"""Catalog entries x127-x143: graph peeling, information measures,
+cohort and growth accounting, price and latency distributions.
 
 * ``x127_kcore_peel`` — k-core decomposition (k=3) of the weight>=2
   co-order part graph by 12 unrolled peel rounds (drop degree<k,
@@ -34,7 +28,7 @@ adds the two-line self-registration footer round18.py carries.
   purchase after that), then per step-pair conversion counts and
   p50/p90 latency seconds via exact rank picks.
 
-Batch 2 (same staging contract):
+Batch 2:
 
 * ``x132_segment_migration`` — monetary-quartile transition matrix
   1995 -> 1996 (x111's cube turned into a flow).
@@ -48,7 +42,7 @@ Batch 2 (same staging contract):
 * ``x136_discount_bands`` — discount-band pricing impact with the q1
   decimal-exact double-sum convention.
 
-Batch 3 (same staging contract):
+Batch 3:
 
 * ``x137_share_of_total`` — the BI ratio_to_report primitive: nation
   revenue share within region and of the grand total (windows over
@@ -62,7 +56,7 @@ Batch 3 (same staging contract):
   trigram profiles (the artifact n-gram lang-id models train on;
   WindowGroupLimit plan shape).
 
-Batch 4 (same staging contract):
+Batch 4:
 
 * ``x141_penny_allocation`` — largest-remainder (Hamilton) proration
   of header totals down to lineitems, all-integer, certified by
@@ -84,19 +78,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x127 — k-core peel of the weight>=2 co-order part graph
@@ -147,7 +130,7 @@ ORDER BY part
 """
 
 
-@_staged(
+@q(
     "x127_kcore_peel",
     "OP-X2-ext",
     "k-core decomposition (k=3) of the weight>=2 co-order part graph "
@@ -248,7 +231,7 @@ ORDER BY lang, source
 """
 
 
-@_staged(
+@q(
     "x128_mutual_information",
     "OP-G6-ext",
     "Pointwise and expected mutual information between document "
@@ -334,7 +317,7 @@ ORDER BY cum.cohort, age
 """
 
 
-@_staged(
+@q(
     "x129_cohort_ltv",
     "OP-G3/W4/D1-ext",
     "Customer-LTV triangle: cohort = calendar month of each customer's "
@@ -441,7 +424,7 @@ ORDER BY cell.source, decile
 """
 
 
-@_staged(
+@q(
     "x130_lorenz_deciles",
     "OP-W-ext/OP-G6",
     "Per-source Lorenz curve of document length: docs ranked "
@@ -540,7 +523,7 @@ FROM r GROUP BY step ORDER BY step
 """
 
 
-@_staged(
+@q(
     "x131_funnel_latency",
     "OP-G1/J3/W-ext",
     "Time-to-convert: per user the x36 strict stepwise funnel "
@@ -627,7 +610,7 @@ def x131_funnel_latency(spark, sf_dir):
 
 
 # ===========================================================================
-# Batch 2 (same staging contract): x132-x136
+# Batch 2: x132-x136
 # ===========================================================================
 
 
@@ -657,7 +640,7 @@ ORDER BY from_q, to_q
 """
 
 
-@_staged(
+@q(
     "x132_segment_migration",
     "OP-W-ext/OP-J2",
     "Customer-segment migration matrix: monetary quartile (ntile(4) "
@@ -735,7 +718,7 @@ FROM r GROUP BY mode_grp ORDER BY mode_grp
 """
 
 
-@_staged(
+@q(
     "x133_shipmode_latency",
     "OP-G6/OP-W-ext",
     "Logistics lead-time report: ship->receipt lag in whole days per "
@@ -825,7 +808,7 @@ ORDER BY n_name
 """
 
 
-@_staged(
+@q(
     "x134_hhi_revenue",
     "OP-G6-ext",
     "Herfindahl-Hirschman revenue concentration per nation: HHI = "
@@ -898,7 +881,7 @@ FROM g, t ORDER BY dow
 """
 
 
-@_staged(
+@q(
     "x135_weekday_index",
     "OP-D-ext/OP-G5",
     "Day-of-week revenue index: each weekday's revenue vs the uniform "
@@ -967,7 +950,7 @@ ORDER BY disc_pct
 """
 
 
-@_staged(
+@q(
     "x136_discount_bands",
     "OP-G5/OP-G6-ext",
     "Pricing-impact report by discount band: for each whole-percent "
@@ -1002,7 +985,7 @@ def x136_discount_bands(spark, sf_dir):
 
 
 # ===========================================================================
-# Batch 3 (same staging contract): x137-x140
+# Batch 3: x137-x140
 # ===========================================================================
 
 
@@ -1037,7 +1020,7 @@ FROM w ORDER BY n_name
 """
 
 
-@_staged(
+@q(
     "x137_share_of_total",
     "OP-W-ext/OP-G3",
     "Contribution report (the BI ratio_to_report primitive): each "
@@ -1121,7 +1104,7 @@ FROM w WHERE k = 6 ORDER BY mon
 """
 
 
-@_staged(
+@q(
     "x138_volatility_bands",
     "OP-W4/OP-G6-ext",
     "Volatility bands (the Bollinger shape) over monthly revenue: "
@@ -1207,7 +1190,7 @@ FROM b GROUP BY mon, segment ORDER BY mon, segment
 """
 
 
-@_staged(
+@q(
     "x139_new_vs_returning",
     "OP-G3/D1-ext",
     "Growth accounting: each month's customers, orders and exact-cents "
@@ -1274,7 +1257,7 @@ ORDER BY top.lang, rnk
 """
 
 
-@_staged(
+@q(
     "x140_char_trigram_profile",
     "OP-X4-ext",
     "Per-language character-trigram profile: every sliding 3-char "
@@ -1320,7 +1303,7 @@ def x140_char_trigram_profile(spark, sf_dir):
 
 
 # ===========================================================================
-# Batch 4 (same staging contract): x141-x143
+# Batch 4: x141-x143
 # ===========================================================================
 
 
@@ -1376,7 +1359,7 @@ ORDER BY o_orderkey
 """
 
 
-@_staged(
+@q(
     "x141_penny_allocation",
     "OP-G3/W-ext",
     "Penny-exact proportional allocation (largest-remainder / "
@@ -1484,7 +1467,7 @@ FROM att GROUP BY touch_type ORDER BY touch_type
 """
 
 
-@_staged(
+@q(
     "x142_last_touch_attribution",
     "OP-J-ext/OP-W3",
     "Last-touch marketing attribution: every purchase is credited to "
@@ -1585,7 +1568,7 @@ FROM cum GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
 
-@_staged(
+@q(
     "x143_qhist_portable",
     "OP-G5/X8-ext",
     "Portable fixed-bin quantile sketch: order values in cents bucket "
@@ -1648,14 +1631,3 @@ def x143_qhist_portable(spark, sf_dir):
         )
         .orderBy("o_orderpriority")
     )
-
-
-# Round-6 registration: the staging contract (see module docstring)
-# defers these entries one round so they never overflow a driver
-# certification window mid-round. Self-registering here (the
-# round18.py precedent) keeps the import acyclic whichever module
-# loads first: by the time this line runs, queries.REGISTRY exists
-# even when queries.py itself is mid-import.
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY  # noqa: E402
-
-_REGISTRY.update(STAGED)

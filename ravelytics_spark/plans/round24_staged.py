@@ -1,12 +1,6 @@
-"""Round-24 operators — STAGED (round 6), registration deferred.
-
-The round-6 driver certification window is already oversubscribed (64
-uncertified oracle entries: the 47 carried from round 5 plus the 17
-round-23 registrations), so this batch is built, oracle-twinned and
-tested NOW but kept OUT of ``REGISTRY`` until round 7 — the round-18 /
-round-23 staging contract: entries ship the round after the window
-they'd overflow. To register, round 7 adds the two-line
-self-registration footer round18.py / round23_staged.py carry.
+"""Catalog entries x144-x167: prefix-scan ledgers, streaming sketches,
+diversified and collaborative ranking, forecasting and drift tests,
+winnowing dedup and the streaming-join / CDC harness entries.
 
 Reference parity: these extend SURVEY §2.10's mandate (warehouse
 analytics + LLM-training-data operators beyond the reference's own
@@ -120,19 +114,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x144 — non-negative running balance (Lindley recursion, closed form)
@@ -179,7 +162,7 @@ ORDER BY o_custkey
 """
 
 
-@_staged(
+@q(
     "x144_clamped_balance",
     "OP-W4-ext",
     "Non-negative running balance per customer (orders as a signed "
@@ -274,7 +257,7 @@ FROM reg, exact
 """
 
 
-@_staged(
+@q(
     "x145_f2_moment",
     "OP-G5/X8-ext",
     "AMS 'tug-of-war' second-moment sketch: F2 = sum of squared part "
@@ -356,7 +339,7 @@ ORDER BY p_brand
 """
 
 
-@_staged(
+@q(
     "x152_eb_smoothed_rate",
     "OP-G5/G6-ext",
     "Empirical-Bayes shrunken return rate per part brand: "
@@ -463,7 +446,7 @@ ORDER BY depth
 """
 
 
-@_staged(
+@q(
     "x147_rbo_drift",
     "OP-O1/W-ext",
     "Rank-Biased Overlap (Webber et al., p=0.9, depth 20) between the "
@@ -581,7 +564,7 @@ ORDER BY n_name, mon
 """
 
 
-@_staged(
+@q(
     "x148_holt_forecast",
     "OP-W3/OP-T-ext",
     "Brown's double exponential smoothing (alpha=1/2) of monthly "
@@ -722,7 +705,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-@_staged(
+@q(
     "x150_winnow_dup_spans",
     "OP-X1/X2-ext",
     "Exact substring near-dup candidates via MOSS winnowing "
@@ -882,7 +865,7 @@ LIMIT {_RAKE_TOPK}
 """
 
 
-@_staged(
+@q(
     "x149_rake_keywords",
     "OP-X4-ext",
     "RAKE-style keyword extraction (Rose et al.): candidate phrases "
@@ -1052,7 +1035,7 @@ ORDER BY pick_round
 """
 
 
-@_staged(
+@q(
     "x146_mmr_select",
     "OP-X3/OP-X9-ext",
     "Maximal Marginal Relevance (Carbonell-Goldstein) diversified "
@@ -1170,7 +1153,7 @@ def x146_mmr_select(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@q(
     "x151_stream_interval_join",
     "OP-T-ext",
     "Watermarked stream-stream inner interval join end-to-end: two "
@@ -1316,7 +1299,7 @@ ORDER BY n_name
 """
 
 
-@_staged(
+@q(
     "x153_hash_bootstrap_ci",
     "OP-G6/X9-ext",
     "Deterministic online bootstrap (Oza-Russell) confidence band for "
@@ -1443,7 +1426,7 @@ ORDER BY seed_part, rk
 """
 
 
-@_staged(
+@q(
     "x154_item_cf_topk",
     "OP-X3/J2-ext",
     "Item-item collaborative filtering: for the 10 most-ordered parts, "
@@ -1572,7 +1555,7 @@ ORDER BY n_name
 """
 
 
-@_staged(
+@q(
     "x155_theil_sen",
     "OP-G6/W-ext",
     "Theil-Sen robust trend: the MEDIAN of all pairwise monthly "
@@ -1692,7 +1675,7 @@ ORDER BY mon
 """
 
 
-@_staged(
+@q(
     "x156_knee_point",
     "OP-W4/OP-T-ext",
     "Knee/elbow detection on the cumulative monthly revenue curve "
@@ -1810,7 +1793,7 @@ ORDER BY n_name
 """
 
 
-@_staged(
+@q(
     "x157_conformal_band",
     "OP-W3/G6-ext",
     "Split-conformal prediction band for the naive month-ahead "
@@ -1934,7 +1917,7 @@ ORDER BY n_name
 """
 
 
-@_staged(
+@q(
     "x158_mase_eval",
     "OP-G6/W3-ext",
     "MASE-style forecaster comparison per nation: the summed absolute "
@@ -2052,7 +2035,7 @@ ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x159_ks_drift",
     "OP-G6/X9-ext",
     "Two-sample Kolmogorov-Smirnov drift per source: the KS distance "
@@ -2182,7 +2165,7 @@ ORDER BY p_brand
 """
 
 
-@_staged(
+@q(
     "x160_ab_significance",
     "OP-G5/G6-ext",
     "Two-proportion z-test decided ENTIRELY in exact integer/decimal "
@@ -2271,7 +2254,7 @@ def x160_ab_significance(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@q(
     "x161_late_data_watermark",
     "OP-T2-ext",
     "Event-time watermark late-data policy driven end to end: a "
@@ -2422,7 +2405,7 @@ ORDER BY o_custkey
 """
 
 
-@_staged(
+@q(
     "x164_capped_sessions",
     "OP-U1/X6-ext",
     "Production sessionization with BOTH rules real systems use: a "
@@ -2570,7 +2553,7 @@ ORDER BY cell_x, cell_y
 """
 
 
-@_staged(
+@q(
     "x165_grid_neighbor_join",
     "OP-J-ext",
     "Spatial neighbor join by grid bucketing: customers get "
@@ -2706,7 +2689,7 @@ ORDER BY mon
 """
 
 
-@_staged(
+@q(
     "x166_bitmap_retention",
     "OP-G5/X8-ext",
     "Mergeable bitmap segments — the groupBitmap/roaring idiom in "
@@ -2844,7 +2827,7 @@ ORDER BY c_custkey
 """
 
 
-@_staged(
+@q(
     "x167_cdc_apply",
     "OP-J5/T3-ext",
     "CDC apply — the MERGE a lakehouse foreachBatch sink performs, "
@@ -2923,11 +2906,3 @@ def x167_cdc_apply(spark, sf_dir):
         )
         .orderBy("c_custkey")
     )
-
-
-# Registered in round 7 (the round-6 certification window was
-# oversubscribed; CORRECTNESS_r06 cleared the backlog). The staging
-# contract: see module docstring.
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY  # noqa: E402
-
-_REGISTRY.update(STAGED)

@@ -1,10 +1,6 @@
-"""Round-25 operators — STAGED (round 6), registration deferred.
-
-Same staging contract as round24_staged.py: the round-6/7 driver
-certification windows are oversubscribed, so this batch is built,
-oracle-twinned and pytest-covered NOW but kept OUT of ``REGISTRY``
-until a later round adds the two-line self-registration footer that
-round18.py / round23_staged.py carry.
+"""Catalog entries x168-x193: rank statistics, graph hops,
+attribution, ANN and near-dup evaluation, data-quality audits and
+corpus-curation signals.
 
 Reference parity: these extend SURVEY §2.10's mandate (warehouse
 analytics + LLM-training-data operators beyond the reference's own
@@ -136,24 +132,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table
 from ravelytics_spark.operators.ranks import (
     global_ntile,
     global_row_number,
 )
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x168 — Mann-Whitney U via value-level counting (50-value domain)
@@ -192,7 +177,7 @@ ORDER BY flag
 """
 
 
-@_staged(
+@q(
     "x168_mann_whitney",
     "OP-G6/X9-ext",
     "Exact Mann-Whitney U rank-sum test ingredients comparing the "
@@ -298,7 +283,7 @@ ORDER BY brand
 """
 
 
-@_staged(
+@q(
     "x169_spearman_monthly",
     "OP-G6/W2-ext",
     "Spearman rank correlation between monthly shipped quantity and "
@@ -429,7 +414,7 @@ ORDER BY nkey
 """
 
 
-@_staged(
+@q(
     "x170_kendall_tau",
     "OP-G6/J2-ext",
     "Kendall tau-b rank correlation between monthly order count and "
@@ -572,7 +557,7 @@ ORDER BY l.nkey, lag_k
 """
 
 
-@_staged(
+@q(
     "x171_acf_lags",
     "OP-W3/G6-ext",
     "Exact autocorrelation function (lags 1..3) of monthly revenue "
@@ -704,7 +689,7 @@ ORDER BY hop
 """
 
 
-@_staged(
+@q(
     "x172_bfs_hops",
     "OP-X2/J3-ext",
     "Bounded breadth-first search over the co-order part graph: hop "
@@ -805,7 +790,7 @@ ORDER BY brand
 """
 
 
-@_staged(
+@q(
     "x173_weighted_median",
     "OP-G6/W4-ext",
     "Exact quantity-weighted median line price per part brand — the "
@@ -916,7 +901,7 @@ ORDER BY event_type
 """
 
 
-@_staged(
+@q(
     "x174_u_attribution",
     "OP-W1/G3-ext",
     "U-shaped (position-based) multi-touch attribution over the "
@@ -1052,7 +1037,7 @@ ORDER BY n.label
 """
 
 
-@_staged(
+@q(
     "x175_cluster_quality",
     "OP-X3-ext",
     "Cluster quality audit per embedding label: intra-cluster "
@@ -1178,7 +1163,7 @@ LIMIT 20
 """
 
 
-@_staged(
+@q(
     "x176_seq_brand_adoption",
     "OP-G3/J2-ext",
     "Sequential adoption pairs: for each ordered brand pair (A, B), "
@@ -1315,7 +1300,7 @@ ORDER BY k
 """
 
 
-@_staged(
+@q(
     "x177_ann_recall_eval",
     "OP-X3-ext",
     "ANN quality eval, ORACLE-CERTIFIED end to end: recall@{1,5,10} "
@@ -1332,6 +1317,7 @@ ORDER BY k
     "join touches 10x10 rows. Emits per k: hits, candidate-set size, "
     "and recall in exact milli-units (floor division, nonnegative "
     "operands).",
+    _x177_oracle(),
 )
 def x177_ann_recall_eval(spark, sf_dir):
     from ravelytics_spark.plans.round20 import (
@@ -1485,17 +1471,6 @@ def x177_ann_recall_eval(spark, sf_dir):
     )
 
 
-# x177's oracle is assembled lazily (it imports round20 literals);
-# attach it post-registration so the staged Query carries it.
-STAGED["x177_ann_recall_eval"] = Query(
-    "x177_ann_recall_eval",
-    STAGED["x177_ann_recall_eval"].op_id,
-    STAGED["x177_ann_recall_eval"].doc,
-    STAGED["x177_ann_recall_eval"].spark,
-    _x177_oracle(),
-)
-
-
 # ---------------------------------------------------------------------------
 # x178 — exact decision stump: best quantity split for return prediction
 # ---------------------------------------------------------------------------
@@ -1547,7 +1522,7 @@ ORDER BY s.threshold
 """
 
 
-@_staged(
+@q(
     "x178_stump_split",
     "OP-G5/W4-ext",
     "Exact decision stump over quantity predicting returns: for every "
@@ -1681,7 +1656,7 @@ ORDER BY tau_milli
 """
 
 
-@_staged(
+@q(
     "x179_neardup_threshold_curve",
     "OP-X2/X3-ext",
     "Near-dup threshold calibration curve: pair count and distinct "
@@ -1697,6 +1672,7 @@ ORDER BY tau_milli
     "the expensive part IS x107 (bucketed, never all-pairs); the "
     "curve adds one broadcast non-equi join of 6 literal thresholds "
     "against the (small) surviving pair set.",
+    _x179_oracle(),
 )
 def x179_neardup_threshold_curve(spark, sf_dir):
     from ravelytics_spark.plans.registry import REGISTRY
@@ -1737,15 +1713,6 @@ def x179_neardup_threshold_curve(spark, sf_dir):
     )
 
 
-STAGED["x179_neardup_threshold_curve"] = Query(
-    "x179_neardup_threshold_curve",
-    STAGED["x179_neardup_threshold_curve"].op_id,
-    STAGED["x179_neardup_threshold_curve"].doc,
-    STAGED["x179_neardup_threshold_curve"].spark,
-    _x179_oracle(),
-)
-
-
 # ---------------------------------------------------------------------------
 # x180 — event burstiness (Fano factor of daily counts per type)
 # ---------------------------------------------------------------------------
@@ -1776,7 +1743,7 @@ ORDER BY event_type
 """
 
 
-@_staged(
+@q(
     "x180_event_burstiness",
     "OP-G6/D1-ext",
     "Burstiness (Fano factor: variance-to-mean ratio of daily counts) "
@@ -1880,7 +1847,7 @@ ORDER BY fk_edge
 """
 
 
-@_staged(
+@q(
     "x181_fk_integrity",
     "OP-J4/G5-ext",
     "Referential-integrity audit across every declared FK edge of the "
@@ -2001,7 +1968,7 @@ ORDER BY p_brand
 """
 
 
-@_staged(
+@q(
     "x182_power_sample_size",
     "OP-G5/G6-ext",
     "Experiment planning, engine-exact: per brand, the sample size "
@@ -2091,7 +2058,7 @@ _SKEW_ORACLE = (
 )
 
 
-@_staged(
+@q(
     "x183_join_key_skew",
     "OP-G5/W4-ext",
     "Join-key skew report for the fact table's three join keys "
@@ -2184,7 +2151,7 @@ ORDER BY cluster_size
 """
 
 
-@_staged(
+@q(
     "x184_dup_cluster_sizes",
     "OP-X1/G5-ext",
     "Exact-duplicate cluster size distribution over document text: "
@@ -2272,7 +2239,7 @@ ORDER BY brand
 """
 
 
-@_staged(
+@q(
     "x185_xyz_classes",
     "OP-G6/C3-ext",
     "XYZ demand-variability classification per part, rolled up per "
@@ -2377,7 +2344,7 @@ ORDER BY period
 """
 
 
-@_staged(
+@q(
     "x186_growth_accounting",
     "OP-W3/G3-ext",
     "User growth accounting over the events stream: per 30-day epoch "
@@ -2498,7 +2465,7 @@ LIMIT 20
 """
 
 
-@_staged(
+@q(
     "x187_session_paths",
     "OP-W3/G2-ext",
     "Top user journey paths: each 30-minute-gap session (the x6 "
@@ -2618,7 +2585,7 @@ SELECT CAST((SELECT count(*) FROM flags) AS BIGINT) AS n_vectors,
 """
 
 
-@_staged(
+@q(
     "x188_embedding_audit",
     "OP-X3/G5-ext",
     "Embedding table quality audit — the admission gate a vector "
@@ -2769,7 +2736,7 @@ ORDER BY nkey, cal_month
 """
 
 
-@_staged(
+@q(
     "x189_seasonal_decomp",
     "OP-W3/G6-ext",
     "Additive seasonal decomposition of monthly revenue per nation — "
@@ -2888,7 +2855,7 @@ ORDER BY nkey, mon
 """
 
 
-@_staged(
+@q(
     "x190_rolling_market_corr",
     "OP-W4/G6-ext",
     "Rolling 12-month correlation between each nation's monthly "
@@ -2956,11 +2923,6 @@ def x190_rolling_market_corr(spark, sf_dir):
     )
 
 
-# Round-7 registration lives at the BOTTOM of this module (after the
-# last @_staged entry — x191-x193 are defined below this point, and a
-# mid-file REGISTRY.update would silently drop them).
-
-
 # ---------------------------------------------------------------------------
 # x191 — Apriori frequent brand triples (level-wise candidate pruning)
 # ---------------------------------------------------------------------------
@@ -3009,7 +2971,7 @@ LIMIT 20
 """
 
 
-@_staged(
+@q(
     "x191_apriori_triples",
     "OP-G3/J3-ext",
     "Apriori frequent-triple mining over order baskets (brand level) "
@@ -3106,7 +3068,7 @@ def x191_apriori_triples(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@q(
     "x192_compression_quality",
     "OP-X4/X5-ext",
     "Compression-ratio quality scoring per source: each document is "
@@ -3227,7 +3189,7 @@ ORDER BY decile
 """
 
 
-@_staged(
+@q(
     "x193_vocab_growth",
     "OP-X4/W4-ext",
     "Vocabulary growth by corpus decile — the Heaps-law saturation "
@@ -3301,12 +3263,3 @@ def x193_vocab_growth(spark, sf_dir, rank_method: str = "window"):
         )
         .orderBy("decile")
     )
-
-
-# Registered in round 7 (the round-6 certification window was
-# oversubscribed; CORRECTNESS_r06 cleared the backlog). Placed after
-# the final @_staged entry so every x168-x193 definition above is in
-# STAGED before the update. The staging contract: see module docstring.
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY  # noqa: E402
-
-_REGISTRY.update(STAGED)

@@ -1,11 +1,4 @@
-"""Round-26 operators — STAGED (round 7), registration deferred.
-
-The round-7 driver certification window is fully booked with the 59
-uncertified oracle entries registered this round (x130–x193), so this
-batch is built, oracle-twinned and tested NOW but kept OUT of
-``REGISTRY`` until round 8 — the round-18/23/24/25 staging contract:
-entries ship the round after the window they'd overflow. Round 8 adds
-the two-line self-registration footer the earlier staged modules carry.
+"""Catalog entries x194-x226.
 
 Theme: training-data governance + robust warehouse analytics — the
 operational layer around the curation/dedup/similarity stack.
@@ -57,7 +50,7 @@ operational layer around the curation/dedup/similarity stack.
   char volumes per cell — the policy table a curation run reads to
   decide what to drop first (big dup clusters of short docs).
 
-Second wave (same round, same staging): privacy + feature-engineering
+Second wave: privacy + feature-engineering
 audits.
 
 * ``x202_contribution_capping`` — DP-prep per-user contribution
@@ -170,19 +163,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x194 — k-anonymity audit over quasi-identifiers
@@ -209,7 +191,7 @@ FROM cls
 """
 
 
-@_staged(
+@q(
     "x194_k_anonymity",
     "OP-G5/X-ext",
     "k-anonymity audit over the (nation, market segment) "
@@ -285,7 +267,7 @@ ORDER BY r.brand
 """
 
 
-@_staged(
+@q(
     "x195_winsorized_stats",
     "OP-G6/W-ext",
     "Per-brand winsorized mean of line price: every value is clamped "
@@ -400,7 +382,7 @@ ORDER BY bucket
 """
 
 
-@_staged(
+@q(
     "x196_feature_hashing",
     "OP-X-ext/G5",
     "Hashing-trick collision audit: the categorical feature "
@@ -489,7 +471,7 @@ ORDER BY di
 """
 
 
-@_staged(
+@q(
     "x197_negative_sampling",
     "OP-J4/X-ext",
     "Deterministic negative sampling for contrastive training over "
@@ -644,7 +626,7 @@ FROM (SELECT * FROM prof WHERE s = 'a') a,
 """
 
 
-@_staged(
+@q(
     "x198_profile_drift",
     "OP-G5/G6-ext",
     "Two-snapshot column-profile drift: orders split at the corpus "
@@ -749,7 +731,7 @@ FROM per_cust
 """
 
 
-@_staged(
+@q(
     "x199_entity_holdout",
     "OP-X9/J-ext",
     "Leakage-free holdout split at the CUSTOMER entity "
@@ -859,7 +841,7 @@ ORDER BY bucket
 """
 
 
-@_staged(
+@q(
     "x200_discrete_hazard",
     "OP-W3/G5-ext",
     "Discrete-time hazard of repeat ordering: consecutive per-"
@@ -953,7 +935,7 @@ ORDER BY len_band, dup_band
 """
 
 
-@_staged(
+@q(
     "x201_curation_matrix",
     "OP-X1/G3-ext",
     "Curation decision cross-tab: every document lands in a "
@@ -1035,7 +1017,7 @@ ORDER BY nationkey
 """
 
 
-@_staged(
+@q(
     "x202_contribution_capping",
     "OP-G3/X-ext",
     "Differential-privacy preparation: per-user contribution bounding. "
@@ -1127,7 +1109,7 @@ ORDER BY nationkey
 """
 
 
-@_staged(
+@q(
     "x203_l_diversity",
     "OP-G5/X-ext",
     "l-diversity audit — x194's k-anonymity companion: a QI class "
@@ -1193,7 +1175,7 @@ ORDER BY w.lang, w.source
 """
 
 
-@_staged(
+@q(
     "x204_class_reweighting",
     "OP-G3/X9-ext",
     "Class-imbalance reweighting for the (lang x source) training "
@@ -1285,7 +1267,7 @@ FROM counts
 """
 
 
-@_staged(
+@q(
     "x205_judge_agreement",
     "OP-G5/X4-ext",
     "Inter-judge agreement (Cohen's kappa) between two deterministic "
@@ -1388,7 +1370,7 @@ ORDER BY tbl
 """
 
 
-@_staged(
+@q(
     "x206_gdpr_erasure",
     "OP-J3/X-ext",
     "Right-to-be-forgotten cascade audit: a deterministic deletion "
@@ -1503,7 +1485,7 @@ ORDER BY feature
 """
 
 
-@_staged(
+@q(
     "x207_near_zero_variance",
     "OP-G5/X-ext",
     "Near-zero-variance feature screen (the caret nearZeroVar rule): "
@@ -1598,7 +1580,7 @@ ORDER BY nationkey
 """
 
 
-@_staged(
+@q(
     "x208_loo_target_encoding",
     "OP-G3/X-ext",
     "Leave-one-out target encoding of nation against the urgent-"
@@ -1680,7 +1662,7 @@ FROM per_cust
 """
 
 
-@_staged(
+@q(
     "x209_temporal_split_audit",
     "OP-X9/D-ext",
     "Temporal train/eval split audit (split at "
@@ -1767,7 +1749,7 @@ ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x210_readability",
     "OP-X4/G6-ext",
     "Per-source Flesch reading ease in exact milli-units: words = "
@@ -1859,7 +1841,7 @@ ORDER BY segment, fold
 """
 
 
-@_staged(
+@q(
     "x211_stratified_kfold",
     "OP-X9-ext",
     f"Deterministic {_KFOLD_K}-fold cross-validation assignment at "
@@ -1966,7 +1948,7 @@ ORDER BY nationkey
 """
 
 
-@_staged(
+@q(
     "x212_simpson_reversal",
     "OP-G6/X-ext",
     "Simpson's-paradox detector over the monthly revenue trend: the "
@@ -2075,7 +2057,7 @@ ORDER BY yr
 """
 
 
-@_staged(
+@q(
     "x213_churn_label_sensitivity",
     "OP-W3/D-ext",
     "Label-engineering sensitivity audit: every order is an anchor, "
@@ -2183,7 +2165,7 @@ ORDER BY query
 )
 
 
-@_staged(
+@q(
     "x214_mrr_eval",
     "OP-X4/O1-ext",
     "Mean Reciprocal Rank eval for the retrieval stack (x123's NDCG "
@@ -2301,7 +2283,7 @@ ORDER BY bin
 """
 
 
-@_staged(
+@q(
     "x215_calibration_ece",
     "OP-W4/G5-ext",
     "Reliability diagram + expected calibration error for the "
@@ -2420,7 +2402,7 @@ ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x216_boilerplate_score",
     "OP-X4/X2-ext",
     "CCNet-style boilerplate scoring: documents chunk into "
@@ -2552,7 +2534,7 @@ WITH split AS (
 )
 
 
-@_staged(
+@q(
     "x217_contamination_width_curve",
     "OP-X2/X4-ext",
     "Decontamination width-sensitivity curve — x213's "
@@ -2679,7 +2661,7 @@ ORDER BY keeper_source, dropped_source
 """
 
 
-@_staged(
+@q(
     "x218_dedup_spillover_matrix",
     "OP-X1/G3-ext",
     "Dedup spillover matrix: under the keep-min-id survivorship "
@@ -2761,7 +2743,7 @@ ORDER BY m.brand
 """
 
 
-@_staged(
+@q(
     "x219_quantile_normalization",
     "OP-W-ext/OP-X-ext",
     "Quantile normalization of per-brand price distributions onto "
@@ -2867,7 +2849,7 @@ FROM d2
 """
 
 
-@_staged(
+@q(
     "x220_srm_check",
     "OP-G5/X-ext",
     "Sample-ratio-mismatch check — the first data-quality gate every "
@@ -2977,7 +2959,7 @@ ORDER BY brand
 """
 
 
-@_staged(
+@q(
     "x221_pvm_bridge",
     "OP-G3/G6-ext",
     "Price-volume bridge (the finance PVM decomposition) between "
@@ -3070,7 +3052,7 @@ ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x222_mixture_feasibility",
     "OP-X9/X4-ext",
     "Training-mix feasibility planner under a downsample-only "
@@ -3171,7 +3153,7 @@ WITH tok AS (
 )
 
 
-@_staged(
+@q(
     "x223_context_length_curve",
     "OP-X4/X1-ext",
     "Context-length planning curve for x18's offset packing: for "
@@ -3263,7 +3245,7 @@ ORDER BY n.source
 """
 
 
-@_staged(
+@q(
     "x224_effective_token_mass",
     "OP-X1/X4-ext",
     "Dedup-weighted token accounting: each document's tokens count "
@@ -3359,7 +3341,7 @@ FROM (SELECT * FROM m WHERE treated = 1 AND after = 0) t0,
 """
 
 
-@_staged(
+@q(
     "x225_diff_in_diff",
     "OP-G3/X-ext",
     "Difference-in-differences point estimate, exact: a deterministic "
@@ -3501,7 +3483,7 @@ ORDER BY nationkey
 """
 
 
-@_staged(
+@q(
     "x226_cuped_audit",
     "OP-G6/X-ext",
     "CUPED variance-reduction audit — the standard experimentation "
@@ -3591,12 +3573,3 @@ def x226_cuped_audit(spark, sf_dir):
         )
         .orderBy("nationkey")
     )
-
-
-# --- round-8 registration footer (flipped live in round 8) ---
-# These two lines register the whole batch into the live catalog; they
-# must stay below the final @_staged definition so every entry is in
-# STAGED before the update (the round-25 footer-placement lesson).
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY
-
-_REGISTRY.update(STAGED)

@@ -1,13 +1,4 @@
-"""Round-28 operators — staged in round 8, REGISTERED in round 9.
-
-The round-8 driver certification window was fully booked (42 backlog
-entries + the 8 round-27 live registrations = exactly 50), so this
-batch was built, oracle-twinned and tested in round 8 but kept OUT of
-``REGISTRY`` until round 9 — the round-23/24/25/26 staging contract:
-entries ship the round after the window they'd overflow. The two-line
-self-registration footer at the bottom of this module flipped live in
-round 9. Window arithmetic source of truth: COVERAGE.md
-'Certification window' (auto-generated by scripts/gen_coverage.py).
+"""Catalog entries x235-x274.
 
 Theme: model-evaluation metrology, supply-chain forecasting, corpus
 coverage, and the event-engagement layer.
@@ -183,20 +174,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x235 — hierarchical percent-of-parent rollup
@@ -231,7 +211,7 @@ FROM lv ORDER BY region, nation, segment
 """
 
 
-@_staged(
+@q(
     "x235_percent_of_parent",
     "OP-G6/W4-ext",
     "Hierarchical percent-of-parent report: revenue cents per "
@@ -354,7 +334,7 @@ ORDER BY part
 """
 
 
-@_staged(
+@q(
     "x236_croston_intermittent",
     "OP-W3/T-ext",
     "Croston's intermittent-demand forecast per part: the demand "
@@ -465,7 +445,7 @@ ORDER BY feature, bin
 """
 
 
-@_staged(
+@q(
     "x238_psi_stability",
     "OP-G6-ext",
     "Population Stability Index between the pre/post "
@@ -564,7 +544,7 @@ ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x241_auc_exact",
     "OP-W2-ext",
     "Exact ROC AUC per customer segment for the 'order value predicts "
@@ -659,7 +639,7 @@ ORDER BY vocab_size
 """
 
 
-@_staged(
+@q(
     "x243_vocab_coverage_curve",
     "OP-X4-ext",
     "Corpus token-mass coverage at vocabulary sizes "
@@ -760,7 +740,7 @@ FROM cum ORDER BY decile
 """
 
 
-@_staged(
+@q(
     "x239_gains_table",
     "OP-W2-ext",
     "Decile gains/lift table for the prior-spend-predicts-repurchase "
@@ -897,7 +877,7 @@ FROM tot ORDER BY bin
 """
 
 
-@_staged(
+@q(
     "x240_brier_decomposition",
     "OP-G6-ext",
     "Murphy decomposition terms of the Brier score per calibration "
@@ -994,7 +974,7 @@ FROM agg ORDER BY day_id
 """
 
 
-@_staged(
+@q(
     "x256_active_stickiness",
     "OP-T/G7-ext",
     "DAU / WAU(7) / MAU(28) and the DAU/MAU stickiness ratio per "
@@ -1069,7 +1049,7 @@ ORDER BY days_active
 """
 
 
-@_staged(
+@q(
     "x257_l28_histogram",
     "OP-G5-ext",
     "The L28 engagement histogram: for the 28-day window ending at "
@@ -1139,7 +1119,7 @@ ORDER BY event_type
 """
 
 
-@_staged(
+@q(
     "x258_time_decay_attribution",
     "OP-W4-ext",
     "Exponential time-decay attribution completing the trio (x142 "
@@ -1249,7 +1229,7 @@ ORDER BY src_a, src_b
 """
 
 
-@_staged(
+@q(
     "x242_burrows_delta",
     "OP-X4-ext",
     "Burrows' Delta stylometric distance between every source pair "
@@ -1374,7 +1354,7 @@ LIMIT {_PD_TOPK}
 """
 
 
-@_staged(
+@q(
     "x244_phrase_dictionary_gain",
     "OP-X4-ext",
     f"Phrase-dictionary compression planning: every {_PD_N}-gram "
@@ -1469,7 +1449,7 @@ FROM mu
 """
 
 
-@_staged(
+@q(
     "x245_twonn_intrinsic_dim",
     "OP-X3-ext",
     "TwoNN intrinsic-dimension estimate (Facco et al. 2017) of the "
@@ -1603,7 +1583,7 @@ ORDER BY community
 """
 
 
-@_staged(
+@q(
     "x246_label_propagation",
     "OP-X2-ext",
     f"{_LPA_ROUNDS}-round synchronous mode-label propagation over the "
@@ -1712,7 +1692,7 @@ LIMIT {_LP_TOPK}
 """
 
 
-@_staged(
+@q(
     "x247_link_prediction",
     "OP-X2-ext",
     "Common-neighbor / Jaccard link prediction on the weight>=2 "
@@ -1799,7 +1779,7 @@ FROM b ORDER BY bucket
 """
 
 
-@_staged(
+@q(
     "x248_keyspace_density",
     "OP-G5-ext",
     f"Surrogate-keyspace density audit over {_KD_BUCKET}-wide "
@@ -1858,7 +1838,7 @@ FROM agg ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x249_round_number_bias",
     "OP-G5-ext",
     "Round-number pricing bias per customer segment: the share of "
@@ -1938,7 +1918,7 @@ ORDER BY lang, band
 """
 
 
-@_staged(
+@q(
     "x250_quota_sample_shortfall",
     "OP-X9-ext",
     f"Quota sampling with shortfall accounting: {_QS_QUOTA} documents "
@@ -2013,7 +1993,7 @@ ORDER BY lang
 """
 
 
-@_staged(
+@q(
     "x252_mcnemar_judges",
     "OP-G6-ext",
     "McNemar's test per language on x205's two deterministic quality "
@@ -2103,7 +2083,7 @@ ORDER BY brand
 """
 
 
-@_staged(
+@q(
     "x253_moment_profile",
     "OP-G6-ext",
     "Exact higher-moment profile per brand: raw power sums S1..S4 of "
@@ -2191,7 +2171,7 @@ ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x254_hill_tail_index",
     "OP-G6-ext",
     f"Hill tail-index estimator per segment over the top-{_HILL_K} "
@@ -2319,7 +2299,7 @@ FROM ols ORDER BY scale
 """
 
 
-@_staged(
+@q(
     "x237_hurst_rs",
     "OP-W4/T-ext",
     "Hurst exponent of the daily-revenue series by classical "
@@ -2491,7 +2471,7 @@ ORDER BY t.part
 """
 
 
-@_staged(
+@q(
     "x251_fifo_cost_basis",
     "OP-W4/J-ext",
     "FIFO cost-basis matching per part: pre-"
@@ -2619,7 +2599,7 @@ LIMIT {_DM_TOPK}
 """
 
 
-@_staged(
+@q(
     "x255_diag_mahalanobis",
     "OP-X4-ext",
     "Diagonal-Mahalanobis document outliers: per language, each "
@@ -2717,7 +2697,7 @@ FROM ss
 """
 
 
-@_staged(
+@q(
     "x259_anova_oneway",
     "OP-G6-ext",
     "One-way ANOVA of order value (kilodollar units, the x253 "
@@ -2830,7 +2810,7 @@ FROM mom WHERE n >= 2 AND n * s2 > s1 * s1
 """
 
 
-@_staged(
+@q(
     "x260_extreme_value_gumbel",
     "OP-G6/T-ext",
     "Gumbel extreme-value fit of 30-day-block maximum daily revenue "
@@ -2917,7 +2897,7 @@ FROM counts
 """
 
 
-@_staged(
+@q(
     "x261_capture_recapture",
     "OP-G5-ext",
     "Capture-recapture population estimate (Chapman's nearly-"
@@ -3034,7 +3014,7 @@ ORDER BY t.community
 """
 
 
-@_staged(
+@q(
     "x262_modularity_score",
     "OP-X2-ext",
     "Newman modularity of the x246 2-round LPA partition over the "
@@ -3183,7 +3163,7 @@ LIMIT {_AA_TOPK}
 """
 
 
-@_staged(
+@q(
     "x263_adamic_adar",
     "OP-X2-ext",
     "Adamic-Adar link prediction on the co-order graph: each shared "
@@ -3294,7 +3274,7 @@ FROM s WHERE m * sxx > sx * sx AND m * syy > sy * sy
 """
 
 
-@_staged(
+@q(
     "x264_degree_assortativity",
     "OP-X2-ext",
     "Degree assortativity of the weight>=2 co-order graph: the "
@@ -3380,7 +3360,7 @@ WHERE w.n_wedges > 0
 """
 
 
-@_staged(
+@q(
     "x265_clustering_coefficient",
     "OP-X2-ext",
     "Global clustering coefficient of the weight>=2 co-order graph: "
@@ -3485,7 +3465,7 @@ ORDER BY r.nationkey
 """
 
 
-@_staged(
+@q(
     "x266_kendall_w",
     "OP-W2-ext",
     "Kendall's coefficient of concordance W across the m yearly "
@@ -3615,7 +3595,7 @@ SELECT y, seg, paa_milli, symbol FROM sym ORDER BY y, seg
 """
 
 
-@_staged(
+@q(
     "x267_sax_symbols",
     "OP-W4/T-ext",
     f"SAX symbolization of daily revenue: each year's series reduces "
@@ -3738,7 +3718,7 @@ FROM btw ORDER BY regionkey
 """
 
 
-@_staged(
+@q(
     "x268_theil_decomposition",
     "OP-G6-ext",
     "Theil-T inequality of nation revenues with the between/within-"
@@ -3859,7 +3839,7 @@ FROM dec ORDER BY segment, decile
 """
 
 
-@_staged(
+@q(
     "x269_dkw_bands",
     "OP-G6/W2-ext",
     "Empirical deciles of order value per segment with the "
@@ -3954,7 +3934,7 @@ ORDER BY g.week
 """
 
 
-@_staged(
+@q(
     "x270_spc_control_chart",
     "OP-G6/T-ext",
     "Shewhart X-bar/R control chart over complete 7-day subgroups of "
@@ -4068,7 +4048,7 @@ ORDER BY t.segment
 """
 
 
-@_staged(
+@q(
     "x271_kruskal_wallis",
     "OP-W2-ext",
     "Tie-corrected Kruskal-Wallis H across customer segments on "
@@ -4173,7 +4153,7 @@ FROM s ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x272_chao1_unseen",
     "OP-X4-ext",
     "Chao1 vocabulary-richness estimate + Good-Turing unseen "
@@ -4277,7 +4257,7 @@ ORDER BY s.nationkey
 """
 
 
-@_staged(
+@q(
     "x273_mann_kendall",
     "OP-W3-ext",
     "Mann-Kendall monotonic-trend test per nation on monthly revenue: "
@@ -4411,7 +4391,7 @@ FROM spec WHERE rbar_milli > 0
 """
 
 
-@_staged(
+@q(
     "x274_cpk_capability",
     "OP-G6/T-ext",
     "Process capability Cp / Cpk of weekly revenue against a +-50% "
@@ -4472,12 +4452,3 @@ def x274_cpk_capability(spark, sf_dir):
         F.expr(_CPK_CP).alias("cp_milli"),
         F.expr(_CPK_CPK).alias("cpk_milli"),
     )
-
-
-# --- round-9 registration footer (flipped live in round 9) ---
-# These two lines register the whole batch into the live catalog; they
-# must stay below the final @_staged definition so every entry is in
-# STAGED before the update (the round-25 footer-placement lesson).
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY  # noqa: E402
-
-_REGISTRY.update(STAGED)

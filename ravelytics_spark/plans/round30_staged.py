@@ -1,14 +1,4 @@
-"""Round-30 operators — STAGED (round 9), registration deferred.
-
-The round-9 driver certification window is fully booked: the 40
-round-28 registrations plus the 2 round-29 SRP-bucketed twins = 42
-uncertified oracle entries, with the remaining 8 slots assigned to
-harness rows (COVERAGE.md 'Certification window' is the arithmetic
-source of truth). This batch is built, oracle-twinned and pytest-
-tested NOW but kept OUT of ``REGISTRY`` until round 10 — the
-round-23..28 staging contract: entries ship the round after the window
-they'd overflow. Round 10 flips the two-line self-registration footer
-at the bottom of this module.
+"""Catalog entries x275-x311.
 
 Theme: the inference/metrology tail — white-noise and normality tests,
 unit roots, tail fits, survival curves, PR-space ranking quality,
@@ -149,19 +139,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x275 — Ljung-Box white-noise test over the exact monthly-revenue ACF
@@ -224,7 +203,7 @@ ORDER BY nkey
 """
 
 
-@_staged(
+@q(
     "x275_ljung_box",
     "OP-W3/G6-ext",
     "Ljung-Box white-noise test per nation over the x171 exact monthly "
@@ -362,7 +341,7 @@ ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x276_jarque_bera",
     "OP-G6-ext",
     "Jarque-Bera normality test per customer segment over order value "
@@ -471,7 +450,7 @@ FROM s WHERE n_exc >= 2 AND n_exc * s2 > s1 * s1
 """
 
 
-@_staged(
+@q(
     "x287_pot_gpd",
     "OP-G6/T-ext",
     "Peaks-over-threshold tail fit of daily revenue: the threshold is "
@@ -572,7 +551,7 @@ ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x288_lognormal_fit",
     "OP-G6-ext",
     "Lognormal fit of order value per segment: per-row ln(dollars) "
@@ -692,7 +671,7 @@ WHERE n >= 3 AND {_DF_DEN} > 0 AND {_DF_SSE} > 0
 """
 
 
-@_staged(
+@q(
     "x289_dickey_fuller",
     "OP-W3/G6-ext",
     "Dickey-Fuller unit-root t-statistic of the observed daily-revenue "
@@ -801,7 +780,7 @@ ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x277_pr_auc",
     "OP-W2-ext",
     "Exact PR-AUC (average precision) per segment of the prior-spend "
@@ -923,7 +902,7 @@ FROM s WHERE r > 0 AND r < nn
 """
 
 
-@_staged(
+@q(
     "x291_cochran_armitage",
     "OP-G5/G6-ext",
     "Cochran-Armitage trend test: is the urgent-order share drifting "
@@ -1039,7 +1018,7 @@ ORDER BY covariate
 """
 
 
-@_staged(
+@q(
     "x292_smd_balance",
     "OP-G6-ext",
     "Covariate-balance audit for a deterministic md5 ~50% customer "
@@ -1180,7 +1159,7 @@ FROM s WHERE n > 0 AND {_FK_DEN} > 0
 """
 
 
-@_staged(
+@q(
     "x296_fleiss_kappa",
     "OP-G5/X4-ext",
     "Fleiss' kappa across THREE deterministic document judges (x205's "
@@ -1296,7 +1275,7 @@ ORDER BY pair
 """
 
 
-@_staged(
+@q(
     "x297_cramers_v_matrix",
     "OP-G5/G6-ext",
     "Cramér's V association matrix over the three order/line "
@@ -1417,7 +1396,7 @@ ORDER BY brand
 """
 
 
-@_staged(
+@q(
     "x279_grubbs_test",
     "OP-G6-ext",
     "Grubbs extreme-outlier statistic per brand over line price in "
@@ -1500,7 +1479,7 @@ ORDER BY fd
 """
 
 
-@_staged(
+@q(
     "x280_fd_violations",
     "OP-G5/J-ext",
     "Functional-dependency audit across three candidate warehouse FDs "
@@ -1593,7 +1572,7 @@ SELECT segment, n, tad_ppm FROM dev ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x281_benford_second_digit",
     "OP-G5-ext",
     "Second-digit Benford conformance per segment: the second "
@@ -1678,7 +1657,7 @@ ORDER BY from_type, to_type
 """
 
 
-@_staged(
+@q(
     "x282_markov_transitions",
     "OP-W3/G5-ext",
     "First-order Markov transition matrix of the per-user event-type "
@@ -1777,7 +1756,7 @@ ORDER BY a.abc, x.xyz
 """
 
 
-@_staged(
+@q(
     "x283_abc_xyz_matrix",
     "OP-G6/W4-ext",
     "Joint ABC x XYZ part-classification matrix: ABC from the "
@@ -1895,7 +1874,7 @@ ORDER BY brand
 """
 
 
-@_staged(
+@q(
     "x284_price_elasticity",
     "OP-G6-ext",
     "Log-log price elasticity of demand per brand: ln(discounted unit "
@@ -2001,7 +1980,7 @@ ORDER BY bucket
 """
 
 
-@_staged(
+@q(
     "x285_kaplan_meier",
     "OP-W4/G6-ext",
     "Kaplan-Meier reorder-survival curve over x200's 30-day gap "
@@ -2099,7 +2078,7 @@ ORDER BY md.brand
 """
 
 
-@_staged(
+@q(
     "x286_newsvendor",
     "OP-G6/W2-ext",
     "Newsvendor stocking decision per brand at critical fractile 0.8 "
@@ -2207,7 +2186,7 @@ FROM cells
 """
 
 
-@_staged(
+@q(
     "x290_entropy_rate",
     "OP-G5/W3-ext",
     "Conditional entropy rate H(next | current) of the event-type "
@@ -2283,7 +2262,7 @@ LIMIT {_HITS_TOPK}
 """
 
 
-@_staged(
+@q(
     "x278_hits_scores",
     "OP-X2-ext",
     "Two-iteration HITS on the order-part bipartite graph: hub scores "
@@ -2390,7 +2369,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@_staged(
+@q(
     "x293_minhash_calibration",
     "OP-X2-ext",
     "MinHash calibration curve: for every x91 banded candidate pair, "
@@ -2556,7 +2535,7 @@ GROUP BY source ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x294_mattr",
     "OP-X4-ext",
     f"MATTR lexical diversity per source: moving-average type-token "
@@ -2679,7 +2658,7 @@ LIMIT {_KEY_TOPK}
 """
 
 
-@_staged(
+@q(
     "x295_keyness_llr",
     "OP-X4-ext",
     "Dunning log-likelihood (G^2) keyness: which top-vocabulary "
@@ -2784,7 +2763,7 @@ ORDER BY nkey
 """
 
 
-@_staged(
+@q(
     "x298_poisson_dispersion",
     "OP-G5/G6-ext",
     "Poisson overdispersion audit of daily order counts per nation "
@@ -2870,7 +2849,7 @@ FROM s WHERE n >= 2 AND n * sxx > sx * sx
 """
 
 
-@_staged(
+@q(
     "x299_zipf_slope",
     "OP-X4-ext",
     f"Zipf exponent of the corpus token rank-frequency curve: the "
@@ -2959,7 +2938,7 @@ FROM tp WHERE n >= 3
 """
 
 
-@_staged(
+@q(
     "x300_turning_points",
     "OP-W3/G6-ext",
     "Turning-points randomness test of the daily-revenue sequence: "
@@ -3064,7 +3043,7 @@ FROM s WHERE nb >= 2 AND k >= 2
 """
 
 
-@_staged(
+@q(
     "x301_friedman_test",
     "OP-W2/G6-ext",
     "Friedman rank test — do customer segments differ in monthly "
@@ -3158,7 +3137,7 @@ ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x302_gamma_mom",
     "OP-G6-ext",
     "Gamma method-of-moments fit of order value per segment "
@@ -3244,7 +3223,7 @@ ORDER BY region
 """
 
 
-@_staged(
+@q(
     "x303_hoover_index",
     "OP-G6-ext",
     "Hoover (Robin Hood) index of customer lifetime spend per "
@@ -3345,7 +3324,7 @@ ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x304_interarrival_cv2",
     "OP-W3/G6-ext",
     "Interarrival CV^2 (squared coefficient of variation of same-"
@@ -3436,7 +3415,7 @@ FROM s WHERE n >= 2 AND h1_nano > h2_nano
 """
 
 
-@_staged(
+@q(
     "x305_records_test",
     "OP-W4/G6-ext",
     "Records test of daily revenue: the count of running maxima "
@@ -3520,7 +3499,7 @@ ORDER BY pp.size DESC, pp.price_cents, pp.p_partkey
 """
 
 
-@_staged(
+@q(
     "x306_skyline_parts",
     "OP-G6/W4-ext",
     "Part skyline (Pareto frontier) on price-low/size-high: a part "
@@ -3611,7 +3590,7 @@ FROM v WHERE den > 0
 """
 
 
-@_staged(
+@q(
     "x307_cronbach_alpha",
     "OP-G5/X4-ext",
     "Cronbach's alpha of the three-judge document-quality battery "
@@ -3736,7 +3715,7 @@ FROM tot WHERE nn > k AND k >= 2 AND {_BF_SSW} > 0
 """
 
 
-@_staged(
+@q(
     "x308_brown_forsythe",
     "OP-G6/W2-ext",
     "Brown-Forsythe variance-homogeneity test across segments: "
@@ -3887,7 +3866,7 @@ ORDER BY nkey
 """
 
 
-@_staged(
+@q(
     "x309_pacf",
     "OP-W3/G6-ext",
     "Partial autocorrelation (lags 1..3) of monthly revenue per "
@@ -4045,7 +4024,7 @@ ORDER BY seg_a, seg_b
 """
 
 
-@_staged(
+@q(
     "x310_cohens_d",
     "OP-G6-ext",
     "Pairwise Cohen's d effect-size matrix across the 5 customer "
@@ -4161,7 +4140,7 @@ LIMIT 1
 """
 
 
-@_staged(
+@q(
     "x311_binary_segmentation",
     "OP-W4/G6-ext",
     "Binary-segmentation changepoint LOCATOR over daily revenue: for "
@@ -4215,12 +4194,3 @@ def x311_binary_segmentation(spark, sf_dir):
         F.expr(_BS_VE_PPM).alias("var_explained_ppm"),
     )
     return obj.orderBy("obj_milli", "split_t").limit(1)
-
-
-# --- round-10 registration footer (flipped in round 10) ---
-# These two lines register the whole batch into the live catalog; they
-# must stay below the final @_staged definition so every entry is in
-# STAGED before the update (the round-25 footer-placement lesson).
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY
-
-_REGISTRY.update(STAGED)

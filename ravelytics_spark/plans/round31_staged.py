@@ -1,11 +1,4 @@
-"""Round-31 operators — STAGED (round 9), registration deferred.
-
-The round-10 certification window is already exactly full (the 37
-round-30 staged entries + the 13 remaining r04-era harness re-runs =
-50; COVERAGE.md 'Certification window' is the arithmetic source of
-truth), so this batch targets the ROUND-11 window — built,
-oracle-twinned and pytest-tested now, registered when its window
-opens. The round-23..30 staging contract, one round further ahead.
+"""Catalog entries x312-x325.
 
 Theme: sequence language modeling, ecological scaling laws, inventory
 decisions, classification economics, governance closure, and design-
@@ -80,19 +73,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x312 — per-source bigram cross-entropy (add-one-smoothed corpus LM)
@@ -147,7 +129,7 @@ ORDER BY src.source
 """
 
 
-@_staged(
+@q(
     "x312_bigram_logprob",
     "OP-X4-ext",
     "Per-source bigram cross-entropy under the corpus add-one-"
@@ -267,7 +249,7 @@ FROM s WHERE k >= 2 AND k * sxx > sx * sx
 """
 
 
-@_staged(
+@q(
     "x313_taylor_law",
     "OP-G6-ext",
     "Taylor's power law across nations: per-nation daily order-count "
@@ -355,7 +337,7 @@ ORDER BY brand
 """
 
 
-@_staged(
+@q(
     "x314_eoq",
     "OP-G6-ext",
     "Economic order quantity per brand: annual unit demand from exact "
@@ -438,7 +420,7 @@ ORDER BY 1, 2
 """
 
 
-@_staged(
+@q(
     "x315_abc_migration",
     "OP-G6/W4-ext",
     "Year-over-year ABC migration matrix: parts classified by 1996 "
@@ -569,7 +551,7 @@ ORDER BY nkey
 """
 
 
-@_staged(
+@q(
     "x316_stl_strength",
     "OP-W3/G6-ext",
     "Seasonal strength F_s per nation over x189's classical "
@@ -705,7 +687,7 @@ ORDER BY threshold_cents
 """
 
 
-@_staged(
+@q(
     "x317_confusion_at_threshold",
     "OP-G5/W2-ext",
     "Confusion matrix of the prior-spend repurchase classifier at "
@@ -830,7 +812,7 @@ ORDER BY qi
 """
 
 
-@_staged(
+@q(
     "x318_t_closeness",
     "OP-G5-ext",
     "t-closeness audit per QI class (nation) against the sensitive "
@@ -925,7 +907,7 @@ FROM est WHERE true_cents > 0
 """
 
 
-@_staged(
+@q(
     "x319_horvitz_thompson",
     "OP-X9/G6-ext",
     "Horvitz-Thompson total-revenue estimator audit under "
@@ -1025,7 +1007,7 @@ ORDER BY decile
 """
 
 
-@_staged(
+@q(
     "x320_qte_deciles",
     "OP-W2/G6-ext",
     "Quantile treatment effects at the nine deciles for the "
@@ -1132,7 +1114,7 @@ HAVING SUM(ln_nano) > 0
 """
 
 
-@_staged(
+@q(
     "x321_degree_powerlaw",
     "OP-X2/G6-ext",
     f"Hill power-law exponent of the co-order part-graph degree "
@@ -1240,7 +1222,7 @@ ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x322_simpson_diversity",
     "OP-X4-ext",
     "Simpson diversity of the token distribution per source: the "
@@ -1352,7 +1334,7 @@ FROM s WHERE v_nano > 0
 """
 
 
-@_staged(
+@q(
     "x323_logrank_test",
     "OP-W4/G6-ext",
     "Log-rank test between the BUILDING segment's reorder-survival "
@@ -1487,7 +1469,7 @@ WHERE kk >= 2 AND nn > kk AND {_ICC_MSB} + ({_ICC_K0} - 1.0) * {_ICC_MSW}
 """
 
 
-@_staged(
+@q(
     "x324_icc_design_effect",
     "OP-G6-ext",
     "Intraclass correlation ICC(1) of order value within customers "
@@ -1607,7 +1589,7 @@ ORDER BY gin.yr
 """
 
 
-@_staged(
+@q(
     "x325_inequality_trend",
     "OP-G6/W2-ext",
     "Customer-spend Gini per order-year (rank formula over exact "
@@ -1670,9 +1652,3 @@ def x325_inequality_trend(spark, sf_dir):
         )
         .orderBy("yr")
     )
-
-
-# --- round-11 registration footer (flipped at round-11 open) ---
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY
-
-_REGISTRY.update(STAGED)

@@ -1,18 +1,9 @@
-"""Round-32 operators — STAGED (round 10), registration deferred.
+"""Catalog entries x326-x340.
 
-The round-10 certification window is exactly full (the 37 round-30
-registrations + the 13 r04-era harness re-runs = 50), and the
-round-31 batch (x312-x325, 14 entries) already targets round 11 —
-this batch tops the ROUND-11 window off at exactly 50: 14 + 15 = 29
-uncertified oracle entries + the 21 harness re-runs (COVERAGE.md
-'Certification window' stays the arithmetic source of truth). Built,
-oracle-twinned and pytest-tested now; the footer flips in round 11.
-
-Theme: the STREAMING-DESIGN surface the round-9 verdict asked the
-surplus to go to — the capacity/planning questions a Structured
-Streaming deployment answers BEFORE it starts (state-store sizing,
-sessionization gap choice, trigger-interval sizing, peak concurrency)
-— plus spectral/multiscale time-series analysis with Python-computed
+Theme: the STREAMING-DESIGN surface — the capacity/planning
+questions a Structured Streaming deployment answers BEFORE it starts
+(state-store sizing, sessionization gap choice, trigger-interval
+sizing, peak concurrency) — plus spectral/multiscale time-series analysis with Python-computed
 literal trig tables (the x102 literal-probe idiom, so the arithmetic
 stays exact BIGINT in both engines), sampling design (Neyman
 allocation), multiple-testing control with literal z-quantile
@@ -115,20 +106,9 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table, memo
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # DuckDB epoch seconds as exact BIGINT (epoch(ts) returns a DOUBLE
 # with fractional seconds; date_diff counts whole second boundaries,
@@ -175,7 +155,7 @@ ORDER BY ttl_hours
 """
 
 
-@_staged(
+@q(
     "x326_state_ttl_projection",
     "OP-T1/X1-ext",
     "State-store size projection for keyed streaming dedup at TTL "
@@ -319,7 +299,7 @@ ORDER BY gap_limit_s
 """
 
 
-@_staged(
+@q(
     "x327_gap_sensitivity",
     "OP-T1/W3-ext",
     "Sessionization gap sensitivity curve: session count, "
@@ -415,7 +395,7 @@ LIMIT 5
 """
 
 
-@_staged(
+@q(
     "x328_peak_concurrency",
     "OP-T1/G6-ext",
     "Hourly session concurrency: 30-min-gap sessions (the x6 "
@@ -499,7 +479,7 @@ FROM cum
 """
 
 
-@_staged(
+@q(
     "x329_microbatch_profile",
     "OP-T1/G6-ext",
     "Per-minute arrival batch profile for a 1-minute trigger: max "
@@ -600,7 +580,7 @@ FROM w ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x330_neyman_allocation",
     "OP-X9/G6-ext",
     "Neyman optimal allocation of a literal 10k-order sample across "
@@ -741,7 +721,7 @@ FROM hit ORDER BY bh_rank
 """
 
 
-@_staged(
+@q(
     "x331_bh_fdr",
     "OP-G6-ext",
     "Benjamini-Hochberg FDR control over the 25 per-nation "
@@ -898,7 +878,7 @@ def _haar_level(df):
     )
 
 
-@_staged(
+@q(
     "x333_haar_energy",
     "OP-W3/G6-ext",
     "Haar wavelet detail energy of daily revenue at scales 2/4/8/16 "
@@ -1016,7 +996,7 @@ ORDER BY period_days
 """
 
 
-@_staged(
+@q(
     "x334_periodogram_peak",
     "OP-W3/G6-ext",
     "Exact periodogram power of daily order counts at candidate "
@@ -1104,7 +1084,7 @@ ORDER BY yyyymm
 """
 
 
-@_staged(
+@q(
     "x335_open_order_backlog",
     "OP-W4/G6-ext",
     "Month-end open-order backlog: an order is open at month-end m "
@@ -1221,7 +1201,7 @@ WHERE d.r > 0
 """
 
 
-@_staged(
+@q(
     "x336_permutation_test",
     "OP-G6-ext",
     "Deterministic permutation test for the md5 A/B mean-spend "
@@ -1346,7 +1326,7 @@ ORDER BY segment
 """
 
 
-@_staged(
+@q(
     "x337_wilson_intervals",
     "OP-G5/G6-ext",
     "Wilson 95% score interval for the urgent-order share per "
@@ -1439,7 +1419,7 @@ ORDER BY energy_rank
 """
 
 
-@_staged(
+@q(
     "x332_embedding_energy",
     "OP-X3-ext",
     "Per-dimension variance spectrum of the embedding table "
@@ -1570,7 +1550,7 @@ ORDER BY abs(corr_milli) DESC, dim_a, dim_b
 """
 
 
-@_staged(
+@q(
     "x339_dim_redundancy",
     "OP-X3-ext",
     "Pairwise correlation among the top-8 variance dimensions of the "
@@ -1718,7 +1698,7 @@ WHERE n >= 2 AND CAST(n AS DOUBLE) * {_CS_PP} > {_CS_P} * {_CS_P}
 """
 
 
-@_staged(
+@q(
     "x340_calibration_slope",
     "OP-G6-ext",
     "Calibration slope/intercept of the urgent-order outcome against "
@@ -1820,7 +1800,7 @@ ORDER BY source
 """
 
 
-@_staged(
+@q(
     "x338_unicode_class_profile",
     "OP-X4-ext",
     "Character-class composition per source in exact ppm: letters / "
@@ -1868,12 +1848,3 @@ def x338_unicode_class_profile(spark, sf_dir):
             " * 1000000 DIV n_chars AS BIGINT)"
         ).alias("other_ppm"),
     ).orderBy("source")
-
-
-# --- round-11 registration footer (flipped at round-11 open) ---
-# These two lines register the whole batch into the live catalog; they
-# must stay below the final @_staged definition so every entry is in
-# STAGED before the update (the round-25 footer-placement lesson).
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY
-
-_REGISTRY.update(STAGED)

@@ -1,18 +1,5 @@
-"""Round-34 operators — STAGED (round 11), registration deferred.
-
-The round-11 certification window is exactly full (29 round-31/32
-registrations + 3 round-33 portable twins + 18 harness re-runs = 50;
-COVERAGE.md 'Certification window' is the arithmetic source of truth),
-so this batch targets the ROUND-12 window — built, oracle-twinned and
-pytest-tested now, registered when its window opens. The
-round-23..33 staging contract, one round further ahead.
-
-Batch: 5 entries. SIX more were built this round and dropped
-pre-registration as duplicates the build-time audit caught against
-the live catalog — an RI scorecard (= x181_fk_integrity), a z-order
-key entry (= x41_zorder_layout), Mann-Kendall (= x273), Kruskal-
-Wallis (= x271), Kendall tau (= x170) and a weighted hash sample
-(= x45's A-ES form). Duplication caught before padding, not after.
+"""Catalog entries x346-x355: compaction planning, incremental dedup,
+a paired rank test, document repetition and split leakage.
 
 * ``x346_compaction_plan`` — the small-files compactor's assignment:
   per source partition, documents packed in doc_id order into target-
@@ -55,19 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x346 — small-files compaction plan (contiguous target-size binning)
@@ -91,7 +67,7 @@ FROM sized GROUP BY 1, 2 ORDER BY source, bin
 """
 
 
-@_staged(
+@q(
     "x346_compaction_plan",
     "OP-S11-ext",
     "Small-files compaction assignment: per source partition, files "
@@ -158,7 +134,7 @@ ORDER BY doc_id
 """
 
 
-@_staged(
+@q(
     "x355_incremental_dedup",
     "OP-X1-ext",
     "The append-only dedup contract: a deterministic hash split "
@@ -262,7 +238,7 @@ FROM agg
 """
 
 
-@_staged(
+@q(
     "x349_wilcoxon_signed_rank",
     "OP-G6/W1-ext",
     "Wilcoxon signed-rank test on each repeat customer's first->second "
@@ -417,7 +393,7 @@ FROM grams GROUP BY 1 ORDER BY doc_id
 """
 
 
-@_staged(
+@q(
     "x353_doc_repetition",
     "OP-X4-ext",
     "Per-document repetition profile — the Gopher repetition signals "
@@ -521,7 +497,7 @@ FROM cnt, leak
 """
 
 
-@_staged(
+@q(
     "x352_split_leakage",
     "OP-X2/X-ext",
     "Train/val/test split + leakage audit in one certified result: "
@@ -585,12 +561,3 @@ def x352_split_leakage(spark, sf_dir):
         .alias("n_test"),
     )
     return cnt.crossJoin(F.broadcast(leak))
-
-
-# --- round-12 registration footer (flipped in round 12) ---
-# These two lines register the whole batch into the live catalog; they
-# must stay below the final @_staged definition so every entry is in
-# STAGED before the update (the round-25 footer-placement lesson).
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY
-
-_REGISTRY.update(STAGED)

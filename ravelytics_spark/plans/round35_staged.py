@@ -1,10 +1,8 @@
-"""Round-35 operators — STAGED (round 11), registration deferred.
+"""Catalog entries x356-x360.
 
-Second round-11 staging wave, topping the round-12 window up beyond
-the round-34 batch (COVERAGE.md 'Certification window' holds the
-arithmetic). Theme: the query-PLANNER'S arithmetic — the statistics,
-filters and estimates a 100 TB engine computes ABOUT its data to
-decide how to touch it — plus two analytics closers:
+Theme: the query-PLANNER'S arithmetic — the statistics, filters and
+estimates a 100 TB engine computes ABOUT its data to decide how to
+touch it — plus two analytics closers:
 
 * ``x356_bloom_prefilter`` — a Bloom filter over the BUILDING-segment
   customer keys (m = 2^16 bits as 2048 32-bit words built with ONE
@@ -56,19 +54,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.plans.registry import Query
+from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, op_id: str, doc: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED[name] = Query(name, op_id, doc, fn, oracle)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # x356 — Bloom-filter join prefilter, build + probe + measured FPR
@@ -125,7 +112,7 @@ SELECT CAST((SELECT count(*) FROM members) AS BIGINT) AS n_members,
 """
 
 
-@_staged(
+@q(
     "x356_bloom_prefilter",
     "OP-J3-ext",
     "Bloom-filter join prefilter with its mathematics hash-certified: "
@@ -272,7 +259,7 @@ ORDER BY layout
 """
 
 
-@_staged(
+@q(
     "x357_file_skipping",
     "OP-S11/P3-ext",
     "Min/max-statistics file pruning, measured: documents chunk into "
@@ -394,7 +381,7 @@ FROM tot, num
 """
 
 
-@_staged(
+@q(
     "x358_wasserstein_w1",
     "OP-G6-ext",
     "Exact-integer 1-D Wasserstein-1 (earth-mover) distance between "
@@ -522,7 +509,7 @@ SELECT CAST((SELECT count(*) FROM u) AS BIGINT) AS n_users,
 """
 
 
-@_staged(
+@q(
     "x359_sequence_match",
     "OP-T/W3-ext",
     "sequenceMatch('(?1).*(?2)') with a time bound — the ClickHouse "
@@ -641,7 +628,7 @@ FROM actual, est
 """
 
 
-@_staged(
+@q(
     "x360_join_cardinality",
     "OP-G5/J2-ext",
     "The cost-based optimizer's join-size arithmetic, certified: the "
@@ -712,12 +699,3 @@ def x360_join_cardinality(spark, sf_dir):
             .alias("err_ppm"),
         )
     )
-
-
-# --- round-12 registration footer (flipped in round 12) ---
-# These two lines register the whole batch into the live catalog; they
-# must stay below the final @_staged definition so every entry is in
-# STAGED before the update (the round-25 footer-placement lesson).
-from ravelytics_spark.plans.registry import REGISTRY as _REGISTRY
-
-_REGISTRY.update(STAGED)

@@ -309,6 +309,17 @@ def x30_rp_projection(spark, sf_dir):
     )
 
 
+def tree_sum(cols):
+    """Balanced pairwise sum of Columns: depth log2(n) instead of a
+    left-deep chain of n additions."""
+    while len(cols) > 1:
+        nxt = [cols[k] + cols[k + 1] for k in range(0, len(cols) - 1, 2)]
+        if len(cols) % 2:
+            nxt.append(cols[-1])
+        cols = nxt
+    return cols[0]
+
+
 def _x30_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
@@ -357,14 +368,6 @@ def _x30_plan(spark, sf_dir):
         for i in range(dims)
     ]
     stage1 = e.select("vec_id", *elems)
-
-    def tree_sum(cols):
-        while len(cols) > 1:
-            nxt = [cols[k] + cols[k + 1] for k in range(0, len(cols) - 1, 2)]
-            if len(cols) % 2:
-                nxt.append(cols[-1])
-            cols = nxt
-        return cols[0]
 
     projs = []
     for j in range(_RP_DIMS):

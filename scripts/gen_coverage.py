@@ -47,65 +47,17 @@ def main() -> None:
     lines += ["", "## Library-surface operators (no catalog query)", ""]
     lines += [f"- **{op}** — {where}" for op, where in sorted(LIBRARY_OPS.items())]
 
-    # Staged entries: built, oracle-twinned and pytest-covered, but
-    # held OUT of REGISTRY until the next driver certification window
-    # has room (the round-18/23 staging contract). Once a staged
-    # module registers itself (round24/25 did in round 7), its entries
-    # appear in the main table above and this section stays empty.
-    staged_all: dict[str, object] = {}
-    staged_src: dict[str, str] = {}
-    # discover staged modules by filename so a new round's batch can
-    # never be missing from this report (the hardcoded list went stale
-    # the round round34_staged landed)
-    import glob as _glob
-
-    staged_mods = sorted(
-        os.path.basename(p)[:-3]
-        for p in _glob.glob(
-            os.path.join(REPO, "ravelytics_spark", "plans", "round*_staged.py")
-        )
-    )
-    for mod_name in staged_mods:
-        mod = __import__(
-            f"ravelytics_spark.plans.{mod_name}", fromlist=["STAGED"]
-        )
-        for n, q in mod.STAGED.items():
-            if n in REGISTRY:
-                continue
-            staged_all[n] = q
-            staged_src[n] = f"plans/{mod_name}.py"
-    if staged_all:
-        lines += [
-            "",
-            "## Staged entries (built + tested; registration deferred "
-            "to the next certification window)",
-            "",
-            "| staged entry | SURVEY ops | check | where |",
-            "|---|---|---|---|",
-        ]
-        for n in sorted(staged_all):
-            q = staged_all[n]
-            check = "oracle" if q.oracle else "harness"
-            lines.append(
-                f"| `{n}` | {q.op_id} | {check} | {staged_src[n]} |"
-            )
-
     n_oracle = sum(1 for q in REGISTRY.values() if q.oracle)
-    n_staged_oracle = sum(1 for q in staged_all.values() if q.oracle)
     lines += [
         "",
         f"**Totals:** {len(REGISTRY)} catalog entries ({n_oracle} oracle-checked, "
-        f"{len(REGISTRY) - n_oracle} harness), {len(LIBRARY_OPS)} library-surface ops, "
-        f"{len(staged_all)} staged awaiting registration "
-        f"({n_staged_oracle} oracle-twinned).",
+        f"{len(REGISTRY) - n_oracle} harness), {len(LIBRARY_OPS)} library-surface ops.",
         "",
     ]
 
-    # Certification-window arithmetic — THE single source of truth the
-    # entry-ordering pin test and the staged-module docstrings cite
-    # (verdict r8 next-round #8: three prose restatements drifted once
-    # already). Computed live from __spark_entry__'s priority order, so
-    # it cannot disagree with what the driver will actually verify.
+    # Certification-window arithmetic, computed live from
+    # __spark_entry__'s priority order so it cannot disagree with what
+    # the driver will actually verify.
     import importlib.util
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -155,40 +107,17 @@ def main() -> None:
         " never-recorded harness entries.",
         "",
     ]
-    # Predicted FOLLOWING window (the r10 verdict's staleness item:
-    # this doc must not read as current-round-only at judging time,
-    # which happens AFTER the driver consumes the window above).
+    # Predicted FOLLOWING window, so this doc does not read as
+    # current-round-only after the driver consumes the window above.
     # Assumption: every tier-0 entry above certifies and every listed
-    # harness re-run gets a fresh record; the staged batches register.
+    # harness re-run gets a fresh record.
     harness_all = [n for n in names if REGISTRY[n].oracle is None]
-    next_t2 = sorted(
-        harness_all,
-        key=lambda n: (0 if n not in set(t1b) else 1, names.index(n)),
-    )
-    # count staged ORACLE entries explicitly (round-11 ADVICE): a
-    # future harness-only staged entry enters the harness tier, not
-    # tier 0, so folding it into the oracle slot count would both
-    # mislabel the text and double-count a window slot
-    n_staged_oracle2 = sum(
-        1 for q in staged_all.values() if q.oracle is not None
-    )
-    n_staged_harness = len(staged_all) - n_staged_oracle2
-    slots_left = max(
-        0, 50 - n_staged_oracle2 - len(harness_all) - n_staged_harness
-    )
+    slots_left = max(0, 50 - len(harness_all))
     lines += [
         "### Predicted window one round later",
         "",
-        "Assuming the window above certifies in full and the staged",
-        f"batches register: **{n_staged_oracle2} staged oracle entries** enter",
-        f"tier 0"
-        + (
-            f" (plus {n_staged_harness} staged harness entries into the "
-            "never-recorded tier)"
-            if n_staged_harness
-            else ""
-        )
-        + f", all {len(harness_all)} harness entries re-run",
+        "Assuming the window above certifies in full: all",
+        f"{len(harness_all)} harness entries re-run",
         "(the ones rotated out of this round's tail are then the",
         f"stalest, so they lead), and the remaining ~{slots_left}",
         "slots fall to tier 3 — already-certified oracle entries",
@@ -199,9 +128,7 @@ def main() -> None:
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COVERAGE.md")
     with open(out, "w") as fh:
         fh.write("\n".join(lines))
-    print(
-        f"wrote {out}: {len(REGISTRY)} entries + {len(staged_all)} staged"
-    )
+    print(f"wrote {out}: {len(REGISTRY)} entries")
 
 
 if __name__ == "__main__":

@@ -13,6 +13,7 @@ sys.path.insert(0, _REPO)
 # Must be set before the JVM launches.
 os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
+from ravelytics_spark.plans.registry import Query  # noqa: E402
 from ravelytics_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -38,6 +39,15 @@ def tier(names, keep_every: int = 4, salt: str = "tier"):
     import zlib
 
     return [n for n in names if zlib.crc32(f"{salt}:{n}".encode()) % keep_every == 0]
+
+
+def entries_of(module: str) -> dict[str, Query]:
+    """The catalog entries whose Spark plan is defined in
+    ``ravelytics_spark.plans.<module>``, in REGISTRY order."""
+    from ravelytics_spark.plans.queries import REGISTRY
+
+    path = f"ravelytics_spark.plans.{module}"
+    return {n: q for n, q in REGISTRY.items() if q.spark.__module__ == path}
 
 
 def pytest_report_header(config):

@@ -41,7 +41,7 @@ class TestWinnowing:
         certified twin reports with >= 10 shared fingerprints must
         surface in the production op at threshold 1)."""
         from ravelytics_spark.operators.dedup import winnow_dup_pairs
-        from ravelytics_spark.plans.round24_staged import STAGED
+        from ravelytics_spark.plans.queries import REGISTRY
 
         sf = "/root/testdata/sf0.01"
         docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -53,7 +53,7 @@ class TestWinnowing:
         }
         heavy = {
             (r["doc_a"], r["doc_b"])
-            for r in STAGED["x150_winnow_dup_spans"].spark(spark, sf).collect()
+            for r in REGISTRY["x150_winnow_dup_spans"].spark(spark, sf).collect()
             if r["n_shared"] >= 10
         }
         assert heavy, "corpus is known to contain heavy duplicate spans"

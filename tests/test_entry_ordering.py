@@ -12,6 +12,8 @@ import importlib.util
 import json
 import sys
 
+from conftest import entries_of
+
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
@@ -163,17 +165,16 @@ _R9_CORRECTNESS = "/root/repo/CORRECTNESS_r09.json"
 
 def _round9_expected_backlog(mod):
     """The 42 uncertified oracle entries of round 9, in registration
-    order: the 40 round-28 staged entries (footer flipped this round)
-    then the 2 round-29 live registrations."""
-    from ravelytics_spark.plans.round28_staged import STAGED as _S28
-
-    staged_oracle = [n for n, q in _S28.items() if q.oracle is not None]
+    order: the 40 round-28 entries then the 2 round-29 ones."""
+    round28 = [
+        n for n, q in entries_of("round28_staged").items() if q.oracle is not None
+    ]
     round29 = ["x230b_hubness_bucketed", "x245b_twonn_bucketed"]
-    return staged_oracle + round29
+    return round28 + round29
 
 
 def test_round9_window_contents_pinned():
-    """Round-9 state: the 40 round-28 staged registrations plus the 2
+    """Round-9 state: the 40 round-28 registrations plus the 2
     round-29 SRP-bucketed twins = 42 uncertified oracle entries lead;
     the remaining 8 window slots go to harness entries — the 3 the
     driver has never recorded (x151/x161/x192), then 5 r04-era
@@ -282,10 +283,10 @@ _R10_HARNESS_RERUNS = [
 
 def _round10_expected_backlog():
     """The 37 uncertified oracle entries of round 10: the round-30
-    staged batch (x275-x311), registration order."""
-    from ravelytics_spark.plans.round30_staged import STAGED as _S30
-
-    return [n for n, q in _S30.items() if q.oracle is not None]
+    batch (x275-x311), registration order."""
+    return [
+        n for n, q in entries_of("round30_staged").items() if q.oracle is not None
+    ]
 
 
 def test_round10_window_contents_pinned():
@@ -383,14 +384,11 @@ _R11_CORRECTNESS = "/root/repo/CORRECTNESS_r11.json"
 
 def _round11_expected_backlog():
     """The 32 uncertified oracle entries of round 11: the round-31 and
-    round-32 staged batches plus the 3 round-33 portable twins, driver
+    round-32 batches plus the 3 round-33 portable twins, driver
     (registration) order."""
-    import importlib
-
     names = []
     for m in ("round31_staged", "round32_staged"):
-        mod = importlib.import_module(f"ravelytics_spark.plans.{m}")
-        names += [n for n, q in mod.STAGED.items() if q.oracle is not None]
+        names += [n for n, q in entries_of(m).items() if q.oracle is not None]
     names += ["x342_ivf_portable", "x343_pq_portable", "x344_hll_portable"]
     return names
 
@@ -556,14 +554,11 @@ _R12_CORRECTNESS = "/root/repo/CORRECTNESS_r12.json"
 
 def _round12_expected_backlog():
     """The 12 uncertified oracle entries of round 12: the round-34 and
-    round-35 staged batches (footers flipped this round) plus the 2
-    round-36 live twins, driver (registration) order."""
-    import importlib
-
+    round-35 batches plus the 2 round-36 twins, driver (registration)
+    order."""
     names = []
     for m in ("round34_staged", "round35_staged"):
-        mod = importlib.import_module(f"ravelytics_spark.plans.{m}")
-        names += [n for n, q in mod.STAGED.items() if q.oracle is not None]
+        names += [n for n, q in entries_of(m).items() if q.oracle is not None]
     names += ["x361_lz78_quality_portable", "x362_planted_near_pairs"]
     return names
 

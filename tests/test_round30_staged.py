@@ -1,24 +1,25 @@
-"""Oracle-comparison + property tests for the STAGED round-30 entries
-(built in round 9; registration deferred to round 10 — the
-round-23..29 staging precedent: entries ship the round after the
-certification window they'd overflow)."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round30_staged.py (x275-x311): DuckDB compare
+at two SFs with strict row order, plus the semantics an oracle twin
+cannot express."""
 
 from __future__ import annotations
 
 from collections import defaultdict
 
 import pytest
+from conftest import entries_of
 
-from ravelytics_spark.plans.round30_staged import STAGED
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round30_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round30_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     assert entry.oracle is not None, "round-30 batch is fully oracle-backed"
     con = duckdb_connection(sf_dir)
     problems = compare(
@@ -31,31 +32,20 @@ def test_round30_staged_matches_oracle(spark, name, sf_dir):
     assert not problems, problems
 
 
-def test_round30_registered_in_round10():
-    """The registration footer flipped live in round 10: every staged
-    entry is in the catalog, IS the same object (no divergent copy),
-    and the batch kept its size."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    assert len(STAGED) == 37
-    for name, entry in STAGED.items():
-        assert REGISTRY.get(name) is entry, name
-
-
 # ---------------------------------------------------------------------------
 # Semantic properties the oracle twin cannot express
 # ---------------------------------------------------------------------------
 
 
 def test_ljung_box_nonnegative_and_consistent(spark):
-    for r in STAGED["x275_ljung_box"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x275_ljung_box"].spark(spark, SFS[1]).collect():
         assert r.sum_term_nano >= 0
         assert r.q_micro == r.n * (r.n + 2) * r.sum_term_nano // 1000
         assert r.n_lags <= 3
 
 
 def test_pr_auc_bounded_by_prevalence_floor(spark):
-    rows = STAGED["x277_pr_auc"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x277_pr_auc"].spark(spark, SFS[1]).collect()
     assert rows, "every segment has positives at sf0.01"
     for r in rows:
         assert 0 < r.ap_nano <= 1_000_000_000
@@ -69,7 +59,7 @@ def test_pr_auc_bounded_by_prevalence_floor(spark):
 def test_abc_xyz_matrix_conserves_parts_and_revenue(spark):
     import duckdb
 
-    rows = STAGED["x283_abc_xyz_matrix"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x283_abc_xyz_matrix"].spark(spark, SFS[1]).collect()
     con = duckdb.connect()
     n_parts, cents = con.execute(
         "SELECT count(DISTINCT l_partkey),"
@@ -83,7 +73,7 @@ def test_abc_xyz_matrix_conserves_parts_and_revenue(spark):
 
 def test_kaplan_meier_curve_is_nonincreasing(spark):
     rows = sorted(
-        STAGED["x285_kaplan_meier"].spark(spark, SFS[1]).collect(),
+        ENTRIES["x285_kaplan_meier"].spark(spark, SFS[1]).collect(),
         key=lambda r: r.bucket,
     )
     assert rows
@@ -95,7 +85,7 @@ def test_kaplan_meier_curve_is_nonincreasing(spark):
 
 
 def test_newsvendor_shortfall_months_bounded(spark):
-    for r in STAGED["x286_newsvendor"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x286_newsvendor"].spark(spark, SFS[1]).collect():
         assert r.q_star > 0
         assert r.exp_leftover_units >= 0 and r.exp_shortage_units >= 0
         # Q at the ceil(0.8n) rank pick: at most 20% of months exceed it
@@ -105,7 +95,7 @@ def test_newsvendor_shortfall_months_bounded(spark):
 
 
 def test_markov_rows_are_normalized(spark):
-    rows = STAGED["x282_markov_transitions"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x282_markov_transitions"].spark(spark, SFS[1]).collect()
     by_from = defaultdict(list)
     for r in rows:
         by_from[r.from_type].append(r)
@@ -120,28 +110,28 @@ def test_markov_rows_are_normalized(spark):
 def test_entropy_rate_bounded_by_log_states(spark):
     import math
 
-    row = STAGED["x290_entropy_rate"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x290_entropy_rate"].spark(spark, SFS[1]).collect()[0]
     assert row.h_cond_micro >= 0
     upper = int(math.log(row.n_states) * 1_000_000) + 1000
     assert row.h_cond_micro <= upper
 
 
 def test_hits_second_iteration_dominates(spark):
-    rows = STAGED["x278_hits_scores"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x278_hits_scores"].spark(spark, SFS[1]).collect()
     assert len(rows) > 0
     for r in rows:
         assert r.auth_2 >= r.auth_1 >= 1
 
 
 def test_fleiss_kappa_in_range(spark):
-    row = STAGED["x296_fleiss_kappa"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x296_fleiss_kappa"].spark(spark, SFS[1]).collect()[0]
     assert -1_000_000 <= row.kappa_ppm <= 1_000_000
     assert 0 <= row.pbar_ppm <= 1_000_000
 
 
 def test_minhash_calibration_estimate_tracks_truth(spark):
     rows = sorted(
-        STAGED["x293_minhash_calibration"].spark(spark, SFS[1]).collect(),
+        ENTRIES["x293_minhash_calibration"].spark(spark, SFS[1]).collect(),
         key=lambda r: r.jac_decile,
     )
     assert rows
@@ -154,7 +144,7 @@ def test_minhash_calibration_estimate_tracks_truth(spark):
 
 
 def test_mattr_bounded_and_sources_covered(spark):
-    rows = STAGED["x294_mattr"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x294_mattr"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         assert 0 < r.mattr_ppm <= 1_000_000
@@ -162,7 +152,7 @@ def test_mattr_bounded_and_sources_covered(spark):
 
 
 def test_smd_three_covariates_near_zero_for_hash_split(spark):
-    rows = STAGED["x292_smd_balance"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x292_smd_balance"].spark(spark, SFS[1]).collect()
     assert {r.covariate for r in rows} == {
         "acctbal_cents",
         "n_orders",
@@ -175,14 +165,14 @@ def test_smd_three_covariates_near_zero_for_hash_split(spark):
 
 
 def test_grubbs_nonnegative_on_right_skewed_prices(spark):
-    for r in STAGED["x279_grubbs_test"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x279_grubbs_test"].spark(spark, SFS[1]).collect():
         assert r.g_max_milli >= 0
         assert r.g_min_milli >= 0
         assert r.mx >= r.mn
 
 
 def test_zipf_slope_is_negative(spark):
-    row = STAGED["x299_zipf_slope"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x299_zipf_slope"].spark(spark, SFS[1]).collect()[0]
     assert row.zipf_slope_milli < 0  # frequency falls with rank, always
 
 
@@ -192,11 +182,11 @@ def test_gamma_and_lognormal_agree_on_the_mean_order(spark):
     lognormal are monotone transforms of the same empirical mean)."""
     ga = {
         r.segment: r.shape_milli * r.scale_milli
-        for r in STAGED["x302_gamma_mom"].spark(spark, SFS[1]).collect()
+        for r in ENTRIES["x302_gamma_mom"].spark(spark, SFS[1]).collect()
     }
     ln = {
         r.segment: r.mu_micro
-        for r in STAGED["x288_lognormal_fit"].spark(spark, SFS[1]).collect()
+        for r in ENTRIES["x288_lognormal_fit"].spark(spark, SFS[1]).collect()
     }
     ga_rank = sorted(ga, key=ga.__getitem__)
     ln_rank = sorted(ln, key=ln.__getitem__)
@@ -205,18 +195,18 @@ def test_gamma_and_lognormal_agree_on_the_mean_order(spark):
 
 
 def test_hoover_in_unit_range(spark):
-    for r in STAGED["x303_hoover_index"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x303_hoover_index"].spark(spark, SFS[1]).collect():
         assert 0 <= r.hoover_ppm <= 1_000_000
 
 
 def test_records_at_least_one_and_bounded(spark):
-    row = STAGED["x305_records_test"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x305_records_test"].spark(spark, SFS[1]).collect()[0]
     assert 1 <= row.rec <= row.n
     assert row.h1_nano > row.h2_nano
 
 
 def test_skyline_is_mutually_nondominated(spark):
-    rows = STAGED["x306_skyline_parts"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x306_skyline_parts"].spark(spark, SFS[1]).collect()
     assert rows
     # the defining property: no member has another member with
     # size >= its size at a strictly lower price
@@ -238,29 +228,29 @@ def test_skyline_is_mutually_nondominated(spark):
 
 
 def test_turning_points_fraction_sane(spark):
-    row = STAGED["x300_turning_points"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x300_turning_points"].spark(spark, SFS[1]).collect()[0]
     assert 0 <= row.t_cnt <= row.n - 2
 
 
 def test_friedman_q_nonnegative(spark):
-    row = STAGED["x301_friedman_test"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x301_friedman_test"].spark(spark, SFS[1]).collect()[0]
     assert row.q_milli >= 0
     assert row.n_treatments == 5
 
 
 def test_cv2_positive(spark):
-    for r in STAGED["x304_interarrival_cv2"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x304_interarrival_cv2"].spark(spark, SFS[1]).collect():
         assert r.cv2_milli > 0
 
 
 def test_cronbach_alpha_in_range(spark):
-    row = STAGED["x307_cronbach_alpha"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x307_cronbach_alpha"].spark(spark, SFS[1]).collect()[0]
     assert row.alpha_ppm <= 1_000_000
     assert row.den > 0
 
 
 def test_brown_forsythe_f_nonnegative(spark):
-    row = STAGED["x308_brown_forsythe"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x308_brown_forsythe"].spark(spark, SFS[1]).collect()[0]
     assert row.f_milli >= 0
     assert row.k == 5 and row.nn > row.k
 
@@ -276,7 +266,7 @@ def test_pacf_lag1_equals_acf_lag1(spark):
     }
     import math
 
-    for r in STAGED["x309_pacf"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x309_pacf"].spark(spark, SFS[1]).collect():
         want = math.floor(1_000_000 * acf[(r.nkey, 1)])
         assert abs(r.pacf1_micro - want) <= 1, (r.nkey, r.pacf1_micro, want)
         for v in (r.pacf1_micro, r.pacf2_micro, r.pacf3_micro):
@@ -284,7 +274,7 @@ def test_pacf_lag1_equals_acf_lag1(spark):
 
 
 def test_cohens_d_antisymmetric_pairs_complete(spark):
-    rows = STAGED["x310_cohens_d"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x310_cohens_d"].spark(spark, SFS[1]).collect()
     assert len(rows) == 10  # C(5,2) segment pairs
     for r in rows:
         assert r.seg_a < r.seg_b
@@ -293,7 +283,7 @@ def test_cohens_d_antisymmetric_pairs_complete(spark):
 
 def test_binary_segmentation_improves_on_no_split(spark):
     row = (
-        STAGED["x311_binary_segmentation"].spark(spark, SFS[1]).collect()[0]
+        ENTRIES["x311_binary_segmentation"].spark(spark, SFS[1]).collect()[0]
     )
     assert 2 <= row.split_t <= row.nn - 2
     assert row.obj_milli <= row.total_sse_milli  # a split never hurts SSE

@@ -1,21 +1,23 @@
-"""Oracle-comparison + property tests for the STAGED round-31 entries
-(built in round 9; the round-10 window is exactly full, so this batch
-targets the ROUND-11 window — the staging contract one round ahead)."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round31_staged.py (x312-x325): DuckDB compare
+at two SFs with strict row order, plus the semantics an oracle twin
+cannot express."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import entries_of
 
-from ravelytics_spark.plans.round31_staged import STAGED
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round31_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round31_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     assert entry.oracle is not None, "round-31 batch is fully oracle-backed"
     con = duckdb_connection(sf_dir)
     problems = compare(
@@ -28,17 +30,6 @@ def test_round31_staged_matches_oracle(spark, name, sf_dir):
     assert not problems, problems
 
 
-def test_round31_registered_in_round11():
-    """The registration footer flipped live in round 11: every staged
-    entry is in the catalog, IS the same object (no divergent copy),
-    and the batch kept its size."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    assert len(STAGED) == 14
-    for name, entry in STAGED.items():
-        assert REGISTRY.get(name) is entry, name
-
-
 # ---------------------------------------------------------------------------
 # Semantic properties the oracle twin cannot express
 # ---------------------------------------------------------------------------
@@ -47,7 +38,7 @@ def test_round31_registered_in_round11():
 def test_bigram_entropy_below_unigram_vocab_bound(spark):
     import math
 
-    rows = STAGED["x312_bigram_logprob"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x312_bigram_logprob"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         assert r.h_micro > 0
@@ -65,7 +56,7 @@ def test_taylor_slope_consistent_with_sums(spark):
     the algebra)."""
     import math
 
-    row = STAGED["x313_taylor_law"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x313_taylor_law"].spark(spark, SFS[1]).collect()[0]
     assert row.n_nations >= 20
     k, sx, sy, sxx, sxy = (
         row.n_nations, row.sx, row.sy, row.sxx, row.sxy
@@ -77,7 +68,7 @@ def test_taylor_slope_consistent_with_sums(spark):
 
 
 def test_eoq_monotone_in_demand(spark):
-    rows = STAGED["x314_eoq"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x314_eoq"].spark(spark, SFS[1]).collect()
     assert rows
     by_demand = sorted(rows, key=lambda r: r.d_units / r.n_years)
     eoqs = [r.eoq_milli for r in by_demand]
@@ -89,7 +80,7 @@ def test_eoq_monotone_in_demand(spark):
 def test_abc_migration_conserves_common_parts(spark):
     import duckdb
 
-    rows = STAGED["x315_abc_migration"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x315_abc_migration"].spark(spark, SFS[1]).collect()
     con = duckdb.connect()
     common = con.execute(
         "WITH y1 AS (SELECT DISTINCT l_partkey FROM"
@@ -107,14 +98,14 @@ def test_abc_migration_conserves_common_parts(spark):
 
 
 def test_stl_strength_in_unit_range(spark):
-    rows = STAGED["x316_stl_strength"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x316_stl_strength"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         assert 0 <= r.seasonal_strength_ppm <= 1_000_000
 
 
 def test_confusion_rows_partition_population(spark):
-    rows = STAGED["x317_confusion_at_threshold"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x317_confusion_at_threshold"].spark(spark, SFS[1]).collect()
     assert len(rows) == 3
     totals = {r.tp + r.fp + r.fn + r.tn for r in rows}
     assert len(totals) == 1  # every threshold partitions the same set
@@ -125,21 +116,21 @@ def test_confusion_rows_partition_population(spark):
 
 
 def test_t_closeness_bounds_and_coverage(spark):
-    rows = STAGED["x318_t_closeness"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x318_t_closeness"].spark(spark, SFS[1]).collect()
     assert len(rows) == 25  # every nation QI class
     for r in rows:
         assert 0 <= r.t_ppm <= 1_000_000
 
 
 def test_horvitz_thompson_is_nearly_unbiased(spark):
-    row = STAGED["x319_horvitz_thompson"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x319_horvitz_thompson"].spark(spark, SFS[1]).collect()[0]
     assert row.n_big_sampled >= 0 and row.n_small_sampled > 0
     # md5 is as-if random: the HT estimate must land within 10% of truth
     assert abs(row.err_ppm) < 100_000, row
 
 
 def test_qte_near_zero_on_hash_split(spark):
-    rows = STAGED["x320_qte_deciles"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x320_qte_deciles"].spark(spark, SFS[1]).collect()
     assert len(rows) == 9
     for r in rows:
         # as-if random split: decile differences are small relative to
@@ -151,28 +142,28 @@ def test_qte_near_zero_on_hash_split(spark):
 
 
 def test_degree_powerlaw_alpha_positive(spark):
-    rows = STAGED["x321_degree_powerlaw"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x321_degree_powerlaw"].spark(spark, SFS[1]).collect()
     assert len(rows) == 1
     assert rows[0].alpha_milli > 0
     assert rows[0].n_terms <= 99
 
 
 def test_simpson_diversity_complements(spark):
-    for r in STAGED["x322_simpson_diversity"].spark(spark, SFS[1]).collect():
+    for r in ENTRIES["x322_simpson_diversity"].spark(spark, SFS[1]).collect():
         assert 0 <= r.simpson_d_ppm <= 1_000_000
         assert r.simpson_d_ppm + r.diversity_ppm == 1_000_000
         assert r.n_types <= r.n_tokens
 
 
 def test_logrank_variance_positive(spark):
-    row = STAGED["x323_logrank_test"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x323_logrank_test"].spark(spark, SFS[1]).collect()[0]
     assert row.v_nano > 0
     # O-E sums to ~0 across groups by construction; z is bounded sane
     assert abs(row.z_milli) < 20_000
 
 
 def test_icc_and_deff_consistent(spark):
-    row = STAGED["x324_icc_design_effect"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x324_icc_design_effect"].spark(spark, SFS[1]).collect()[0]
     assert -1000 <= row.icc_milli <= 1000
     # DEFF = 1 + (nn/kk - 1) * ICC within rounding of the shared chain
     approx = 1000 + (row.nn / row.kk - 1.0) * row.icc_milli
@@ -181,7 +172,7 @@ def test_icc_and_deff_consistent(spark):
 
 
 def test_gini_rows_share_one_slope(spark):
-    rows = STAGED["x325_inequality_trend"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x325_inequality_trend"].spark(spark, SFS[1]).collect()
     assert len(rows) >= 5  # one row per order year
     slopes = {r.trend_ppm_per_year_milli for r in rows}
     assert len(slopes) == 1  # the broadcast slope is constant

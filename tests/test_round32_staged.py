@@ -1,13 +1,14 @@
-"""Oracle-comparison + property tests for the STAGED round-32 entries
-(built in round 10; the round-10 window is exactly full, so this
-batch tops the ROUND-11 window off at 50 together with the round-31
-batch — the staging contract one round ahead)."""
+"""Oracle-comparison and property tests for the catalog entries in
+plans/round32_staged.py (x326-x340): DuckDB compare
+at two SFs with strict row order, plus the semantics an oracle twin
+cannot express."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
+from conftest import entries_of
 
 from ravelytics_spark.plans.round32_staged import (
     _BH_CRIT,
@@ -15,17 +16,17 @@ from ravelytics_spark.plans.round32_staged import (
     _PG_PERIODS,
     _PG_TRIG,
     _TTLS_H,
-    STAGED,
 )
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round32_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round32_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     assert entry.oracle is not None, "round-32 batch is fully oracle-backed"
     con = duckdb_connection(sf_dir)
     problems = compare(
@@ -38,30 +39,14 @@ def test_round32_staged_matches_oracle(spark, name, sf_dir):
     assert not problems, problems
 
 
-def test_round32_registered_in_round11():
-    """The registration footer flipped live in round 11: every staged
-    entry is in the catalog, IS the same object (no divergent copy),
-    and the batch kept its size."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    assert len(STAGED) == 15
-    for name, entry in STAGED.items():
-        assert REGISTRY.get(name) is entry, name
-
-
 def test_round11_window_arithmetic():
-    """The staging arithmetic this batch exists for: 14 round-31 + 15
-    round-32 uncertified oracle entries + the 21 harness entries would
-    have filled the driver's 50-entry round-11 window exactly; the 3
-    round-33 portable twins (registered live in round 11 so they
-    certify THIS round, per the r10 verdict's item #2) push the 3
-    freshest-recorded harness entries (all re-recorded in r10) out of
-    the tail — the window stays 50 with 32 oracle + 18 harness."""
+    """The 14 round-31 and 15 round-32 entries plus the 21 harness
+    entries fill the driver's 50-entry certification window exactly."""
     from ravelytics_spark.plans.queries import REGISTRY
-    from ravelytics_spark.plans.round31_staged import STAGED as S31
 
+    S31 = entries_of("round31_staged")
     harness = [n for n, q in REGISTRY.items() if q.oracle is None]
-    assert len(S31) + len(STAGED) + len(harness) == 50
+    assert len(S31) + len(ENTRIES) + len(harness) == 50
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +60,7 @@ def test_state_projection_monotone_in_ttl(spark):
     exceeds the total distinct-user count."""
     rows = {
         r.ttl_hours: r
-        for r in STAGED["x326_state_ttl_projection"].spark(spark, SFS[1]).collect()
+        for r in ENTRIES["x326_state_ttl_projection"].spark(spark, SFS[1]).collect()
     }
     assert sorted(rows) == sorted(_TTLS_H)
     from ravelytics_spark.sources.tables import load_table
@@ -97,7 +82,7 @@ def test_gap_sensitivity_monotone(spark):
     30-min point agrees with x6's sessionizer."""
     rows = {
         r.gap_limit_s: r
-        for r in STAGED["x327_gap_sensitivity"].spark(spark, SFS[1]).collect()
+        for r in ENTRIES["x327_gap_sensitivity"].spark(spark, SFS[1]).collect()
     }
     assert sorted(rows) == sorted(_GAPS_S)
     for a, b in zip(sorted(_GAPS_S), sorted(_GAPS_S)[1:]):
@@ -119,7 +104,7 @@ def test_gap_sensitivity_monotone(spark):
 def test_peak_concurrency_bounds(spark):
     """Top-5 is sorted; hourly concurrency can't exceed the distinct
     user count (a user holds one session at a time)."""
-    rows = STAGED["x328_peak_concurrency"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x328_peak_concurrency"].spark(spark, SFS[1]).collect()
     assert 0 < len(rows) <= 5
     conc = [r.n_concurrent for r in rows]
     assert conc == sorted(conc, reverse=True)
@@ -132,7 +117,7 @@ def test_peak_concurrency_bounds(spark):
 
 
 def test_microbatch_quantiles_ordered(spark):
-    row = STAGED["x329_microbatch_profile"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x329_microbatch_profile"].spark(spark, SFS[1]).collect()[0]
     assert 1 <= row.p50_batch <= row.p90_batch <= row.p99_batch <= row.max_batch
     assert row.mean_batch_milli >= 1000  # every active minute has >= 1 event
 
@@ -141,7 +126,7 @@ def test_neyman_allocations_sum_close_and_track_variance(spark):
     """Floor-divided allocations sum to <= 10000 with < 5-seat loss;
     the stratum with the largest N_h*S_h weight gets the largest
     Neyman allocation."""
-    rows = STAGED["x330_neyman_allocation"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x330_neyman_allocation"].spark(spark, SFS[1]).collect()
     assert len(rows) == 5
     tot_n = sum(r.neyman_n for r in rows)
     tot_p = sum(r.proportional_n for r in rows)
@@ -158,7 +143,7 @@ def test_bh_thresholds_monotone_and_rejections_contiguous(spark):
     assert _BH_CRIT[-1] == int(
         math.floor(1e6 * 1.9599639845400545)
     )  # i = m: plain alpha = .05 two-sided
-    rows = STAGED["x331_bh_fdr"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x331_bh_fdr"].spark(spark, SFS[1]).collect()
     flags = [r.rejected for r in sorted(rows, key=lambda r: r.bh_rank)]
     assert all(f in (0, 1) for f in flags)
     # contiguous prefix: never a rejection after an acceptance
@@ -168,7 +153,7 @@ def test_bh_thresholds_monotone_and_rejections_contiguous(spark):
 
 
 def test_haar_shares_sum_to_ppm(spark):
-    rows = STAGED["x333_haar_energy"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x333_haar_energy"].spark(spark, SFS[1]).collect()
     assert [r.lvl for r in rows] == [1, 2, 3, 4]
     assert [r.scale_days for r in rows] == [2, 4, 8, 16]
     # halving pair counts
@@ -192,7 +177,7 @@ def test_periodogram_trig_tables_are_exact_literals():
 
 
 def test_periodogram_shares_and_ranks(spark):
-    rows = STAGED["x334_periodogram_peak"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x334_periodogram_peak"].spark(spark, SFS[1]).collect()
     assert sorted(r.period_days for r in rows) == sorted(_PG_PERIODS)
     assert sorted(r.power_rank for r in rows) == [1, 2, 3, 4]
     top = min(rows, key=lambda r: r.power_rank)
@@ -208,7 +193,7 @@ def test_backlog_conservation(spark):
 
     from ravelytics_spark.sources.tables import load_table
 
-    rows = STAGED["x335_open_order_backlog"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x335_open_order_backlog"].spark(spark, SFS[1]).collect()
     assert rows
     assert all(r.n_open > 0 and r.open_value_cents > 0 for r in rows)
     o = load_table(spark, SFS[1], "orders")
@@ -235,7 +220,7 @@ def test_backlog_conservation(spark):
 
 
 def test_permutation_p_value_valid(spark):
-    row = STAGED["x336_permutation_test"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x336_permutation_test"].spark(spark, SFS[1]).collect()[0]
     assert row.n_replicates == 64
     assert 1 <= row.n_as_extreme <= 65
     # p in [1/65, 1]; the observed split is itself null, so p should
@@ -244,7 +229,7 @@ def test_permutation_p_value_valid(spark):
 
 
 def test_wilson_interval_contains_share(spark):
-    rows = STAGED["x337_wilson_intervals"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x337_wilson_intervals"].spark(spark, SFS[1]).collect()
     assert len(rows) == 5
     for r in rows:
         assert 0 <= r.wilson_lo_ppm <= r.share_ppm <= r.wilson_hi_ppm <= 1_000_000
@@ -252,7 +237,7 @@ def test_wilson_interval_contains_share(spark):
 
 
 def test_embedding_energy_is_a_spectrum(spark):
-    rows = STAGED["x332_embedding_energy"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x332_embedding_energy"].spark(spark, SFS[1]).collect()
     assert len(rows) == 64
     ranks = [r.energy_rank for r in rows]
     assert ranks == list(range(1, 65))
@@ -264,7 +249,7 @@ def test_embedding_energy_is_a_spectrum(spark):
 
 
 def test_dim_redundancy_pairs_and_bounds(spark):
-    rows = STAGED["x339_dim_redundancy"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x339_dim_redundancy"].spark(spark, SFS[1]).collect()
     assert len(rows) == 28  # C(8, 2)
     seen = set()
     for r in rows:
@@ -280,14 +265,14 @@ def test_calibration_slope_near_null(spark):
     """Price does not predict urgency in the synthetic data — the
     negative control: |slope| small and base rate strictly inside
     (0, 1)."""
-    row = STAGED["x340_calibration_slope"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x340_calibration_slope"].spark(spark, SFS[1]).collect()[0]
     assert 0 < row.base_rate_ppm < 1_000_000
     assert 0 < row.mean_score_ppm < 1_000_000
     assert abs(row.slope_milli) < 500  # |slope| < 0.5 on null data
 
 
 def test_unicode_class_shares_sum_to_ppm(spark):
-    rows = STAGED["x338_unicode_class_profile"].spark(spark, SFS[1]).collect()
+    rows = ENTRIES["x338_unicode_class_profile"].spark(spark, SFS[1]).collect()
     assert rows
     for r in rows:
         total = (
@@ -315,12 +300,12 @@ def empty_sf(spark, tmp_path_factory):
     return d
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 def test_round32_empty_tables_match_oracle(spark, name, empty_sf):
     """Every round-32 entry agrees with its oracle on fully EMPTY
     tables — row count, schema and values — so no fallback/ungrouped-
     aggregate shape asymmetry is latent in the batch."""
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     con = duckdb_connection(empty_sf)
     problems = compare(
         entry.spark(spark, empty_sf),

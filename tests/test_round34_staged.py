@@ -1,29 +1,28 @@
-"""Oracle-comparison + semantic tests for the round-34 STAGED batch
-(5 entries, registration deferred to round 12): compaction planning,
-Wilcoxon signed-rank, split+leakage audit, doc repetition, and the
-incremental-dedup contract. (Six sibling entries built this round
-were dropped pre-registration as catalog duplicates — see the module
-docstring.)"""
+"""Oracle-comparison and semantic tests for the catalog entries in
+plans/round34_staged.py (x346-x355): compaction planning, Wilcoxon
+signed-rank, split+leakage audit, doc repetition, and the
+incremental-dedup contract."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import entries_of
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.round34_staged import (
     _COMPACT_TARGET,
-    STAGED,
 )
 from ravelytics_spark.sources.tables import load_table
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round34_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round34_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     assert entry.oracle is not None
     con = duckdb_connection(sf_dir)
     problems = compare(
@@ -34,16 +33,6 @@ def test_round34_staged_matches_oracle(spark, name, sf_dir):
         strict_row_order=True,
     )
     assert not problems, problems
-
-
-def test_round34_registered_in_round12():
-    """The round-12 registration footer flipped: the whole batch is
-    live in REGISTRY (same Query objects, not copies)."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    assert len(STAGED) == 5
-    for n, qy in STAGED.items():
-        assert REGISTRY.get(n) is qy, f"{n} not registered"
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +46,7 @@ def test_compaction_bins_hit_target_size(spark):
     compaction (no undersized bins mid-partition), plus conservation
     of files and bytes."""
     sf = SFS[1]
-    rows = STAGED["x346_compaction_plan"].spark(spark, sf).collect()
+    rows = ENTRIES["x346_compaction_plan"].spark(spark, sf).collect()
     docs = (
         load_table(spark, sf, "documents")
         .filter(F.col("n_chars").isNotNull())
@@ -91,7 +80,7 @@ def test_incremental_dedup_matches_full_dedup_on_the_batch(spark):
     sf = SFS[1]
     kept = {
         r.doc_id
-        for r in STAGED["x355_incremental_dedup"].spark(spark, sf).collect()
+        for r in ENTRIES["x355_incremental_dedup"].spark(spark, sf).collect()
     }
     d = load_table(spark, sf, "documents").filter(F.col("text").isNotNull())
     g = F.pmod(
@@ -123,7 +112,7 @@ def test_split_fractions_and_leakage_bounds(spark):
     """Split fractions concentrate near 80/10/10 and leakage is
     bounded by the total near-dup pair count."""
     sf = SFS[1]
-    row = STAGED["x352_split_leakage"].spark(spark, sf).collect()[0]
+    row = ENTRIES["x352_split_leakage"].spark(spark, sf).collect()[0]
     n = row.n_train + row.n_val + row.n_test
     assert abs(row.n_train / n - 0.8) < 0.05
     assert abs(row.n_val / n - 0.1) < 0.04
@@ -140,7 +129,7 @@ def test_wilcoxon_rank_identities(spark):
     """W2+ is bounded by the total doubled rank mass n(n+1), and the
     shipped data's first->second deltas are near-symmetric (|z| small
     relative to a planted one-sided shift)."""
-    row = STAGED["x349_wilcoxon_signed_rank"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x349_wilcoxon_signed_rank"].spark(spark, SFS[1]).collect()[0]
     assert 0 <= row.w2p <= row.n * (row.n + 1)
     assert row.tie3 >= 0
     assert abs(row.z_milli) < 10_000
@@ -150,7 +139,7 @@ def test_doc_repetition_flags_planted_loop(spark, tmp_path):
     """A document that is one sentence repeated 50 times scores near
     10^6 ppm on both signals; normal docs sit far lower."""
     sf = SFS[0]
-    base = STAGED["x353_doc_repetition"].spark(spark, sf)
+    base = ENTRIES["x353_doc_repetition"].spark(spark, sf)
     base_max = base.agg(F.max("dup5_ppm")).collect()[0][0]
     out = str(tmp_path / "looped")
     d = load_table(spark, sf, "documents")
@@ -167,7 +156,7 @@ def test_doc_repetition_flags_planted_loop(spark, tmp_path):
     )
     rows = {
         r.doc_id: r
-        for r in STAGED["x353_doc_repetition"].spark(spark, out).collect()
+        for r in ENTRIES["x353_doc_repetition"].spark(spark, out).collect()
     }
     loop = rows[999_999]
     assert loop.dup_token_ppm > 950_000

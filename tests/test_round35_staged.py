@@ -1,31 +1,32 @@
-"""Oracle-comparison + semantic tests for the round-35 STAGED batch
-(x356-x360, registration deferred to round 12): the query-planner's
-arithmetic — Bloom prefilter, stats-based file skipping, Wasserstein
-drift, sequenceMatch, join-cardinality estimation."""
+"""Oracle-comparison and semantic tests for the catalog entries in
+plans/round35_staged.py (x356-x360): the query-planner's arithmetic —
+Bloom prefilter, stats-based file skipping, Wasserstein drift,
+sequenceMatch, join-cardinality estimation."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
+from conftest import entries_of
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.round35_staged import (
     _BF_M,
     _FS_HI,
     _FS_LO,
-    STAGED,
 )
 from ravelytics_spark.sources.tables import load_table
 from ravelytics_spark.testing import compare, duckdb_connection
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+ENTRIES = entries_of("round35_staged")
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(ENTRIES))
 @pytest.mark.parametrize("sf_dir", SFS)
 def test_round35_staged_matches_oracle(spark, name, sf_dir):
-    entry = STAGED[name]
+    entry = ENTRIES[name]
     assert entry.oracle is not None
     con = duckdb_connection(sf_dir)
     problems = compare(
@@ -36,16 +37,6 @@ def test_round35_staged_matches_oracle(spark, name, sf_dir):
         strict_row_order=True,
     )
     assert not problems, problems
-
-
-def test_round35_registered_in_round12():
-    """The round-12 registration footer flipped: the whole batch is
-    live in REGISTRY (same Query objects, not copies)."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    assert len(STAGED) == 5
-    for n, qy in STAGED.items():
-        assert REGISTRY.get(n) is qy, f"{n} not registered"
 
 
 # ---------------------------------------------------------------------------
@@ -59,7 +50,7 @@ def test_bloom_has_no_false_negatives_and_sane_fpr(spark):
     word table), and the measured FPR is within 5x of the theoretical
     (1 - e^(-kn/m))^k."""
     sf = SFS[1]
-    row = STAGED["x356_bloom_prefilter"].spark(spark, sf).collect()[0]
+    row = ENTRIES["x356_bloom_prefilter"].spark(spark, sf).collect()[0]
     assert 0 < row.bits_set <= min(3 * row.n_members, _BF_M)
     k, n, m = 3, row.n_members, _BF_M
     theo = (1 - math.exp(-k * n / m)) ** k
@@ -126,7 +117,7 @@ def test_file_skipping_sorted_layout_prunes_more(spark):
     touches (almost) everything. Also verify the touched counts
     against a direct recomputation."""
     sf = SFS[1]
-    rows = {r.layout: r for r in STAGED["x357_file_skipping"].spark(spark, sf).collect()}
+    rows = {r.layout: r for r in ENTRIES["x357_file_skipping"].spark(spark, sf).collect()}
     nat, srt = rows["natural"], rows["sorted"]
     assert nat.files_total == srt.files_total
     assert srt.files_touched < nat.files_touched
@@ -145,7 +136,7 @@ def test_wasserstein_detects_planted_shift(spark, tmp_path):
     the ~29-cell sampling noise W1 carries between two ~30k-sample
     empirical CDFs on a 5000-cell grid.)"""
     sf = SFS[1]
-    base = STAGED["x358_wasserstein_w1"].spark(spark, sf).collect()[0]
+    base = ENTRIES["x358_wasserstein_w1"].spark(spark, sf).collect()[0]
     out = str(tmp_path / "shifted")
     o = load_table(spark, sf, "orders")
     c = load_table(spark, sf, "customer")
@@ -162,7 +153,7 @@ def test_wasserstein_detects_planted_shift(spark, tmp_path):
     )
     shifted.write.mode("overwrite").parquet(f"{out}/orders.parquet")
     c.write.mode("overwrite").parquet(f"{out}/customer.parquet")
-    moved = STAGED["x358_wasserstein_w1"].spark(spark, out).collect()[0]
+    moved = ENTRIES["x358_wasserstein_w1"].spark(spark, out).collect()[0]
     delta = moved.w1_milligrid - base.w1_milligrid
     # $20k = 200 grid cells of transport per unit mass; triangle
     # inequality bounds the move within the base noise either side
@@ -173,7 +164,7 @@ def test_wasserstein_detects_planted_shift(spark, tmp_path):
 
 
 def test_sequence_match_counts_are_consistent(spark):
-    row = STAGED["x359_sequence_match"].spark(spark, SFS[1]).collect()[0]
+    row = ENTRIES["x359_sequence_match"].spark(spark, SFS[1]).collect()[0]
     assert 0 < row.n_with_both <= row.n_users
     assert 0 <= row.n_matched <= row.n_with_both
     assert row.match_ppm == row.n_matched * 1_000_000 // row.n_with_both
@@ -184,7 +175,7 @@ def test_join_cardinality_identity_and_estimate_quality(spark):
     identity), and the top-100 + uniform-tail estimate lands within
     25% on TPC-H's near-uniform part keys."""
     sf = SFS[1]
-    row = STAGED["x360_join_cardinality"].spark(spark, sf).collect()[0]
+    row = ENTRIES["x360_join_cardinality"].spark(spark, sf).collect()[0]
     li = load_table(spark, sf, "lineitem").filter(
         F.col("l_partkey").isNotNull()
     )

@@ -126,7 +126,7 @@ def test_x22_drops_malformed_vectors(spark, tmp_path):
 def test_x86_shard_nonnegative_beyond_2pow31(spark, tmp_path):
     """doc_id * KNUTH overflows BIGINT for doc_id ≳ 3.47e9; the masked
     form must keep every shard in [0, 16) for ids far beyond 2^31."""
-    from ravelytics_spark.plans.round18 import STAGED
+    from ravelytics_spark.plans.queries import REGISTRY
 
     d = str(tmp_path)
     big_ids = [2**31 - 1, 2**31, 2**33 + 7, 2**40 + 123456789, 2**62]
@@ -134,7 +134,7 @@ def test_x86_shard_nonnegative_beyond_2pow31(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string, source string") \
         .coalesce(1).write.mode("overwrite") \
         .parquet(os.path.join(d, "documents.parquet"))
-    out = STAGED["x86_shard_manifest"].spark(spark, d).collect()
+    out = REGISTRY["x86_shard_manifest"].spark(spark, d).collect()
     assert out, "expected at least one shard row"
     for r in out:
         assert 0 <= r.shard < 16, f"shard out of range: {r.shard}"
