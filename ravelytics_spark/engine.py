@@ -54,19 +54,12 @@ class Engine:
 
     # -- the reference's view stack ---------------------------------------
 
-    def register_track_views(
-        self, tracks: DataFrame, artists: DataFrame, pure_sql: bool = False
-    ) -> "Engine":
+    def register_track_views(self, tracks: DataFrame, artists: DataFrame) -> "Engine":
         """The 4-deep techno view stack (ref 002_views_techno.sql:9-58),
-        as DataFrame registrations or the 1:1 Spark-SQL port."""
-        from ravelytics_spark.plans.views import register_sql_views, register_views
+        registered as temp views over ``tracks`` and ``artists``."""
+        from ravelytics_spark.plans.views import register_views
 
-        if pure_sql:
-            tracks.createOrReplaceTempView("spotify_tracks")
-            artists.createOrReplaceTempView("spotify_artists")
-            register_sql_views(self.spark)
-        else:
-            register_views(self.spark, tracks, artists)
+        register_views(self.spark, tracks, artists)
         return self
 
     # -- certified operator catalog ---------------------------------------

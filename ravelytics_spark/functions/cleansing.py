@@ -46,34 +46,32 @@ def empty_string_array() -> Column:
     return F.array().cast("array<string>")
 
 
+def parse_timestamp(col: Column | str) -> Column:
+    """``parseDateTimeBestEffortOrNull(s)``: the first pinned format that
+    parses, else null. ``try_to_timestamp`` returns null instead of
+    raising on mismatch, so the coalesce chain is total."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.coalesce(
+        F.try_to_timestamp(c),  # ISO-8601 / default Spark formats
+        *[F.try_to_timestamp(c, F.lit(fmt)) for fmt in _TS_FORMATS],
+    )
+
+
 def best_effort_timestamp(col: Column | str, fallback: Column | None = None) -> Column:
     """``coalesce(parseDateTimeBestEffortOrNull(s), now())``.
 
     Ref: 001_init_spotify_tracks.sql:54 (ingest_ts) and :72 (added_at
     falls back to the already-parsed ingest_ts instead of now()).
-
-    Tries each pinned format; ``try_to_timestamp`` returns null instead of
-    raising on mismatch, so the coalesce chain is total.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    parsed = F.coalesce(
-        F.try_to_timestamp(c),  # ISO-8601 / default Spark formats
-        *[F.try_to_timestamp(c, F.lit(fmt)) for fmt in _TS_FORMATS],
-    )
     if fallback is None:
         fallback = F.current_timestamp()
-    return F.coalesce(parsed, fallback)
+    return F.coalesce(parse_timestamp(col), fallback)
 
 
-def normalize_release_date(col: Column | str) -> Column:
-    """The reference's release-date rule (001_init_spotify_tracks.sql:61-70):
-
-    - bare ``YYYY`` (matches ``^[0-9]{4}$``) → ``YYYY-01-01``;
-    - anything longer → first 10 chars;
-    - unparseable / null → ``1970-01-01``.
-
-    Matches Spotify's ``release_date_precision ∈ {day, year}``.
-    """
+def parse_release_date(col: Column | str) -> Column:
+    """The release-date parse before its fallback: bare ``YYYY`` (matches
+    ``^[0-9]{4}$``) → ``YYYY-01-01``, anything longer → first 10 chars,
+    then ``yyyy-MM-dd`` or null."""
     c = F.col(col) if isinstance(col, str) else col
     as_date_str = F.when(
         (F.length(c) == 4) & c.rlike(r"^[0-9]{4}$"),
@@ -81,9 +79,16 @@ def normalize_release_date(col: Column | str) -> Column:
     ).otherwise(F.substring(c, 1, 10))
     # Pinned format: bare try_to_date accepts bare ints as years ('12345' →
     # year 12345) where ClickHouse toDateOrNull yields null.
-    return F.coalesce(
-        F.try_to_date(as_date_str, "yyyy-MM-dd"), F.to_date(F.lit("1970-01-01"))
-    )
+    return F.try_to_date(as_date_str, "yyyy-MM-dd")
+
+
+def normalize_release_date(col: Column | str) -> Column:
+    """The reference's release-date rule (001_init_spotify_tracks.sql:61-70):
+    ``parse_release_date``, and ``1970-01-01`` where it is null.
+
+    Matches Spotify's ``release_date_precision ∈ {day, year}``.
+    """
+    return F.coalesce(parse_release_date(col), F.to_date(F.lit("1970-01-01")))
 
 
 def ingest_month(ts: Column | str) -> Column:

@@ -12,16 +12,9 @@ from ravelytics_spark.operators.dedup import (
     simhash_near_pairs,
     simhash_signatures,
 )
-from ravelytics_spark.operators.feature_norm import (
-    normalize_by_group,
-    normalize_by_group_pandas,
-)
+from ravelytics_spark.operators.feature_norm import normalize_by_group
 from ravelytics_spark.operators.latest_state import latest_state
-from ravelytics_spark.operators.maintenance import (
-    cleanse_tracks_with_audit,
-    compact_partitions,
-    merge_latest_state,
-)
+from ravelytics_spark.operators.maintenance import cleanse_tracks_with_audit, compact_partitions
 from ravelytics_spark.operators.multimodal import (
     audio_features,
     image_features,
@@ -63,11 +56,9 @@ __all__ = [
     "simhash_near_pairs",
     "simhash_signatures",
     "normalize_by_group",
-    "normalize_by_group_pandas",
     "latest_state",
     "cleanse_tracks_with_audit",
     "compact_partitions",
-    "merge_latest_state",
     "audio_features",
     "image_features",
     "partition_for_assets",

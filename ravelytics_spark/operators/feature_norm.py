@@ -1,26 +1,17 @@
 """Grouped feature normalization over embedding columns — the
 training-data preprocessing step (per-group z-score / centering).
 
-Two implementations with identical semantics:
-
-- ``normalize_by_group`` — native: explode to (id, label, dim, value),
-  join per-(label, dim) moments, re-assemble with ``array_agg`` ordered
-  by dim. All codegen'd relational ops; oracle-checkable; the default.
-- ``normalize_by_group_pandas`` — ``applyInPandas`` grouped-map: one
-  numpy pass per label group. Fewer shuffles (one) and dense-matrix
-  arithmetic; the right shape when groups fit in executor memory and
-  dimensionality is high. Equivalence-tested against the native form.
+``normalize_by_group`` explodes to (id, label, dim, value), joins
+per-(label, dim) moments and re-assembles with ``array_agg`` ordered by
+dim. All codegen'd relational ops, so it is oracle-checkable.
 
 Population std (ddof=0); zero-variance dims normalize to 0.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def normalize_by_group(
@@ -71,34 +62,3 @@ def normalize_by_group(
         )
     )
 
-
-def normalize_by_group_pandas(
-    df: DataFrame, vec_col: str, group_col: str, id_col: str = "vec_id"
-) -> DataFrame:
-    """Same semantics via applyInPandas grouped-map (one shuffle, numpy
-    matrix math inside)."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            df.schema[group_col],
-            T.StructField("z_embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def norm_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        mu = m.mean(axis=0)
-        sigma = np.sqrt((m * m).mean(axis=0) - mu * mu)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            z = np.where(sigma > 0, (m - mu) / sigma, 0.0)
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col].values,
-                group_col: pdf[group_col].values,
-                "z_embedding": list(z),
-            }
-        )
-
-    return df.select(id_col, group_col, vec_col).groupBy(group_col).applyInPandas(
-        norm_group, out_schema
-    )

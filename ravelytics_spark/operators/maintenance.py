@@ -1,5 +1,5 @@
-"""Warehouse maintenance operators: incremental latest-state refresh and
-small-file compaction — the operational pieces a continuously-ingesting
+"""Warehouse maintenance operators: partition-pruned latest-state upsert
+and small-file compaction — the operational pieces a continuously-ingesting
 warehouse needs (ClickHouse gets both from MergeTree merges; parquet
 needs explicit jobs).
 """
@@ -13,32 +13,9 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ravelytics_spark.functions.cleansing import ingest_month, parse_release_date, parse_timestamp
 from ravelytics_spark.operators.latest_state import latest_state
-
-
-def merge_latest_state(
-    current: DataFrame, updates: DataFrame, key: str, ts: str
-) -> DataFrame:
-    """Incremental refresh of a latest-state table (SURVEY §4's optional
-    'incremental MERGE' rewrite): instead of re-aggregating all history,
-    fold a new batch into the existing one-row-per-key state.
-
-    ``current`` is the materialized latest-state (one row per key);
-    ``updates`` is the new raw batch (any rows per key). Both must share
-    the schema. Union → max_by is correct because latest-state is
-    idempotent and associative: latest(latest(A), B) = latest(A ∪ B).
-    Cost: one shuffle over (current ∪ batch), i.e. O(keys + batch) —
-    not O(history).
-    """
-    value_cols = [c for c in current.columns if c not in (key, ts)]
-    return latest_state(
-        current.unionByName(updates.select(*current.columns)),
-        key=key,
-        ts=ts,
-        value_cols=value_cols,
-    )
 
 
 def _replace_partitions(path: str, stage: Callable[[str], None]) -> None:
@@ -210,29 +187,17 @@ def cleanse_tracks_with_audit(wire: DataFrame) -> DataFrame:
     fallbacks fired, so bad upstream data is measurable instead of
     silently defaulted (the reference's MV swallows these, 001:54-72).
     Route ``filter(any flag)`` to a quarantine sink for inspection.
-    """
-    from ravelytics_spark.plans.tracks_pipeline import cleanse_tracks
 
-    cleaned = cleanse_tracks(wire)
-    audit_src = wire.select(
-        "track_id",
-        F.col("ingest_ts").alias("__raw_ingest_ts"),
-        F.col("release_date").alias("__raw_release_date"),
-        F.col("added_at").alias("__raw_added_at"),
+    One select over the wire row: a flag is "the cleanse's own parse was
+    null", so the audit cannot drift from the cleanse, and each delivery
+    of a ``track_id`` keeps its own row and flags.
+    """
+    from ravelytics_spark.plans.tracks_pipeline import cleanse_columns
+
+    audited = wire.select(
+        *cleanse_columns(),
+        parse_timestamp("ingest_ts").isNull().alias("ingest_ts_defaulted"),
+        parse_release_date("release_date").isNull().alias("release_date_defaulted"),
+        parse_timestamp("added_at").isNull().alias("added_at_defaulted"),
     )
-    flags = audit_src.select(
-        "track_id",
-        F.try_to_timestamp(F.col("__raw_ingest_ts")).isNull().alias("ingest_ts_defaulted"),
-        (
-            F.try_to_date(
-                F.when(
-                    (F.length("__raw_release_date") == 4)
-                    & F.col("__raw_release_date").rlike(r"^[0-9]{4}$"),
-                    F.concat(F.col("__raw_release_date"), F.lit("-01-01")),
-                ).otherwise(F.substring("__raw_release_date", 1, 10)),
-                "yyyy-MM-dd",
-            ).isNull()
-        ).alias("release_date_defaulted"),
-        F.try_to_timestamp(F.col("__raw_added_at")).isNull().alias("added_at_defaulted"),
-    )
-    return cleaned.join(flags, "track_id", "left")
+    return audited.withColumn("ingest_month", ingest_month("ingest_ts"))

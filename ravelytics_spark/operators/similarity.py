@@ -23,11 +23,8 @@ with a bucket self-join — see ``embedding_near_pairs``.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ravelytics_spark.functions.vectors import cosine, dot, norm
 
@@ -48,51 +45,19 @@ def _check_query_dim(query_vec: list[float], dim: int) -> None:
         )
 
 
-def cosine_arrow(vec_col: str, query_vec: list[float]):
-    """Arrow-vectorized cosine against a fixed query vector: a
-    ``pandas_udf`` computing the whole batch with one numpy matmul.
-
-    The native HOF form (``functions.vectors.cosine``) is exact and
-    oracle-checkable but Spark interprets HOF lambdas per element —
-    measured ~5× slower warm at sf0.1 and the gap widens with data size.
-    This is the 100 TB scoring kernel; results differ from the native
-    form only in float rounding (last-ulp), so it stays out of
-    hash-checked queries.
-    """
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    @pandas_udf("double")
-    def score(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        dots = m @ q
-        norms = np.linalg.norm(m, axis=1) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = np.where(norms > 0, dots / norms, 0.0)
-        return pd.Series(out)
-
-    return score(F.col(vec_col))
-
-
 def cosine_topk(
     df: DataFrame,
     vec_col: str,
     query_vec: list[float],
     k: int = 10,
     id_col: str = "vec_id",
-    impl: str = "native",
 ) -> DataFrame:
     """Exact top-k by cosine against a literal query vector.
 
     The sort+limit compiles to TakeOrderedAndProject: per-partition
     heaps, driver merges k rows — no global sort, no shuffle of data.
-    ``impl='arrow'`` swaps the scoring kernel for the vectorized
-    pandas_udf (see ``cosine_arrow``) — same ranking, faster at scale.
     """
-    if impl == "arrow":
-        score = cosine_arrow(vec_col, query_vec)
-    else:
-        score = cosine(F.col(vec_col), _as_query_lit(query_vec))
+    score = cosine(F.col(vec_col), _as_query_lit(query_vec))
     scored = df.select(F.col(id_col), score.alias("cos_sim"))
     return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
 

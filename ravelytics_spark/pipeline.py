@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import enum
 import logging
-import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
@@ -41,7 +40,6 @@ class Step:
     fn: Callable[[dict], object]
     depends_on: Sequence[str] = ()
     retries: int = 0
-    retry_delay_s: float = 0.0
 
 
 @dataclass
@@ -58,12 +56,11 @@ class Pipeline:
 
     steps: list[Step] = field(default_factory=list)
 
-    def step(self, name: str, depends_on: Sequence[str] = (), retries: int = 0,
-             retry_delay_s: float = 0.0):
+    def step(self, name: str, depends_on: Sequence[str] = (), retries: int = 0):
         """Decorator registration: @pipe.step("fetch", depends_on=["preflight"])."""
 
         def deco(fn):
-            self.add(Step(name, fn, depends_on, retries, retry_delay_s))
+            self.add(Step(name, fn, depends_on, retries))
             return fn
 
         return deco
@@ -91,8 +88,7 @@ class Pipeline:
         return results
 
     def _run_step(self, step: Step, context: dict) -> StepResult:
-        attempts = step.retries + 1
-        for attempt in range(attempts):
+        for attempt in range(step.retries + 1):
             try:
                 value = step.fn(context)
                 context[step.name] = value
@@ -102,8 +98,5 @@ class Pipeline:
                 return StepResult(Status.SKIPPED, error=str(exc))
             except Exception as exc:  # noqa: BLE001 — runner must not die
                 log.warning("step %s attempt %d failed: %s", step.name, attempt + 1, exc)
-                if attempt + 1 < attempts:
-                    time.sleep(step.retry_delay_s)
-                else:
-                    return StepResult(Status.FAILED, error=f"{type(exc).__name__}: {exc}")
-        raise AssertionError("unreachable")
+                error = f"{type(exc).__name__}: {exc}"
+        return StepResult(Status.FAILED, error=error)

@@ -86,16 +86,15 @@ def normalize_artist_records(raw: DataFrame, ingest_ts: Column | None = None) ->
     return rec.filter(F.col("artist_id") != "")
 
 
-def cleanse_tracks(wire: DataFrame) -> DataFrame:
-    """Wire record → typed warehouse row (the MV body, ref 001:50-74).
+def cleanse_columns() -> list[Column]:
+    """The MV body's select list over a wire record (ref 001:50-74).
 
     - ingest_ts: best-effort parse, fallback now()          (001:54)
     - release_date: YYYY→YYYY-01-01 / left 10 / 1970-01-01  (001:61-70)
     - added_at: best-effort parse, fallback ingest_ts       (001:72)
-    - ingest_month: toYYYYMM partition key                  (001:21)
     """
     ingest_ts = best_effort_timestamp(F.col("ingest_ts"))
-    return wire.select(
+    return [
         ingest_ts.alias("ingest_ts"),
         F.col("track_id"),
         F.col("track_name"),
@@ -109,7 +108,14 @@ def cleanse_tracks(wire: DataFrame) -> DataFrame:
         null_default(F.col("popularity"), 0).cast("int").alias("popularity"),
         best_effort_timestamp(F.col("added_at"), fallback=ingest_ts).alias("added_at"),
         F.col("external_url"),
-    ).withColumn("ingest_month", ingest_month("ingest_ts"))
+    ]
+
+
+def cleanse_tracks(wire: DataFrame) -> DataFrame:
+    """Wire record → typed warehouse row (the MV body, ref 001:50-74):
+    ``cleanse_columns`` plus the toYYYYMM partition key ``ingest_month``
+    (001:21)."""
+    return wire.select(*cleanse_columns()).withColumn("ingest_month", ingest_month("ingest_ts"))
 
 
 def write_tracks_warehouse(df: DataFrame, path: str, mode: str = "append") -> None:

@@ -11,13 +11,6 @@ micro-batch, with timeout-based state eviction so state stays bounded
 At 100 TB: state is partitioned by user_id across executors; each
 micro-batch shuffles only new events to their user's partition. The
 state store is RocksDB-backed in production configs.
-
-Two API generations, same semantics: ``applyInPandasWithState``
-(GroupState + manual timeout eviction) and the Spark 4
-``transformWithStateInPandas`` successor (``SessionStatsProcessor``:
-typed ValueState with declarative TTL; requires the RocksDB provider
-and protobuf — the latter absent in this container, so the engine-level
-test is gated and the processor logic is unit-tested directly).
 """
 
 from __future__ import annotations
@@ -101,68 +94,3 @@ def user_session_stats(events: DataFrame, gap_s: float = 1800.0) -> DataFrame:
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
-
-# ---------------------------------------------------------------------------
-# Spark 4 successor API: transformWithStateInPandas
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle  # noqa: E402
-
-
-class SessionStatsProcessor(StatefulProcessor):
-    """Same per-user gap-sessionizer as ``_update_user_sessions`` on the
-    Spark 4 ``transformWithStateInPandas`` API: typed ValueState with a
-    declarative TTL instead of hand-armed GroupStateTimeout — idle-user
-    state is evicted by the state store itself (no timeout branch to
-    get wrong), and the processor composes with timers/list/map state
-    if the operator grows richer per-user structure.
-
-    At 100 TB the same layout holds: state partitioned by user_id,
-    RocksDB-backed store, per-micro-batch shuffle is only new events.
-    """
-
-    def __init__(self, gap_s: float = 1800.0, ttl_ms: int = 3_600_000):
-        self._gap_s = gap_s
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState(
-            "session", SESSION_STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        if self._state.exists():
-            session_count, last_ts, current_len = self._state.get()
-        else:
-            session_count, last_ts, current_len = 0, None, 0
-        for pdf in rows:
-            for ts in sorted(float(x) for x in pdf["ts_epoch"]):
-                if last_ts is None or ts - last_ts > self._gap_s:
-                    session_count += 1
-                    current_len = 1
-                else:
-                    current_len += 1
-                last_ts = ts
-        self._state.update((session_count, last_ts, current_len))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_count": [session_count],
-                "current_len": [current_len],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_session_stats_tws(events: DataFrame, gap_s: float = 1800.0) -> DataFrame:
-    """``user_session_stats`` on the transformWithStateInPandas API
-    (stream with columns: user_id long, ts_epoch double)."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionStatsProcessor(gap_s),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )

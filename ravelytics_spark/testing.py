@@ -15,7 +15,7 @@ from typing import Any
 import duckdb
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ravelytics_spark.sources.tables import TABLE_NAMES
 
@@ -140,23 +140,3 @@ def compare(
             break
     return problems
 
-
-def run_catalog(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, list[str]]:
-    """Run every (or selected) catalog queries against the oracle; return
-    {name: problems}."""
-    from ravelytics_spark.plans.queries import REGISTRY
-
-    con = duckdb_connection(sf_dir)
-    results: dict[str, list[str]] = {}
-    for name, query in REGISTRY.items():
-        if names and name not in names:
-            continue
-        if query.oracle is None:
-            continue
-        try:
-            results[name] = compare(query.spark(spark, sf_dir), con, query.oracle, name)
-        except Exception as exc:  # surface, don't abort the sweep
-            results[name] = [f"{name}: EXCEPTION {type(exc).__name__}: {exc}"]
-    return results

@@ -7,10 +7,10 @@ import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-# Spawned Python workers (e.g. the transformWithStateInPandas driver
-# worker) unpickle module-level classes BY REFERENCE — they need the
-# package importable via PYTHONPATH, not just this process's sys.path.
-# Must be set before the JVM launches.
+# Spawned Python workers (e.g. the applyInPandasWithState worker)
+# unpickle the package's module-level functions BY REFERENCE — they need
+# the package importable via PYTHONPATH, not just this process's
+# sys.path. Must be set before the JVM launches.
 os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 from ravelytics_spark.plans.registry import Query  # noqa: E402
@@ -24,9 +24,9 @@ def tier(names, keep_every: int = 4, salt: str = "tier"):
     """Deterministic 1/keep_every sample of a catalog-sweep
     parametrization list — the driver-facing fast tier.
 
-    The full 2095-test suite (~67 min sequential) no longer fits the
-    driver's verify window (VERIFY_r12: output cut mid-run at ~68% with
-    zero failures). The four full-catalog sweep modules are ~53% of the
+    The full suite (about 2,100 tests, ~67 min sequential) no longer
+    fits the driver's verify window (VERIFY_r12: output cut mid-run at
+    ~68% with zero failures). The four full-catalog sweep modules are ~53% of the
     suite and triple-cover ground the driver checks independently (its
     own DuckDB correctness window) and scripts/gate.py re-checks in
     full; a plain `pytest tests/` therefore runs a stable crc32-chosen

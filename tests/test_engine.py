@@ -33,18 +33,6 @@ def test_catalog_dispatch_matches_direct_registry(spark):
     assert got == REGISTRY["g1_argmax_latest"].spark(spark, SF).count()
 
 
-def test_track_views_both_registrations_agree(spark):
-    from ravelytics_spark.plans.flagship import synth_artists, synth_tracks
-
-    eng = Engine(spark)
-    tracks, artists = synth_tracks(spark, SF), synth_artists(spark, SF)
-    eng.register_track_views(tracks, artists)
-    df_count = eng.sql("SELECT count(*) AS n FROM v_track_is_techno").collect()[0].n
-    eng.register_track_views(tracks, artists, pure_sql=True)
-    sql_count = eng.sql("SELECT count(*) AS n FROM v_track_is_techno").collect()[0].n
-    assert df_count == sql_count > 0
-
-
 def test_run_scheduled_executes_due_intervals_and_records(spark, tmp_path):
     eng = Engine(spark)
     ledger = RunLedger(str(tmp_path / "runs.jsonl"))

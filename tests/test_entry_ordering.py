@@ -10,14 +10,15 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import sys
 
-from conftest import entries_of
+from conftest import _REPO, entries_of
 
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
-        "_entry_under_test", "/root/repo/__spark_entry__.py"
+        "_entry_under_test", os.path.join(_REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -160,7 +161,7 @@ def test_recorded_harness_entries_rerun_stalest_first():
 # certified). The pin therefore proves the contract in BOTH states and
 # never goes stale. Window arithmetic source of truth: COVERAGE.md
 # 'Round-9 certification window'.
-_R9_CORRECTNESS = "/root/repo/CORRECTNESS_r09.json"
+_R9_CORRECTNESS = os.path.join(_REPO, "CORRECTNESS_r09.json")
 
 
 def _round9_expected_backlog(mod):
@@ -259,7 +260,7 @@ def test_round9_pin_survives_round_close(tmp_path, monkeypatch):
 # The round-10 certification-window pin — same self-retiring contract
 # as the round-9 pin above. Window arithmetic source of truth:
 # COVERAGE.md 'Certification window'.
-_R10_CORRECTNESS = "/root/repo/CORRECTNESS_r10.json"
+_R10_CORRECTNESS = os.path.join(_REPO, "CORRECTNESS_r10.json")
 
 # The 13 harness entries whose newest driver record was r04 when round
 # 10 opened — the exact tail of the round-10 window, stalest-first
@@ -379,7 +380,7 @@ def test_round10_pin_survives_round_close(tmp_path, monkeypatch):
 # The round-11 certification-window pin — same self-retiring contract
 # as the round-9/round-10 pins above. Window arithmetic source of
 # truth: COVERAGE.md 'Certification window'.
-_R11_CORRECTNESS = "/root/repo/CORRECTNESS_r11.json"
+_R11_CORRECTNESS = os.path.join(_REPO, "CORRECTNESS_r11.json")
 
 
 def _round11_expected_backlog():
@@ -549,7 +550,7 @@ def test_unparsable_round_tag_still_certifies(tmp_path, monkeypatch):
 # simulation branch is glob-ISOLATED from future CORRECTNESS drops.
 # Window arithmetic source of truth: COVERAGE.md 'Certification
 # window'.
-_R12_CORRECTNESS = "/root/repo/CORRECTNESS_r12.json"
+_R12_CORRECTNESS = os.path.join(_REPO, "CORRECTNESS_r12.json")
 
 
 def _round12_expected_backlog():

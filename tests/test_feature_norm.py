@@ -1,5 +1,5 @@
-"""Grouped feature normalization: native vs applyInPandas equivalence;
-artist-record normalization edge cases."""
+"""Grouped feature normalization z-score semantics; artist-record
+normalization edge cases."""
 
 from __future__ import annotations
 
@@ -7,10 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from ravelytics_spark.operators.feature_norm import (
-    normalize_by_group,
-    normalize_by_group_pandas,
-)
+from ravelytics_spark.operators.feature_norm import normalize_by_group
 
 
 @pytest.fixture(scope="module")
@@ -35,20 +32,6 @@ def test_native_zscore_semantics(vecs):
     # group b dim0: mean 1, std 1 → ±1; dim1: mean 2, std 2 → ±1
     assert got[3] == [-1.0, -1.0]
     assert got[4] == [1.0, 1.0]
-
-
-def test_pandas_form_matches_native(vecs):
-    native = {
-        r.vec_id: list(r.z_embedding)
-        for r in normalize_by_group(vecs, "embedding", "label", round_moments=None).collect()
-    }
-    pandas_ = {
-        r.vec_id: list(r.z_embedding)
-        for r in normalize_by_group_pandas(vecs, "embedding", "label").collect()
-    }
-    assert set(native) == set(pandas_)
-    for k in native:
-        assert native[k] == pytest.approx(pandas_[k], abs=1e-12)
 
 
 def test_normalize_artist_records(spark):

@@ -1,4 +1,4 @@
-"""Incremental latest-state refresh ≡ full recompute; compaction reduces
+"""Partition-pruned upsert ≡ full recompute; compaction reduces
 files and preserves data; a crash at any step of a partition swap loses
 and doubles nothing; audit flags localize defaulted records."""
 
@@ -14,37 +14,11 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ravelytics_spark.operators.latest_state import latest_state
-from ravelytics_spark.operators.maintenance import (
-    cleanse_tracks_with_audit,
-    compact_partitions,
-    merge_latest_state,
-)
+from ravelytics_spark.operators.maintenance import cleanse_tracks_with_audit, compact_partitions
 
 
 def _t(day):
     return datetime.datetime(2025, 7, day)
-
-
-def test_incremental_merge_equals_full_recompute(spark):
-    hist = spark.createDataFrame(
-        [("a", _t(1), "A1"), ("a", _t(2), "A2"), ("b", _t(1), "B1")],
-        ["k", "ts", "v"],
-    )
-    batch = spark.createDataFrame(
-        [("a", _t(3), "A3"), ("c", _t(1), "C1")], ["k", "ts", "v"]
-    )
-    current = latest_state(hist, "k", "ts")
-
-    # merge_latest_state drops ts from state? latest_state keeps value
-    # cols only; add ts back as a tracked value for recursivity
-    cur_with_ts = hist.groupBy("k").agg(
-        F.max_by("v", "ts").alias("v"), F.max("ts").alias("ts")
-    ).select("k", "ts", "v")
-    merged = merge_latest_state(cur_with_ts, batch, key="k", ts="ts")
-    full = hist.unionByName(batch).groupBy("k").agg(F.max_by("v", "ts").alias("v"))
-    assert {(r.k, r.v) for r in merged.select("k", "v").collect()} == {
-        (r.k, r.v) for r in full.collect()
-    }
 
 
 def test_compaction_preserves_rows_and_reduces_files(spark, tmp_path):
@@ -79,18 +53,29 @@ def test_audit_flags_localize_bad_records(spark):
             artists=["a"], artist_ids=["i"], album_id="", album_name="",
             release_date="garbage", popularity=1, added_at="nope",
             external_url=""),
+        # redelivery of "ok" (a later ingest_ts, popularity 2) with a
+        # garbage release date: its flags are its own, not "ok"'s
+        Row(ingest_ts="2025-07-31 06:00:00", track_id="ok", track_name="n",
+            artists=["a"], artist_ids=["i"], album_id="", album_name="",
+            release_date="soon", popularity=2,
+            added_at="2025-07-31T06:00:00Z", external_url=""),
     ]
     wire = spark.createDataFrame(rows, TRACKS_WIRE_SCHEMA)
     audited = cleanse_tracks_with_audit(wire)
-    got = {r.track_id: r for r in audited.collect()}
-    ok, bad = got["ok"], got["bad"]
+    got = audited.collect()
+    assert len(got) == len(rows)  # one row per delivery, no fan-out
+    by_delivery = {(r.track_id, r.popularity): r for r in got}
+    ok, redelivered, bad = by_delivery["ok", 1], by_delivery["ok", 2], by_delivery["bad", 1]
     assert not (ok.ingest_ts_defaulted or ok.release_date_defaulted or ok.added_at_defaulted)
     assert bad.ingest_ts_defaulted and bad.release_date_defaulted and bad.added_at_defaulted
+    assert redelivered.release_date_defaulted
+    assert not (redelivered.ingest_ts_defaulted or redelivered.added_at_defaulted)
     assert str(bad.release_date) == "1970-01-01"  # still cleansed downstream
+    assert str(redelivered.release_date) == "1970-01-01"
     quarantine = audited.filter(
         F.col("ingest_ts_defaulted") | F.col("release_date_defaulted") | F.col("added_at_defaulted")
     )
-    assert [r.track_id for r in quarantine.collect()] == ["bad"]
+    assert sorted(r.track_id for r in quarantine.collect()) == ["bad", "ok"]
 
 
 def test_compaction_refuses_streaming_sink_root(spark, tmp_path):

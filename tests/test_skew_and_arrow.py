@@ -1,5 +1,4 @@
-"""Skew utilities match their unsalted equivalents; Arrow cosine kernel
-matches the native HOF kernel."""
+"""Skew utilities match their unsalted equivalents."""
 
 from __future__ import annotations
 
@@ -7,8 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ravelytics_spark.operators import skew
-from ravelytics_spark.operators.similarity import cosine_topk
-from ravelytics_spark.sources.tables import load_table
 
 
 @pytest.fixture(scope="module")
@@ -59,19 +56,3 @@ def test_top_keys_finds_hot_key(spark, skewed):
     hot = skew.top_keys(skewed, "k", min_fraction=0.5)
     rows = hot.collect()
     assert len(rows) == 1 and rows[0].k == "hot" and rows[0]["count"] == 900
-
-
-def test_arrow_cosine_matches_native(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings")
-    probe = [1.0 if i % 16 == 0 else 0.0 for i in range(64)]
-    native = [
-        (r.vec_id, round(r.cos_sim, 9))
-        for r in cosine_topk(e, "embedding", probe, k=20, impl="native").collect()
-    ]
-    arrow = [
-        (r.vec_id, round(r.cos_sim, 9))
-        for r in cosine_topk(e, "embedding", probe, k=20, impl="arrow").collect()
-    ]
-    assert [i for i, _ in native] == [i for i, _ in arrow]
-    for (_, a), (_, b) in zip(native, arrow):
-        assert a == pytest.approx(b, abs=1e-9)

@@ -121,119 +121,3 @@ def test_timeout_evicts_idle_user_state():
     out = list(_update_user_sessions((7,), iter([]), state))
     assert out == []
     assert state.removed
-
-
-def _run_batch_tws(spark, src, ckpt):
-    from ravelytics_spark.streaming.stateful import user_session_stats_tws
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = spark.readStream.schema("user_id long, ts_epoch double").json(str(src))
-    out = user_session_stats_tws(stream, gap_s=1800.0)
-    collected, data_batches = [], []
-
-    def sink(batch_df, batch_id):
-        rows = batch_df.collect()
-        if rows:
-            data_batches.append(batch_id)
-        collected.extend(rows)
-
-    q = (
-        out.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # same non-termination as the applyInPandasWithState twin above
-    _await_data_commit(ckpt, data_batches)
-    q.stop()
-    q.awaitTermination(60)
-    return {r.user_id: (r.session_count, r.current_len) for r in collected}
-
-
-def test_transform_with_state_carries_across_microbatches(spark, dirs):
-    """Spark 4 transformWithStateInPandas variant: same semantics, typed
-    ValueState + TTL; state must survive the checkpointed restart.
-
-    Requires protobuf (the TWS state-server protocol) — absent in this
-    container, so this runs wherever pyspark's full deps are installed;
-    the processor ALGORITHM is engine-independently covered by
-    test_session_processor_logic_without_engine below."""
-    pytest.importorskip("google.protobuf")
-    src, ckpt = dirs
-    try:
-        _write(src, "b1.json", [
-            {"user_id": 1, "ts_epoch": 1000.0},
-            {"user_id": 1, "ts_epoch": 1300.0},
-            {"user_id": 2, "ts_epoch": 1000.0},
-        ])
-        got = _run_batch_tws(spark, src, ckpt)
-        assert got[1] == (1, 2)
-        assert got[2] == (1, 1)
-
-        _write(src, "b2.json", [{"user_id": 1, "ts_epoch": 5300.0}])
-        got2 = _run_batch_tws(spark, src, ckpt)
-        assert got2[1] == (2, 1)
-        assert 2 not in got2
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_session_processor_logic_without_engine():
-    """SessionStatsProcessor's sessionization must match the
-    applyInPandasWithState handler's, independent of the streaming
-    engine (the TWS protocol needs protobuf, absent here)."""
-    import pandas as pd
-
-    from ravelytics_spark.streaming.stateful import SessionStatsProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-            self.ttl = None
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            self.ttl = ttlDurationMs
-            return self.state
-
-    proc = SessionStatsProcessor(gap_s=1800.0)
-    handle = FakeHandle()
-    proc.init(handle)
-    assert handle.ttl == 3_600_000, "state TTL must be declared (bounded state)"
-
-    # batch 1: two events 5 min apart → one session of length 2
-    out1 = list(
-        proc.handleInputRows(
-            (1,), iter([pd.DataFrame({"ts_epoch": [1300.0, 1000.0]})]), None
-        )
-    )
-    assert out1[0].iloc[0].to_dict() == {
-        "user_id": 1, "session_count": 1, "current_len": 2,
-    }
-
-    # batch 2 (state carried): gap > 1800 s → new session
-    out2 = list(
-        proc.handleInputRows(
-            (1,), iter([pd.DataFrame({"ts_epoch": [5300.0]})]), None
-        )
-    )
-    assert out2[0].iloc[0].to_dict() == {
-        "user_id": 1, "session_count": 2, "current_len": 1,
-    }
