@@ -8,15 +8,32 @@ re-enter ``queries`` mid-initialization and fail on any cross-module
 import. ``q`` is the only code that writes REGISTRY. REGISTRY is one
 shared dict either way, but only importing ``queries`` guarantees it is
 fully populated.
+
+Prepared plans: ``q`` registers, as ``Query.spark``, a wrapper that
+builds the entry's DataFrame once per session and dataset state. It is
+stored with ``sources.tables.memo`` under the entry's name and any
+arguments of its own (``rank_method=``), keyed on the session object
+and the fingerprint of every warehouse table under ``sf_dir``, so a
+rewrite of any table or a call on another session builds it again. A hit hands out a new Dataset over the stored plan,
+``stored.select("*")``: each action then optimizes, plans and executes
+in full under its own QueryExecution (a Dataset handed out twice would
+let the second action reuse the first one's physical plan and
+materialized shuffle stages). What a hit saves is the Python-side
+build: its py4j calls and any collect it runs. ``q`` returns the
+undecorated function, reachable from the wrapper as ``__wrapped__``,
+for callers that need a fresh build.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ravelytics_spark.sources.tables import memo
 
 
 @dataclass(frozen=True)
@@ -33,7 +50,14 @@ REGISTRY: dict[str, Query] = {}
 
 def q(name: str, op_id: str, doc: str, oracle: str | None = None):
     def deco(fn):
-        REGISTRY[name] = Query(name, op_id, doc, fn, oracle)
+        @functools.wraps(fn)
+        def prepared(spark: SparkSession, sf_dir: str, *args, **kwargs):
+            # an entry's own parameters (rank_method=...) select its plan
+            key = (name, args, tuple(sorted(kwargs.items())))
+            build = functools.partial(fn, spark, sf_dir, *args, **kwargs)
+            return memo(spark, sf_dir, None, key, build).select("*")
+
+        REGISTRY[name] = Query(name, op_id, doc, prepared, oracle)
         return fn
 
     return deco

@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round4 import embedding_probe, tree_sum
-from ravelytics_spark.sources.tables import load_table, memo
+from ravelytics_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # x97 — K-Minimum-Values distinct sketch, portable hash family
@@ -696,12 +696,6 @@ LIMIT {_SRP_K}
     _SRP_ORACLE,
 )
 def x102_srp_portable(spark, sf_dir):
-    return memo(
-        spark, sf_dir, "embeddings", "x102", lambda: _x102_plan(spark, sf_dir)
-    )
-
-
-def _x102_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
     dims, mx = embedding_probe(spark, sf_dir)
@@ -1093,12 +1087,6 @@ ORDER BY dist, vec_id LIMIT {_PQ_TOPK}
     _PQ_ORACLE,
 )
 def x105_pq_portable(spark, sf_dir):
-    return memo(
-        spark, sf_dir, "embeddings", "x105", lambda: _x105_plan(spark, sf_dir)
-    )
-
-
-def _x105_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     dims, _mx = embedding_probe(spark, sf_dir)
     if dims is None:
@@ -1305,12 +1293,6 @@ ORDER BY id_a, id_b
     _ND_ORACLE,
 )
 def x107_embed_neardup_portable(spark, sf_dir):
-    return memo(
-        spark, sf_dir, "embeddings", "x107", lambda: _x107_plan(spark, sf_dir)
-    )
-
-
-def _x107_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     dims, mx = embedding_probe(spark, sf_dir)
     if dims is None:

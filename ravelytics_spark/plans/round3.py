@@ -29,7 +29,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import _dsum, _dsum_sql, q
-from ravelytics_spark.sources.tables import load_table, memo
+from ravelytics_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # TPC-H Q6 — forecast revenue change (pure scan-filter-agg)
@@ -593,16 +593,6 @@ FROM best GROUP BY 1, 2 ORDER BY 1, 2
     _ASSIGN_ORACLE,
 )
 def x22_centroid_assign(spark, sf_dir):
-    # The centroid collect is a real Spark job and the unrolled argmin
-    # costs Catalyst analysis; the collected centroid values are data
-    # baked into the plan, so the plan is memoized per dataset state
-    # and session.
-    return memo(
-        spark, sf_dir, "embeddings", "x22", lambda: _x22_plan(spark, sf_dir)
-    )
-
-
-def _x22_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     # bounded driver state: labels × dims rows (10 × 64 here); same
     # eager-collect contract as operators/similarity.ivf_assign

@@ -63,7 +63,7 @@ from pyspark.sql import functions as F
 
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round4 import embedding_probe
-from ravelytics_spark.sources.tables import load_table, memo
+from ravelytics_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # shared fixed-point helpers (the x339 3-dp idiom)
@@ -206,65 +206,61 @@ def _d2_to_lits(f3_col, lits):
     _IVF_ORACLE,
 )
 def x342_ivf_portable(spark, sf_dir):
-    def build():
-        e = load_table(spark, sf_dir, "embeddings")
-        d, cents = _fixed_vectors(spark, sf_dir)
-        if not cents:
-            return _empty_ann(e)
-        probe = cents[0][1]  # min-vec_id centroid is the probe
+    e = load_table(spark, sf_dir, "embeddings")
+    d, cents = _fixed_vectors(spark, sf_dir)
+    if not cents:
+        return _empty_ann(e)
+    probe = cents[0][1]  # min-vec_id centroid is the probe
 
-        # driver-side probe->cell distances: exact Python ints
-        pd2 = [
-            (sum((a - b) * (a - b) for a, b in zip(vec, probe)), cid)
-            for cid, vec in cents
-        ]
-        probe_cells = {cid for _, cid in sorted(pd2)[:4]}
+    # driver-side probe->cell distances: exact Python ints
+    pd2 = [
+        (sum((a - b) * (a - b) for a, b in zip(vec, probe)), cid)
+        for cid, vec in cents
+    ]
+    probe_cells = {cid for _, cid in sorted(pd2)[:4]}
 
-        from ravelytics_spark.operators.skew import fan_out_scan
+    from ravelytics_spark.operators.skew import fan_out_scan
 
-        # r13 (guide §2.5 input skew): the 16-centroid argmin lives in
-        # a FILTER, and a single-split scan serialized it onto ONE task
-        # (stage trace: 1 task, 1.25 s of interpreted HOF evaluation,
-        # zero shuffle, 31 cores idle). fan_out_scan alone measured
-        # neutral here in r12 because predicate pushdown sinks the
-        # filter straight through the round-robin exchange back into
-        # the scan — so the always-false spark_partition_id() < 0
-        # disjunct below pins it above the exchange (a
-        # partition-dependent predicate cannot be pushed across a
-        # repartition; Spark has no public "don't push" hint). With the
-        # pin the argmin runs on all cores: interleaved A/B x6,
-        # steady-state 1.32 s med -> 0.31 s, byte-identical. On a
-        # well-partitioned corpus fan_out_scan no-ops and the pin
-        # merely keeps the filter out of DataFilters, same stage as
-        # the scan. (An unrolled-codegen rewrite of the HOF sums was
-        # also measured: 1.95 s med, WORSE - the 1024-term tree defeats
-        # codegen; the packed HOF form stands.)
-        base = fan_out_scan(
-            e.filter(F.size("embedding") == F.lit(d))
-        ).select("vec_id", _f3().alias("f3"))
-        structs = [
-            F.struct(
-                _d2_to_lits(F.col("f3"), vec).alias("ad2"),
-                F.lit(cid).cast("long").alias("cell_id"),
-            )
-            for cid, vec in cents
-        ]
-        assigned = F.least(*structs).getField("cell_id")
-        keep = assigned.isin(*sorted(probe_cells)) | (
-            F.spark_partition_id() < F.lit(0)
+    # r13 (guide §2.5 input skew): the 16-centroid argmin lives in
+    # a FILTER, and a single-split scan serialized it onto ONE task
+    # (stage trace: 1 task, 1.25 s of interpreted HOF evaluation,
+    # zero shuffle, 31 cores idle). fan_out_scan alone measured
+    # neutral here in r12 because predicate pushdown sinks the
+    # filter straight through the round-robin exchange back into
+    # the scan — so the always-false spark_partition_id() < 0
+    # disjunct below pins it above the exchange (a
+    # partition-dependent predicate cannot be pushed across a
+    # repartition; Spark has no public "don't push" hint). With the
+    # pin the argmin runs on all cores: interleaved A/B x6,
+    # steady-state 1.32 s med -> 0.31 s, byte-identical. On a
+    # well-partitioned corpus fan_out_scan no-ops and the pin
+    # merely keeps the filter out of DataFilters, same stage as
+    # the scan. (An unrolled-codegen rewrite of the HOF sums was
+    # also measured: 1.95 s med, WORSE - the 1024-term tree defeats
+    # codegen; the packed HOF form stands.)
+    base = fan_out_scan(
+        e.filter(F.size("embedding") == F.lit(d))
+    ).select("vec_id", _f3().alias("f3"))
+    structs = [
+        F.struct(
+            _d2_to_lits(F.col("f3"), vec).alias("ad2"),
+            F.lit(cid).cast("long").alias("cell_id"),
         )
-        return (
-            base.filter(keep)
-            .select(
-                F.col("vec_id").cast("long").alias("vec_id"),
-                _d2_to_lits(F.col("f3"), probe).cast("long").alias("d2"),
-            )
-            .orderBy("d2", "vec_id")
-            .limit(10)
+        for cid, vec in cents
+    ]
+    assigned = F.least(*structs).getField("cell_id")
+    keep = assigned.isin(*sorted(probe_cells)) | (
+        F.spark_partition_id() < F.lit(0)
+    )
+    return (
+        base.filter(keep)
+        .select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            _d2_to_lits(F.col("f3"), probe).cast("long").alias("d2"),
         )
-
-    # centroid literals are data baked into the plan
-    return memo(spark, sf_dir, "embeddings", "x342", build)
+        .orderBy("d2", "vec_id")
+        .limit(10)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -351,75 +347,71 @@ SELECT vec_id, d2 FROM rr ORDER BY d2, vec_id LIMIT 10
     _PQ_ORACLE,
 )
 def x343_pq_portable(spark, sf_dir):
-    def build():
-        e = load_table(spark, sf_dir, "embeddings")
-        d, cents = _fixed_vectors(spark, sf_dir)
-        if not cents:
-            return _empty_ann(e)
-        sl = d // _PQ_NSUB
-        if sl == 0:
-            return _empty_ann(e)
-        probe = cents[0][1]
+    e = load_table(spark, sf_dir, "embeddings")
+    d, cents = _fixed_vectors(spark, sf_dir)
+    if not cents:
+        return _empty_ann(e)
+    sl = d // _PQ_NSUB
+    if sl == 0:
+        return _empty_ann(e)
+    probe = cents[0][1]
 
-        # driver-side ADC lookup: exact probe->entry distance per
-        # (subspace, code) — 8 x 16 Python ints
-        adc = {
-            (s, cid): sum(
-                (a - b) * (a - b)
-                for a, b in zip(
-                    vec[s * sl : (s + 1) * sl], probe[s * sl : (s + 1) * sl]
-                )
+    # driver-side ADC lookup: exact probe->entry distance per
+    # (subspace, code) — 8 x 16 Python ints
+    adc = {
+        (s, cid): sum(
+            (a - b) * (a - b)
+            for a, b in zip(
+                vec[s * sl : (s + 1) * sl], probe[s * sl : (s + 1) * sl]
+            )
+        )
+        for cid, vec in cents
+        for s in range(_PQ_NSUB)
+    }
+
+    from ravelytics_spark.operators.skew import fan_out_scan
+
+    # r12 (guide §2.5 input skew): the 8-subspace unrolled encode is
+    # CPU-dense and the test corpus is one parquet split — fan out
+    # so it doesn't serialize on one core (stage trace: 1 task,
+    # 1.2 s CPU; interleaved A/B 0.77 -> 0.48 s, output identical).
+    # No-op on any well-partitioned corpus.
+    base = fan_out_scan(
+        e.filter(F.size("embedding") == F.lit(d))
+    ).select("vec_id", _f3().alias("f3"))
+    # per subspace: least() over (encode_d2, code, adc_d2) structs;
+    # lexicographic min on the first two fields IS the encode
+    # argmin with the oracle's tie-break, and .getField('pd2')
+    # reads the matching ADC entry without materializing the code
+    approx = None
+    for s in range(_PQ_NSUB):
+        sub = F.slice(F.col("f3"), s * sl + 1, sl)
+        structs = [
+            F.struct(
+                _d2_to_lits(sub, vec[s * sl : (s + 1) * sl]).alias("ed2"),
+                F.lit(cid).cast("long").alias("code"),
+                F.lit(adc[(s, cid)]).cast("long").alias("pd2"),
             )
             for cid, vec in cents
-            for s in range(_PQ_NSUB)
-        }
-
-        from ravelytics_spark.operators.skew import fan_out_scan
-
-        # r12 (guide §2.5 input skew): the 8-subspace unrolled encode is
-        # CPU-dense and the test corpus is one parquet split — fan out
-        # so it doesn't serialize on one core (stage trace: 1 task,
-        # 1.2 s CPU; interleaved A/B 0.77 -> 0.48 s, output identical).
-        # No-op on any well-partitioned corpus.
-        base = fan_out_scan(
-            e.filter(F.size("embedding") == F.lit(d))
-        ).select("vec_id", _f3().alias("f3"))
-        # per subspace: least() over (encode_d2, code, adc_d2) structs;
-        # lexicographic min on the first two fields IS the encode
-        # argmin with the oracle's tie-break, and .getField('pd2')
-        # reads the matching ADC entry without materializing the code
-        approx = None
-        for s in range(_PQ_NSUB):
-            sub = F.slice(F.col("f3"), s * sl + 1, sl)
-            structs = [
-                F.struct(
-                    _d2_to_lits(sub, vec[s * sl : (s + 1) * sl]).alias("ed2"),
-                    F.lit(cid).cast("long").alias("code"),
-                    F.lit(adc[(s, cid)]).cast("long").alias("pd2"),
-                )
-                for cid, vec in cents
-            ]
-            term = F.least(*structs).getField("pd2")
-            approx = term if approx is None else approx + term
-        shortlist = (
-            base.select("vec_id", "f3", approx.alias("ad2"))
-            .orderBy("ad2", "vec_id")
-            .limit(_PQ_SHORTLIST)
+        ]
+        term = F.least(*structs).getField("pd2")
+        approx = term if approx is None else approx + term
+    shortlist = (
+        base.select("vec_id", "f3", approx.alias("ad2"))
+        .orderBy("ad2", "vec_id")
+        .limit(_PQ_SHORTLIST)
+    )
+    # exact re-rank over ALL d dims (full f3 vs full probe, the
+    # x342 form) — the oracle's rr CTE joins fx on every i, so a
+    # width-sliced re-rank would diverge whenever d % 8 != 0
+    return (
+        shortlist.select(
+            F.col("vec_id").cast("long").alias("vec_id"),
+            _d2_to_lits(F.col("f3"), probe).cast("long").alias("d2"),
         )
-        # exact re-rank over ALL d dims (full f3 vs full probe, the
-        # x342 form) — the oracle's rr CTE joins fx on every i, so a
-        # width-sliced re-rank would diverge whenever d % 8 != 0
-        return (
-            shortlist.select(
-                F.col("vec_id").cast("long").alias("vec_id"),
-                _d2_to_lits(F.col("f3"), probe).cast("long").alias("d2"),
-            )
-            .orderBy("d2", "vec_id")
-            .limit(10)
-        )
-
-    # codebook literals are data baked into the plan
-    return memo(spark, sf_dir, "embeddings", "x343", build)
+        .orderBy("d2", "vec_id")
+        .limit(10)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -53,7 +53,7 @@ from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round20 import _KNUTH, _SRP_BITS, _srp_sign
 from ravelytics_spark.plans.round33 import _FX_CTE, _f3
 from ravelytics_spark.plans.round4 import embedding_probe
-from ravelytics_spark.sources.tables import load_table, memo
+from ravelytics_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # x361 — LZ78-phrase novelty quality (portable twin of x192)
@@ -227,111 +227,108 @@ ORDER BY id_a, id_b
     _NP_ORACLE,
 )
 def x362_planted_near_pairs(spark, sf_dir):
-    def build():
-        e = load_table(spark, sf_dir, "embeddings")
-        d, mx = embedding_probe(spark, sf_dir)
-        empty = e.limit(0).select(
-            F.lit(0).cast("long").alias("id_a"),
-            F.lit(0).cast("long").alias("id_b"),
-            F.lit(0).cast("long").alias("dot"),
-            F.lit(0).cast("long").alias("planted"),
+    e = load_table(spark, sf_dir, "embeddings")
+    d, mx = embedding_probe(spark, sf_dir)
+    empty = e.limit(0).select(
+        F.lit(0).cast("long").alias("id_a"),
+        F.lit(0).cast("long").alias("id_b"),
+        F.lit(0).cast("long").alias("dot"),
+        F.lit(0).cast("long").alias("planted"),
+    )
+    if d is None:
+        return empty
+    # BIGINT domain guard (the x102 idiom): with maxf3 = 1000*mx
+    # + 10 the largest verify operand is 100*(d*maxf3^2)^2, which
+    # must stay under 2^63 -> d*maxf3^2 < 3e8. Shipped corpus:
+    # d=64, mx~0.53 -> 1.9e7. A corpus past the guard needs a
+    # wider-decimal variant, not silent wrap.
+    maxf3 = 1000.0 * float(mx or 0.0) + 10.0
+    if d * maxf3 * maxf3 >= 3.0e8:
+        raise ValueError(
+            "x362_planted_near_pairs exact-integer verify needs "
+            f"d*maxf3^2 < 3e8 (saw {d * maxf3 * maxf3:g})"
         )
-        if d is None:
-            return empty
-        # BIGINT domain guard (the x102 idiom): with maxf3 = 1000*mx
-        # + 10 the largest verify operand is 100*(d*maxf3^2)^2, which
-        # must stay under 2^63 -> d*maxf3^2 < 3e8. Shipped corpus:
-        # d=64, mx~0.53 -> 1.9e7. A corpus past the guard needs a
-        # wider-decimal variant, not silent wrap.
-        maxf3 = 1000.0 * float(mx or 0.0) + 10.0
-        if d * maxf3 * maxf3 >= 3.0e8:
-            raise ValueError(
-                "x362_planted_near_pairs exact-integer verify needs "
-                f"d*maxf3^2 < 3e8 (saw {d * maxf3 * maxf3:g})"
-            )
-        base = e.filter(F.size("embedding") == F.lit(d)).select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _f3().alias("f3"),
-        )
-        planted = base.filter(
-            F.col("vec_id") % _NP_EVERY == 0
-        ).select(
-            (F.col("vec_id") + _NP_OFFSET).alias("vec_id"),
-            F.expr(
-                f"transform(f3, (x, i) -> x + "
-                f"(i * {_KNUTH} + vec_id) % {_NP_JITTER} - 10)"
-            ).alias("f3"),
-        )
-        al = base.unionByName(planted)
+    base = e.filter(F.size("embedding") == F.lit(d)).select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        _f3().alias("f3"),
+    )
+    planted = base.filter(
+        F.col("vec_id") % _NP_EVERY == 0
+    ).select(
+        (F.col("vec_id") + _NP_OFFSET).alias("vec_id"),
+        F.expr(
+            f"transform(f3, (x, i) -> x + "
+            f"(i * {_KNUTH} + vec_id) % {_NP_JITTER} - 10)"
+        ).alias("f3"),
+    )
+    al = base.unionByName(planted)
 
-        # 8 sign folds against literal +-1/0 arrays (density-1/4
-        # Achlioptas family, shared with x102): map-only, plan size
-        # independent of d
-        code = None
-        for j in range(_SRP_BITS):
-            signs = F.array(
-                *[F.lit(_srp_sign(i, j)).cast("long") for i in range(d)]
-            )
-            sj = F.aggregate(
-                F.zip_with(F.col("f3"), signs, lambda x, s: x * s),
-                F.lit(0).cast("long"),
-                lambda acc, t: acc + t,
-            )
-            term = F.when(sj > 0, F.lit(1 << j).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            code = term if code is None else code + term
-        coded = al.select("vec_id", "f3", code.alias("code"))
-
-        a = coded.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("f3").alias("fa"),
-            "code",
+    # 8 sign folds against literal +-1/0 arrays (density-1/4
+    # Achlioptas family, shared with x102): map-only, plan size
+    # independent of d
+    code = None
+    for j in range(_SRP_BITS):
+        signs = F.array(
+            *[F.lit(_srp_sign(i, j)).cast("long") for i in range(d)]
         )
-        b = coded.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("f3").alias("fb"),
-            F.col("code").alias("code_b"),
+        sj = F.aggregate(
+            F.zip_with(F.col("f3"), signs, lambda x, s: x * s),
+            F.lit(0).cast("long"),
+            lambda acc, t: acc + t,
         )
-        pairs = a.join(
-            b,
-            (F.col("code") == F.col("code_b"))
-            & (F.col("id_a") < F.col("id_b")),
+        term = F.when(sj > 0, F.lit(1 << j).cast("long")).otherwise(
+            F.lit(0).cast("long")
         )
+        code = term if code is None else code + term
+    coded = al.select("vec_id", "f3", code.alias("code"))
 
-        def fold(expr_col):
-            return F.aggregate(
-                expr_col, F.lit(0).cast("long"), lambda acc, t: acc + t
-            )
+    a = coded.select(
+        F.col("vec_id").alias("id_a"),
+        F.col("f3").alias("fa"),
+        "code",
+    )
+    b = coded.select(
+        F.col("vec_id").alias("id_b"),
+        F.col("f3").alias("fb"),
+        F.col("code").alias("code_b"),
+    )
+    pairs = a.join(
+        b,
+        (F.col("code") == F.col("code_b"))
+        & (F.col("id_a") < F.col("id_b")),
+    )
 
-        dot = fold(F.zip_with(F.col("fa"), F.col("fb"), lambda x, y: x * y))
-        n2a = fold(F.zip_with(F.col("fa"), F.col("fa"), lambda x, y: x * y))
-        n2b = fold(F.zip_with(F.col("fb"), F.col("fb"), lambda x, y: x * y))
-        return (
-            pairs.select(
-                "id_a",
-                "id_b",
-                dot.alias("dot"),
-                n2a.alias("n2a"),
-                n2b.alias("n2b"),
-            )
-            .filter(
-                (F.col("dot") > 0)
-                & (
-                    100 * F.col("dot") * F.col("dot")
-                    >= 81 * F.col("n2a") * F.col("n2b")
-                )
-            )
-            .select(
-                "id_a",
-                "id_b",
-                "dot",
-                F.when(F.col("id_b") - F.col("id_a") == _NP_OFFSET, 1)
-                .otherwise(0)
-                .cast("long")
-                .alias("planted"),
-            )
-            .orderBy("id_a", "id_b")
+    def fold(expr_col):
+        return F.aggregate(
+            expr_col, F.lit(0).cast("long"), lambda acc, t: acc + t
         )
 
-    return memo(spark, sf_dir, "embeddings", "x362", build)
+    dot = fold(F.zip_with(F.col("fa"), F.col("fb"), lambda x, y: x * y))
+    n2a = fold(F.zip_with(F.col("fa"), F.col("fa"), lambda x, y: x * y))
+    n2b = fold(F.zip_with(F.col("fb"), F.col("fb"), lambda x, y: x * y))
+    return (
+        pairs.select(
+            "id_a",
+            "id_b",
+            dot.alias("dot"),
+            n2a.alias("n2a"),
+            n2b.alias("n2b"),
+        )
+        .filter(
+            (F.col("dot") > 0)
+            & (
+                100 * F.col("dot") * F.col("dot")
+                >= 81 * F.col("n2a") * F.col("n2b")
+            )
+        )
+        .select(
+            "id_a",
+            "id_b",
+            "dot",
+            F.when(F.col("id_b") - F.col("id_a") == _NP_OFFSET, 1)
+            .otherwise(0)
+            .cast("long")
+            .alias("planted"),
+        )
+        .orderBy("id_a", "id_b")
+    )

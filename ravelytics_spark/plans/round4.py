@@ -275,6 +275,17 @@ def embedding_probe(spark, sf_dir):
     return memo(spark, sf_dir, "embeddings", "embedding_probe", build)
 
 
+def tree_sum(cols):
+    """Balanced pairwise sum of Columns: depth log2(n) instead of a
+    left-deep chain of n additions."""
+    while len(cols) > 1:
+        nxt = [cols[k] + cols[k + 1] for k in range(0, len(cols) - 1, 2)]
+        if len(cols) % 2:
+            nxt.append(cols[-1])
+        cols = nxt
+    return cols[0]
+
+
 @q(
     "x30_rp_projection",
     "OP-X3-ext",
@@ -299,28 +310,6 @@ def embedding_probe(spark, sf_dir):
     _RP_ORACLE,
 )
 def x30_rp_projection(spark, sf_dir):
-    # Prepared-statement style: the unrolled ~800-node tree costs
-    # seconds of Catalyst analysis to BUILD but well under a second to
-    # RUN at sf0.1, and the probed width and max|element| are data
-    # baked into it — so the plan is memoized per dataset state and
-    # session.
-    return memo(
-        spark, sf_dir, "embeddings", "x30", lambda: _x30_plan(spark, sf_dir)
-    )
-
-
-def tree_sum(cols):
-    """Balanced pairwise sum of Columns: depth log2(n) instead of a
-    left-deep chain of n additions."""
-    while len(cols) > 1:
-        nxt = [cols[k] + cols[k + 1] for k in range(0, len(cols) - 1, 2)]
-        if len(cols) % 2:
-            nxt.append(cols[-1])
-        cols = nxt
-    return cols[0]
-
-
-def _x30_plan(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
     dims, mx = embedding_probe(spark, sf_dir)

@@ -10,6 +10,7 @@ pruning and predicate pushdown for free — callers should ``select`` and
 from __future__ import annotations
 
 import os
+from collections.abc import Hashable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,19 +82,26 @@ def dataset_fingerprint(sf_dir: str, name: str) -> tuple:
 _MEMO: dict = {}
 
 
-def memo(spark: SparkSession, sf_dir: str, table: str, key: str, build):
+def memo(
+    spark: SparkSession, sf_dir: str, table: str | None, key: Hashable, build
+):
     """Return ``build()``, reusing the value stored under ``(key, sf_dir,
-    table)`` while the table's fingerprint is unchanged and the value was
-    built for this same ``spark`` session.
+    table)`` while the data it was built from is unchanged and the value
+    was built for this same ``spark`` session.
 
-    For anything derived from a table's data that costs a Spark job or a
-    long Catalyst analysis: its schema, probed widths, collected
-    centroids, unrolled plans (a stored DataFrame holds no rows; every
-    action re-executes its scan). When the fingerprint sees no files
+    The data is ``table``'s files, or with ``table=None`` every
+    ``TABLE_NAMES`` table under ``sf_dir`` (a whole catalog entry, which
+    may read any of them); the check compares the tuple of their
+    fingerprints. For anything derived from the data that costs a Spark
+    job or a long plan build: a schema, probed widths, collected
+    centroids, a catalog entry's DataFrame (a stored DataFrame holds no
+    rows; every action re-executes its scan). When no table has files
     there is nothing to check a stored value against, so ``build()``
-    runs on every call and nothing is stored."""
-    fp = dataset_fingerprint(sf_dir, table)
-    if not fp[1]:
+    runs on every call and nothing is stored. Two threads that miss
+    together both build; either stored value is valid."""
+    names = TABLE_NAMES if table is None else (table,)
+    fp = tuple(dataset_fingerprint(sf_dir, n) for n in names)
+    if not any(entries for _root, entries in fp):
         return build()
     slot = (key, sf_dir, table)
     hit = _MEMO.get(slot)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -48,6 +49,27 @@ def entries_of(module: str) -> dict[str, Query]:
 
     path = f"ravelytics_spark.plans.{module}"
     return {n: q for n, q in REGISTRY.items() if q.spark.__module__ == path}
+
+
+@contextlib.contextmanager
+def py4j_calls():
+    """Count the py4j round trips the block makes, by wrapping the
+    client's ``send_command``; yields a one-item list holding the
+    count."""
+    from py4j.clientserver import ClientServerConnection
+
+    real = ClientServerConnection.send_command
+    n = [0]
+
+    def counting(self, *args, **kwargs):
+        n[0] += 1
+        return real(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield n
+    finally:
+        ClientServerConnection.send_command = real
 
 
 def pytest_report_header(config):
