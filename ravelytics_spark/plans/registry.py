@@ -11,29 +11,49 @@ fully populated.
 
 Prepared plans: ``q`` registers, as ``Query.spark``, a wrapper that
 builds the entry's DataFrame once per session and dataset state. It is
-stored with ``sources.tables.memo`` under the entry's name and any
+stored with ``sources.tables.memo_at`` under the entry's name and any
 arguments of its own (``rank_method=``), keyed on the session object
 and the fingerprint of every warehouse table under ``sf_dir``, so a
-rewrite of any table or a call on another session builds it again. A hit hands out a new Dataset over the stored plan,
-``stored.select("*")``: each action then optimizes, plans and executes
-in full under its own QueryExecution (a Dataset handed out twice would
-let the second action reuse the first one's physical plan and
-materialized shuffle stages). What a hit saves is the Python-side
-build: its py4j calls and any collect it runs. ``q`` returns the
-undecorated function, reachable from the wrapper as ``__wrapped__``,
-for callers that need a fresh build.
+rewrite of any table or a call on another session builds it again. A
+hit hands out a new Dataset over the stored plan, ``stored.alias(name)``:
+each action then optimizes, plans and executes in full under its own
+QueryExecution (a Dataset handed out twice would let the second action
+reuse the first one's physical plan and materialized shuffle stages).
+What a hit saves is the Python-side build: its py4j calls and any
+collect it runs. ``q`` returns the undecorated function, reachable from
+the wrapper as ``__wrapped__``, for callers that need a fresh build in
+the caller's own session.
+
+Execution profile: when the warehouse tables under ``sf_dir`` have files
+and their bytes sum to at most the caller's
+``spark.sql.autoBroadcastJoinThreshold`` (every table the entry could
+read fits in one broadcast; -1 disables it), the entry is built and
+stored in the caller's small sibling instead of the caller's session.
+The sibling is a ``cloneSession`` of the caller (timezone, nanos
+reading and every other runtime setting carried over) with AQE off and
+one shuffle partition: at that size AQE has nothing to re-plan, and each
+query stage it submits as its own job is pure scheduling cost. Larger
+inputs run in the caller's session as built, AQE on. Session settings
+are global, hence a second session rather than settings flipped around
+an action, which would race with concurrent callers. There is one
+sibling per caller; it is cloned again when the caller's runtime
+settings change (one JVM-side digest of them per call), and as the
+memo is keyed on the session, that rebuilds the entry. A sibling is its
+own sibling, so a catalog entry that calls another through REGISTRY
+inside its build stays in one session.
 """
 
 from __future__ import annotations
 
 import functools
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ravelytics_spark.sources.tables import memo
+from ravelytics_spark.sources.tables import fingerprint_bytes, fingerprints, memo_at
 
 
 @dataclass(frozen=True)
@@ -48,14 +68,43 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
+_SIBLING_LOCK = threading.Lock()
+
+
+def _session_for(spark: SparkSession, fp: tuple) -> SparkSession:
+    """The session to build an entry in over the tables ``fp``
+    fingerprints: the caller's small sibling when they have files that
+    fit in one broadcast, else the caller (module docstring)."""
+    if getattr(spark, "_small_sibling_of", None) is not None:
+        return spark  # a sibling is its own sibling
+    digest = spark.conf._jconf.getAll().hashCode()
+    with _SIBLING_LOCK:
+        known = getattr(spark, "_small_sibling", None)
+        if known is None or known[0] != digest:
+            threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+            known = spark._small_sibling = (digest, threshold, None)
+        _digest, threshold, sibling = known
+        if not any(entries for _root, entries in fp) or fingerprint_bytes(fp) > threshold:
+            return spark
+        if sibling is None:
+            sibling = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+            sibling.conf.set("spark.sql.adaptive.enabled", "false")
+            sibling.conf.set("spark.sql.shuffle.partitions", "1")
+            sibling._small_sibling_of = spark
+            spark._small_sibling = (digest, threshold, sibling)
+        return sibling
+
+
 def q(name: str, op_id: str, doc: str, oracle: str | None = None):
     def deco(fn):
         @functools.wraps(fn)
         def prepared(spark: SparkSession, sf_dir: str, *args, **kwargs):
+            fp = fingerprints(sf_dir)
+            session = _session_for(spark, fp)
             # an entry's own parameters (rank_method=...) select its plan
-            key = (name, args, tuple(sorted(kwargs.items())))
-            build = functools.partial(fn, spark, sf_dir, *args, **kwargs)
-            return memo(spark, sf_dir, None, key, build).select("*")
+            slot = ((name, args, tuple(sorted(kwargs.items()))), sf_dir, None)
+            build = functools.partial(fn, session, sf_dir, *args, **kwargs)
+            return memo_at(fp, session, slot, build).alias(name)
 
         REGISTRY[name] = Query(name, op_id, doc, prepared, oracle)
         return fn

@@ -78,8 +78,22 @@ def dataset_fingerprint(sf_dir: str, name: str) -> tuple:
     return (root, tuple(sorted(entries)))
 
 
-# (key, sf_dir, table) -> (fingerprint, session, value); see memo().
+# slot -> (fingerprints, session, value); memo()'s slot is (key, sf_dir,
+# table). See memo_at().
 _MEMO: dict = {}
+
+
+def fingerprints(sf_dir: str, table: str | None = None) -> tuple:
+    """The data state ``memo`` keys on: the ``dataset_fingerprint`` of
+    ``table``, or with ``table=None`` of every ``TABLE_NAMES`` table
+    under ``sf_dir``."""
+    names = TABLE_NAMES if table is None else (table,)
+    return tuple(dataset_fingerprint(sf_dir, n) for n in names)
+
+
+def fingerprint_bytes(fp: tuple) -> int:
+    """Total size of the data files in a tuple of fingerprints."""
+    return sum(size for _root, entries in fp for _rel, size, _mtime in entries or ())
 
 
 def memo(
@@ -91,19 +105,23 @@ def memo(
 
     The data is ``table``'s files, or with ``table=None`` every
     ``TABLE_NAMES`` table under ``sf_dir`` (a whole catalog entry, which
-    may read any of them); the check compares the tuple of their
-    fingerprints. For anything derived from the data that costs a Spark
+    may read any of them); the check compares their ``fingerprints``.
+    For anything derived from the data that costs a Spark
     job or a long plan build: a schema, probed widths, collected
     centroids, a catalog entry's DataFrame (a stored DataFrame holds no
     rows; every action re-executes its scan). When no table has files
     there is nothing to check a stored value against, so ``build()``
     runs on every call and nothing is stored. Two threads that miss
     together both build; either stored value is valid."""
-    names = TABLE_NAMES if table is None else (table,)
-    fp = tuple(dataset_fingerprint(sf_dir, n) for n in names)
+    return memo_at(fingerprints(sf_dir, table), spark, (key, sf_dir, table), build)
+
+
+def memo_at(fp: tuple, spark: SparkSession, slot: Hashable, build):
+    """``memo`` for a caller that has taken the ``fingerprints`` already
+    (and reads them for something else too): the value stored under
+    ``slot`` while ``fp`` and the session are unchanged."""
     if not any(entries for _root, entries in fp):
         return build()
-    slot = (key, sf_dir, table)
     hit = _MEMO.get(slot)
     if hit is not None and hit[0] == fp and hit[1] is spark:
         return hit[2]

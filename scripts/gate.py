@@ -16,6 +16,12 @@ time with odd values (e.g. GATE_CORES=5 GATE_PARTITIONS=7) proves the
 results are insensitive to partition count and task order — the driver
 runs its own session shape, and a float aggregation whose value depends
 on partition-merge order would pass a same-shape gate but fail there.
+They do not reach entries whose warehouse tables sum to at most the
+session's broadcast threshold (10 MB): those run in the small-input
+profile at one shuffle partition (``plans.registry``), so at sf0.01
+every entry does. The determinism sweep (``tests/test_determinism*``)
+covers cross-partition stability for them; gate on sf0.1 to exercise
+the full profile with these settings.
 
 GATE_STRICT_ORDER=1 compares rows in RETURNED order (no sort-first):
 the harsher standard a verifier that hashes rows positionally would

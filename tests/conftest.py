@@ -55,14 +55,20 @@ def entries_of(module: str) -> dict[str, Query]:
 def py4j_calls():
     """Count the py4j round trips the block makes, by wrapping the
     client's ``send_command``; yields a one-item list holding the
-    count."""
+    count. Only this thread's sends count: py4j's finalizer thread
+    sends the deletions of garbage-collected JavaObjects through the
+    same method, at times no caller controls."""
+    import threading
+
     from py4j.clientserver import ClientServerConnection
 
     real = ClientServerConnection.send_command
+    caller = threading.get_ident()
     n = [0]
 
     def counting(self, *args, **kwargs):
-        n[0] += 1
+        if threading.get_ident() == caller:
+            n[0] += 1
         return real(self, *args, **kwargs)
 
     ClientServerConnection.send_command = counting

@@ -2,7 +2,10 @@
 produce IDENTICAL results under different parallelism (shuffle
 partitions / repartitioning change float accumulation order, collect
 order, row order — anything unstable shows up as a self-mismatch long
-before it shows up as an oracle mismatch).
+before it shows up as an oracle mismatch). It also ties the two
+execution profiles together: a fresh full-profile build at 3 shuffle
+partitions must equal the prepared ``REGISTRY`` call, which at test
+data runs in the small-input profile at one partition.
 
 The sweep is stride-split across two modules (test_determinism_b.py holds the other
 half) so scripts/run_suite.py can run the halves on different workers
@@ -23,15 +26,16 @@ _NAMES = tier(_ALL[0::2], salt="determinism")
 
 @pytest.mark.parametrize("name", _NAMES)
 def test_query_stable_across_parallelism(spark, sf_dir, name):
-    # __wrapped__: a fresh build each time, so the first build (and its
-    # eager checkpoints and collected values) runs at 3 partitions
-    build = REGISTRY[name].spark.__wrapped__
+    # a: a fresh build (__wrapped__) in the caller's session at 3
+    # partitions, so its eager checkpoints and collected values run
+    # there too; b: the prepared call, which at test data runs in the
+    # small-input profile (AQE off, one shuffle partition)
     found = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "3")
     try:
-        a = _normalize(build(spark, sf_dir).toPandas())
+        a = _normalize(REGISTRY[name].spark.__wrapped__(spark, sf_dir).toPandas())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", found)
-    b = _normalize(build(spark, sf_dir).toPandas())
+    b = _normalize(REGISTRY[name].spark(spark, sf_dir).toPandas())
     assert a[0] == b[0], f"{name}: columns differ across parallelism"
     assert a[1] == b[1], f"{name}: values differ across parallelism"

@@ -21,13 +21,13 @@ def _optimized_plan(df) -> str:
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
-    df = REGISTRY["p3_filter_nonempty"].spark(spark, sf_dir)
+    df = REGISTRY["p3_filter_nonempty"].spark.__wrapped__(spark, sf_dir)
     plan = _executed_plan(df)
     assert "PushedFilters: [IsNotNull(o_orderstatus), Not(EqualTo(o_orderstatus,F))" in plan
 
 
 def test_column_pruning_reaches_scan(spark, sf_dir):
-    df = REGISTRY["p1_projection"].spark(spark, sf_dir)
+    df = REGISTRY["p1_projection"].spark.__wrapped__(spark, sf_dir)
     plan = _executed_plan(df)
     # scan reads exactly the 2 projected columns
     assert "ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint>" in plan
@@ -51,17 +51,17 @@ def test_pruning_through_view_stack(spark, sf_dir):
 
 
 def test_small_dim_join_broadcasts(spark, sf_dir):
-    df = REGISTRY["j1_left_join"].spark(spark, sf_dir)
+    df = REGISTRY["j1_left_join"].spark.__wrapped__(spark, sf_dir)
     assert "BroadcastHashJoin" in _executed_plan(df)
 
 
 def test_topk_uses_take_ordered_not_global_sort(spark, sf_dir):
-    df = REGISTRY["o1_topk"].spark(spark, sf_dir)
+    df = REGISTRY["o1_topk"].spark.__wrapped__(spark, sf_dir)
     assert "TakeOrderedAndProject" in _executed_plan(df)
 
 
 def test_aggregation_is_partial_then_final(spark, sf_dir):
-    df = REGISTRY["g3_multikey_group"].spark(spark, sf_dir)
+    df = REGISTRY["g3_multikey_group"].spark.__wrapped__(spark, sf_dir)
     plan = _executed_plan(df)
     assert "partial_" in plan, "no map-side partial aggregation"
 
@@ -347,7 +347,7 @@ def test_no_catalog_plan_single_partitions_or_goes_cartesian(spark, sf_dir):
     entry doesn't reintroduce the global-window anti-pattern."""
     bad = {}
     for name, qy in REGISTRY.items():
-        plan = qy.spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        plan = qy.spark.__wrapped__(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan:
             bad[name] = "CartesianProduct"
         elif "Exchange SinglePartition" in plan and name not in _SINGLE_PARTITION_OK:
@@ -372,11 +372,10 @@ def test_ivf_assign_is_map_only(spark, sf_dir):
 
 
 def _final_plan(df) -> str:
-    """Executed plan, FINAL section only: once an AQE plan has run (the
-    x22/x30 plan caches return the same DataFrame to every caller, so
-    an earlier test may already have executed it), toString() prints
-    both '== Final Plan ==' and '== Initial Plan ==' sections and naive
-    substring counts double."""
+    """Executed plan, FINAL section only: once an AQE plan has run
+    (an action on the same Dataset, or an eager checkpoint inside the
+    build), toString() prints both '== Final Plan ==' and '== Initial
+    Plan ==' sections and naive substring counts double."""
     plan = _executed_plan(df)
     return plan.split("== Initial Plan ==")[0]
 
@@ -388,7 +387,7 @@ def test_x22_centroid_assign_argmin_is_map_only(spark, sf_dir):
     hash-agg and the final order-by range partitioning. (The previous
     posexplode + broadcast-join + per-vector window shuffled
     vectors x k x dims rows — the round-3 scale table's 2.3x entry.)"""
-    plan = _final_plan(REGISTRY["x22_centroid_assign"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x22_centroid_assign"].spark.__wrapped__(spark, sf_dir))
     assert "Join" not in plan
     assert "Window" not in plan
     assert "Generate" not in plan  # no posexplode of the vectors
@@ -407,7 +406,7 @@ def test_x30_rp_projection_has_no_agg_shuffle(spark, sf_dir):
     sort's range partitioning. (The previous explode x 8 -> (vec_id, j)
     hash-agg shuffled dims x 8 term rows per vector — the round-4 scale
     table's 2.8x entry.)"""
-    plan = _final_plan(REGISTRY["x30_rp_projection"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x30_rp_projection"].spark.__wrapped__(spark, sf_dir))
     assert "Join" not in plan
     assert "HashAggregate" not in plan
     assert plan.count("Exchange") == 1
@@ -426,7 +425,7 @@ def test_x141_penny_windows_share_one_exchange(spark, sf_dir):
     sum) and the reconciliation agg — all on l_orderkey, so Catalyst
     must plan them over ONE hashpartitioning exchange; a second would
     mean the window specs drifted apart."""
-    plan = _final_plan(REGISTRY["x141_penny_allocation"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x141_penny_allocation"].spark.__wrapped__(spark, sf_dir))
     assert plan.count("Window") == 3
     assert plan.count("Exchange hashpartitioning") == 1
 
@@ -438,7 +437,7 @@ def test_x150_winnow_single_pair_join(spark, sf_dir):
     DISK_ONLY cut at 259 s vs 203.6 s recomputing twice (and a memory
     cut OOMs the hash aggs) — the cut pays from three consumers up,
     which is x227's shape, not this one."""
-    plan = _final_plan(REGISTRY["x150_winnow_dup_spans"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x150_winnow_dup_spans"].spark.__wrapped__(spark, sf_dir))
     assert plan.count("Join") == 1
     assert "CartesianProduct" not in plan
 
@@ -449,7 +448,7 @@ def test_x227_capped_winnow_anti_probe_shape(spark, sf_dir):
     Generate/Window in the final plan (one checkpoint feeds the cap
     agg and both self-join sides), and no new shuffle of the
     fingerprint stream (the hot list is bucket-size-agg output)."""
-    plan = _final_plan(REGISTRY["x227_winnow_capped"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x227_winnow_capped"].spark.__wrapped__(spark, sf_dir))
     assert "Generate" not in plan
     assert "Window" not in plan
     assert "LeftAnti" in plan
@@ -460,7 +459,7 @@ def test_x164_capped_sessions_is_one_bucketed_arrow_stage(spark, sf_dir):
     """The capped sessionizer is the sanctioned Arrow path: exactly one
     bucket-keyed exchange into FlatMapGroupsInPandas (bounded groups by
     construction); the only other exchange is the output sort."""
-    plan = _final_plan(REGISTRY["x164_capped_sessions"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x164_capped_sessions"].spark.__wrapped__(spark, sf_dir))
     assert "FlatMapGroupsInPandas" in plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
@@ -471,7 +470,7 @@ def test_x172_bfs_frontier_is_semi_anti_joined(spark, sf_dir):
     semi/anti joins against the (checkpointed) edge list — no windows,
     no cartesian anywhere, and the seed is a TakeOrdered top-k, not a
     global sort."""
-    plan = _final_plan(REGISTRY["x172_bfs_hops"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x172_bfs_hops"].spark.__wrapped__(spark, sf_dir))
     assert "LeftSemi" in plan
     assert "TakeOrderedAndProject" in plan
     assert "Window" not in plan
@@ -483,7 +482,7 @@ def test_x177_ann_recall_scores_checkpointed_once(spark, sf_dir):
     top-k and the candidate count — the eager checkpoint must make all
     three read Scan ExistingRDD instead of re-running the unrolled
     per-dim codegen; ranking stays TakeOrdered + bounded windows."""
-    plan = _final_plan(REGISTRY["x177_ann_recall_eval"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x177_ann_recall_eval"].spark.__wrapped__(spark, sf_dir))
     assert "Scan ExistingRDD" in plan
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
@@ -494,7 +493,7 @@ def test_x230_hubness_topk_heaps_before_shuffle(spark, sf_dir):
     CartesianProduct), and the per-query top-k must run its PARTIAL
     WindowGroupLimit heap pass before the qa shuffle — the row_number
     window itself then ranks only surviving candidates."""
-    plan = _final_plan(REGISTRY["x230_hubness_audit"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x230_hubness_audit"].spark.__wrapped__(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "WindowGroupLimit" in plan
@@ -505,7 +504,7 @@ def test_x233_bucket_balance_partial_mins_no_joins(spark, sf_dir):
     """The banding audit is pure aggregation: signature mins partial-
     aggregate map-side before the doc shuffle, the band posexplode
     feeds two stacked hash-aggs, and there is no join anywhere."""
-    plan = _final_plan(REGISTRY["x233_lsh_bucket_balance"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x233_lsh_bucket_balance"].spark.__wrapped__(spark, sf_dir))
     assert "Join" not in plan
     assert "partial_min" in plan
     assert plan.count("Generate") == 2  # shingle explode + band posexplode
@@ -528,7 +527,7 @@ def test_x246_lpa_round_is_one_join_off_checkpoints(spark, sf_dir):
     checkpoint blocks."""
     from ravelytics_spark.plans.round28_staged import _LPA_ROUNDS
 
-    plan = _final_plan(REGISTRY["x246_label_propagation"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x246_label_propagation"].spark.__wrapped__(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert plan.count("Join") == _LPA_ROUNDS, plan.count("Join")
     assert plan.count("Scan ExistingRDD") >= _LPA_ROUNDS
@@ -540,7 +539,7 @@ def test_x262_modularity_tags_off_checkpointed_labels(spark, sf_dir):
     the checkpointed label + edge frames (never re-running the rounds),
     tags edges with two label joins, and the only nested-loop join is
     the 1-row global-edge-count broadcast."""
-    plan = _final_plan(REGISTRY["x262_modularity_score"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x262_modularity_score"].spark.__wrapped__(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert plan.count("Scan ExistingRDD") >= 2
     assert plan.count("BroadcastNestedLoopJoin") <= 1  # the m2 scalar only
@@ -551,7 +550,7 @@ def test_x263_adamic_adar_candidates_stay_equi_joined(spark, sf_dir):
     (an equi self-join on the checkpointed edge list) with the
     1/ln(degree) weight table BROADCAST into the join; the top-50 is a
     TakeOrderedAndProject heap, never a global sort."""
-    plan = _final_plan(REGISTRY["x263_adamic_adar"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x263_adamic_adar"].spark.__wrapped__(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan  # the broadcast weight probe
@@ -565,7 +564,7 @@ def test_x264_assortativity_broadcasts_degree_dims(spark, sf_dir):
     moment sums (they partial-aggregate map-side to one row per
     partition)."""
     plan = _final_plan(
-        REGISTRY["x264_degree_assortativity"].spark(spark, sf_dir)
+        REGISTRY["x264_degree_assortativity"].spark.__wrapped__(spark, sf_dir)
     )
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastHashJoin") >= 2
@@ -578,7 +577,7 @@ def test_x265_clustering_triangle_join_is_oriented_semi(spark, sf_dir):
     pure degree aggregate — the only nested-loop join is the final
     1-row wedge-scalar broadcast."""
     plan = _final_plan(
-        REGISTRY["x265_clustering_coefficient"].spark(spark, sf_dir)
+        REGISTRY["x265_clustering_coefficient"].spark.__wrapped__(spark, sf_dir)
     )
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1  # wedge scalar only
@@ -598,7 +597,7 @@ def test_x230b_bucketed_candidates_equi_join_and_heaps(spark, sf_dir):
     partial WindowGroupLimit heap before the qa shuffle, and the
     fixed-point encode is checkpointed once (the x230 discipline)."""
     plan = _final_plan(
-        REGISTRY["x230b_hubness_bucketed"].spark(spark, sf_dir)
+        REGISTRY["x230b_hubness_bucketed"].spark.__wrapped__(spark, sf_dir)
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -611,7 +610,7 @@ def test_x245b_bucketed_twonn_shares_candidate_shape(spark, sf_dir):
     """The bucketed TwoNN estimator reuses the same candidate plan:
     equi-join on probe codes, top-2 via WindowGroupLimit heaps, one
     final single-row estimator agg."""
-    plan = _final_plan(REGISTRY["x245b_twonn_bucketed"].spark(spark, sf_dir))
+    plan = _final_plan(REGISTRY["x245b_twonn_bucketed"].spark.__wrapped__(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "WindowGroupLimit" in plan

@@ -4,9 +4,11 @@ a new Dataset over the stored plan.
 
 The subject is ``registry.q``'s wrapper and the ``table=None`` key of
 ``sources.tables.memo``: the session object plus the fingerprint of
-every warehouse table under ``sf_dir``. The data is a private copy of
-the sf0.01 fixture, so the same-path rewrite in one test reaches no
-other module.
+every warehouse table under ``sf_dir``; and the execution profile the
+wrapper picks from those tables' size (the caller's small sibling when
+they fit in one broadcast, else the caller's own session). The data is
+a private copy of the sf0.01 fixture, so the same-path rewrite in one
+test reaches no other module.
 """
 
 from __future__ import annotations
@@ -17,14 +19,17 @@ import uuid
 
 import pytest
 from conftest import SF_SMOKE, py4j_calls
+from pyspark.sql import SparkSession
 
-from ravelytics_spark.plans import extensions
+from ravelytics_spark.plans import extensions, registry
 from ravelytics_spark.plans.queries import REGISTRY
 
 _SRC = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
 # TPC-H q3 reads customer, orders and lineitem; its result moves with
 # the orders rows.
 _NAME = "tpch_q3_shipping_priority"
+_TZ = "spark.sql.session.timeZone"
+_NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 @pytest.fixture
@@ -72,11 +77,69 @@ def test_other_session_misses(spark, sf_copy):
     fn = REGISTRY[_NAME].spark
     first = fn(spark, sf_copy)
     other = spark.newSession()
+    other.conf.set(_TZ, "America/New_York")
     with py4j_calls() as calls:
         out = fn(other, sf_copy)
     assert calls[0] > 12, "a call on another session must build afresh"
-    assert out.sparkSession is other
+    # the fixture data fits in one broadcast: other's small sibling
+    assert out.sparkSession is not first.sparkSession
+    assert out.sparkSession._small_sibling_of is other
+    assert out.sparkSession.conf.get(_TZ) == "America/New_York"
     assert sorted(out.collect()) == sorted(first.collect())
+
+
+def test_small_input_runs_in_the_small_profile(spark, sf_copy):
+    caller = spark.newSession()
+    caller.conf.set(_TZ, "America/New_York")
+    caller.conf.set(_NANOS, "true")
+    session = REGISTRY[_NAME].spark(caller, sf_copy).sparkSession
+    assert session is not caller
+    assert session.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert session.conf.get("spark.sql.shuffle.partitions") == "1"
+    assert session.conf.get(_TZ) == "America/New_York"
+    assert session.conf.get(_NANOS) == "true"
+    assert caller.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_tables_over_the_broadcast_threshold_run_in_the_caller(spark, sf_copy):
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.autoBroadcastJoinThreshold", "64KB")
+    out = REGISTRY[_NAME].spark(caller, sf_copy)
+    assert out.sparkSession is caller
+    assert caller.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert sorted(out.collect()) == sorted(REGISTRY[_NAME].spark(spark, sf_copy).collect())
+
+
+def test_a_caller_setting_change_rebuilds_in_a_fresh_sibling(spark, sf_copy):
+    fn = REGISTRY[_NAME].spark
+    caller = spark.newSession()
+    before = fn(caller, sf_copy).sparkSession
+    caller.conf.set(_TZ, "Asia/Tokyo")
+    with py4j_calls() as calls:
+        after = fn(caller, sf_copy).sparkSession
+    assert calls[0] > 12, "a changed caller setting must rebuild"
+    assert after is not before and after is not caller
+    assert after.conf.get(_TZ) == "Asia/Tokyo"
+    assert before.conf.get(_TZ) != "Asia/Tokyo"
+
+
+def test_a_nested_entry_call_stays_in_the_sibling(spark, monkeypatch):
+    # x179 reads x107 through REGISTRY inside its own build
+    made = []
+
+    def clone(sc, jsession):
+        made.append(SparkSession(sc, jsession))
+        return made[-1]
+
+    monkeypatch.setattr(registry, "SparkSession", clone)
+    caller = spark.newSession()
+    out = REGISTRY["x179_neardup_threshold_curve"].spark(caller, SF_SMOKE)
+    assert len(made) == 1, "the nested call cloned a sibling of the sibling"
+    assert out.sparkSession is made[0]
+    with py4j_calls() as calls:
+        inner = REGISTRY["x107_embed_neardup_portable"].spark(caller, SF_SMOKE)
+    assert calls[0] <= 12, "x107 was not stored for the sibling during x179's build"
+    assert inner.sparkSession is made[0]
 
 
 def test_entry_arguments_select_their_own_plan(spark, sf_copy):

@@ -119,7 +119,7 @@ def test_fuzzy_catalog_entry_no_cartesian(spark):
     point is avoiding N²."""
     plan = (
         REGISTRY["x47_fuzzy_pairs"]
-        .spark(spark, SF)
+        .spark.__wrapped__(spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -166,7 +166,7 @@ def test_ann_batch_single_shuffle(spark):
     plan — a shuffle-based pre-prune would show a second one."""
     plan = (
         REGISTRY["x48_ann_batch"]
-        .spark(spark, SF)
+        .spark.__wrapped__(spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

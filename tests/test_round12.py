@@ -18,7 +18,7 @@ def test_salted_agg_is_two_phase(spark):
     differently (key+salt, then key)."""
     plan = (
         REGISTRY["x33_salted_agg"]
-        .spark(spark, SF)
+        .spark.__wrapped__(spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

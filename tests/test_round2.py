@@ -13,7 +13,7 @@ def _executed(df) -> str:
 
 
 def test_full_outer_keeps_both_unmatched_sides(spark, sf_dir):
-    df = REGISTRY["j5_full_outer_join"].spark(spark, sf_dir)
+    df = REGISTRY["j5_full_outer_join"].spark.__wrapped__(spark, sf_dir)
     rows = df.collect()
     assert any(r.c_name is None for r in rows), "right-only rows lost"
     assert any(r.spend_1996 is None for r in rows), "left-only rows lost"
@@ -21,7 +21,7 @@ def test_full_outer_keeps_both_unmatched_sides(spark, sf_dir):
 
 
 def test_q10_topk_and_broadcast_nation(spark, sf_dir):
-    df = REGISTRY["tpch_q10_returned_items"].spark(spark, sf_dir)
+    df = REGISTRY["tpch_q10_returned_items"].spark.__wrapped__(spark, sf_dir)
     plan = _executed(df)
     assert "TakeOrderedAndProject" in plan, "top-20 fell back to a global sort"
     assert "BroadcastHashJoin" in plan, "nation dim not broadcast"
@@ -29,7 +29,7 @@ def test_q10_topk_and_broadcast_nation(spark, sf_dir):
 
 
 def test_q18_semi_join_on_aggregated_keys(spark, sf_dir):
-    df = REGISTRY["tpch_q18_large_volume"].spark(spark, sf_dir)
+    df = REGISTRY["tpch_q18_large_volume"].spark.__wrapped__(spark, sf_dir)
     plan = _executed(df)
     assert "LeftSemi" in plan
     rows = df.collect()
@@ -50,7 +50,7 @@ def test_sliding_window_doubles_tumbling_mass(spark, sf_dir):
 def test_bigram_plan_has_no_perdoc_window_or_join(spark, sf_dir):
     """Adjacent-pair formation must stay map-side (zip-with-tail), not
     shuffle every token by doc_id through a window or self-join."""
-    df = REGISTRY["x16_bigram_topk"].spark(spark, sf_dir)
+    df = REGISTRY["x16_bigram_topk"].spark.__wrapped__(spark, sf_dir)
     plan = _executed(df)
     assert "Window" not in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan

@@ -13,7 +13,7 @@ def _executed(df) -> str:
 
 
 def test_q6_filters_reach_the_scan(spark, sf_dir):
-    df = REGISTRY["tpch_q6_forecast_revenue"].spark(spark, sf_dir)
+    df = REGISTRY["tpch_q6_forecast_revenue"].spark.__wrapped__(spark, sf_dir)
     plan = _executed(df)
     assert "PushedFilters:" in plan and "l_shipdate" in plan.split("PushedFilters:")[1][:400], (
         "Q6 predicates did not reach the parquet scan"
@@ -22,7 +22,7 @@ def test_q6_filters_reach_the_scan(spark, sf_dir):
 
 
 def test_q7_broadcasts_both_nation_aliases(spark, sf_dir):
-    df = REGISTRY["tpch_q7_volume_shipping"].spark(spark, sf_dir)
+    df = REGISTRY["tpch_q7_volume_shipping"].spark.__wrapped__(spark, sf_dir)
     plan = _executed(df)
     assert plan.count("BroadcastHashJoin") >= 2, "nation dims not broadcast twice"
     rows = df.collect()
@@ -32,7 +32,7 @@ def test_q7_broadcasts_both_nation_aliases(spark, sf_dir):
 
 
 def test_q8_share_bounded_and_dims_broadcast(spark, sf_dir):
-    df = REGISTRY["tpch_q8_market_share"].spark(spark, sf_dir)
+    df = REGISTRY["tpch_q8_market_share"].spark.__wrapped__(spark, sf_dir)
     plan = _executed(df)
     assert plan.count("BroadcastHashJoin") >= 3, "region/nation dims not broadcast"
     for r in df.collect():
@@ -40,14 +40,14 @@ def test_q8_share_bounded_and_dims_broadcast(spark, sf_dir):
 
 
 def test_q17_threshold_join_co_partitioned(spark, sf_dir):
-    df = REGISTRY["tpch_q17_small_qty_revenue"].spark(spark, sf_dir)
+    df = REGISTRY["tpch_q17_small_qty_revenue"].spark.__wrapped__(spark, sf_dir)
     plan = _executed(df)
     assert "BroadcastHashJoin" in plan, "brand-filtered part dim not broadcast"
     assert df.count() == 1
 
 
 def test_q22_plans_left_anti_not_cartesian(spark, sf_dir):
-    df = REGISTRY["tpch_q22_sales_opportunity"].spark(spark, sf_dir)
+    df = REGISTRY["tpch_q22_sales_opportunity"].spark.__wrapped__(spark, sf_dir)
     plan = _executed(df)
     assert "LeftAnti" in plan, "NOT EXISTS did not become a left-anti join"
     assert "CartesianProduct" not in plan
