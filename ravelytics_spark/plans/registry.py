@@ -25,22 +25,20 @@ the wrapper as ``__wrapped__``, for callers that need a fresh build in
 the caller's own session.
 
 Execution profile: when the warehouse tables under ``sf_dir`` have files
-and their bytes sum to at most the caller's
-``spark.sql.autoBroadcastJoinThreshold`` (every table the entry could
-read fits in one broadcast; -1 disables it), the entry is built and
-stored in the caller's small sibling instead of the caller's session.
-The sibling is a ``cloneSession`` of the caller (timezone, nanos
-reading and every other runtime setting carried over) with AQE off and
-one shuffle partition: at that size AQE has nothing to re-plan, and each
-query stage it submits as its own job is pure scheduling cost. Larger
-inputs run in the caller's session as built, AQE on. Session settings
-are global, hence a second session rather than settings flipped around
-an action, which would race with concurrent callers. There is one
-sibling per caller; it is cloned again when the caller's runtime
-settings change (one JVM-side digest of them per call), and as the
-memo is keyed on the session, that rebuilds the entry. A sibling is its
-own sibling, so a catalog entry that calls another through REGISTRY
-inside its build stays in one session.
+and their bytes sum to at most ``SMALL_INPUT_BYTES``, the entry is
+built and stored in the caller's small sibling instead of the caller's
+session. The sibling (``small_profile``) is a ``cloneSession`` of the
+caller, timezone, nanos reading and every other runtime setting carried
+over, with AQE off and one shuffle partition: at that size AQE has
+nothing to re-plan, and each query stage it submits as its own job is
+scheduling cost. Larger inputs run in the caller's session as built,
+AQE on. Session settings are global, hence a second session rather
+than settings flipped around an action, which would race with
+concurrent callers. There is one sibling per caller; it is cloned
+again when the caller's runtime settings change (one JVM-side digest of
+them per call), and as the memo is keyed on the session, that rebuilds
+the entry. A sibling is its own sibling, so a catalog entry that calls
+another through REGISTRY inside its build stays in one session.
 """
 
 from __future__ import annotations
@@ -68,31 +66,42 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
+# Total bytes of warehouse files up to which a catalog entry runs in the
+# small-input profile (module docstring). scripts/profile_crossover.py
+# places it. A pass of the twelve interactive queries on 4 cores takes
+# 11-18% less time in the small profile from 1.7 to 10.2 MB, within 3%
+# at 13.4-16.6 MB, and 13-30% more from 21 to 63 MB, where one partition
+# runs all post-shuffle work on one core. Measured on 4 cores only; rerun
+# it on a wider machine before raising the value.
+SMALL_INPUT_BYTES = 10 * 1024 * 1024
+
 _SIBLING_LOCK = threading.Lock()
+
+
+def small_profile(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark``, every runtime setting carried over, with AQE
+    off and one shuffle partition."""
+    sibling = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    sibling.conf.set("spark.sql.adaptive.enabled", "false")
+    sibling.conf.set("spark.sql.shuffle.partitions", "1")
+    sibling._small_sibling_of = spark
+    return sibling
 
 
 def _session_for(spark: SparkSession, fp: tuple) -> SparkSession:
     """The session to build an entry in over the tables ``fp``
-    fingerprints: the caller's small sibling when they have files that
-    fit in one broadcast, else the caller (module docstring)."""
+    fingerprints: the caller's small sibling when they have files and
+    are small, else the caller (module docstring)."""
     if getattr(spark, "_small_sibling_of", None) is not None:
         return spark  # a sibling is its own sibling
+    if not any(entries for _root, entries in fp) or fingerprint_bytes(fp) > SMALL_INPUT_BYTES:
+        return spark
     digest = spark.conf._jconf.getAll().hashCode()
     with _SIBLING_LOCK:
         known = getattr(spark, "_small_sibling", None)
         if known is None or known[0] != digest:
-            threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-            known = spark._small_sibling = (digest, threshold, None)
-        _digest, threshold, sibling = known
-        if not any(entries for _root, entries in fp) or fingerprint_bytes(fp) > threshold:
-            return spark
-        if sibling is None:
-            sibling = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-            sibling.conf.set("spark.sql.adaptive.enabled", "false")
-            sibling.conf.set("spark.sql.shuffle.partitions", "1")
-            sibling._small_sibling_of = spark
-            spark._small_sibling = (digest, threshold, sibling)
-        return sibling
+            known = spark._small_sibling = (digest, small_profile(spark))
+        return known[1]
 
 
 def q(name: str, op_id: str, doc: str, oracle: str | None = None):

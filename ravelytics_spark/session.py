@@ -7,9 +7,9 @@ to Catalyst/Tungsten. The session is configured for:
   OP-D4; ClickHouse servers in the reference compose run UTC by default);
 - AQE on (runtime re-plan: skew-join splitting, dynamic coalesce of shuffle
   partitions — critical at 100 TB where static partition counts are wrong),
-  except for small inputs: a catalog entry whose warehouse tables fit in
-  one broadcast runs in a clone of this session with AQE off and one
-  shuffle partition (``plans.registry``);
+  except for small inputs: a catalog entry whose warehouse tables sum to
+  at most ``plans.registry.SMALL_INPUT_BYTES`` runs in a clone of this
+  session with AQE off and one shuffle partition;
 - Arrow enabled for the few Pandas-UDF extension operators;
 - parquet TIMESTAMP(NANOS) columns read as LongType nanos
   (``spark.sql.legacy.parquet.nanosAsLong``; Spark's reader rejects them

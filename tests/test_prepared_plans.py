@@ -5,8 +5,8 @@ a new Dataset over the stored plan.
 The subject is ``registry.q``'s wrapper and the ``table=None`` key of
 ``sources.tables.memo``: the session object plus the fingerprint of
 every warehouse table under ``sf_dir``; and the execution profile the
-wrapper picks from those tables' size (the caller's small sibling when
-they fit in one broadcast, else the caller's own session). The data is
+wrapper picks from those tables' size (the caller's small sibling up
+to ``registry.SMALL_INPUT_BYTES``, else the caller's own session). The data is
 a private copy of the sf0.01 fixture, so the same-path rewrite in one
 test reaches no other module.
 """
@@ -81,7 +81,7 @@ def test_other_session_misses(spark, sf_copy):
     with py4j_calls() as calls:
         out = fn(other, sf_copy)
     assert calls[0] > 12, "a call on another session must build afresh"
-    # the fixture data fits in one broadcast: other's small sibling
+    # the fixture data is small: other's small sibling
     assert out.sparkSession is not first.sparkSession
     assert out.sparkSession._small_sibling_of is other
     assert out.sparkSession.conf.get(_TZ) == "America/New_York"
@@ -101,9 +101,9 @@ def test_small_input_runs_in_the_small_profile(spark, sf_copy):
     assert caller.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_tables_over_the_broadcast_threshold_run_in_the_caller(spark, sf_copy):
+def test_tables_over_small_input_bytes_run_in_the_caller(spark, sf_copy, monkeypatch):
+    monkeypatch.setattr(registry, "SMALL_INPUT_BYTES", 64 * 1024)
     caller = spark.newSession()
-    caller.conf.set("spark.sql.autoBroadcastJoinThreshold", "64KB")
     out = REGISTRY[_NAME].spark(caller, sf_copy)
     assert out.sparkSession is caller
     assert caller.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -197,7 +197,7 @@ def test_memo_never_crosses_sessions(spark, tmp_path, name):
     assert not _is_prepared_hit(fn, other, d)
     assert _is_prepared_hit(fn, other, d)
     out2 = fn(other, d)
-    # the staged table fits in one broadcast: other's small sibling
+    # the staged table is small: other's small sibling
     assert out2.sparkSession._small_sibling_of is other
     assert sorted(out2.collect()) == sorted(out1.collect())
 
