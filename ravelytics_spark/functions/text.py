@@ -47,34 +47,10 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokenize_ws(text)).cast("long")
 
 
-def _toks(source: Column | str) -> Column:
-    """Accept raw text (tokenize here) or an already-tokenized array
-    column — the scoring functions below take either, so composed
-    pipelines tokenize ONCE behind a projection boundary instead of
-    re-running the (interpreted) tokenizer per feature."""
-    c = F.col(source) if isinstance(source, str) else source
-    return c
-
-
 def stopword_ratio_toks(toks: Column, stopwords: tuple[str, ...] = ENGLISH_STOPWORDS) -> Column:
     stop = F.size(F.filter(toks, lambda w: F.lower(w).isin(*stopwords))).cast("double")
     n = F.size(toks)
     return F.when(n > 0, stop / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = ENGLISH_STOPWORDS) -> Column:
-    """Fraction of whitespace tokens that are stopwords (lowercased)."""
-    return stopword_ratio_toks(tokenize_ws(text), stopwords)
-
-
-def punct_ratio(text: Column | str) -> Column:
-    """Fraction of characters that are neither word chars nor spaces."""
-    c = F.col(text) if isinstance(text, str) else text
-    total = F.length(c)
-    punct = F.length(F.regexp_replace(c, r"[\w\s]", ""))
-    return F.when(total > 0, punct.cast("double") / total.cast("double")).otherwise(
-        F.lit(0.0)
-    )
 
 
 def mean_word_length_toks(toks: Column) -> Column:
@@ -85,12 +61,8 @@ def mean_word_length_toks(toks: Column) -> Column:
     return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def mean_word_length(text: Column | str) -> Column:
-    return mean_word_length_toks(tokenize_ws(text))
-
-
 def quality_score_toks(toks: Column) -> Column:
-    """quality_score over a pre-tokenized array (see _toks)."""
+    """quality_score over a pre-tokenized array."""
     n = F.size(toks).cast("long")
     len_score = F.least(n.cast("double") / F.lit(64.0), F.lit(1.0))
     mwl = mean_word_length_toks(toks)
@@ -105,42 +77,6 @@ def quality_score(text: Column | str) -> Column:
     word-like tokens and some (but not extreme) stopword density.
     Deterministic integer/rational arithmetic; cross-engine stable."""
     return quality_score_toks(tokenize_ws(text)).alias("quality_score")
-
-
-def lang_scores_toks(toks: Column) -> dict[str, Column]:
-    toks_lower = F.transform(toks, lambda w: F.lower(w))
-    return {
-        lang: F.size(F.filter(toks_lower, lambda w: w.isin(*markers))).cast("long")
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Per-language marker-hit counts (the language-ID signal)."""
-    return lang_scores_toks(tokenize_ws(text))
-
-
-def lang_id_toks(toks: Column) -> Column:
-    """argmax over marker counts of a pre-tokenized array; 'und' when no
-    marker hits. Ties break by fixed language order for determinism."""
-    scores = lang_scores_toks(toks)
-    best_lang, best_score = F.lit("und"), F.lit(0).cast("long")
-    for lang in ("en", "de", "fr", "es"):
-        s = scores[lang]
-        improved = s > best_score
-        best_lang = F.when(improved, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(improved, s).otherwise(best_score)
-    return best_lang
-
-
-def lang_id(text: Column | str) -> Column:
-    """Language ID from raw text (see lang_id_toks).
-
-    Expression form — runs in Spark's INTERPRETED higher-order-function
-    path (~0.7 ms/doc). Fine for ad-hoc use on small frames; corpus-scale
-    scoring should use ``lang_id_agg`` (explode + codegen aggregation,
-    identical arithmetic)."""
-    return lang_id_toks(tokenize_ws(text))
 
 
 def quality_score_agg(docs, id_col: str = "doc_id", text_col: str = "text"):
@@ -179,12 +115,13 @@ def quality_score_agg(docs, id_col: str = "doc_id", text_col: str = "text"):
 
 
 def lang_id_agg(docs, id_col: str = "doc_id", text_col: str = "text"):
-    """Corpus-scale language ID: (id, lang_pred) via explode + codegen'd
-    aggregation — whole-stage-codegen marker counting with map-side
-    partial aggregation, no interpreted lambda per token. Identical
-    arithmetic (exact integer marker sums, same argmax tie-break) to
-    ``lang_id``; docs with no tokens keep a row ('und') via the left
-    join. One shuffle of (id, 4 counters) rows."""
+    """Corpus-scale language ID: (id, lang_pred), the argmax over
+    per-language marker-hit counts (``LANG_MARKERS``, exact integer
+    sums); 'und' when no marker hits, ties broken by the fixed order
+    en, de, fr, es. Explode + codegen'd aggregation: whole-stage-codegen
+    marker counting with map-side partial aggregation, no interpreted
+    lambda per token. Docs with no tokens keep a row ('und') via the
+    left join. One shuffle of (id, 4 counters) rows."""
     words = docs.select(
         F.col(id_col),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__w"),
@@ -211,14 +148,6 @@ def fingerprint_md5(text: Column | str) -> Column:
     Spark and DuckDB, so oracle-checkable)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.md5(c)
-
-
-def fingerprint_xx64(text: Column | str) -> Column:
-    """xxHash64 content fingerprint — cheaper than md5 at scale (no
-    cryptographic need for dedup keys). Spark-side only (no DuckDB
-    equivalent → harness-checked)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.xxhash64(c)
 
 
 def shingles(text: Column | str, n: int = 5) -> Column:

@@ -4,11 +4,9 @@ from ravelytics_spark.operators.asof import asof_join, range_join_binned
 from ravelytics_spark.operators.clusters import connected_components, dedup_by_clusters
 from ravelytics_spark.operators.dedup import (
     dedup_exact,
-    dedup_fingerprint,
     minhash_dedup_pairs,
     minhash_lsh_candidates,
     minhash_signatures,
-    ngram_jaccard_pairs,
     simhash_near_pairs,
     simhash_signatures,
 )
@@ -48,11 +46,9 @@ __all__ = [
     "asof_join",
     "range_join_binned",
     "dedup_exact",
-    "dedup_fingerprint",
     "minhash_dedup_pairs",
     "minhash_lsh_candidates",
     "minhash_signatures",
-    "ngram_jaccard_pairs",
     "simhash_near_pairs",
     "simhash_signatures",
     "normalize_by_group",

@@ -1,16 +1,9 @@
 """Deduplication operators for training-data pipelines (SURVEY OP-X1/X2).
 
-Five strategies, ordered by cost:
+Three strategies, ordered by cost:
 
 - ``dedup_exact`` — hash groupBy on the key columns. One shuffle;
   map-side combine makes it O(distinct) across the wire.
-- ``dedup_fingerprint`` — exact dedup on a 64-bit content hash instead
-  of the full text: at 100 TB the shuffle moves 8-byte keys, not
-  documents.
-- ``ngram_jaccard_pairs`` — exact n-gram Jaccard over candidate pairs
-  produced by a shingle inverted index (explode → self-join on shingle
-  → pair counts). Exact but quadratic in the worst case; use after LSH
-  at scale.
 - ``minhash_signatures`` / ``minhash_lsh_candidates`` — MinHash + LSH
   banding: shingle → k hash permutations → per-band buckets →
   bucket-join. Near-linear; the scale path. Hashing is ``xxhash64(seed,
@@ -32,8 +25,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ravelytics_spark.functions.text import fingerprint_xx64, shingles
-
 
 def dedup_exact(df: DataFrame, cols: Sequence[str], keep_by: str | None = None) -> DataFrame:
     """Keep one row per distinct value of ``cols``.
@@ -46,24 +37,6 @@ def dedup_exact(df: DataFrame, cols: Sequence[str], keep_by: str | None = None) 
         return df.dropDuplicates(list(cols))
     w = Window.partitionBy(*cols).orderBy(F.col(keep_by).asc())
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def dedup_fingerprint(df: DataFrame, text_col: str, keep_by: str) -> DataFrame:
-    """Exact dedup on xxhash64(text): shuffles 8-byte keys, not documents.
-    Collision probability at 64 bits is negligible below ~2^32 docs;
-    pair (hash, length) if that ever matters."""
-    fp = df.withColumn("__fp", fingerprint_xx64(text_col))
-    w = Window.partitionBy("__fp").orderBy(F.col(keep_by).asc())
-    return fp.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop(
-        "__rn", "__fp"
-    )
-
-
-def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.array_distinct(shingles(text_col, n))).alias("__shingle"),
-    )
 
 
 def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -105,97 +78,6 @@ def _hashed_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataF
                 *[F.coalesce(F.col(f"__l{i}"), F.lit(-1)) for i in range(n)]
             ).alias("__shash"),
         )
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for every pair sharing ≥1 shingle.
-
-    Inverted-index self-join: |common shingles| per pair, then
-    J = common / (|A| + |B| - common). Returns (id_a, id_b, jaccard)
-    with id_a < id_b, filtered to >= threshold.
-
-    Scale: the join key is the shingle string; frequent shingles create
-    skew — at 100 TB, drop shingles above a document-frequency cap first
-    (they contribute pairs that LSH would find anyway).
-    """
-    # No .cache(): the plan is returned lazily, so a cache here spans no
-    # action the callee controls and leaks a pinned RDD per invocation in
-    # long-lived sessions. Callers that materialize twice can persist.
-    sh = _shingled(df, id_col, text_col, n)
-    sizes = sh.groupBy("__id").agg(F.count("*").alias("__size"))
-
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.__shingle") == F.col("b.__shingle")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count("*").alias("__common"))
-    )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__size").alias("__size_a"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__size").alias("__size_b"))
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("__common")
-                / (F.col("__size_a") + F.col("__size_b") - F.col("__common"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 5,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Shingle-containment pairs: C(A→B) = |A∩B| / |A| — detects when a
-    short document is (mostly) CONTAINED in a longer one, which Jaccard
-    misses (a quote inside a 10× longer doc has J ≈ 0.1 but C ≈ 1.0).
-    Emits (id_a, id_b, containment) where containment is the max of the
-    two directions and id_a < id_b; same inverted-index shape as
-    ``ngram_jaccard_pairs``.
-    """
-    sh = _shingled(df, id_col, text_col, n)
-    sizes = sh.groupBy("__id").agg(F.count("*").alias("__size"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.__shingle") == F.col("b.__shingle"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count("*").alias("__common"))
-    )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__size").alias("__size_a"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__size").alias("__size_b"))
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("__common")
-                / F.least(F.col("__size_a"), F.col("__size_b")).cast("double")
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
     )
 
 
@@ -332,32 +214,16 @@ def minhash_dedup_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     max_bucket_size: int | None = 500,
-    verify: str = "sets",
 ) -> DataFrame:
     """Full near-dup pipeline: MinHash → LSH candidates → exact Jaccard
     verification on candidates only. Returns (id_a, id_b, jaccard).
 
-    Single-execution shape (``verify="sets"``, the default): ONE
-    aggregation over the deduped (id, shingle-hash) rows builds the
-    signature mins, the per-doc set size AND the per-doc hash-set
-    array the verification intersects, behind an EXPLICIT-count
-    id-keyed repartition. The explicit exchange matters: a keys-only
-    ``repartition("__id")`` is collapsed by the planner (the window's
-    hashpartitioning(id) already satisfies it), which silently moves
-    the reuse point below the shingle window — measured: the
-    scan → tokenize → sort → lead-window → dedup pipeline (the
-    profile's dominant cost) re-executed once per consumer branch
-    (4× at 16 bands). With the single agg + explicit exchange it runs
-    exactly once.
-
-    ``verify="inverted"`` keeps the inverted-index count form
-    (common = matching shingle-hash rows, J = common/(|A|+|B|−common)):
-    per-doc sets never materialize, only 8-byte hash rows move — the
-    WIDE-DOCUMENT path when per-doc shingle sets (8 bytes × shingles)
-    would not fit an aggregation buffer row (a million-shingle doc is
-    an 8 MB array). Both forms produce identical Jaccard values; a
-    candidate pair sharing no shingle (possible via band-bucket hash
-    collision) drops out with J<threshold either way."""
+    Single-execution shape: ONE aggregation over the (id, shingle-hash)
+    rows builds the signature mins AND the per-doc hash-set array the
+    verification intersects, and an eager local checkpoint makes that
+    doc-level frame the one input of the banding and both verify sides,
+    so the scan → tokenize → sort → lead-window pipeline (the profile's
+    dominant cost) runs exactly once (see the comment below)."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands}): "
@@ -365,71 +231,18 @@ def minhash_dedup_pairs(
             "positions the caller paid to compute (and shift the LSH "
             "collision-probability curve away from the requested geometry)"
         )
-    if verify not in ("sets", "inverted"):
-        raise ValueError(
-            f"verify must be 'sets' or 'inverted', got {verify!r}"
-        )
     rows_per_band = num_hashes // bands
     # Parsed-SQL signature aggregate (see minhash_signatures): one py4j
     # call instead of ~320 for the 64-min Column chain.
     sig_agg = F.expr(_sig_array_sql(num_hashes)).alias("__sig")
-    n_par = df.sparkSession.sparkContext.defaultParallelism
 
-    if verify == "inverted":
-        # Deduped (id, shingle-hash): MinHash over a set == over its
-        # multiset, and the inverted-index Jaccard needs set semantics.
-        sh = (
-            _hashed_shingles(df, id_col, text_col, n)
-            .groupBy("__id", "__shash")
-            .agg(F.lit(1).alias("__one"))
-            .drop("__one")
-        )
-        sh = sh.repartition(n_par, "__id")
-        sigs = sh.groupBy("__id").agg(sig_agg)
-        cand = minhash_lsh_candidates(
-            sigs, bands, rows_per_band, max_bucket_size
-        )
-        sizes = sh.groupBy("__id").agg(F.count("*").alias("__size"))
-        a_sh = sh.select(F.col("__id").alias("id_a"), "__shash")
-        b_sh = sh.select(F.col("__id").alias("id_b"), "__shash")
-        common = (
-            cand.join(a_sh, "id_a")
-            .join(b_sh, ["id_b", "__shash"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("__common"))
-        )
-        sa = sizes.select(
-            F.col("__id").alias("id_a"), F.col("__size").alias("__size_a")
-        )
-        sb = sizes.select(
-            F.col("__id").alias("id_b"), F.col("__size").alias("__size_b")
-        )
-        verified = (
-            common.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.col("__common").cast("double")
-                    / (
-                        F.col("__size_a")
-                        + F.col("__size_b")
-                        - F.col("__common")
-                    ).cast("double")
-                ).alias("jaccard"),
-            )
-        )
-        return verified.filter(F.col("jaccard") >= threshold)
-
-    # verify == "sets": ONE agg builds signature mins + the verify set,
-    # and a LAZY lineage cut makes it a single shared RDD. An exchange
-    # barrier is not enough here: the three consumers (banding, both
-    # verify sides) prune DIFFERENT columns (mins vs hset), Catalyst
-    # pushes the divergent projections below any repartition, the
-    # subtrees stop being canonically equal, and ReusedExchange
-    # dies — measured: the scan → tokenize → sort → lead-window →
-    # dedup pipeline re-executed per branch. The checkpoint stores the
+    # ONE agg builds signature mins + the verify set, and a lineage cut
+    # makes it a single shared RDD. An exchange barrier is not enough:
+    # the three consumers (banding, both verify sides) prune DIFFERENT
+    # columns (mins vs hset), Catalyst pushes the divergent projections
+    # below any repartition, the subtrees stop being canonically equal,
+    # and ReusedExchange dies — measured: the scan → tokenize → sort →
+    # lead-window → dedup pipeline re-executed per branch. The checkpoint stores the
     # doc-level frame (ids + signatures + hash sets — the signature
     # store a production dedup service persists anyway, ~per-doc
     # shingle count × 8 bytes).
@@ -749,105 +562,3 @@ def simhash_near_pairs_multitable(
         .distinct()
     )
     return pairs.filter(F.col("hamming") <= max_hamming)
-
-
-# ---------------------------------------------------------------------------
-# MOSS winnowing: exact-substring near-dup candidates
-# ---------------------------------------------------------------------------
-
-
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 24,
-    w: int = 8,
-) -> DataFrame:
-    """Per-document winnowing fingerprints (Schleimer/Wilkerson/Aiken
-    MOSS): hash every ``k``-char window with xxhash64, keep the MIN
-    hash of each run of ``w`` consecutive window hashes, distinct per
-    document. Guarantee: two documents sharing a verbatim run of
-    ``w + k - 1`` chars or more share at least one fingerprint — the
-    exact-substring dedup signal whole-doc hashing (dedup_exact) and
-    bag-of-shingles MinHash both miss. The certified md5 twin is
-    ``plans/round24_staged.x150_winnow_dup_spans``; this production
-    form trades the portable digest for xxhash64 (~4x less CPU on the
-    char-linear hashing pass, the dominant cost — SCALING.md round-6).
-
-    Returns (id_col, fp). Cost: one hash per char position (linear in
-    corpus chars, partition-local), one window-min sort per document.
-    Under-parallel inputs are fanned out before the expansion so the
-    per-char hashing never serializes onto a few cores (r12).
-    """
-    from ravelytics_spark.operators.skew import fan_out_scan
-
-    df = fan_out_scan(df)
-    npos = F.length(text_col) - F.lit(k - 1)
-    pos = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(text_col).alias("__t"),
-        F.explode(
-            F.when(npos >= 1, F.sequence(F.lit(1), npos)).otherwise(
-                F.array().cast("array<int>")
-            )
-        ).alias("__i"),
-    )
-    kh = pos.select(
-        "__id",
-        "__i",
-        F.xxhash64(F.expr(f"substring(__t, __i, {k})")).alias("__h"),
-    )
-    wWin = (
-        Window.partitionBy("__id")
-        .orderBy("__i")
-        .rowsBetween(-(w - 1), Window.currentRow)
-    )
-    return (
-        kh.select("__id", F.min("__h").over(wWin).alias("fp"))
-        .distinct()
-        .select(F.col("__id").alias(id_col), "fp")
-    )
-
-
-def winnow_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 24,
-    w: int = 8,
-    min_shared: int = 3,
-    max_bucket_size: int | None = 2000,
-) -> DataFrame:
-    """Document pairs sharing >= ``min_shared`` winnowing fingerprints
-    (see ``winnow_fingerprints``). Pairs come from ONE fingerprint
-    equi-join — bucketed, never all-pairs; the shuffle carries 8-byte
-    hashes. ``max_bucket_size`` drops pathological fingerprints shared
-    by more than that many documents (boilerplate headers — the
-    C(bucket, 2) blowup guard, same contract as minhash_lsh_candidates);
-    pass None to disable for completeness-certified runs.
-
-    Returns (id_a, id_b, n_shared) with id_a < id_b.
-    """
-    fps = winnow_fingerprints(df, id_col, text_col, k=k, w=w)
-    if max_bucket_size is not None:
-        sizes = fps.groupBy("fp").agg(F.count("*").alias("__n"))
-        fps = (
-            fps.join(
-                F.broadcast(
-                    sizes.filter(F.col("__n") > max_bucket_size).select("fp")
-                ),
-                "fp",
-                "left_anti",
-            )
-        )
-    a = fps.select(F.col(id_col).alias("__ida"), "fp")
-    b = fps.select(F.col(id_col).alias("__idb"), "fp")
-    return (
-        a.join(b, "fp")
-        .filter(F.col("__ida") < F.col("__idb"))
-        .groupBy(
-            F.col("__ida").alias("id_a"), F.col("__idb").alias("id_b")
-        )
-        .agg(F.count("*").cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )

@@ -18,33 +18,25 @@ Two scale lessons live here (round-12 optimization, guide §2.4/§3.1):
   the threshold a broadcast hint removes every edge-frame exchange from
   the round (the edge list is probed map-side), above it the planner's
   sort-merge path stands. The threshold is bytes of the broadcast row
-  estimate, env-overridable via RVL_GRAPH_BCAST — at 100 TB a 200M-node
-  alive set stays on the SMJ path by construction.
+  estimate (``_GRAPH_BCAST_BYTES``) — at 100 TB a 200M-node alive set
+  stays on the SMJ path by construction.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Broadcast a node-keyed iteration frame only below this estimated size
 # (bytes). Default 64 MB ≈ 4M nodes at 16 B/row — comfortably inside
-# executor memory, far below the 8 GB broadcast cap; override per
-# deployment with RVL_GRAPH_BCAST (same pattern as RVL_R29_SLIM).
+# executor memory, far below the 8 GB broadcast cap.
 _GRAPH_BCAST_BYTES = 64 * 1024 * 1024
-
-
-def bcast_limit() -> int:
-    override = os.environ.get("RVL_GRAPH_BCAST")
-    return int(override) if override is not None else _GRAPH_BCAST_BYTES
 
 
 def maybe_broadcast(df: DataFrame, est_bytes: int) -> DataFrame:
     """Broadcast-hint ``df`` when its measured size estimate fits the
     graph broadcast budget; otherwise return it unchanged (SMJ path)."""
-    return F.broadcast(df) if est_bytes <= bcast_limit() else df
+    return F.broadcast(df) if est_bytes <= _GRAPH_BCAST_BYTES else df
 
 
 def coorder_pk(li: DataFrame) -> DataFrame:

@@ -290,202 +290,3 @@ def kmv_quantile_estimate(
         ).alias("__s"),
     )
     return stacked.select(*group_cols, "__s.p", "__s.quantile")
-
-
-# ---------------------------------------------------------------------------
-# Count-Min sketch: mergeable FREQUENCY estimates (the heavy-hitter
-# companion to HLL's distinct counts; Cormode & Muthukrishnan, "An
-# improved data stream summary: the count-min sketch and its
-# applications", 2005 — public)
-# ---------------------------------------------------------------------------
-
-
-def _cms_buckets(d: int, w: int) -> list:
-    """(row, bucket) structs for the value column ``__v``: d hash rows
-    derived from disjoint 16-bit slices of one xxhash64 (multiple
-    hashes from one strong digest — Kirsch & Mitzenmacher 2006), each
-    reduced mod w. One digest per input row, not d."""
-    assert 1 <= d <= 4, "d rows draw from 4 disjoint 16-bit words of one hash"
-    h = F.xxhash64(F.col("__v"))
-    return [
-        F.struct(
-            F.lit(row).alias("row"),
-            F.pmod(
-                F.shiftrightunsigned(h, 16 * row) % F.lit(1 << 16), F.lit(w)
-            ).cast("int").alias("bucket"),
-        )
-        for row in range(d)
-    ]
-
-
-def cms_sketch(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    d: int = 4,
-    w: int = 1024,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Build Count-Min counter rows per group: (group..., row, bucket,
-    cnt). FIXED d*w state per group regardless of input size — one
-    hash-agg with map-side combine; ``weight_col`` turns it into a
-    weighted frequency sketch (e.g. bytes per key). The countState
-    analog of hll_sketch."""
-    group_cols = group_cols or []
-    wgt = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
-    rows = df.select(
-        *group_cols, F.col(value_col).alias("__v"), wgt.alias("__w")
-    ).select(
-        *group_cols, F.explode(F.array(*_cms_buckets(d, w))).alias("__s"), "__w"
-    )
-    return rows.groupBy(*group_cols, "__s.row", "__s.bucket").agg(
-        F.sum("__w").alias("cnt")
-    )
-
-
-def cms_merge(sketches: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Combine counter rows into coarser groups (day x key -> key): the
-    countMerge analog. Counter ADDITION is the merge — associative,
-    commutative, and exactly equal to having built one sketch over the
-    union (unlike the estimates, which are only >= truth)."""
-    group_cols = group_cols or []
-    return sketches.groupBy(*group_cols, "row", "bucket").agg(
-        F.sum("cnt").alias("cnt")
-    )
-
-
-def cms_query(
-    sketches: DataFrame,
-    keys: DataFrame,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    d: int = 4,
-    w: int = 1024,
-) -> DataFrame:
-    """Point-estimate frequencies for ``keys`` (a DataFrame with
-    ``value_col`` and any group cols): hash each key with the same
-    bucket family, equi-join the counter rows, take min over the d
-    rows. Estimate >= truth always; error <= e/w * N with prob
-    1 - e^-d. The keys side is typically tiny (candidate heavy
-    hitters) and broadcasts."""
-    group_cols = group_cols or []
-    kb = keys.select(
-        *group_cols, F.col(value_col).alias("__v")
-    ).select(
-        *group_cols,
-        F.col("__v").alias(value_col),
-        F.explode(F.array(*_cms_buckets(d, w))).alias("__s"),
-    ).select(*group_cols, value_col, "__s.row", "__s.bucket")
-    joined = kb.join(sketches, [*group_cols, "row", "bucket"], "left").fillna(
-        0, subset=["cnt"]
-    )
-    return joined.groupBy(*group_cols, value_col).agg(
-        F.min("cnt").cast("long").alias("cms_count")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Fixed-bin quantile sketch: mergeable rank/quantile estimates (the
-# quantileState/quantileMerge analog for DISTRIBUTIONS, completing the
-# sketch quartet: HLL distinct, KMV distinct+quantile-of-distinct, CMS
-# frequency, this: rank statistics over all rows)
-# ---------------------------------------------------------------------------
-
-
-def qhist_sketch(
-    df: DataFrame,
-    value_col: str,
-    lo: int,
-    hi: int,
-    group_cols: list[str] | None = None,
-    bins: int = 256,
-) -> DataFrame:
-    """Build fixed-bin histogram rows per group: (group..., bin, cnt)
-    over integer values clamped to [lo, hi]. FIXED `bins` rows of state
-    per group regardless of input size, one hash-agg with map-side
-    combine. The [lo, hi] domain is a declared contract (like CMS's
-    d x w) so sketches built on different days/partitions share bin
-    geometry and merge exactly; values outside clamp into the edge
-    bins (count preserved, tail resolution lost — the standard
-    histogram-sketch tradeoff)."""
-    assert hi > lo and bins >= 2
-    group_cols = group_cols or []
-    width = (hi - lo) / bins
-    v = F.col(value_col).cast("double")
-    b = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor((v - lo) / width).cast("int")),
-    )
-    return (
-        df.select(*group_cols, b.alias("bin"))
-        .groupBy(*group_cols, "bin")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-
-
-def qhist_merge(
-    sketches: DataFrame, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Combine histogram rows into coarser groups: counter ADDITION,
-    exactly equal to sketching the union (same guarantee as
-    cms_merge)."""
-    group_cols = group_cols or []
-    return sketches.groupBy(*group_cols, "bin").agg(
-        F.sum("cnt").alias("cnt")
-    )
-
-
-def qhist_quantile(
-    sketches: DataFrame,
-    probs: list[float],
-    lo: int,
-    hi: int,
-    group_cols: list[str] | None = None,
-    bins: int = 256,
-) -> DataFrame:
-    """Quantile estimates per group from histogram rows: for each p,
-    the LOWER EDGE of the bin containing rank ceil(p*n) — a type-1
-    quantile quantized to bin resolution, so the estimate is within
-    one bin width of the exact value by construction. Runs as a
-    cumulative window over the <=bins rows per group (the x104
-    equi-depth aggregate-first idiom), then one pick per prob."""
-    from pyspark.sql import Window
-
-    group_cols = group_cols or []
-    width = (hi - lo) / bins
-    wC = (
-        Window.partitionBy(*group_cols)
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wN = Window.partitionBy(*group_cols)
-    cum = sketches.select(
-        *group_cols,
-        "bin",
-        F.sum("cnt").over(wC).alias("cum"),
-        F.sum("cnt").over(wN).alias("n"),
-        (F.sum("cnt").over(wC) - F.col("cnt")).alias("prev_cum"),
-    )
-    picks = []
-    for i, p in enumerate(probs):
-        rank = F.ceil(F.lit(float(p)) * F.col("n")).cast("long")
-        hit = (F.col("cum") >= rank) & (F.col("prev_cum") < rank)
-        picks.append(
-            F.max(F.when(hit, F.lit(lo) + F.col("bin") * width)).alias(f"__q{i}")
-        )
-    out = cum.groupBy(*group_cols).agg(*picks)
-    stacked = out.select(
-        *group_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(float(p)).alias("p"),
-                        F.col(f"__q{i}").alias("quantile_lo_edge"),
-                    )
-                    for i, p in enumerate(probs)
-                ]
-            )
-        ).alias("__s"),
-    )
-    return stacked.select(*group_cols, "__s.p", "__s.quantile_lo_edge")

@@ -130,9 +130,7 @@ ORDER BY id_a, id_b
 )
 def x2_containment(spark, sf_dir):
     # all-pairs form over the tiny subset (mirrors the oracle, which
-    # keeps zero-overlap pairs); the inverted-index operator
-    # (DD.containment_pairs) is the scale path and is probe-tested on
-    # planted subset-duplicates.
+    # keeps zero-overlap pairs).
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 100 == 0)
     sh = d.select("doc_id", F.array_distinct(TX.shingles("text", 5)).alias("s"))
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))

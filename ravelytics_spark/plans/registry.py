@@ -20,9 +20,13 @@ each action then optimizes, plans and executes in full under its own
 QueryExecution (a Dataset handed out twice would let the second action
 reuse the first one's physical plan and materialized shuffle stages).
 What a hit saves is the Python-side build: its py4j calls and any
-collect it runs. ``q`` returns the undecorated function, reachable from
-the wrapper as ``__wrapped__``, for callers that need a fresh build in
-the caller's own session.
+collect it runs. A build whose DataFrame reads a checkpoint (an entry
+that cuts its lineage with ``localCheckpoint``) is returned without
+being stored: its rows were materialized by that build, and a later
+call must not read them, so every call builds it again. ``q`` returns
+the undecorated function, reachable from the wrapper as
+``__wrapped__``, for callers that need a fresh build in the caller's
+own session.
 
 Execution profile: when the warehouse tables under ``sf_dir`` have files
 and their bytes sum to at most ``SMALL_INPUT_BYTES``, the entry is

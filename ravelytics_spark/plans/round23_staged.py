@@ -65,10 +65,9 @@ Batch 4:
   recent non-purchase touch within a 7-day lookback (asof-join shape
   keyed on user), explicit 'unattributed' bucket so value totals the
   ledger.
-* ``x143_qhist_portable`` — the oracle-certified twin of the
-  library's qhist quantile sketch: pure-integer bin geometry
-  (cents DIV 65536), cumulative picks at exact ranks over <=1024
-  bin rows per group.
+* ``x143_qhist_portable`` — the oracle-certified fixed-bin quantile
+  sketch: pure-integer bin geometry (cents DIV 65536), cumulative
+  picks at exact ranks over <=1024 bin rows per group.
 
 Hash-parity conventions as plans/queries.py.
 """
@@ -1576,12 +1575,11 @@ FROM cum GROUP BY o_orderpriority ORDER BY o_orderpriority
     "(bin = cents DIV width — no float divide anywhere), per-group "
     "cumulative counts over the bin frame (the x104 aggregate-first "
     "idiom), and p25/p50/p90/p99 picks at exact integer ranks "
-    "ceil(pct*n/100) — the oracle-certified twin of the library's "
-    "qhist_sketch/qhist_quantile (operators/sketches.py), certifying "
-    "the ALGORITHM the way x97/x98 certify KMV/HLL. The sketch rows "
-    "are fixed mergeable state (counter addition, cms_merge's "
-    "guarantee): day-level sketches roll up to month/year quantiles "
-    "without rescanning raw data — the quantileState pattern at "
+    "ceil(pct*n/100) — certifying the fixed-bin quantile-sketch "
+    "ALGORITHM the way x97/x98 certify KMV/HLL. The sketch rows "
+    "are fixed mergeable state (counter addition, the Count-Min "
+    "guarantee of x108): day-level sketches roll up to month/year "
+    "quantiles without rescanning raw data — the quantileState pattern at "
     "100 TB. One hash-agg with map-side combine; windows run over "
     "<=1024 rows per group.",
     _QHIST_ORACLE,

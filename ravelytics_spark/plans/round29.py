@@ -177,8 +177,7 @@ FROM mu
 # sf0.1 (18k probe rows ≈ 10 MB): old 3.19/2.78 s vs slim 4.13/4.73 s —
 # below the threshold the two extra stages dominate, so small inputs
 # keep the direct form; at 100 TB (9N vector rows vs 16-byte id rows
-# through the funnel) slim wins by construction. Overridable per
-# deployment, same pattern as fuzzy._attachable_by_broadcast.
+# through the funnel) slim wins by construction.
 _SLIM_MULTIPROBE_BYTES = 256 * 1024 * 1024
 
 
@@ -187,11 +186,6 @@ def _slim_multiprobe(e) -> bool:
     estimated big enough that the cap window must not carry vectors.
     The scan's optimizer estimate is reliable (plain pruned parquet
     read); 9× it approximates the probe-side exchange bytes."""
-    import os
-
-    override = os.environ.get("RVL_R29_SLIM")
-    if override is not None:
-        return override == "1"
     size = e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return int(size) * 9 > _SLIM_MULTIPROBE_BYTES
 

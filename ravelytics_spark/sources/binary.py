@@ -10,8 +10,6 @@ Reference surface:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,23 +18,6 @@ def read_json_array(spark: SparkSession, path: str) -> DataFrame:
     """OP-S3: one JSON array file → DataFrame (multiLine handles the
     pretty-printed array-of-objects layout the ingest DAG writes)."""
     return spark.read.option("multiLine", "true").json(path)
-
-
-def latest_file(spark: SparkSession, directory: str, suffix: str = ".json") -> str | None:
-    """OP-S4: newest file by modification time. Driver-side listing (the
-    reference's os.scandir idiom); at scale use the binaryFile listing
-    below so the sort happens in Spark."""
-    try:
-        entries = [
-            os.path.join(directory, f)
-            for f in os.listdir(directory)
-            if f.endswith(suffix)
-        ]
-    except FileNotFoundError:
-        return None
-    if not entries:
-        return None
-    return max(entries, key=os.path.getmtime)
 
 
 def latest_file_df(spark: SparkSession, glob: str) -> DataFrame:

@@ -22,11 +22,10 @@ library is imported here.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,14 +60,6 @@ def fetch_paginated(
     if not items:
         raise SkipStep(f"no items from {url}")
     return items
-
-
-def land_json(items: list[dict], path: str) -> str:
-    """Persist the acquisition IR as one JSON array file (the layout
-    spark.read.option('multiLine').json expects — OP-S3)."""
-    with open(path, "w") as fh:
-        json.dump(items, fh)
-    return path
 
 
 def preflight(

@@ -109,10 +109,12 @@ def memo(
     For anything derived from the data that costs a Spark
     job or a long plan build: a schema, probed widths, collected
     centroids, a catalog entry's DataFrame (a stored DataFrame holds no
-    rows; every action re-executes its scan). When no table has files
-    there is nothing to check a stored value against, so ``build()``
-    runs on every call and nothing is stored. Two threads that miss
-    together both build; either stored value is valid."""
+    rows; every action re-executes its scan). A DataFrame that reads a
+    checkpoint holds rows its build materialized, so it is returned
+    without being stored and every call builds it again. When no table
+    has files there is nothing to check a stored value against, so
+    ``build()`` runs on every call and nothing is stored. Two threads
+    that miss together both build; either stored value is valid."""
     return memo_at(fingerprints(sf_dir, table), spark, (key, sf_dir, table), build)
 
 
@@ -126,8 +128,25 @@ def memo_at(fp: tuple, spark: SparkSession, slot: Hashable, build):
     if hit is not None and hit[0] == fp and hit[1] is spark:
         return hit[2]
     value = build()
-    _MEMO[slot] = (fp, spark, value)
+    if not _reads_checkpoint(value):
+        _MEMO[slot] = (fp, spark, value)
     return value
+
+
+def _reads_checkpoint(value) -> bool:
+    """Whether ``value`` is a DataFrame with a checkpointed RDD among the
+    leaves of its analyzed plan (``localCheckpoint``/``checkpoint``,
+    eager or lazy, also behind a temp view). A ``createDataFrame`` of
+    local rows is a leaf over an RDD too, but one that holds only
+    literals, so it does not count."""
+    if not isinstance(value, DataFrame):
+        return False
+    leaves = value._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD" and leaf.rdd().checkpointData().isDefined():
+            return True
+    return False
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

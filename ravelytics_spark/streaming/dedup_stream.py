@@ -39,6 +39,12 @@ from pyspark.sql.streaming import StreamingQuery
 from ravelytics_spark.operators.dedup import _banded, minhash_signatures
 from ravelytics_spark.streaming.pipeline import BatchLedger, idempotent_foreach_batch
 
+# Document columns, MinHash geometry (5-word shingles, 64 hashes in 16
+# bands of 4) and the estimated-Jaccard verdict threshold.
+_ID, _TEXT = "doc_id", "text"
+_N, _NUM_HASHES, _BANDS = 5, 64, 16
+_THRESHOLD = 0.7
+
 
 def _sig_agreement(a: str, b: str) -> F.Column:
     """Fraction of agreeing signature slots — the MinHash estimate of
@@ -47,34 +53,25 @@ def _sig_agreement(a: str, b: str) -> F.Column:
     return F.aggregate(pairs, F.lit(0), lambda acc, v: acc + v) / F.size(F.col(a))
 
 
-def dedup_batch_against_store(
-    batch: DataFrame,
-    store: DataFrame | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Survivors of one batch, with a ``sig`` column appended — the
-    rows to add to the store.
+def dedup_batch_against_store(batch: DataFrame, store: DataFrame | None) -> DataFrame:
+    """Survivors of one batch of (doc_id, text, ...) rows, with a ``sig``
+    column appended — the rows to add to the store.
 
     A batch doc is dropped when its estimated Jaccard against any
     already-accepted doc, or any batch doc with a smaller id, reaches
-    ``threshold`` — so replaying already-stored content can only be
+    ``_THRESHOLD`` — so replaying already-stored content can only be
     dropped, never double-accepted.
     """
-    sigs = minhash_signatures(batch, id_col, text_col, n=n, num_hashes=num_hashes)
-    b_band = _banded(sigs, bands, rows_per_band)
+    rows_per_band = _NUM_HASHES // _BANDS
+    sigs = minhash_signatures(batch, _ID, _TEXT, n=_N, num_hashes=_NUM_HASHES)
+    b_band = _banded(sigs, _BANDS, rows_per_band)
 
     dup_ids = None
     if store is not None:
         store_sigs = store.select(
-            F.col(id_col).alias("__id"), F.col("sig").alias("__sig")
+            F.col(_ID).alias("__id"), F.col("sig").alias("__sig")
         )
-        s_band = _banded(store_sigs, bands, rows_per_band)
+        s_band = _banded(store_sigs, _BANDS, rows_per_band)
         cand = (
             b_band.alias("nb")
             .join(
@@ -98,7 +95,7 @@ def dedup_batch_against_store(
                 ),
                 "__sid",
             )
-            .filter(_sig_agreement("__bs", "__ss") >= threshold)
+            .filter(_sig_agreement("__bs", "__ss") >= _THRESHOLD)
             .select(F.col("__bid").alias("__dup"))
             .distinct()
         )
@@ -124,17 +121,17 @@ def dedup_batch_against_store(
             sigs.select(F.col("__id").alias("id_b"), F.col("__sig").alias("__sb")),
             "id_b",
         )
-        .filter(_sig_agreement("__sa", "__sb") >= threshold)
+        .filter(_sig_agreement("__sa", "__sb") >= _THRESHOLD)
         .select(F.col("id_b").alias("__dup"))
         .distinct()
     )
     dup_ids = in_dups if dup_ids is None else dup_ids.union(in_dups).distinct()
 
     return (
-        batch.join(dup_ids, batch[id_col] == dup_ids.__dup, "left_anti")
+        batch.join(dup_ids, batch[_ID] == dup_ids.__dup, "left_anti")
         .join(
-            sigs.select(F.col("__id").alias(id_col), F.col("__sig").alias("sig")),
-            id_col,
+            sigs.select(F.col("__id").alias(_ID), F.col("__sig").alias("sig")),
+            _ID,
         )
     )
 
@@ -185,13 +182,11 @@ def start_dedup_ingest(
     store_path: str,
     checkpoint_path: str,
     ledger_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.7,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """writeStream driver: per micro-batch, dedup against self + store,
-    append survivors (doc columns + sig) exactly once per batch_id."""
+    append survivors (doc columns + sig) exactly once per batch_id. Runs
+    as an ``availableNow`` query: it drains what the source holds, then
+    stops."""
     ledger = BatchLedger(ledger_path)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -217,9 +212,7 @@ def start_dedup_ingest(
                 store = None
             else:
                 raise
-        survivors = dedup_batch_against_store(
-            batch_df, store, id_col=id_col, text_col=text_col, threshold=threshold
-        )
+        survivors = dedup_batch_against_store(batch_df, store)
         survivors.write.mode("append").parquet(store_path)
 
     return (
@@ -227,6 +220,6 @@ def start_dedup_ingest(
             idempotent_foreach_batch(_apply, ledger, "dedup_ingest")
         )
         .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=available_now)
+        .trigger(availableNow=True)
         .start()
     )

@@ -6,7 +6,8 @@ The subject is ``registry.q``'s wrapper and the ``table=None`` key of
 ``sources.tables.memo``: the session object plus the fingerprint of
 every warehouse table under ``sf_dir``; and the execution profile the
 wrapper picks from those tables' size (the caller's small sibling up
-to ``registry.SMALL_INPUT_BYTES``, else the caller's own session). The data is
+to ``registry.SMALL_INPUT_BYTES``, else the caller's own session). An
+entry whose DataFrame reads a checkpoint is never stored. The data is
 a private copy of the sf0.01 fixture, so the same-path rewrite in one
 test reaches no other module.
 """
@@ -20,6 +21,7 @@ import uuid
 import pytest
 from conftest import SF_SMOKE, py4j_calls
 from pyspark.sql import SparkSession
+from pyspark.sql.classic.dataframe import DataFrame
 
 from ravelytics_spark.plans import extensions, registry
 from ravelytics_spark.plans.queries import REGISTRY
@@ -124,22 +126,51 @@ def test_a_caller_setting_change_rebuilds_in_a_fresh_sibling(spark, sf_copy):
 
 
 def test_a_nested_entry_call_stays_in_the_sibling(spark, monkeypatch):
-    # x179 reads x107 through REGISTRY inside its own build
-    made = []
+    # x179 reads x107 through REGISTRY inside its own build; x107 cuts
+    # its lineage with a localCheckpoint, whose session shows where the
+    # nested build ran
+    made, checkpointed = [], []
 
     def clone(sc, jsession):
         made.append(SparkSession(sc, jsession))
         return made[-1]
 
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(self.sparkSession)
+        return checkpoint(self, *args, **kwargs)
+
     monkeypatch.setattr(registry, "SparkSession", clone)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
     caller = spark.newSession()
     out = REGISTRY["x179_neardup_threshold_curve"].spark(caller, SF_SMOKE)
     assert len(made) == 1, "the nested call cloned a sibling of the sibling"
     assert out.sparkSession is made[0]
-    with py4j_calls() as calls:
-        inner = REGISTRY["x107_embed_neardup_portable"].spark(caller, SF_SMOKE)
-    assert calls[0] <= 12, "x107 was not stored for the sibling during x179's build"
+    assert checkpointed and all(s is made[0] for s in checkpointed), (
+        "x107 was built outside the sibling during x179's build"
+    )
+    inner = REGISTRY["x107_embed_neardup_portable"].spark(caller, SF_SMOKE)
     assert inner.sparkSession is made[0]
+
+
+def test_an_entry_that_checkpoints_builds_on_every_call(spark, monkeypatch):
+    # x227 cuts its fingerprint frame with an eager localCheckpoint: a
+    # stored build would hand every later call the rows the first call
+    # materialized.
+    made = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        made.append(checkpoint(self, *args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    fn = REGISTRY["x227_winnow_capped"].spark
+    first = fn(spark, SF_SMOKE).collect()
+    second = fn(spark, SF_SMOKE).collect()
+    assert len(made) == 2, "the second call read the first call's checkpoint"
+    assert second == first
 
 
 def test_entry_arguments_select_their_own_plan(spark, sf_copy):

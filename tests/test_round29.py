@@ -9,6 +9,7 @@ import os
 import numpy as np
 import pytest
 
+from ravelytics_spark.plans import round29
 from ravelytics_spark.plans.queries import REGISTRY
 from ravelytics_spark.plans.round29 import _bucketed_candidates
 from ravelytics_spark.testing import compare, duckdb_connection
@@ -164,20 +165,28 @@ def test_twonn_empty_table_matches_oracle_shape(spark, tmp_path):
 
 
 @pytest.mark.parametrize("name", NAMES)
-def test_slim_multiprobe_path_is_result_identical(spark, name):
+def test_slim_multiprobe_path_is_result_identical(spark, name, monkeypatch):
     """The r12 slim-multiprobe form (cap window over (nb, pcode) id
     rows + vector re-attach join) must produce byte-identical results
     to the direct form (vectors carried through the cap window) — the
     size-gated plan choice in _slim_multiprobe may pick either
-    depending on input scale, so both must be the same query."""
+    depending on input scale, so both must be the same query. Each form
+    is forced through the byte threshold and built fresh (``__wrapped__``,
+    not the prepared plan a second call would reuse)."""
     sf = SFS[0]
+    picked = []
+    slim = round29._slim_multiprobe
+
+    def recording(e):
+        picked.append(slim(e))
+        return picked[-1]
+
+    monkeypatch.setattr(round29, "_slim_multiprobe", recording)
     out = {}
-    for variant in ("0", "1"):
-        os.environ["RVL_R29_SLIM"] = variant
-        try:
-            out[variant] = [
-                tuple(r) for r in REGISTRY[name].spark(spark, sf).collect()
-            ]
-        finally:
-            os.environ.pop("RVL_R29_SLIM", None)
-    assert out["0"] == out["1"]
+    for form, threshold in (("direct", 1 << 62), ("slim", 0)):
+        monkeypatch.setattr(round29, "_SLIM_MULTIPROBE_BYTES", threshold)
+        out[form] = [
+            tuple(r) for r in REGISTRY[name].spark.__wrapped__(spark, sf).collect()
+        ]
+    assert picked == [False, True]
+    assert out["direct"] == out["slim"]

@@ -140,120 +140,3 @@ def test_kmv_estimate_uses_carried_k_not_param(spark):
     est = kmv_distinct_estimate(sk).collect()[0].approx_distinct  # default k=256
     assert abs(est - 10_000) / 10_000 < 0.35  # ~1/sqrt(64) error regime
     assert est > 1_000  # and nowhere near the saturated-census 64
-
-
-# ---------------------------------------------------------------------------
-# Count-Min sketch
-# ---------------------------------------------------------------------------
-
-
-def test_cms_never_underestimates_and_is_tight_for_heavy_keys(spark):
-    """The defining CMS guarantee (estimate >= truth for EVERY key) and
-    practical tightness: with w >> distinct keys the heavy keys suffer
-    few collisions."""
-    from ravelytics_spark.operators.sketches import cms_query, cms_sketch
-
-    # zipf-ish: key k appears (200 - k) times, k = 0..199
-    df = spark.range(200).select(F.col("id").alias("k")).select(
-        "k", F.explode(F.sequence(F.lit(1), 200 - F.col("k"))).alias("i")
-    )
-    sk = cms_sketch(df, "k", d=4, w=1024)
-    exact = {r.k: r.n for r in df.groupBy("k").agg(F.count("*").alias("n")).collect()}
-    keys = df.select("k").distinct()
-    got = {r.k: r.cms_count for r in cms_query(sk, keys, "k", d=4, w=1024).collect()}
-    assert set(got) == set(exact)
-    assert all(got[k] >= exact[k] for k in exact)
-    heavy = sorted(exact, key=exact.get, reverse=True)[:10]
-    assert sum(got[k] - exact[k] for k in heavy) <= 2 * len(heavy)
-
-
-def test_cms_merge_equals_sketch_of_union_exactly(spark):
-    """Counter addition IS the merge: per-part sketches summed must
-    equal the whole-data sketch cell for cell (stronger than the
-    estimate-level guarantee — this is what makes stored day x key
-    counter states safe to roll up)."""
-    from ravelytics_spark.operators.sketches import cms_merge, cms_sketch
-
-    a = spark.range(0, 5000).select((F.col("id") % 97).alias("v"))
-    b = spark.range(0, 7000).select((F.col("id") % 131).alias("v"))
-    merged = cms_merge(cms_sketch(a, "v").union(cms_sketch(b, "v")))
-    whole = cms_sketch(a.union(b), "v")
-    assert {(r.row, r.bucket, r.cnt) for r in merged.collect()} == {
-        (r.row, r.bucket, r.cnt) for r in whole.collect()
-    }
-
-
-def test_cms_grouped_and_weighted(spark):
-    """Grouped sketches stay independent per group; weight_col turns
-    counts into exact-weight sums (bytes-per-key style)."""
-    from ravelytics_spark.operators.sketches import cms_query, cms_sketch
-
-    df = spark.createDataFrame(
-        [("g1", "a", 10), ("g1", "a", 5), ("g1", "b", 1), ("g2", "a", 100)],
-        ["g", "k", "bytes"],
-    )
-    sk = cms_sketch(df, "k", group_cols=["g"], d=2, w=64, weight_col="bytes")
-    keys = df.select("g", "k").distinct()
-    got = {
-        (r.g, r.k): r.cms_count
-        for r in cms_query(sk, keys, "k", group_cols=["g"], d=2, w=64).collect()
-    }
-    assert got[("g1", "a")] >= 15 and got[("g2", "a")] >= 100
-    # group separation: g2 never sees g1's weights for key b
-    assert got[("g1", "b")] < 100
-
-
-# ---------------------------------------------------------------------------
-# Fixed-bin quantile sketch
-# ---------------------------------------------------------------------------
-
-
-def test_qhist_quantiles_within_one_bin_of_exact(spark):
-    """The defining histogram-sketch guarantee: each quantile estimate
-    (lower bin edge) is within one bin width of the exact type-1
-    quantile."""
-    import math
-
-    from ravelytics_spark.operators.sketches import qhist_quantile, qhist_sketch
-
-    vals = [(i * 37) % 10_000 for i in range(5_000)]
-    df = spark.createDataFrame([(v,) for v in vals], ["v"])
-    sk = qhist_sketch(df, "v", lo=0, hi=10_000, bins=100)
-    got = {
-        r.p: r.quantile_lo_edge
-        for r in qhist_quantile(sk, [0.25, 0.5, 0.9], 0, 10_000, bins=100).collect()
-    }
-    width = 10_000 / 100
-    svals = sorted(vals)
-    for p in (0.25, 0.5, 0.9):
-        exact = svals[max(0, math.ceil(p * len(vals)) - 1)]
-        assert abs(got[p] - exact) <= width, (p, got[p], exact)
-
-
-def test_qhist_merge_equals_sketch_of_union_exactly(spark):
-    from ravelytics_spark.operators.sketches import qhist_merge, qhist_sketch
-
-    a = spark.range(0, 4000).select((F.col("id") % 997).alias("v"))
-    b = spark.range(0, 6000).select((F.col("id") % 1009).alias("v"))
-    merged = qhist_merge(
-        qhist_sketch(a, "v", 0, 1024).union(qhist_sketch(b, "v", 0, 1024))
-    )
-    whole = qhist_sketch(a.union(b), "v", 0, 1024)
-    assert {(r.bin, r.cnt) for r in merged.collect()} == {
-        (r.bin, r.cnt) for r in whole.collect()
-    }
-
-
-def test_qhist_grouped_and_clamped(spark):
-    """Groups stay independent; out-of-domain values clamp into edge
-    bins with counts preserved."""
-    from ravelytics_spark.operators.sketches import qhist_sketch
-
-    df = spark.createDataFrame(
-        [("g1", -50), ("g1", 5), ("g1", 2000), ("g2", 512)], ["g", "v"]
-    )
-    rows = qhist_sketch(df, "v", 0, 1024, group_cols=["g"], bins=8).collect()
-    total = sum(r.cnt for r in rows)
-    assert total == 4
-    g1 = sorted((r.bin, r.cnt) for r in rows if r.g == "g1")
-    assert g1 == [(0, 2), (7, 1)]  # -50 clamps to bin 0, 2000 to bin 7
