@@ -1,5 +1,7 @@
-"""Shared co-order graph construction for the graph-analytics entries
-(x103/x127/x154/x172/x246/x247/x321 family).
+"""Shared co-order graph construction for the graph-analytics entries:
+``coorder_pk`` (x154, x278), ``coorder_edges`` (x103, x127, x246, x247,
+x262-x265, x321) and ``undirected`` (the same minus x103). The DuckDB
+texts of the same relations are in ``plans/frames.py``.
 
 Two scale lessons live here (round-12 optimization, guide §2.4/§3.1):
 
@@ -64,3 +66,9 @@ def coorder_edges(li: DataFrame, min_weight: int = 2) -> DataFrame:
     if min_weight > 1:
         e = e.filter(F.col("w") >= min_weight)
     return e.select("u", "v")
+
+
+def undirected(e: DataFrame) -> DataFrame:
+    """Both orientations of an oriented (u, v) edge list, for the
+    entries that walk neighbors from either endpoint."""
+    return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))

@@ -63,6 +63,8 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.operators.graph import coorder_edges
+from ravelytics_spark.plans.frames import COORDER_PK_SQL
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round4 import embedding_probe, tree_sum
 from ravelytics_spark.sources.tables import load_table
@@ -783,9 +785,9 @@ def x102_srp_portable(spark, sf_dir):
 # x103 — degree-ordered triangle counting over the co-order part graph
 # ---------------------------------------------------------------------------
 
-_TRI_ORACLE = """
+_TRI_ORACLE = f"""
 WITH pk AS (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
+    {COORDER_PK_SQL}
 ),
 e AS (
     SELECT DISTINCT a.p AS u, b.p AS v
@@ -837,16 +839,7 @@ FROM tri
     _TRI_ORACLE,
 )
 def x103_triangle_count(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = pk.alias("a"), pk.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .distinct()
-    )
+    e = coorder_edges(load_table(spark, sf_dir, "lineitem"), min_weight=1)
     deg = (
         e.select(F.col("u").alias("n"))
         .unionAll(e.select(F.col("v").alias("n")))

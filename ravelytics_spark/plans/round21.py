@@ -75,6 +75,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.plans.frames import (
+    MONTHLY_NATION_REVENUE_CTE,
+    MONTHLY_REVENUE_CTE,
+    monthly_nation_revenue,
+    monthly_revenue,
+)
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
 from ravelytics_spark.operators.ranks import (  # noqa: F401
@@ -1102,12 +1108,7 @@ _EWMA_DEN_SQL = " + ".join(
 )
 
 _EWMA_ORACLE = f"""
-WITH m AS (
-    SELECT c_nationkey, CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_nationkey, mon
-),
+WITH {MONTHLY_NATION_REVENUE_CTE},
 e AS (
     SELECT c_nationkey, mon, y,
            {_EWMA_NUM_SQL} AS num,
@@ -1141,19 +1142,10 @@ ORDER BY n_name, mon
     _EWMA_ORACLE,
 )
 def x119_ewma_revenue(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    m = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_nationkey",
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("c_nationkey", "mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
+    m = monthly_nation_revenue(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
+    nat = load_table(spark, sf_dir, "nation")
     wN = Window.partitionBy("c_nationkey").orderBy("mon")
     num, den = None, None
     for k in range(_EWMA_LAGS):
@@ -1183,12 +1175,8 @@ def x119_ewma_revenue(spark, sf_dir):
 # x120 — seasonality index vs trailing-12-month mean
 # ---------------------------------------------------------------------------
 
-_SEASONALITY_ORACLE = """
-WITH m AS (
-    SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-    FROM orders GROUP BY mon
-),
+_SEASONALITY_ORACLE = f"""
+WITH {MONTHLY_REVENUE_CTE},
 w AS (
     SELECT mon, y,
            SUM(y) OVER (ORDER BY mon ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS s12,
@@ -1214,15 +1202,7 @@ FROM w WHERE n12 = 12 ORDER BY mon
     _SEASONALITY_ORACLE,
 )
 def x120_seasonality_index(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    m = (
-        o.select(
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
-    )
+    m = monthly_revenue(load_table(spark, sf_dir, "orders"))
     w12 = Window.orderBy("mon").rowsBetween(-11, Window.currentRow)
     w = m.select(
         "mon",

@@ -46,6 +46,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.plans.frames import MONTHLY_REVENUE_CTE, monthly_revenue
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
 
@@ -547,12 +548,8 @@ def x124_tukey_outliers(spark, sf_dir):
 # x125 — CUSUM mean-shift changepoint over monthly revenue
 # ---------------------------------------------------------------------------
 
-_CUSUM_ORACLE = """
-WITH m AS (
-    SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-    FROM orders GROUP BY mon
-),
+_CUSUM_ORACLE = f"""
+WITH {MONTHLY_REVENUE_CTE},
 w AS (
     SELECT mon, y,
            CAST(row_number() OVER (ORDER BY mon) AS BIGINT) AS t,
@@ -600,15 +597,7 @@ ORDER BY mon
     _CUSUM_ORACLE,
 )
 def x125_cusum_changepoint(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    m = (
-        o.select(
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
-    )
+    m = monthly_revenue(load_table(spark, sf_dir, "orders"))
     tot = m.agg(
         F.sum("y").cast("long").alias("tot"), F.count("*").cast("long").alias("n")
     )

@@ -77,6 +77,16 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.operators.graph import (
+    coorder_edges,
+    maybe_broadcast,
+    undirected,
+)
+from ravelytics_spark.plans.frames import (
+    COORDER_GRAPH_CTES,
+    MONTHLY_REVENUE_CTE,
+    monthly_revenue,
+)
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
 
@@ -112,15 +122,7 @@ def _kcore_ctes() -> str:
 
 
 _KCORE_ORACLE = f"""
-WITH pk AS MATERIALIZED (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-),
-e AS MATERIALIZED (
-    SELECT a.p AS u, b.p AS v
-    FROM pk a JOIN pk b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p HAVING count(*) >= 2
-),
-und AS MATERIALIZED (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+WITH {COORDER_GRAPH_CTES},
 a0 AS MATERIALIZED (SELECT DISTINCT u AS n FROM und),
 {_kcore_ctes()}
 SELECT n AS part, d AS core_degree
@@ -155,13 +157,9 @@ ORDER BY part
     _KCORE_ORACLE,
 )
 def x127_kcore_peel(spark, sf_dir, early_exit: bool = True):
-    from ravelytics_spark.operators.graph import coorder_edges, maybe_broadcast
-
-    li = load_table(spark, sf_dir, "lineitem")
-    e = coorder_edges(li, min_weight=2)
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)  # referenced every round x 12 rounds
+    e = coorder_edges(load_table(spark, sf_dir, "lineitem"))
+    # referenced every round x 12 rounds
+    und = undirected(e).localCheckpoint(eager=True)
     alive = und.select(F.col("u").alias("n")).distinct()
     deg = None
     prev_n = None
@@ -1071,12 +1069,8 @@ def x137_share_of_total(spark, sf_dir):
 # x138 — volatility bands over monthly revenue (exact trailing moments)
 # ---------------------------------------------------------------------------
 
-_BANDS_ORACLE = """
-WITH m AS (
-    SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-    FROM orders GROUP BY mon
-),
+_BANDS_ORACLE = f"""
+WITH {MONTHLY_REVENUE_CTE},
 w AS (
     SELECT mon, y,
            SUM(y) OVER tw AS s1,
@@ -1122,15 +1116,7 @@ FROM w WHERE k = 6 ORDER BY mon
     _BANDS_ORACLE,
 )
 def x138_volatility_bands(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    m = (
-        o.select(
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
-    )
+    m = monthly_revenue(load_table(spark, sf_dir, "orders"))
     tw = Window.orderBy("mon").rowsBetween(-5, Window.currentRow)
     w = m.select(
         "mon",

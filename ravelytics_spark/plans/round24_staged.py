@@ -114,6 +114,14 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.operators.graph import coorder_pk
+from ravelytics_spark.plans.frames import (
+    COORDER_PK_SQL,
+    MONTHLY_NATION_REVENUE_CTE,
+    MONTHLY_REVENUE_CTE,
+    monthly_nation_revenue,
+    monthly_revenue,
+)
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
 
@@ -535,12 +543,7 @@ _HOLT_DEN2 = " + ".join(
 )
 
 _HOLT_ORACLE = f"""
-WITH m AS (
-    SELECT c_nationkey, CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_nationkey, mon
-),
+WITH {MONTHLY_NATION_REVENUE_CTE},
 e1 AS (
     SELECT c_nationkey, mon, y,
            CAST((({_HOLT_NUM1}) // ({_HOLT_DEN1})) * 1000
@@ -587,19 +590,10 @@ ORDER BY n_name, mon
     _HOLT_ORACLE,
 )
 def x148_holt_forecast(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    m = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_nationkey",
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("c_nationkey", "mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
+    m = monthly_nation_revenue(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
+    nat = load_table(spark, sf_dir, "nation")
     wN = Window.partitionBy("c_nationkey").orderBy("mon")
 
     def dyadic(col: str):
@@ -1393,7 +1387,7 @@ _CF_TOPK = 5
 
 _CF_ORACLE = f"""
 WITH pk AS (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
+    {COORDER_PK_SQL}
 ),
 deg AS (
     SELECT p, CAST(count(*) AS BIGINT) AS c FROM pk GROUP BY p
@@ -1446,10 +1440,7 @@ ORDER BY seed_part, rk
     _CF_ORACLE,
 )
 def x154_item_cf_topk(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
+    pk = coorder_pk(load_table(spark, sf_dir, "lineitem"))
     deg = pk.groupBy("p").agg(F.count("*").cast("long").alias("c"))
     seeds = deg.orderBy(F.desc("c"), "p").limit(_CF_SEEDS)
     a = pk.join(F.broadcast(seeds.select("p")), "p").select(
@@ -1575,19 +1566,10 @@ ORDER BY n_name
     _TS_ORACLE,
 )
 def x155_theil_sen(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    m = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_nationkey",
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("c_nationkey", "mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
+    m = monthly_nation_revenue(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
+    nat = load_table(spark, sf_dir, "nation")
     t = m.select(
         "c_nationkey",
         "y",
@@ -1640,12 +1622,8 @@ def x155_theil_sen(spark, sf_dir):
 # x156 — knee/elbow point of the cumulative revenue curve
 # ---------------------------------------------------------------------------
 
-_KNEE_ORACLE = """
-WITH m AS (
-    SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-    FROM orders GROUP BY mon
-),
+_KNEE_ORACLE = f"""
+WITH {MONTHLY_REVENUE_CTE},
 cum AS (
     SELECT mon, y,
            SUM(y) OVER (ORDER BY mon ROWS BETWEEN UNBOUNDED PRECEDING
@@ -1693,15 +1671,7 @@ ORDER BY mon
     _KNEE_ORACLE,
 )
 def x156_knee_point(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    m = (
-        o.select(
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
-    )
+    m = monthly_revenue(load_table(spark, sf_dir, "orders"))
     wCum = Window.orderBy("mon").rowsBetween(Window.unboundedPreceding, 0)
     wAll = Window.partitionBy()
     cum = m.select(
@@ -1749,12 +1719,7 @@ def x156_knee_point(spark, sf_dir):
 _CONF_CAL_MONTHS = 24  # calibration prefix per nation
 
 _CONF_ORACLE = f"""
-WITH m AS (
-    SELECT c_nationkey, CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_nationkey, mon
-),
+WITH {MONTHLY_NATION_REVENUE_CTE},
 r AS (
     SELECT c_nationkey, mon, y,
            row_number() OVER w AS t,
@@ -1812,19 +1777,10 @@ ORDER BY n_name
     _CONF_ORACLE,
 )
 def x157_conformal_band(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    m = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_nationkey",
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("c_nationkey", "mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
+    m = monthly_nation_revenue(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
+    nat = load_table(spark, sf_dir, "nation")
     wN = Window.partitionBy("c_nationkey").orderBy("mon")
     r = m.select(
         "c_nationkey",
@@ -1886,13 +1842,8 @@ def x157_conformal_band(spark, sf_dir):
 # x158 — MASE: naive vs seasonal-naive forecast error ratio
 # ---------------------------------------------------------------------------
 
-_MASE_ORACLE = """
-WITH m AS (
-    SELECT c_nationkey, CAST(date_trunc('month', o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_nationkey, mon
-),
+_MASE_ORACLE = f"""
+WITH {MONTHLY_NATION_REVENUE_CTE},
 r AS (
     SELECT c_nationkey,
            abs(y - lag(y, 1) OVER w) AS e1,
@@ -1933,19 +1884,10 @@ ORDER BY n_name
     _MASE_ORACLE,
 )
 def x158_mase_eval(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    m = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_nationkey",
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("c_nationkey", "mon")
-        .agg(F.sum("cents").cast("long").alias("y"))
+    m = monthly_nation_revenue(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
+    nat = load_table(spark, sf_dir, "nation")
     wN = Window.partitionBy("c_nationkey").orderBy("mon")
     r = m.select(
         "c_nationkey",

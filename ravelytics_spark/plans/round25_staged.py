@@ -132,6 +132,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.plans.frames import (
+    MONTHLY_NATION_KILOS_CTE,
+    monthly_nation_kilos,
+)
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table
@@ -518,14 +522,7 @@ def x170_kendall_tau(spark, sf_dir):
 _ACF_LAGS = 3
 
 _ACF_ORACLE = f"""
-WITH m AS (
-    SELECT c.c_nationkey AS nkey,
-           CAST(date_trunc('month', o.o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                AS BIGINT) // 100000 AS ykd
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_nationkey, CAST(date_trunc('month', o.o_orderdate) AS DATE)
-),
+WITH {MONTHLY_NATION_KILOS_CTE},
 s AS (
     SELECT nkey, CAST(count(*) AS BIGINT) AS n,
            CAST(SUM(ykd) AS BIGINT) AS tot
@@ -577,19 +574,8 @@ ORDER BY l.nkey, lag_k
     _ACF_ORACLE,
 )
 def x171_acf_lags(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    m = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            F.col("c_nationkey").alias("nkey"),
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("nkey", "mon")
-        .agg(
-            F.expr("sum(cents) div 100000").cast("long").alias("ykd")
-        )
+    m = monthly_nation_kilos(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
     s = m.groupBy("nkey").agg(
         F.count("*").cast("long").alias("n"),

@@ -174,6 +174,16 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.operators.graph import (
+    coorder_edges,
+    maybe_broadcast,
+    undirected,
+)
+from ravelytics_spark.plans.frames import (
+    COORDER_GRAPH_CTES,
+    DAILY_REVENUE_CTE,
+    daily_order_revenue,
+)
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.plans.round4 import embedding_probe
 from ravelytics_spark.sources.tables import load_table
@@ -1566,15 +1576,7 @@ def _lpa_round_ctes() -> str:
 
 
 _LPA_ORACLE = f"""
-WITH pk AS MATERIALIZED (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-),
-e AS MATERIALIZED (
-    SELECT a.p AS u, b.p AS v
-    FROM pk a JOIN pk b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p HAVING count(*) >= 2
-),
-und AS MATERIALIZED (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+WITH {COORDER_GRAPH_CTES},
 l0 AS MATERIALIZED (SELECT DISTINCT u AS n, u AS lab FROM und),
 {_lpa_round_ctes()}
 SELECT lab AS community, CAST(count(*) AS BIGINT) AS n_members
@@ -1601,13 +1603,8 @@ ORDER BY community
     _LPA_ORACLE,
 )
 def x246_label_propagation(spark, sf_dir):
-    from ravelytics_spark.operators.graph import coorder_edges, maybe_broadcast
-
-    li = load_table(spark, sf_dir, "lineitem")
-    e = coorder_edges(li, min_weight=2)
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    e = coorder_edges(load_table(spark, sf_dir, "lineitem"))
+    und = undirected(e).localCheckpoint(eager=True)
     # |labels| <= |nodes| <= |und| rows, and counting the just-
     # checkpointed edge blocks is one cheap no-recompute job — an exact
     # runtime upper bound for the join-strategy pick (guide §3.1).
@@ -1655,15 +1652,7 @@ def x246_label_propagation(spark, sf_dir):
 _LP_TOPK = 50
 
 _LINKPRED_ORACLE = f"""
-WITH pk AS MATERIALIZED (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-),
-e AS MATERIALIZED (
-    SELECT a.p AS u, b.p AS v
-    FROM pk a JOIN pk b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p HAVING count(*) >= 2
-),
-und AS MATERIALIZED (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+WITH {COORDER_GRAPH_CTES},
 deg AS MATERIALIZED (
     SELECT u AS n, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY u
 ),
@@ -1709,20 +1698,10 @@ LIMIT {_LP_TOPK}
     _LINKPRED_ORACLE,
 )
 def x247_link_prediction(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = pk.alias("a"), pk.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count("*").alias("wt"))
-        .filter(F.col("wt") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
+    e = coorder_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
+        eager=True
     )
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    und = undirected(e)
     deg = und.groupBy(F.col("u").alias("n")).agg(
         F.count("*").cast("long").alias("d")
     )
@@ -2237,12 +2216,7 @@ _HURST_EXPR = (
 )
 
 _HURST_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100000 AS x
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_REVENUE_CTE},
 rn AS (
     SELECT d, x, row_number() OVER (ORDER BY d) AS rn FROM daily
 ),
@@ -2323,15 +2297,7 @@ FROM ols ORDER BY scale
     _HURST_ORACLE,
 )
 def x237_hurst_rs(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            " DIV 100000"
-        ).alias("x")
-    )
+    daily = daily_order_revenue(load_table(spark, sf_dir, "orders"))
     rn = daily.select(
         "d", "x", F.row_number().over(Window.orderBy("d")).alias("rn")
     )
@@ -2786,12 +2752,7 @@ _EV_SCALE = (
 )
 
 _GUMBEL_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100000 AS x
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_REVENUE_CTE},
 monthly AS (
     SELECT d // 30 AS period, CAST(MAX(x) AS BIGINT) AS mx
     FROM daily GROUP BY 1
@@ -2830,15 +2791,7 @@ FROM mom WHERE n >= 2 AND n * s2 > s1 * s1
     ),
 )
 def x260_extreme_value_gumbel(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            " DIV 100000"
-        ).alias("x")
-    )
+    daily = daily_order_revenue(load_table(spark, sf_dir, "orders"))
     monthly = daily.groupBy(F.expr("d DIV 30").alias("period")).agg(
         F.max("x").cast("long").alias("mx")
     )
@@ -2958,15 +2911,7 @@ def x261_capture_recapture(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _MOD_ORACLE = f"""
-WITH pk AS MATERIALIZED (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-),
-e AS MATERIALIZED (
-    SELECT a.p AS u, b.p AS v
-    FROM pk a JOIN pk b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p HAVING count(*) >= 2
-),
-und AS MATERIALIZED (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+WITH {COORDER_GRAPH_CTES},
 l0 AS MATERIALIZED (SELECT DISTINCT u AS n, u AS lab FROM und),
 {{_LPA_CTES}},
 m AS (SELECT CAST(count(*) AS BIGINT) AS m2 FROM und),
@@ -3029,21 +2974,8 @@ ORDER BY t.community
     _MOD_ORACLE.replace("{_LPA_CTES}", _lpa_round_ctes()),
 )
 def x262_modularity_score(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = pk.alias("a"), pk.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count("*").alias("wt"))
-        .filter(F.col("wt") >= 2)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    e = coorder_edges(load_table(spark, sf_dir, "lineitem"))
+    und = undirected(e).localCheckpoint(eager=True)
     lab = und.select(F.col("u").alias("n"), F.col("u").alias("lab")).distinct()
     for _ in range(_LPA_ROUNDS):
         # r12: same lazy round shape as x246 (linear lineage over the
@@ -3125,15 +3057,7 @@ def x262_modularity_score(spark, sf_dir):
 _AA_TOPK = 50
 
 _AA_ORACLE = f"""
-WITH pk AS MATERIALIZED (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-),
-e AS MATERIALIZED (
-    SELECT a.p AS u, b.p AS v
-    FROM pk a JOIN pk b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p HAVING count(*) >= 2
-),
-und AS MATERIALIZED (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+WITH {COORDER_GRAPH_CTES},
 deg AS MATERIALIZED (
     SELECT u AS n, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY u
 ),
@@ -3179,20 +3103,10 @@ LIMIT {_AA_TOPK}
     _AA_ORACLE,
 )
 def x263_adamic_adar(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = pk.alias("a"), pk.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count("*").alias("wt"))
-        .filter(F.col("wt") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
+    e = coorder_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
+        eager=True
     )
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    und = undirected(e)
     deg = und.groupBy(F.col("u").alias("n")).agg(
         F.count("*").cast("long").alias("d")
     )
@@ -3244,15 +3158,7 @@ _ASSORT_R = (
 )
 
 _ASSORT_ORACLE = f"""
-WITH pk AS MATERIALIZED (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-),
-e AS MATERIALIZED (
-    SELECT a.p AS u, b.p AS v
-    FROM pk a JOIN pk b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p HAVING count(*) >= 2
-),
-und AS MATERIALIZED (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+WITH {COORDER_GRAPH_CTES},
 deg AS MATERIALIZED (
     SELECT u AS n, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY u
 ),
@@ -3292,21 +3198,8 @@ FROM s WHERE m * sxx > sx * sx AND m * syy > sy * sy
     _ASSORT_ORACLE.replace("{_ASSORT_R}", _ASSORT_R),
 )
 def x264_degree_assortativity(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = pk.alias("a"), pk.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count("*").alias("wt"))
-        .filter(F.col("wt") >= 2)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    e = coorder_edges(load_table(spark, sf_dir, "lineitem"))
+    und = undirected(e).localCheckpoint(eager=True)
     deg = und.groupBy(F.col("u").alias("n")).agg(
         F.count("*").cast("long").alias("d")
     )
@@ -3331,16 +3224,8 @@ def x264_degree_assortativity(spark, sf_dir):
 # x265 — global clustering coefficient (triangles / wedges)
 # ---------------------------------------------------------------------------
 
-_CLUSTER_ORACLE = """
-WITH pk AS MATERIALIZED (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-),
-e AS MATERIALIZED (
-    SELECT a.p AS u, b.p AS v
-    FROM pk a JOIN pk b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p HAVING count(*) >= 2
-),
-und AS MATERIALIZED (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+_CLUSTER_ORACLE = f"""
+WITH {COORDER_GRAPH_CTES},
 deg AS (
     SELECT u AS n, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY u
 ),
@@ -3376,20 +3261,10 @@ WHERE w.n_wedges > 0
     _CLUSTER_ORACLE,
 )
 def x265_clustering_coefficient(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = pk.alias("a"), pk.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count("*").alias("wt"))
-        .filter(F.col("wt") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
+    e = coorder_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
+        eager=True
     )
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    und = undirected(e)
     deg = und.groupBy(F.col("u").alias("n")).agg(
         F.count("*").cast("long").alias("d")
     )
@@ -3909,12 +3784,7 @@ _SPC_ROOC = (
 ).format(d3=_SPC_D3, d4=_SPC_D4)
 
 _SPC_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100000 AS x
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_REVENUE_CTE},
 grp AS (
     SELECT d // 7 AS week, CAST(count(*) AS BIGINT) AS n_days,
            CAST(SUM(x) * 1000 // count(*) AS BIGINT) AS xbar_milli,
@@ -3951,15 +3821,7 @@ ORDER BY g.week
     _SPC_ORACLE,
 )
 def x270_spc_control_chart(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            " DIV 100000"
-        ).alias("x")
-    )
+    daily = daily_order_revenue(load_table(spark, sf_dir, "orders"))
     grp = (
         daily.groupBy(F.expr("d DIV 7").alias("week"))
         .agg(
@@ -4360,12 +4222,7 @@ _CPK_CPK = (
 )
 
 _CPK_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100000 AS x
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_REVENUE_CTE},
 grp AS (
     SELECT d // 7 AS week,
            CAST(SUM(x) * 1000 // count(*) AS BIGINT) AS xbar_milli,
@@ -4407,15 +4264,7 @@ FROM spec WHERE rbar_milli > 0
     _CPK_ORACLE,
 )
 def x274_cpk_capability(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            " DIV 100000"
-        ).alias("x")
-    )
+    daily = daily_order_revenue(load_table(spark, sf_dir, "orders"))
     grp = (
         daily.groupBy(F.expr("d DIV 7").alias("week"))
         .agg(

@@ -139,6 +139,18 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.operators.graph import coorder_pk
+from ravelytics_spark.plans.frames import (
+    COORDER_PK_SQL,
+    DAILY_CENTS_CTE,
+    DAILY_REVENUE_CTE,
+    MONTHLY_NATION_KILOS_CTE,
+    SEGMENT_ORDER_KILOS_CTE,
+    daily_order_cents,
+    daily_order_revenue,
+    monthly_nation_kilos,
+    segment_order_kilos,
+)
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
 
@@ -159,14 +171,7 @@ _LB_TERM = (
 )
 
 _LB_ORACLE = f"""
-WITH m AS (
-    SELECT c.c_nationkey AS nkey,
-           CAST(date_trunc('month', o.o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                AS BIGINT) // 100000 AS ykd
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_nationkey, CAST(date_trunc('month', o.o_orderdate) AS DATE)
-),
+WITH {MONTHLY_NATION_KILOS_CTE},
 s AS (
     SELECT nkey, CAST(count(*) AS BIGINT) AS n,
            CAST(SUM(ykd) AS BIGINT) AS tot
@@ -219,17 +224,8 @@ ORDER BY nkey
     _LB_ORACLE,
 )
 def x275_ljung_box(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    m = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            F.col("c_nationkey").alias("nkey"),
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("nkey", "mon")
-        .agg(F.expr("sum(cents) div 100000").cast("long").alias("ykd"))
+    m = monthly_nation_kilos(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
     s = m.groupBy("nkey").agg(
         F.count("*").cast("long").alias("n"),
@@ -319,11 +315,7 @@ _JB_STAT = (
 )
 
 _JB_ORACLE = f"""
-WITH k AS (
-    SELECT c.c_mktsegment AS segment,
-           CAST(round(o.o_totalprice * 100) AS BIGINT) // 100000 AS x
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-),
+WITH {SEGMENT_ORDER_KILOS_CTE},
 s AS (
     SELECT segment, CAST(count(*) AS BIGINT) AS n,
            CAST(SUM(x) AS BIGINT) AS s1,
@@ -357,13 +349,8 @@ ORDER BY segment
     _JB_ORACLE,
 )
 def x276_jarque_bera(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    k = o.join(c, o.o_custkey == c.c_custkey).select(
-        F.col("c_mktsegment").alias("segment"),
-        F.expr(
-            "CAST(round(o_totalprice * 100) AS BIGINT) DIV 100000"
-        ).alias("x"),
+    k = segment_order_kilos(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
     s = k.groupBy("segment").agg(
         F.count("*").cast("long").alias("n"),
@@ -418,12 +405,7 @@ _POT_BETA = (
 )
 
 _POT_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100000 AS x
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_REVENUE_CTE},
 rk AS (
     SELECT x, row_number() OVER (ORDER BY x, d) AS r,
            CAST(count(*) OVER () AS BIGINT) AS n
@@ -467,15 +449,7 @@ FROM s WHERE n_exc >= 2 AND n_exc * s2 > s1 * s1
     _POT_ORACLE,
 )
 def x287_pot_gpd(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            " DIV 100000"
-        ).alias("x")
-    )
+    daily = daily_order_revenue(load_table(spark, sf_dir, "orders"))
     wr = Window.partitionBy().orderBy("x", "d")
     rk = daily.select(
         "x",
@@ -641,12 +615,7 @@ _DF_T = (
 )
 
 _DF_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100000 AS x
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_REVENUE_CTE},
 seq AS (
     SELECT x, row_number() OVER (ORDER BY d) AS t FROM daily
 ),
@@ -687,15 +656,7 @@ WHERE n >= 3 AND {_DF_DEN} > 0 AND {_DF_SSE} > 0
     _DF_ORACLE,
 )
 def x289_dickey_fuller(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            " DIV 100000"
-        ).alias("x")
-    )
+    daily = daily_order_revenue(load_table(spark, sf_dir, "orders"))
     wt = Window.partitionBy().orderBy("d")
     seq = daily.select("x", F.row_number().over(wt).alias("t"))
     a = seq.select(F.col("x").alias("x_cur"), F.col("t"))
@@ -2238,7 +2199,7 @@ _HITS_TOPK = 20
 
 _HITS_ORACLE = f"""
 WITH e AS MATERIALIZED (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
+    {COORDER_PK_SQL}
 ),
 h1 AS (
     SELECT o, CAST(count(*) AS BIGINT) AS h FROM e GROUP BY o
@@ -2293,10 +2254,8 @@ def x278_hits_scores(spark, sf_dir):
     # blocks (cross-run intermediate caching, which both the bench
     # contract and honest measurement forbid); a checkpoint is keyed to
     # this build's RDD identity and dies with it.
-    e = (
-        li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    e = coorder_pk(li).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
     h1 = e.groupBy("o").agg(F.count("*").cast("long").alias("h"))
     a1 = (
@@ -2912,12 +2871,7 @@ _TP_Z = (
 )
 
 _TP_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_CENTS_CTE},
 seq AS (
     SELECT cents,
            lag(cents) OVER (ORDER BY d) AS prv,
@@ -2953,14 +2907,7 @@ FROM tp WHERE n >= 3
     _TP_ORACLE,
 )
 def x300_turning_points(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-        ).alias("cents")
-    )
+    daily = daily_order_cents(load_table(spark, sf_dir, "orders"))
     wd = Window.partitionBy().orderBy("d")
     seq = daily.select(
         "cents",
@@ -3118,11 +3065,7 @@ _GA_SHAPE = (
 _GA_SCALE = f"CAST(floor(1000.0 * {_GA_VAR} / {_GA_MEAN}) AS BIGINT)"
 
 _GA_ORACLE = f"""
-WITH k AS (
-    SELECT c.c_mktsegment AS segment,
-           CAST(round(o.o_totalprice * 100) AS BIGINT) // 100000 AS x
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-),
+WITH {SEGMENT_ORDER_KILOS_CTE},
 s AS (
     SELECT segment, CAST(count(*) AS BIGINT) AS n,
            CAST(SUM(x) AS BIGINT) AS s1,
@@ -3153,13 +3096,8 @@ ORDER BY segment
     _GA_ORACLE,
 )
 def x302_gamma_mom(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    k = o.join(c, o.o_custkey == c.c_custkey).select(
-        F.col("c_mktsegment").alias("segment"),
-        F.expr(
-            "CAST(round(o_totalprice * 100) AS BIGINT) DIV 100000"
-        ).alias("x"),
+    k = segment_order_kilos(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
     s = k.groupBy("segment").agg(
         F.count("*").cast("long").alias("n"),
@@ -3387,12 +3325,7 @@ _RC_Z = (
 )
 
 _RC_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS cents
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_CENTS_CTE},
 seq AS (
     SELECT cents,
            CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t,
@@ -3432,14 +3365,7 @@ FROM s WHERE n >= 2 AND h1_nano > h2_nano
     _RC_ORACLE,
 )
 def x305_records_test(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-        ).alias("cents")
-    )
+    daily = daily_order_cents(load_table(spark, sf_dir, "orders"))
     wd = Window.partitionBy().orderBy("d")
     wprev = (
         Window.partitionBy()
@@ -3814,14 +3740,7 @@ _PACF_P33 = (
 )
 
 _PACF_ORACLE = f"""
-WITH m AS (
-    SELECT c.c_nationkey AS nkey,
-           CAST(date_trunc('month', o.o_orderdate) AS DATE) AS mon,
-           CAST(SUM(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                AS BIGINT) // 100000 AS ykd
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_nationkey, CAST(date_trunc('month', o.o_orderdate) AS DATE)
-),
+WITH {MONTHLY_NATION_KILOS_CTE},
 s AS (
     SELECT nkey, CAST(count(*) AS BIGINT) AS n,
            CAST(SUM(ykd) AS BIGINT) AS tot
@@ -3882,17 +3801,8 @@ ORDER BY nkey
     _PACF_ORACLE,
 )
 def x309_pacf(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    m = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .select(
-            F.col("c_nationkey").alias("nkey"),
-            F.date_trunc("month", "o_orderdate").cast("date").alias("mon"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("nkey", "mon")
-        .agg(F.expr("sum(cents) div 100000").cast("long").alias("ykd"))
+    m = monthly_nation_kilos(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
     s = m.groupBy("nkey").agg(
         F.count("*").cast("long").alias("n"),
@@ -4002,11 +3912,7 @@ _CD_D = (
 )
 
 _CD_ORACLE = f"""
-WITH k AS (
-    SELECT c.c_mktsegment AS segment,
-           CAST(round(o.o_totalprice * 100) AS BIGINT) // 100000 AS x
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-),
+WITH {SEGMENT_ORDER_KILOS_CTE},
 s AS (
     SELECT segment, CAST(count(*) AS BIGINT) AS n,
            CAST(SUM(x) AS BIGINT) AS s1,
@@ -4039,13 +3945,8 @@ ORDER BY seg_a, seg_b
     _CD_ORACLE,
 )
 def x310_cohens_d(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    k = o.join(c, o.o_custkey == c.c_custkey).select(
-        F.col("c_mktsegment").alias("segment"),
-        F.expr(
-            "CAST(round(o_totalprice * 100) AS BIGINT) DIV 100000"
-        ).alias("x"),
+    k = segment_order_kilos(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
     )
     s = k.groupBy("segment").agg(
         F.count("*").cast("long").alias("n"),
@@ -4109,12 +4010,7 @@ _BS_VE_PPM = (
 )
 
 _BS_ORACLE = f"""
-WITH daily AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS d,
-           CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               // 100000 AS x
-    FROM orders GROUP BY 1
-),
+WITH {DAILY_REVENUE_CTE},
 pre AS (
     SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t,
            CAST(SUM(x) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING)
@@ -4157,15 +4053,7 @@ LIMIT 1
     _BS_ORACLE,
 )
 def x311_binary_segmentation(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.expr("unix_timestamp(o_orderdate) div 86400").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
-            " DIV 100000"
-        ).alias("x")
-    )
+    daily = daily_order_revenue(load_table(spark, sf_dir, "orders"))
     wcum = (
         Window.partitionBy()
         .orderBy("d")

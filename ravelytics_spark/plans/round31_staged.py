@@ -73,6 +73,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ravelytics_spark.operators.graph import coorder_edges, undirected
+from ravelytics_spark.plans.frames import (
+    COORDER_EDGES_SQL,
+    COORDER_PK_SQL,
+    UNDIRECTED_SQL,
+)
 from ravelytics_spark.plans.registry import q
 from ravelytics_spark.sources.tables import load_table
 
@@ -1080,14 +1086,12 @@ _PL_TOPK = 100
 
 _PL_ORACLE = f"""
 WITH pk AS (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
+    {COORDER_PK_SQL}
 ),
 e AS (
-    SELECT a.p AS u, b.p AS v
-    FROM pk a JOIN pk b ON a.o = b.o AND a.p < b.p
-    GROUP BY a.p, b.p HAVING count(*) >= 2
+    {COORDER_EDGES_SQL}
 ),
-und AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
+und AS ({UNDIRECTED_SQL}),
 deg AS (
     SELECT u AS node, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY u
 ),
@@ -1130,21 +1134,7 @@ HAVING SUM(ln_nano) > 0
     _PL_ORACLE,
 )
 def x321_degree_powerlaw(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = pk.alias("a"), pk.alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count("*").alias("wt"))
-        .filter(F.col("wt") >= 2)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    und = undirected(coorder_edges(load_table(spark, sf_dir, "lineitem")))
     deg = und.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("d")
     )

@@ -56,7 +56,7 @@ SHOWCASE = [
     ("x230b_hubness_bucketed", "SRP-code equi-join candidates (probe explode + per-bucket cap), WindowGroupLimit heaps before the qa shuffle; nz checkpointed once"),
     ("x245b_twonn_bucketed", "same bucketed candidate shape; top-2 heaps; single-row estimator agg (one partial row per partition)"),
     # round-30 heavies (registered in round 10)
-    ("x278_hits_scores", "DISK_ONLY-persisted edge list (InMemoryTableScan); three equi join+agg rounds, no recomputed distinct"),
+    ("x278_hits_scores", "DISK_ONLY-checkpointed edge list (Scan ExistingRDD); three equi join+agg rounds, no recomputed distinct"),
     ("x283_abc_xyz_matrix", "part-level cumulative ABC window (certifiable global form) + XYZ moment compares; fact table scanned twice, aggregated immediately"),
     ("x293_minhash_calibration", "x91 shape: checkpointed signature store, ONE banded equi-join, 11-row calibration rollup"),
     ("x308_brown_forsythe", "segment-partitioned median rank pick + 1-row ANOVA frame (whitelisted SinglePartition over the 5-row segment frame)"),

@@ -5,6 +5,8 @@ here is a scale bug even when results stay correct."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -516,6 +518,23 @@ def test_x233_bucket_balance_partial_mins_no_joins(spark, sf_dir):
 # iterative-rewrite regression (re-deriving the edge list per round,
 # lineage blowup across rounds) fails here, not at 100 TB.
 # ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "name", ["x103_triangle_count", "x154_item_cf_topk", "x321_degree_powerlaw"]
+)
+def test_coorder_graph_dedups_behind_one_exchange_on_order(spark, sf_dir, name):
+    """The graph entries whose edge build reaches the final plan (no
+    checkpoint cuts it) take (order, part) from ``coorder_pk``: one
+    REPARTITION_BY_COL exchange on the order key serves both the
+    distinct and the within-order self-join, and no exchange on (o, p)
+    remains — the naive ``select(o, p).distinct()`` form's extra full
+    shuffle of the relation."""
+    plan = _final_plan(REGISTRY[name].spark.__wrapped__(spark, sf_dir))
+    assert not re.search(r"Exchange hashpartitioning\(o#\d+L, p#\d+L,", plan)
+    assert re.search(
+        r"Exchange hashpartitioning\(o#\d+L, \d+\), REPARTITION_BY_COL", plan
+    )
 
 
 def test_x246_lpa_round_is_one_join_off_checkpoints(spark, sf_dir):
